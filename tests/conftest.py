@@ -37,6 +37,11 @@ def fixture_kg(name: str, idify: bool = False):
     )
 
 
+def plan_of(df) -> str:
+    """The executed physical plan of ``df`` as text."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from kgist_spark.session import get_spark
