@@ -87,8 +87,9 @@ from kgist_spark.pipeline.materialize import (
     read_manifest,
 )
 from kgist_spark.operators import minhash as MH
-from kgist_spark.streaming.ingest import stream_pages
 
+#: schema of the page files the stream picks up (the web-page table shape)
+PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 DICT_DIR = "canon_dict"
 INDEX_DIR = "canon_index"
 SIZES_DIR = "canon_index_sizes"
@@ -738,8 +739,11 @@ def run_incremental_construct(spark: SparkSession, input_dir: str, out_dir: str,
             )
         )
 
+    reader = spark.readStream.schema(PAGES_DDL)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     q = (
-        stream_pages(spark, input_dir, max_files_per_trigger=max_files_per_trigger)
+        reader.parquet(input_dir)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -1,6 +1,6 @@
-"""Structured-Streaming ingestion: incremental extraction equals batch
-extraction, processes new files exactly once on restart, and the watermarked
-window aggregation matches its batch equivalent."""
+"""Incremental KG construction (streaming/construct.py): arrival batches
+build the same KG as one batch rebuild, replays are exactly-once, linking
+is grow-only, and offline compaction preserves content across crashes."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,178 +8,6 @@ from pyspark.sql import functions as F
 from kgist_spark.sources.webpages import World, generate_pages
 
 pytestmark = pytest.mark.spark
-
-
-def test_incremental_extraction_matches_batch_and_resumes(spark, tmp_path):
-    from kgist_spark.pipeline.extract import extract_triples
-    from kgist_spark.streaming.ingest import run_incremental_extraction
-
-    world = World(42)
-    in_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "triples")
-    ckpt = str(tmp_path / "ckpt")
-
-    batch1 = generate_pages(spark, 100, seed=42, world=world)
-    batch1.write.mode("append").parquet(in_dir)
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt)
-    got1 = spark.read.parquet(out_dir)
-    want1 = extract_triples(batch1)
-    assert got1.count() == want1.count()
-
-    # new files arrive; a re-run processes ONLY them (stream checkpoint)
-    batch2 = generate_pages(spark, 60, seed=777, world=world)
-    batch2.write.mode("append").parquet(in_dir)
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt)
-    got2 = spark.read.parquet(out_dir)
-    want_total = want1.count() + extract_triples(batch2).count()
-    assert got2.count() == want_total
-
-    # idempotent: nothing new -> nothing appended
-    run_incremental_extraction(spark, in_dir, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == want_total
-
-    # content equality (set of extracted triples)
-    batch_all = spark.read.parquet(in_dir)
-    want_set = {
-        (r["url"], r["subj"], r["pred"], r["obj"])
-        for r in extract_triples(batch_all).collect()
-    }
-    got_set = {
-        (r["url"], r["subj"], r["pred"], r["obj"]) for r in got2.collect()
-    }
-    assert got_set == want_set
-
-
-def test_windowed_event_counts_match_batch(spark, tmp_path):
-    from kgist_spark.streaming.ingest import windowed_event_counts
-
-    import shutil
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    src_dir = tmp_path / "events"
-    src_dir.mkdir()
-    shutil.copy(src, src_dir / "part-0.parquet")  # file streams need a directory
-    events_stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema).parquet(str(src_dir))
-    )
-    out = windowed_event_counts(events_stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], round(r["avg_value"], 6))
-        for r in spark.sql("select * from wincounts").collect()
-    }
-    want = {
-        (r["hour"], r["event_type"]): (r["n"], round(r["avg_value"], 6))
-        for r in spark.read.parquet(src)
-        .groupBy(F.date_trunc("HOUR", "ts").alias("hour"), "event_type")
-        .agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
-    """applyInPandasWithState dedup: the first doc per md5 wins across
-    micro-batches AND across stream restarts (state restored from the
-    checkpoint); later duplicates are never re-emitted."""
-    from kgist_spark.streaming.ingest import PAGES_DDL, run_incremental_dedup
-
-    inp = tmp_path / "in"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    inp.mkdir()
-
-    def page(url, text):
-        return (url, None, None, text, "en")
-
-    spark.createDataFrame(
-        [page("u1", "alpha text"), page("u2", "beta text")], PAGES_DDL
-    ).write.parquet(str(inp / "f1.parquet"))
-    run_incremental_dedup(spark, str(inp) + "/*", out, ckpt)
-    first = {r["text_md5"] for r in spark.read.parquet(out).collect()}
-    assert len(first) == 2
-
-    # new arrivals: one duplicate of an old doc, one genuinely new
-    spark.createDataFrame(
-        [page("u3", "alpha text"), page("u4", "gamma text")], PAGES_DDL
-    ).write.parquet(str(inp / "f2.parquet"))
-    run_incremental_dedup(spark, str(inp) + "/*", out, ckpt)
-    rows = spark.read.parquet(out).collect()
-    md5s = [r["text_md5"] for r in rows]
-    assert len(md5s) == 3 and len(set(md5s)) == 3  # dup NOT re-emitted
-
-    # keep_id is the md5 of 'gamma text' holder only among new rows
-    got_new = set(md5s) - first
-    assert len(got_new) == 1
-
-
-def test_streaming_dedup_then_pipeline_matches_batch(spark, tmp_path):
-    """e2e: incremental (cross-batch stateful) dedup feeding the batch
-    KG-construction pipeline produces the SAME KG as batch-dedup-then-
-    pipeline.  Keeper choice may differ between the two paths (first-seen
-    micro-batch vs global min doc_id), but duplicate pages carry identical
-    text, so the constructed (subj, pred, obj) and label sets must be
-    identical either way — that is the dedup-is-safe-for-KG invariant."""
-    from kgist_spark.pipeline.run import construct_kg
-    from kgist_spark.streaming.ingest import run_incremental_dedup
-
-    world = World(7)
-    inp = tmp_path / "pages"
-    out = str(tmp_path / "kept")
-    ckpt = str(tmp_path / "ckpt")
-    inp.mkdir()
-
-    pages1 = generate_pages(spark, 40, seed=7, world=world)
-    # re-urled copies of half of batch 1 arrive later (cross-batch dups)
-    dups = pages1.where(F.hash("url") % 2 == 0).withColumn(
-        "url", F.concat(F.lit("dup-"), F.col("url"))
-    )
-    pages2 = generate_pages(spark, 30, seed=99, world=world).unionByName(dups)
-
-    pages1.write.parquet(str(inp / "f1.parquet"))
-    run_incremental_dedup(spark, str(inp) + "/*", out, ckpt)
-    pages2.write.parquet(str(inp / "f2.parquet"))
-    run_incremental_dedup(spark, str(inp) + "/*", out, ckpt)
-
-    kept = spark.read.parquet(out)
-    all_pages = pages1.unionByName(pages2)
-    with_id = all_pages.withColumn(
-        "doc_id", F.abs(F.hash("url")).cast("long")
-    ).withColumn("text_md5", F.md5("text"))
-
-    # the stream kept exactly one doc per distinct text
-    n_distinct = with_id.select("text_md5").distinct().count()
-    assert kept.count() == n_distinct
-    assert kept.count() < all_pages.count()  # something was actually dropped
-
-    stream_kept = with_id.join(
-        kept.withColumnRenamed("keep_id", "doc_id"), ["text_md5", "doc_id"], "semi"
-    )
-    batch_kept = with_id.join(
-        with_id.groupBy("text_md5").agg(F.min("doc_id").alias("doc_id")),
-        ["text_md5", "doc_id"],
-        "semi",
-    )
-    assert stream_kept.count() == batch_kept.count() == n_distinct
-
-    cols = ["url", "warc_ts", "html", "text", "lang"]
-    triples_a, labels_a = construct_kg(spark, stream_kept.select(*cols))
-    triples_b, labels_b = construct_kg(spark, batch_kept.select(*cols))
-
-    set_a = {(r["subj"], r["pred"], r["obj"]) for r in triples_a.collect()}
-    set_b = {(r["subj"], r["pred"], r["obj"]) for r in triples_b.collect()}
-    assert set_a == set_b and set_a
-
-    lab_a = {(r["node"], r["label"]) for r in labels_a.collect()}
-    lab_b = {(r["node"], r["label"]) for r in labels_b.collect()}
-    assert lab_a == lab_b and lab_a
 
 
 # ---------------------------------------------------------------------------
@@ -855,44 +683,3 @@ def test_compact_cli_rejects_other_flags_even_falsy():
 
     with pytest.raises(SystemExit):
         main(["--compact", "--generate", "0", "--out", "/tmp/nowhere"])
-
-
-def test_stateful_domain_cap_across_batches_and_restarts(spark, tmp_path):
-    """Per-domain quota holds ACROSS micro-batch runs: the second
-    AvailableNow run (state restored from the checkpoint) admits only into
-    remaining quota, and a domain that filled up admits nothing more."""
-    from kgist_spark.streaming.ingest import run_incremental_domain_cap
-
-    inp = tmp_path / "in"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    inp.mkdir()
-
-    def pages(rows):
-        return spark.createDataFrame(
-            [(f"https://{d}/p{i}", None, None, f"text {i}", "en")
-             for d, i in rows],
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        )
-
-    # batch 1: a.com has 3 pages, b.com has 1 — cap 2 admits 2 + 1
-    pages([("a.com", 1), ("a.com", 2), ("a.com", 3), ("b.com", 1)]) \
-        .write.parquet(str(inp / "f1.parquet"))
-    run_incremental_domain_cap(spark, str(inp) + "/*", out, ckpt, cap=2)
-    first = spark.read.parquet(out)
-    got1 = {r["domain"]: r["cnt"] for r in
-            first.groupBy("domain").agg(F.count("*").alias("cnt")).collect()}
-    assert got1 == {"a.com": 2, "b.com": 1}
-
-    # batch 2: a.com (full) gets nothing; b.com admits 1 more then stops
-    pages([("a.com", 9), ("b.com", 2), ("b.com", 3), ("c.com", 1)]) \
-        .write.parquet(str(inp / "f2.parquet"))
-    run_incremental_domain_cap(spark, str(inp) + "/*", out, ckpt, cap=2)
-    both = spark.read.parquet(out)
-    got2 = {r["domain"]: r["cnt"] for r in
-            both.groupBy("domain").agg(F.count("*").alias("cnt")).collect()}
-    assert got2 == {"a.com": 2, "b.com": 2, "c.com": 1}
-    # admission indices are dense 1..n per domain
-    idx = sorted((r["domain"], r["admit_idx"]) for r in both.collect())
-    assert idx == [("a.com", 1), ("a.com", 2), ("b.com", 1), ("b.com", 2),
-                   ("c.com", 1)]
