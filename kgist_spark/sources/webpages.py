@@ -11,7 +11,8 @@ the frozen extraction spec (:mod:`kgist_spark.pipeline.spec`), with known
 ground-truth triples per page, so extraction precision/recall is measurable
 exactly.  Entity popularity is zipfian — head entities appear in a large
 fraction of pages, reproducing the high-degree skew the north rule requires
-the engine to handle (salting + AQE).
+the engine to handle (AQE skew join + the capped LSH buckets of
+:func:`kgist_spark.operators.minhash.candidate_pairs`).
 """
 
 from __future__ import annotations
