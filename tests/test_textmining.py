@@ -3,7 +3,6 @@
 import pytest
 from pyspark.sql import functions as F
 
-from kgist_spark.operators.dedup import dup_ngram_stats
 from kgist_spark.operators.text import pmi_pairs
 
 pytestmark = pytest.mark.spark
@@ -11,33 +10,6 @@ pytestmark = pytest.mark.spark
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id string, text string")
-
-
-def test_dup_ngram_known_duplicates(spark):
-    shared = "one two three four five"
-    rows = [
-        ("a", shared + " alpha beta"),          # 3 windows, 1 shared
-        ("b", shared),                           # 1 window, shared
-        ("c", "totally different words here now"),  # 1 window, unique
-        ("d", "tiny"),                            # < n tokens: no row
-    ]
-    out = {
-        r["doc_id"]: (r["n_grams"], r["n_dup_grams"], r["dup_frac_x1e6"])
-        for r in dup_ngram_stats(_docs(spark, rows), n=5).collect()
-    }
-    assert out == {
-        "a": (3, 1, 333333),   # 1e6 * 1 DIV 3, truncating
-        "b": (1, 1, 1000000),
-        "c": (1, 0, 0),
-    }
-
-
-def test_dup_ngram_internal_repetition_not_cross_doc(spark):
-    # a doc repeating ITS OWN 5-gram is not a cross-document duplicate:
-    # the distinct-(gram, doc) collapse must keep nd at 1
-    rows = [("a", "x y z w v x y z w v")]
-    (row,) = dup_ngram_stats(_docs(spark, rows), n=5).collect()
-    assert (row["n_grams"], row["n_dup_grams"]) == (6, 0)
 
 
 def test_pmi_prefers_exclusive_pair(spark):
@@ -100,211 +72,12 @@ def test_q8_py_matches_sql_round_semantics(spark):
 # ------------------------------------------------- duplicated-span cut list
 
 
-def _spans(spark, rows, n=5, min_docs=2):
-    from kgist_spark.operators.dedup import dup_spans
-
-    return {
-        (r["doc_id"], r["span_start"]): (r["span_end"], r["n_windows"])
-        for r in dup_spans(_docs(spark, rows), n=n, min_docs=min_docs).collect()
-    }
-
-
-def test_dup_spans_shared_phrase_positions(spark):
-    shared = "one two three four five six"   # 2 overlapping 5-windows
-    rows = [
-        ("a", "lead " + shared + " tail"),   # windows 2,3 duplicated
-        ("b", shared),                        # windows 1,2 duplicated
-        ("c", "totally different words here now"),
-    ]
-    got = _spans(spark, rows)
-    # overlapping duplicated windows merge into ONE maximal span each
-    assert got == {
-        ("a", 2): (7, 2),   # tokens 2..7 = the shared phrase, 2 windows
-        ("b", 1): (6, 2),
-    }
-
-
-def test_dup_spans_internal_repetition_not_marked(spark):
-    # a doc repeating ITS OWN 5-gram never yields a span (cross-document
-    # distinct-doc gate, same semantics as dup_ngram_stats)
-    rows = [("a", "x y z w v x y z w v")]
-    assert _spans(spark, rows) == {}
-
-
-def test_dup_spans_two_islands_in_one_doc(spark):
-    p1, p2 = "aa bb cc dd ee", "vv ww xx yy zz"
-    rows = [
-        ("a", p1 + " filler1 filler2 filler3 filler4 filler5 filler6 " + p2),
-        ("b", p1), ("c", p2),
-    ]
-    got = _spans(spark, rows)
-    # doc a: window 1 (p1) and window 12 (p2) are 11 apart > n -> 2 spans
-    assert got[("a", 1)] == (5, 1)
-    assert got[("a", 12)] == (16, 1)
-    assert got[("b", 1)] == (5, 1) and got[("c", 1)] == (5, 1)
-
-
-def test_dup_spans_matches_python_replay(spark):
-    import hashlib
-    import random
-
-    rng = random.Random(29)
-    vocab = [f"w{i}" for i in range(12)]
-    rows = [(f"d{i}", " ".join(rng.choice(vocab) for _ in range(rng.randrange(3, 30))))
-            for i in range(40)]
-    n = 5
-    # python replay: windows, cross-doc gate, island merge
-    win = {}   # (doc, p) -> gram
-    for d, t in rows:
-        toks = t.split()
-        for p in range(1, len(toks) - n + 2):
-            win[(d, p)] = hashlib.md5(
-                " ".join(toks[p - 1:p - 1 + n]).encode()).hexdigest()
-    docs_per_gram = {}
-    for (d, _), g in win.items():
-        docs_per_gram.setdefault(g, set()).add(d)
-    want = {}
-    by_doc = {}
-    for (d, p), g in sorted(win.items()):
-        if len(docs_per_gram[g]) >= 2:
-            by_doc.setdefault(d, []).append(p)
-    for d, ps in by_doc.items():
-        start = prev = ps[0]
-        cnt = 1
-        for p in ps[1:]:
-            if p - prev <= n:
-                prev, cnt = p, cnt + 1
-            else:
-                want[(d, start)] = (prev + n - 1, cnt)
-                start = prev = p
-                cnt = 1
-        want[(d, start)] = (prev + n - 1, cnt)
-    assert _spans(spark, rows, n=n) == want
-
-
 # ------------------------------------------------------ shingle containment
-
-
-def test_containment_catches_quote_jaccard_misses(spark):
-    from kgist_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
-
-    short = "alpha beta gamma delta epsilon zeta"
-    filler = " ".join(f"f{i}" for i in range(40))
-    rows = [("1", short), ("2", short + " " + filler),
-            ("3", "other words entirely here now")]
-    docs = _docs(spark, rows)
-    cont = {(r["a"], r["b"]): (r["contained_id"], r["cont_x1e6"])
-            for r in containment_pairs(docs, threshold_x1e6=900_000).collect()}
-    # the short doc is fully contained in the long one...
-    assert cont == {("1", "2"): ("1", 1_000_000)}
-    # ...while Jaccard at the same bar sees nothing (the asymmetric gap)
-    jac = ngram_jaccard_pairs(docs, threshold=0.9).collect()
-    assert jac == []
-
-
-def test_containment_matches_python_replay(spark):
-    import random
-
-    from kgist_spark.operators.dedup import containment_pairs
-
-    rng = random.Random(41)
-    vocab = [f"w{i}" for i in range(10)]
-    rows = [(f"d{i}", " ".join(rng.choice(vocab)
-                               for _ in range(rng.randrange(5, 25))))
-            for i in range(30)]
-    sh = {}
-    for d, t in rows:
-        toks = t.lower().split()
-        n = max(len(toks) - 4, 1)
-        sh[d] = {" ".join(toks[i:i + 5]) for i in range(n)}
-    want = {}
-    ids = sorted(sh)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            inter = len(sh[a] & sh[b])
-            if inter == 0:
-                continue
-            na, nb = len(sh[a]), len(sh[b])
-            c = inter * 1_000_000 // min(na, nb)
-            if c >= 600_000:
-                want[(a, b)] = (a if na <= nb else b, inter, na, nb, c)
-    got = {(r["a"], r["b"]): (r["contained_id"], r["n_inter"], r["na"],
-                              r["nb"], r["cont_x1e6"])
-           for r in containment_pairs(
-               _docs(spark, rows), threshold_x1e6=600_000).collect()}
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
 # winnowing fingerprints (MOSS)
 # ---------------------------------------------------------------------------
-
-
-def _py_winnow(text, k=5, w=4):
-    """Independent pure-Python replay of the winnowing selection."""
-    import hashlib
-
-    toks = text.strip().split()
-    grams = [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
-    hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
-    if not hs:
-        return set(), 0
-    wl = min(w, len(hs))
-    sel = set()
-    for i in range(max(len(hs) - w + 1, 1)):
-        win = hs[i:i + wl]
-        m = min(win)
-        pos = i + max(j for j, h in enumerate(win) if h == m)
-        sel.add((pos + 1, m))  # 1-based
-    return sel, len(hs)
-
-
-def test_winnow_guarantee_shared_run_detected(spark):
-    """Any shared token run of length >= w + k - 1 (= 8 at defaults)
-    shares at least one selected fingerprint HASH — the paper's
-    guarantee; unrelated docs share none."""
-    from kgist_spark.operators.dedup import winnow_fingerprints
-
-    shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
-    docs = _docs(spark, [
-        ("a", "one two " + shared + " tail tokens here now"),
-        ("b", shared + " completely different ending words follow here"),
-        ("c", "nothing in common with economy statistics report data set"),
-    ])
-    out = {r["doc_id"]: r for r in winnow_fingerprints(docs).collect()}
-    assert out["a"]["n_shared_fp"] >= 1
-    assert out["b"]["n_shared_fp"] >= 1
-    assert out["c"]["n_shared_fp"] == 0
-
-
-def test_winnow_matches_python_replay_and_short_docs(spark):
-    from kgist_spark.operators.dedup import winnow_fingerprints
-
-    rows = [
-        ("d1", "the quick brown fox jumps over the lazy dog again"),
-        ("d2", "too short"),               # < k tokens -> (0, 0, 0)
-        ("d3", "exactly five tokens right here"),  # 5 tokens -> 1 gram
-    ]
-    docs = _docs(spark, rows)
-    out = {r["doc_id"]: r for r in winnow_fingerprints(docs).collect()}
-    for did, text in rows:
-        sel, n_grams = _py_winnow(text)
-        assert out[did]["n_grams"] == n_grams, did
-        assert out[did]["n_fp"] == len(sel), did
-    assert (out["d2"]["n_grams"], out["d2"]["n_fp"]) == (0, 0)
-    assert out["d3"]["n_fp"] == 1  # single gram -> one window, one pick
-
-
-def test_winnow_density_bound(spark):
-    """Winnowing keeps roughly 2/(w+1) of grams — assert the sample is a
-    strict subsample on a long document (not all grams selected)."""
-    from kgist_spark.operators.dedup import winnow_fingerprints
-
-    text = " ".join(f"tok{i % 37}x{i % 11}" for i in range(200))
-    docs = _docs(spark, [("long", text)])
-    r = winnow_fingerprints(docs).collect()[0]
-    assert r["n_grams"] == 196
-    assert 0 < r["n_fp"] < r["n_grams"] // 2
 
 
 def test_lang_confusion_hand_computed(spark):
@@ -403,68 +176,3 @@ def test_corpus_report_hand_computed(spark):
         "en", 2 * 1_000_000 // 3)
     s2 = rows["s2"]
     assert s2["n_dup_docs"] == 0 and s2["top_lang_share_x1e6"] == 1_000_000
-
-
-def test_tfidf_pairs_weighting_and_stopword_strip(spark):
-    """Rare shared terms dominate; terms over the df cap contribute
-    NOTHING (dot or norms); python replay of the quantized arithmetic."""
-    import math
-
-    from kgist_spark.operators.dedup import (
-        TP_IDF_X10_CAP,
-        TP_TF_CAP,
-        tfidf_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [("1", "the quantum chromodynamics paper the the"),
-         ("2", "the quantum chromodynamics review the"),
-         ("3", "the cooking recipe blog post the"),
-         ("4", "the cooking recipe collection the")],
-        "doc_id string, text string",
-    )
-    # df cap 3 strips 'the' (df=4); every other term df <= 2
-    out = {(r["a"], r["b"]): r
-           for r in tfidf_pairs(docs, max_df=3,
-                                threshold_x1e6=100_000).collect()}
-    assert ("1", "2") in out and ("3", "4") in out
-    assert ("1", "3") not in out  # only 'the' shared -> stripped -> no pair
-
-    # python replay for the (1, 2) pair
-    n_docs = 4
-    def w(tf, df):
-        return min(tf, TP_TF_CAP) * min((n_docs * 10) // df, TP_IDF_X10_CAP)
-    # doc1 capped terms: quantum(1,2) chromo(1,2) paper(1,1)
-    # doc2: quantum(1,2) chromo(1,2) review(1,1)
-    wq, wc, wp = w(1, 2), w(1, 2), w(1, 1)
-    dot = wq * wq + wc * wc
-    na2 = wq * wq + wc * wc + wp * wp
-    want = round(1_000_000 * dot / math.sqrt(na2 * na2))
-    assert out[("1", "2")]["cosine_x1e6"] == want
-    assert out[("1", "2")]["n_shared_terms"] == 2
-
-
-def test_editdist_pairs_char_level_signal(spark):
-    """Within-token edits keep the ratio high while dropping some
-    shingles; unrelated docs never pair; the length cap excludes long
-    docs from this verifier entirely."""
-    from kgist_spark.operators.dedup import editdist_pairs
-
-    base = "the quick brown fox jumps over the lazy dog again today"
-    variant = base.replace("colour", "color").replace("jumps", "jumped")
-    docs = spark.createDataFrame(
-        [("1", base), ("2", variant),
-         ("3", "completely different content with no shared phrasing")],
-        "doc_id string, text string",
-    )
-    rows = {(r["a"], r["b"]): r for r in editdist_pairs(docs).collect()}
-    p = rows[("1", "2")]
-    assert p["dist"] == 2  # jumps -> jumped is a 2-edit change
-    assert p["ratio_x1e6"] > 900_000
-    assert not any("3" in k for k in rows)
-    # length cap: an over-cap twin never reaches the verifier
-    docs2 = spark.createDataFrame(
-        [("1", base), ("2", base + " x" * 3000)],
-        "doc_id string, text string",
-    )
-    assert editdist_pairs(docs2, max_chars=100).count() == 0
