@@ -39,36 +39,6 @@ def test_pmi_pair_orientation_and_window(spark):
 # --------------------------------------------------- quantized ANN recall
 
 
-def test_quantized_topk_recall_vs_exact(spark):
-    """int8 quantization must preserve most of the exact-cosine top-k on
-    the real testdata embeddings (unit-ish synthetic vectors, dim 64)."""
-    from kgist_spark.operators import similarity as SIM
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    q = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
-    exact = {r["vec_id"] for r in SIM.cosine_topk(emb, q, k=10).collect()}
-    quant = {r["vec_id"] for r in SIM.quantized_topk(emb, q, k=10).collect()}
-    assert len(exact & quant) >= 7, (exact, quant)
-
-
-def test_q8_py_matches_sql_round_semantics(spark):
-    """The driver-side query quantizer must round half AWAY from zero like
-    Spark/DuckDB round, not like Python's banker's round."""
-    from pyspark.sql import functions as F
-
-    from kgist_spark.operators.similarity import Q8_SCALE, _q8_py, q8_expr
-
-    # values engineered to hit exact .5 products at scale 64: 0.0234375*64
-    # = 1.5, -0.0234375*64 = -1.5, plus clamp extremes
-    vals = [0.0234375, -0.0234375, 0.0390625, -3.0, 3.0, 0.01, -0.01]
-    df = spark.createDataFrame([(vals,)], "v array<double>")
-    (got,) = df.select(q8_expr("v", Q8_SCALE).alias("q")).first()
-    assert list(got) == [_q8_py(x) for x in vals]
-    assert _q8_py(0.0234375) == 2 and _q8_py(-0.0234375) == -2  # away from 0
-    assert _q8_py(3.0) == 127 and _q8_py(-3.0) == -127          # clamped
-
-
 # ------------------------------------------------- duplicated-span cut list
 
 
