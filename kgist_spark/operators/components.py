@@ -382,46 +382,3 @@ def minlabel_oracle_sql(edges_sql: str, rounds: int = 8,
     )"""
         )
     return "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, component FROM r{rounds}"
-
-
-def component_size_stats(comp: DataFrame) -> DataFrame:
-    """Component-size histogram — ``(size, n_components, node_share_x1e6)``
-    from a ``(node, component)`` table: the crawl-health rollup read off a
-    canonicalization run (a healthy entity graph is a long tail of small
-    merge groups; a giant component whose node share jumps between crawls
-    is the classic over-merging alarm — one bad blocking key gluing the
-    entity space together).
-
-    ``node_share_x1e6`` = fraction of ALL nodes living in components of
-    this size, truncating integer fixed point (positive operands, so
-    Spark's ``div`` and DuckDB's ``//`` agree).
-
-    Scale shape: the grouped count per component shuffles map-side
-    partial counts only (a giant component's key receives one partial
-    per upstream partition, never its member rows); the histogram and the
-    1-row total it broadcast-joins against are ≤ |distinct sizes| rows."""
-    sizes = comp.groupBy("component").agg(F.count("*").alias("size"))
-    hist = sizes.groupBy("size").agg(F.count("*").alias("n_components"))
-    tot = hist.agg(F.sum(F.col("size") * F.col("n_components")).alias("n"))
-    return hist.crossJoin(F.broadcast(tot)).select(
-        "size",
-        "n_components",
-        F.expr("CAST(size * n_components * 1000000 div n AS BIGINT)").alias(
-            "node_share_x1e6"
-        ),
-    )
-
-
-def component_size_oracle_sql(comp_sql: str) -> str:
-    """DuckDB replay of :func:`component_size_stats` over any
-    ``(node, component)`` SQL (e.g. :func:`minlabel_oracle_sql`)."""
-    return f"""
-    WITH comp AS ({comp_sql}),
-    sizes AS (SELECT component, COUNT(*) AS size FROM comp GROUP BY component),
-    hist AS (SELECT size, COUNT(*) AS n_components FROM sizes GROUP BY size),
-    tot AS (SELECT CAST(SUM(size * n_components) AS BIGINT) AS n FROM hist)
-    SELECT size, n_components,
-           CAST(size * n_components * 1000000 // (SELECT n FROM tot)
-                AS BIGINT) AS node_share_x1e6
-    FROM hist
-    """

@@ -540,23 +540,6 @@ def test_minlabel_rounds_mid_flight_matches_oracle_semantics(spark):
         assert got == want
 
 
-def test_component_size_stats_hand_computed(spark):
-    """Histogram + node shares over a known component table: sizes
-    {3: one, 2: two} over 7 nodes; truncating integer shares."""
-    from kgist_spark.operators.components import component_size_stats
-
-    comp = spark.createDataFrame(
-        [("a", "a"), ("b", "a"), ("c", "a"),   # size-3 component
-         ("d", "d"), ("e", "d"),               # size-2
-         ("f", "f"), ("g", "f")],              # size-2
-        "node string, component string",
-    )
-    rows = {r["size"]: r for r in component_size_stats(comp).collect()}
-    assert rows[3]["n_components"] == 1 and rows[2]["n_components"] == 2
-    assert rows[3]["node_share_x1e6"] == 3 * 1_000_000 // 7
-    assert rows[2]["node_share_x1e6"] == 4 * 1_000_000 // 7
-
-
 def test_run_pipeline_schema_report(spark, tmp_path, capsys):
     """`--schema-report` writes the schema profile + violation audit next
     to the KG and surfaces constraint counts in the report JSON."""
