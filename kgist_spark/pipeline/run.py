@@ -18,7 +18,6 @@ from kgist_spark.pipeline.canonicalize import (
     canonical_map,
     entity_vocabulary,
 )
-from kgist_spark.pipeline.extract import extract_facts
 from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
 from kgist_spark.pipeline.materialize import materialize_kg, with_eids
 
@@ -50,8 +49,7 @@ def extract_facts_dedup(pages: DataFrame, extractor=extract_facts_jvm):
 
 
 def construct_kg(spark: SparkSession, pages: DataFrame, out_dir: str | None = None,
-                 n_buckets: int = 8, canonicalize: bool = True,
-                 extract_engine: str = "jvm"):
+                 n_buckets: int = 8, canonicalize: bool = True):
     """Stages 1-3.  Returns ``(triples, labels)``:
 
     * triples — (subj, pred, obj, url[, eid])
@@ -67,12 +65,10 @@ def construct_kg(spark: SparkSession, pages: DataFrame, out_dir: str | None = No
     # dominant per-doc cost) + ONE dedup shuffle — see extract_facts_dedup.
     # Downstream stages (vocabulary, canonical map, apply, materialize, the
     # caller's summarizer) read the persisted DEDUPED set — |facts| rows,
-    # far smaller than |pages|.
-    # Default engine is the all-Catalyst fast path (extract_jvm) — row-
-    # identical to the Python spec path (pinned in tests) with no Python
-    # workers in stage 1; "python" selects the mapInPandas spec twin.
-    extractor = extract_facts_jvm if extract_engine == "jvm" else extract_facts
-    facts_dedup, raw_triples, raw_labels = extract_facts_dedup(pages, extractor)
+    # far smaller than |pages|.  Extraction runs on the all-Catalyst path
+    # (extract_jvm): row-identical to the Python spec path (pinned in tests)
+    # with no Python workers in stage 1.
+    facts_dedup, raw_triples, raw_labels = extract_facts_dedup(pages)
     # persist() returns the SAME DataFrame object, so the helper's raw views
     # already read the persisted plan — never re-derive them here (the
     # group-key column list lives in exactly one place)
