@@ -200,7 +200,7 @@ class SparkSummarizer:
 #: edge/label sets + per-head counters), so the default budgets ~2 GB of
 #: driver heap — full NELL (the reference's largest fixture) is ~1.6 M
 #: contributions, two orders of magnitude under it.  Same size-gated
-#: physical-strategy pattern as ``embedding_neardup_pairs.exact_threshold``.
+#: physical-strategy pattern as ``canonical_map``'s ``local_threshold``.
 EXACT_CONTRIBUTION_THRESHOLD = 20_000_000
 
 

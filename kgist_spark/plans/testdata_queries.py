@@ -386,7 +386,6 @@ def q_ranked_rules(spark, sf_dir):
     """W1 — MDL reduction-in-error ranking, top 30 (lexicographic tie-break
     instead of scan order so a SQL oracle can reproduce the exact set)."""
     from kgist_spark.plans.summarizer import graph_stats
-    from kgist_spark.sources.edgelist import explode_labels
 
     triples = derived_triples(spark, sf_dir)
     lf = _labels_flat(spark, sf_dir)
