@@ -29,7 +29,7 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str:
             for line in f:
                 if line.startswith("MemTotal:"):
                     total_mb = int(line.split()[1]) // 1024
-                    return f"{max(1, min(_DRIVER_MEM_CAP_MB, total_mb // 2))}m"
+                    return f"{min(_DRIVER_MEM_CAP_MB, total_mb // 2)}m"
     except OSError:
         pass
     return f"{_DRIVER_MEM_CAP_MB}m"
