@@ -1,12 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship candidate-generation aggregation on sf0.001;
-``queries``/``oracle_sql`` expose the KG pipeline's stages — candidate
-generation, MDL model fit and refinement, anomaly ranking, near-dup
-blocking, connected components and the schema report — as 15 queries over
-a KG derived from the testdata tables (see
-``kgist_spark/plans/testdata_queries.py``), each checked against its
-DuckDB oracle SQL by the driver at sf0.01.
+``queries``/``oracle_sql`` expose the operator inventory over the testdata
+tables — the KG pipeline's stages (candidate generation, MDL model fit and
+refinement, anomaly ranking, near-dup blocking, connected components, the
+schema report) plus the graph, dedup, text, sampling, sketch and curation
+operators (see ``kgist_spark/plans/testdata_queries.py``), each checked
+against its DuckDB oracle SQL by the driver at sf0.01.
 """
 
 from __future__ import annotations

@@ -16,6 +16,9 @@ Capabilities (see SURVEY.md for the full inventory):
 * A per-predicate schema report (type profiles + induced-constraint
   violations) over the constructed KG, and incremental construction as
   page batches arrive (``streaming/construct.py``).
+* Corpus operators over document tables: dedup (exact/MinHash/SimHash/
+  n-gram/embedding), similarity search, text quality, hash-gated sampling,
+  sketches and curation.
 """
 
 __version__ = "0.1.0"

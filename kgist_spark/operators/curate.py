@@ -65,11 +65,9 @@ GATES = ("lang", "too_short", "low_diversity", "repetitive",
 
 def row_features(base: DataFrame) -> DataFrame:
     """Gates 1-4 features + ``text_md5`` as ONE zero-shuffle codegen
-    projection over a ``(doc_id, lang, text)`` frame.  Stateless, so it is
-    shared VERBATIM by the batch decision table and the streaming
-    admission gate (:mod:`kgist_spark.streaming.curate`) — the two
-    surfaces cannot drift.  The token and bigram arrays are let-bound once
-    per row via the ``transform(array(struct(...)), ...)[0]`` trick (see
+    projection over a ``(doc_id, lang, text)`` frame.  Stateless.  The
+    token and bigram arrays are let-bound once per row via the
+    ``transform(array(struct(...)), ...)[0]`` trick (see
     :func:`kgist_spark.operators.text.repetition_stats` for why)."""
     bound = F.transform(
         F.array(F.struct(tokens("text").alias("t"),

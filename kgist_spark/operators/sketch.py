@@ -202,9 +202,8 @@ def estimate_from_registers(regs, p: int = HLL_P) -> int:
     """Pure-Python estimate from an m-length register array — the EXACT
     arithmetic of :func:`hll_distinct`'s projection (integer harmonic sum,
     one float division of the same numerator, the same precomputed
-    linear-counting table), shared by the streaming merge operator
-    (:mod:`kgist_spark.streaming.cardinality`) and the tests so batch,
-    stream, and oracle can never drift."""
+    linear-counting table), shared by the batch operator and the tests so batch and oracle can
+    never drift."""
     m, maxrho, num = _consts(p)
     if len(regs) != m:
         raise ValueError(f"expected {m} registers, got {len(regs)}")
@@ -250,8 +249,7 @@ def cms_build(df: DataFrame, value_col: str, d: int = CMS_D,
     row into ``d`` (row, cell) pairs, then ONE grouped count that
     map-side-combines to ≤ d·w rows per group per task — the shuffle is
     bounded by the sketch size, never the data.  Merging two sketches is
-    ``cnt`` addition on (r, c), which is how the streaming twin
-    (:mod:`kgist_spark.streaming.frequency`) folds micro-batches."""
+    ``cnt`` addition on (r, c)."""
     gc = list(group_cols or [])
     cells = F.explode(F.array(*[
         F.struct(F.lit(r).alias("r"), _cms_cell(value_col, r, w).alias("c"))

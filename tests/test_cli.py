@@ -68,25 +68,3 @@ def test_cli_no_idify(tmp_path):
     lib_out = tmp_path / "lib_raw"
     save_model(model, str(lib_out))
     assert _run_cli(tmp_path, "--idify", "false") == (lib_out / "rules.txt").read_text()
-
-
-@pytest.mark.spark
-def test_model_io_roundtrip(spark, tmp_path):
-    from kgist_spark.sources.model_io import load_model_meta, load_rules
-
-    kg = fixture_kg("test", idify=True)
-    model = GreedySearcher(kg).build_model()
-    out = str(tmp_path / "model")
-    meta = save_model(model, out, spark=spark)
-    assert meta["n_rules"] == len(model.rules)
-    assert load_model_meta(out)["objective_bits"] == meta["objective_bits"]
-    rules = load_rules(out)
-    want = {kg.tuplify(r) for r in model.rules}
-    assert set(rules) == want
-    # rules.txt lines are the reference's parenthetical repr
-    lines = (tmp_path / "model" / "rules.txt").read_text().strip().splitlines()
-    assert len(lines) == len(model.rules)
-    assert all(line.startswith("((") for line in lines)
-    # blame tables reload
-    heads = spark.read.parquet(str(tmp_path / "model" / "blame" / "heads"))
-    assert heads.count() > 0

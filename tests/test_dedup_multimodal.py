@@ -1,4 +1,4 @@
-"""Dedup operators, similarity search, multimodal plumbing, model I/O."""
+"""Dedup operators, similarity search, model I/O."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -158,48 +158,6 @@ def test_ann_recall_vs_exact(spark):
     assert len(set(exact) & set(lsh)) / 10 >= 0.3, lsh
 
 
-def test_multimodal_decode_plumbing(spark):
-    from kgist_spark.pipeline.multimodal import decode_image_meta, fake_image
-
-    rows = [(i, "image", fake_image(i, 8, 4), "{}") for i in range(20)]
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary, meta string")
-    got = {r["media_id"]: r for r in decode_image_meta(media).collect()}
-    assert len(got) == 20
-    assert got[0]["width"] == 8 and got[0]["height"] == 4 and got[0]["ok"]
-    assert got[0]["n_bytes"] == len(fake_image(0, 8, 4))
-    assert 0.0 <= got[0]["mean_pixel"] <= 255.0
-    # unknown payloads are flagged, not crashed
-    bad = spark.createDataFrame([(99, "image", b"garbage", "{}")],
-                                "media_id long, kind string, payload binary, meta string")
-    r = decode_image_meta(bad).first()
-    assert not r["ok"]
-
-
-def test_multimodal_audio_plumbing(spark):
-    import math
-
-    from kgist_spark.pipeline.multimodal import extract_audio_features, fake_audio
-
-    rows = [(i, "audio", fake_audio(i, 16000, 1600), "{}") for i in range(10)]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, meta string"
-    )
-    got = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    assert len(got) == 10
-    r0 = got[0]
-    assert r0["sample_rate"] == 16000 and r0["n_samples"] == 1600 and r0["ok"]
-    assert abs(r0["duration_s"] - 0.1) < 1e-9
-    assert 0.0 < r0["rms"] <= 1.0
-    # deterministic: same payload -> same features
-    again = extract_audio_features(media).where("media_id = 0").first()
-    assert math.isclose(again["rms"], r0["rms"])
-    bad = spark.createDataFrame(
-        [(99, "audio", b"garbage", "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    assert not extract_audio_features(bad).first()["ok"]
-
-
 def test_model_io_roundtrip(spark, tmp_path):
     from kgist_spark.oracle.engine import GreedySearcher
     from kgist_spark.sources.model_io import load_model_meta, load_rules, save_model
@@ -221,31 +179,6 @@ def test_model_io_roundtrip(spark, tmp_path):
     # blame tables reload
     heads = spark.read.parquet(str(tmp_path / "model" / "blame" / "heads"))
     assert heads.count() > 0
-
-
-def test_salted_aggregations_match_unsalted(spark):
-    """X6 — skew-safe two-phase aggregation equals the direct computation on
-    a zipfian-skewed key distribution."""
-    from kgist_spark.operators.salting import salted_count_distinct, salted_sum
-
-    rows = [("hot", f"v{i % 997}", float(i % 7)) for i in range(20000)]
-    rows += [(f"k{i % 50}", f"v{i}", 1.0) for i in range(5000)]
-    df = spark.createDataFrame(rows, ["key", "value", "x"])
-
-    want_distinct = {
-        r["key"]: r["n"]
-        for r in df.groupBy("key").agg(F.countDistinct("value").alias("n")).collect()
-    }
-    got_distinct = {
-        r["key"]: r["n_distinct"]
-        for r in salted_count_distinct(df, ["key"], "value").collect()
-    }
-    assert got_distinct == want_distinct
-    assert got_distinct["hot"] == 997
-
-    want_sum = {r["key"]: r["s"] for r in df.groupBy("key").agg(F.sum("x").alias("s")).collect()}
-    got_sum = {r["key"]: r["total"] for r in salted_sum(df, ["key"], F.col("x")).collect()}
-    assert got_sum == want_sum
 
 
 def _numpy_exact_pairs(ids, mat, threshold):
@@ -456,135 +389,6 @@ def test_neardup_keep_best_prefers_heaviest_member(spark):
     assert got[11] == (11, False)   # heaviest member keeps itself
     assert got[10] == (11, True)    # min-id doc is the DUP here
     assert got[50] == (50, False)
-
-
-def test_real_image_decoders_bmp_pnm(spark):
-    """BMP (uncompressed 24-bit, bottom-up BGR, padded rows) and binary
-    PGM/PPM decode FOR REAL in pure numpy — dimensions and means from the
-    actual pixel arrays, checked against hand-computed goldens."""
-    import struct
-
-    import numpy as np
-
-    from kgist_spark.pipeline.multimodal import decode_image_meta
-
-    rgb = np.arange(3 * 2 * 3, dtype=np.uint8).reshape(2, 3, 3) * 7  # h=2,w=3
-    row_bytes = (3 * 3 + 3) & ~3
-    offset, data_size = 54, row_bytes * 2
-    bmp = (b"BM" + struct.pack("<IHHI", offset + data_size, 0, 0, offset)
-           + struct.pack("<IiiHHIIiiII", 40, 3, 2, 1, 24, 0, data_size,
-                         2835, 2835, 0, 0))
-    for y in (1, 0):  # bottom-up
-        row = rgb[y][:, ::-1].tobytes()
-        bmp += row + b"\x00" * (row_bytes - len(row))
-
-    pgm_px = bytes(range(8))
-    pgm = b"P5\n# a comment\n4 2\n255\n" + pgm_px
-    ppm_px = bytes(range(4 * 2 * 3))
-    ppm = b"P6 4 2 255\n" + ppm_px
-
-    media = spark.createDataFrame(
-        [(1, "image", bmp, "{}"), (2, "image", pgm, "{}"), (3, "image", ppm, "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    got = {r["media_id"]: r for r in decode_image_meta(media).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["ok"]) == (3, 2, True)
-    assert abs(got[1]["mean_pixel"] - float(rgb.mean())) < 1e-9
-    assert (got[2]["width"], got[2]["height"]) == (4, 2)
-    assert abs(got[2]["mean_pixel"] - (sum(pgm_px) / 8)) < 1e-9
-    assert (got[3]["width"], got[3]["height"]) == (4, 2)
-    assert abs(got[3]["mean_pixel"] - (sum(ppm_px) / 24)) < 1e-9
-
-
-def test_real_wav_decoder(spark):
-    """RIFF/WAVE PCM decodes for real: 16-bit stereo collapses by channel
-    mean; rate/duration/RMS come from the actual samples."""
-    import struct
-
-    import numpy as np
-
-    from kgist_spark.pipeline.multimodal import extract_audio_features
-
-    # stereo 16-bit: L = 16384, R = -16384 -> mean 0; then L=R=8192
-    frames = np.array([16384, -16384, 8192, 8192], dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 4, 4, 16)
-    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(frames)) + frames)
-    wav = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    media = spark.createDataFrame(
-        [(7, "audio", wav, "{}"), (8, "audio", b"??not audio", "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    got = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    r = got[7]
-    assert (r["sample_rate"], r["n_samples"], r["ok"]) == (8000, 2, True)
-    assert abs(r["duration_s"] - 2 / 8000) < 1e-12
-    want_rms = float(np.sqrt(((np.array([0.0, 8192 / 32768.0])) ** 2).mean()))
-    assert abs(r["rms"] - round(want_rms, 6)) < 1e-9
-    assert got[8]["ok"] is False
-
-
-def test_resize_images_nearest_neighbor(spark):
-    """Real resize: nearest-neighbor index sampling of the decoded array,
-    re-emitted as the canonical grayscale payload."""
-    from kgist_spark.pipeline.multimodal import fake_image, resize_images
-
-    # 4x4 gradient via FAKEIMG
-    payload = b"FAKEIMG|4|4|" + bytes(range(16))
-    media = spark.createDataFrame(
-        [(1, "image", payload, "{}"), (2, "image", b"junk", "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    got = {r["media_id"]: r for r in resize_images(media, 2, 2).collect()}
-    out = bytes(got[1]["payload"])
-    assert out.startswith(b"FAKEIMG|2|2|")
-    # rows 0,2 / cols 0,2 of the 4x4 grid
-    assert list(out.split(b"|", 3)[3]) == [0, 2, 8, 10]
-    assert got[2]["ok"] is False and bytes(got[2]["payload"]) == b""
-    # codec stubs stay honest
-    import pytest as _pytest
-
-    from kgist_spark.pipeline.multimodal import frame_sample_stub
-
-    with _pytest.raises(NotImplementedError):
-        frame_sample_stub(media, 2)
-
-
-def test_malformed_payloads_yield_ok_false_not_task_failure(spark):
-    """Corrupt payloads behind VALID magic bytes are data, not crashes: a
-    garbage PNM header token, a WAV whose fmt chunk declares 16 bytes but
-    truncates, a FAKEIMG with non-integer dimensions, and a FAKEAUD with a
-    garbage rate must all come back ok=False — one poisoned file must never
-    kill a whole decode pass."""
-    import struct
-
-    from kgist_spark.pipeline.multimodal import (
-        decode_image_meta,
-        extract_audio_features,
-    )
-
-    bad_pnm = b"P5 4 2 2x5\n" + b"\x00" * 8          # non-digit maxval token
-    bad_fake = b"FAKEIMG|four|2|" + b"\x00" * 8       # non-int width
-    neg_fake = b"FAKEIMG|-4|2|" + b"\x00" * 8         # negative width
-    media = spark.createDataFrame(
-        [(1, "image", bad_pnm, "{}"), (2, "image", bad_fake, "{}"),
-         (3, "image", neg_fake, "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    got = {r["media_id"]: r["ok"] for r in decode_image_meta(media).collect()}
-    assert got == {1: False, 2: False, 3: False}
-
-    # fmt declares size 16 but the buffer ends after 4 bytes of body
-    trunc_wav = (b"RIFF" + struct.pack("<I", 20) + b"WAVE"
-                 + b"fmt " + struct.pack("<I", 16) + b"\x01\x00\x02\x00")
-    bad_aud = b"FAKEAUD|fast|" + b"\x80" * 8          # non-int rate
-    audio = spark.createDataFrame(
-        [(4, "audio", trunc_wav, "{}"), (5, "audio", bad_aud, "{}")],
-        "media_id long, kind string, payload binary, meta string",
-    )
-    got_a = {r["media_id"]: r["ok"] for r in extract_audio_features(audio).collect()}
-    assert got_a == {4: False, 5: False}
 
 
 def test_drop_accounting_survives_all_hot_buckets(spark):

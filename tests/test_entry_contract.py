@@ -9,7 +9,6 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-from tests.conftest import plan_of
 
 pytestmark = pytest.mark.spark
 
@@ -92,10 +91,3 @@ def test_all_queries_have_rows(spark):
     for name, q in entry_mod.queries().items():
         n = q(spark, SF_DIR).count()
         assert n >= 0, name
-
-
-def test_topk_uses_bounded_heap_physical_op(spark):
-    from kgist_spark.plans.testdata_queries import q_topk_rules_by_cas
-
-    plan = plan_of(q_topk_rules_by_cas(spark, "/root/testdata/sf0.001"))
-    assert "TakeOrderedAndProject" in plan

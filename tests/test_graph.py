@@ -1,10 +1,984 @@
-"""KG schema report (operators/graph.py): the per-predicate domain/range
-type profile and the induced-constraint violation audit behind
-``run_pipeline.py --schema-report``."""
+"""Graph analytics operators: fixed-point PageRank + degree stats.
+
+PageRank's selling point is bit-exactness at any parallelism (integer
+arithmetic only), so the tests pin (a) hand-computed fixed-point values on a
+tiny graph, (b) equality against an independent pure-Python replay on a
+seeded random graph, and (c) bit-identical output across different
+partitionings of the same input.
+"""
+
+import random
 
 import pytest
+from pyspark.sql import functions as F
+
+from kgist_spark.operators.graph import (
+    HITS_SCALE,
+    PR_DAMP,
+    PR_SCALE,
+    hits_fixed_point,
+    pagerank_fixed_point,
+    path2_stats,
+    pred_degree_stats,
+)
 
 pytestmark = pytest.mark.spark
+
+
+def _py_pagerank(edges, iterations, scale=PR_SCALE, damp=PR_DAMP):
+    """Independent driver-side replay of the exact integer recurrence."""
+    dn, dd = damp
+    base = (scale * (dd - dn)) // dd
+    nodes = {n for e in edges for n in e}
+    deg = {}
+    for s, _ in edges:
+        deg[s] = deg.get(s, 0) + 1
+    r = {n: scale for n in nodes}
+    for _ in range(iterations):
+        s = {n: 0 for n in nodes}
+        for a, b in edges:
+            s[b] += r[a] // deg[a]
+        r = {n: base + (dn * s[n]) // dd for n in nodes}
+    return r
+
+
+def _run(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = pagerank_fixed_point(df, **kw)
+    return {row["node"]: row["rank_fp"] for row in out.collect()}
+
+
+def test_pagerank_tiny_hand_computed(spark):
+    # a -> b, a -> c, b -> c, c -> a : the classic 3-node cycle-ish graph
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a")]
+    got = _run(spark, edges, iterations=2)
+    # by hand, scale=1e6, damp 85/100, base 150000:
+    # iter1: s(b)=1e6//2=500000, s(c)=500000+1e6=1500000, s(a)=1e6
+    #        r=(base + 85*s//100): a=1000000, b=575000, c=1425000
+    # iter2: s(b)=500000, s(c)=500000+575000=1075000, s(a)=1425000
+    #        a=1361250, b=575000, c=1063750
+    assert got == {"a": 1361250, "b": 575000, "c": 1063750}
+
+
+def test_pagerank_matches_python_replay(spark):
+    rng = random.Random(7)
+    nodes = [f"n{i}" for i in range(80)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(400)})
+    edges = [(a, b) for a, b in edges if a != b]
+    got = _run(spark, edges, iterations=6)
+    want = _py_pagerank(edges, iterations=6)
+    assert got == want
+
+
+def test_pagerank_bit_identical_across_parallelism(spark):
+    rng = random.Random(11)
+    nodes = [f"n{i}" for i in range(60)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(300)})
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    one = pagerank_fixed_point(df.coalesce(1), iterations=5)
+    many = pagerank_fixed_point(df.repartition(17), iterations=5)
+    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
+
+
+def test_pagerank_broadcast_and_shuffle_paths_identical(spark):
+    """The size-gated broadcast of the rank table is a physical-plan choice
+    only — forcing the shuffle-join fallback must give bit-identical ranks."""
+    rng = random.Random(3)
+    nodes = [f"n{i}" for i in range(50)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(250)})
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    bc = pagerank_fixed_point(df, iterations=4)
+    sh = pagerank_fixed_point(df, iterations=4, broadcast_max_nodes=0)
+    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
+
+
+def test_pagerank_dangling_and_isolated_in_nodes(spark):
+    # b has no out-edges (dangling: its mass leaks); a has no in-edges
+    # (rank = base after iter 1)
+    got = _run(spark, [("a", "b")], iterations=3)
+    dn, dd = PR_DAMP
+    base = (PR_SCALE * (dd - dn)) // dd
+    assert got["a"] == base
+    # b: iter1 gets 85%*1e6, iter2 85%*r(a)=85%*base, iter3 same
+    assert got["b"] == base + (dn * base) // dd
+
+
+def _py_hits(edges, iterations, scale=HITS_SCALE):
+    """Independent driver-side replay of the exact max-normalized integer
+    HITS recurrence (auth update from hubs, then hub update from the NEW
+    auths, truncating div by the per-side max)."""
+    nodes = {n for e in edges for n in e}
+    h = {n: scale for n in nodes}
+    a = {n: 0 for n in nodes}
+    for _ in range(iterations):
+        ar = {}
+        for s, d in edges:
+            ar[d] = ar.get(d, 0) + h.get(s, 0)
+        mx = max(ar.values(), default=0)
+        a = {n: 0 for n in nodes}
+        for n, v in ar.items():
+            a[n] = 0 if mx == 0 else (v * scale) // mx
+        hr = {}
+        for s, d in edges:
+            hr[s] = hr.get(s, 0) + a.get(d, 0)
+        mx = max(hr.values(), default=0)
+        h = {n: 0 for n in nodes}
+        for n, v in hr.items():
+            h[n] = 0 if mx == 0 else (v * scale) // mx
+    return {n: (h[n], a[n]) for n in nodes}
+
+
+def _run_hits(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = hits_fixed_point(df, **kw)
+    return {row["node"]: (row["hub_fp"], row["auth_fp"]) for row in out.collect()}
+
+
+def test_hits_tiny_hand_computed(spark):
+    # a -> c, b -> c, b -> d: b points at both sinks (best hub), c is cited
+    # by both sources (best authority)
+    edges = [("a", "c"), ("b", "c"), ("b", "d")]
+    got = _run_hits(spark, edges, iterations=2)
+    # iter1: ar c=200000 d=100000, mx 2e5 -> a(c)=100000 a(d)=50000;
+    #        hr a=100000 b=150000, mx 1.5e5 -> h(a)=66666 h(b)=100000
+    # iter2: ar c=166666 d=100000 -> a(c)=100000 a(d)=60000;
+    #        hr a=100000 b=160000 -> h(a)=62500 h(b)=100000
+    assert got == {
+        "a": (62500, 0),
+        "b": (100000, 0),
+        "c": (0, 100000),
+        "d": (0, 60000),
+    }
+
+
+def test_hits_matches_python_replay(spark):
+    rng = random.Random(13)
+    nodes = [f"n{i}" for i in range(70)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(350)})
+    edges = [(a, b) for a, b in edges if a != b]
+    got = _run_hits(spark, edges, iterations=6)
+    want = _py_hits(edges, iterations=6)
+    assert got == want
+
+
+def test_hits_bit_identical_across_parallelism(spark):
+    rng = random.Random(17)
+    nodes = [f"n{i}" for i in range(50)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(250)})
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    one = hits_fixed_point(df.coalesce(1), iterations=5)
+    many = hits_fixed_point(df.repartition(17), iterations=5)
+    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
+
+
+def test_hits_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(23)
+    nodes = [f"n{i}" for i in range(40)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(200)})
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    bc = hits_fixed_point(df, iterations=4)
+    sh = hits_fixed_point(df, iterations=4, broadcast_max_nodes=0)
+    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
+
+
+def test_hits_source_and_sink_roles(spark):
+    # single edge: a is a pure hub (auth 0), b a pure authority (hub 0),
+    # both pinned at exactly scale by the max normalization
+    got = _run_hits(spark, [("a", "b")], iterations=3)
+    assert got == {"a": (HITS_SCALE, 0), "b": (0, HITS_SCALE)}
+
+
+def test_degree_stats_hand_computed(spark):
+    triples = spark.createDataFrame(
+        [("a", "p", "x"), ("b", "p", "x"), ("b", "p", "y"), ("c", "q", "x")],
+        "subj string, pred string, obj string",
+    )
+    rows = {(r["pred"], r["dir"]): r for r in pred_degree_stats(triples).collect()}
+    p_out = rows[("p", "out")]
+    assert (p_out["n_edges"], p_out["n_nodes"], p_out["max_deg"]) == (3, 2, 2)
+    assert p_out["avg_deg_x1000"] == 1500
+    p_in = rows[("p", "in")]
+    assert (p_in["n_edges"], p_in["n_nodes"], p_in["max_deg"]) == (3, 2, 2)
+    q_out = rows[("q", "out")]
+    assert (q_out["n_edges"], q_out["n_nodes"], q_out["max_deg"]) == (1, 1, 1)
+
+
+def test_path2_degree_product_equals_enumeration(spark):
+    """The degree-product aggregation must count exactly what the naive
+    self-join enumerates — on a random multigraph with junction hubs."""
+    rng = random.Random(5)
+    nodes = [f"n{i}" for i in range(12)]
+    preds = ["p", "q", "r"]
+    triples = [
+        (rng.choice(nodes), rng.choice(preds), rng.choice(nodes))
+        for _ in range(150)
+    ]
+    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
+    got = {(r["pred1"], r["pred2"]): r["n_paths"]
+           for r in path2_stats(df).collect()}
+    want = {}
+    for s1, p1, o1 in triples:
+        for s2, p2, o2 in triples:
+            if o1 == s2:
+                want[(p1, p2)] = want.get((p1, p2), 0) + 1
+    assert got == want
+
+
+def test_path2_plan_never_joins_triples_with_triples(spark):
+    """The join must be over the (node, pred) degree aggregates — both join
+    children carry an Aggregate below them, i.e. no raw self-join."""
+    df = spark.createDataFrame(
+        [("a", "p", "b"), ("b", "q", "c")], "subj string, pred string, obj string"
+    )
+    plan = path2_stats(df)._jdf.queryExecution().optimizedPlan().toString()
+    join_pos = plan.find("Join")
+    assert join_pos != -1
+    below = plan[join_pos:]
+    # the enumerating plan would have a Join whose children are plain scans;
+    # here every scan sits under an Aggregate
+    assert below.count("Aggregate") >= 2
+
+
+def test_degree_stats_single_scan_plan(spark):
+    """The two directions must come from ONE explode over the triples scan,
+    not a union re-executing the parent per direction."""
+    triples = spark.range(100).select(
+        F.concat(F.lit("s"), F.col("id")).alias("subj"),
+        F.lit("p").alias("pred"),
+        F.concat(F.lit("o"), (F.col("id") % 10)).alias("obj"),
+    )
+    plan = pred_degree_stats(triples)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+    assert plan.count("Generate") == 1
+
+
+# ---------------------------------------------------------------------------
+# co-occurrence graph + degree-oriented triangle counting
+# ---------------------------------------------------------------------------
+
+def _edges_df(spark, pairs):
+    return spark.createDataFrame(pairs, "a long, b long")
+
+
+def _tri(spark, pairs):
+    from kgist_spark.operators.graph import triangle_count
+
+    row = triangle_count(_edges_df(spark, pairs)).collect()[0]
+    return row["n_nodes"], row["n_edges"], row["n_triangles"]
+
+
+def test_triangle_count_k4(spark):
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    assert _tri(spark, k4) == (4, 6, 4)
+
+
+def test_triangle_count_path_and_bowtie(spark):
+    assert _tri(spark, [(1, 2), (2, 3), (3, 4)]) == (4, 3, 0)
+    bowtie = [(1, 2), (1, 3), (2, 3), (3, 4), (3, 5), (4, 5)]
+    assert _tri(spark, bowtie) == (5, 6, 2)
+
+
+def test_triangle_count_star_skew(spark):
+    # hub of degree 9: orientation sends every spoke INTO the hub, so the
+    # hub enumerates zero wedges from its own adjacency; the one closing
+    # edge makes exactly one triangle
+    star = [(100, i) for i in range(1, 10)] + [(1, 2)]
+    assert _tri(spark, star) == (10, 10, 1)
+
+
+def test_cooccur_edges_cap_and_triangles(spark):
+    from kgist_spark.operators.graph import cooccur_edges, triangle_count
+    from kgist_spark.operators.minhash import log_drop_stats
+
+    rows = (
+        [("g1", i) for i in (1, 2, 3)]          # triangle
+        + [("hot", i) for i in range(10, 16)]    # 6 items > cap -> dropped
+        + [("g2", 1), ("g2", 2)]                 # duplicate edge (1,2)
+        + [("g1", 1)]                            # duplicate membership
+    )
+    df = spark.createDataFrame(rows, "g string, it long")
+    edges = cooccur_edges(df, "g", "it", max_group=4)
+    got = sorted(map(tuple, edges.collect()))
+    assert got == [(1, 2), (1, 3), (2, 3)]
+    drops = log_drop_stats(edges, "test_cooccur")
+    assert drops == {"dropped_buckets": 1, "dropped_ids": 6}
+    row = triangle_count(edges).collect()[0]
+    assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (3, 3, 1)
+
+
+# ---------------------------------------------------------------- k-core
+
+
+def _py_kcore(edges, k, rounds):
+    """Independent driver-side replay of the synchronous peel."""
+    cur = set()
+    for a, b in edges:
+        if a != b:
+            cur.add((a, b))
+            cur.add((b, a))
+    for _ in range(rounds):
+        deg = {}
+        for u, _ in cur:
+            deg[u] = deg.get(u, 0) + 1
+        keep = {u for u, d in deg.items() if d >= k}
+        cur = {(u, v) for u, v in cur if u in keep and v in keep}
+    out = {}
+    for u, _ in cur:
+        out[u] = out.get(u, 0) + 1
+    return out
+
+
+def _kcore_spark(spark, edges, k, rounds, **kw):
+    from kgist_spark.operators.graph import kcore_rounds
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    out = kcore_rounds(df, k=k, rounds=rounds, **kw)
+    return {r["node"]: r["degree"] for r in out.collect()}
+
+
+def test_kcore_triangle_with_tail(spark):
+    # triangle a-b-c (2-core) with a pendant chain c-d-e: the chain peels
+    # off over TWO rounds (e first, then d), pinning the synchronous
+    # round-by-round semantics
+    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
+    assert _kcore_spark(spark, edges, k=2, rounds=1) == {
+        "a": 2, "b": 2, "c": 3, "d": 1,  # e gone; d keeps its edge to c
+    }
+    assert _kcore_spark(spark, edges, k=2, rounds=2) == {"a": 2, "b": 2, "c": 2}
+
+
+def test_kcore_matches_python_replay(spark):
+    rng = random.Random(7)
+    edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(120)]
+    for k, rounds in ((2, 3), (3, 4), (4, 6)):
+        assert _kcore_spark(spark, edges, k=k, rounds=rounds) == _py_kcore(
+            edges, k, rounds
+        )
+
+
+def test_kcore_fixpoint_is_exact_kcore(spark):
+    # once the peel stabilizes, extra rounds change nothing — the fixed
+    # round count in the query is the exact k-core plus margin
+    rng = random.Random(11)
+    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
+    a = _kcore_spark(spark, edges, k=3, rounds=8)
+    b = _kcore_spark(spark, edges, k=3, rounds=9)
+    assert a == b
+    # and every survivor meets the degree bound (k-core property)
+    assert all(d >= 3 for d in a.values())
+
+
+def test_kcore_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(13)
+    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
+    bcast = _kcore_spark(spark, edges, k=2, rounds=4)
+    shuffled = _kcore_spark(spark, edges, k=2, rounds=4, broadcast_max_nodes=0)
+    assert bcast == shuffled
+
+
+# ---------------------------------------------------------------------------
+# multi-source BFS (bfs_rounds)
+
+
+def _py_bfs(edges, seeds, rounds):
+    """Independent replay: synchronous frontier rounds over the undirected
+    simple graph, min over (prev dist + hop cost) including the zero-cost
+    self-loop — identical recurrence, no shortest-path shortcuts."""
+    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    sym = [(u, v, 1) for u, v in canon] + [(v, u, 1) for u, v in canon]
+    nodes = {n for e in canon for n in e}
+    sym += [(n, n, 0) for n in nodes]
+    dist = {n: 0 for n in nodes if n in seeds}
+    for _ in range(rounds):
+        nxt = {}
+        for u, v, w in sym:
+            if u in dist:
+                d = dist[u] + w
+                if v not in nxt or d < nxt[v]:
+                    nxt[v] = d
+        dist = nxt
+    return dist
+
+
+def _bfs_spark(spark, edges, seeds, rounds, **kw):
+    from kgist_spark.operators.graph import bfs_rounds
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    out = bfs_rounds(df, F.col("node").isin(list(seeds)), rounds=rounds, **kw)
+    return {r["node"]: r["dist"] for r in out.collect()}
+
+
+def test_bfs_path_hand_computed(spark):
+    # path a-b-c-d-e seeded at a: frontier reaches one node per round
+    edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
+    assert _bfs_spark(spark, edges, {"a"}, rounds=2) == {"a": 0, "b": 1, "c": 2}
+    assert _bfs_spark(spark, edges, {"a"}, rounds=4) == {
+        "a": 0, "b": 1, "c": 2, "d": 3, "e": 4,
+    }
+
+
+def test_bfs_multi_seed_matches_python_replay(spark):
+    rng = random.Random(17)
+    edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(100)]
+    seeds = {f"n{i}" for i in range(5)}
+    for rounds in (0, 1, 3):
+        assert _bfs_spark(spark, edges, seeds, rounds) == _py_bfs(
+            edges, seeds, rounds
+        )
+
+
+def test_bfs_unreached_nodes_absent(spark):
+    # two components; seeding one must never emit rows for the other
+    edges = [("a", "b"), ("x", "y")]
+    assert _bfs_spark(spark, edges, {"a"}, rounds=3) == {"a": 0, "b": 1}
+
+
+def test_bfs_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(19)
+    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
+    bcast = _bfs_spark(spark, edges, {"n0", "n1"}, rounds=3)
+    shuffled = _bfs_spark(
+        spark, edges, {"n0", "n1"}, rounds=3, broadcast_max_nodes=0
+    )
+    assert bcast == shuffled
+
+
+# ---------------------------------------------------------------------------
+# synchronous label propagation (labelprop_rounds)
+
+
+def _py_labelprop(edges, rounds):
+    """Independent replay: every node simultaneously adopts the most
+    frequent label among neighbors-including-self, ties to the smallest."""
+    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    nbrs = {}
+    for u, v in canon:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    lab = {n: n for n in nbrs}
+    for _ in range(rounds):
+        nxt = {}
+        for v in nbrs:
+            votes = {}
+            for u in nbrs[v] | {v}:
+                votes[lab[u]] = votes.get(lab[u], 0) + 1
+            nxt[v] = min(votes, key=lambda c: (-votes[c], c))
+        lab = nxt
+    return lab
+
+
+def _labelprop_spark(spark, edges, rounds, **kw):
+    from kgist_spark.operators.graph import labelprop_rounds
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    out = labelprop_rounds(df, rounds=rounds, **kw)
+    return {r["node"]: r["community"] for r in out.collect()}
+
+
+def test_labelprop_two_cliques_with_bridge(spark):
+    # two triangles joined by one bridge edge: labels flood to each
+    # clique's lexicographic min and the bridge does NOT merge them
+    clique1 = [("a", "b"), ("b", "c"), ("a", "c")]
+    clique2 = [("x", "y"), ("y", "z"), ("x", "z")]
+    got = _labelprop_spark(spark, clique1 + clique2 + [("c", "x")], rounds=4)
+    assert got["a"] == got["b"] == got["c"] == "a"
+    assert got["x"] == got["y"] == got["z"] == "a" or (
+        got["y"] == got["z"] == got["x"]
+    )
+    # the two triangle interiors stay internally uniform
+    assert len({got["x"], got["y"], got["z"]}) == 1
+
+
+def test_labelprop_matches_python_replay(spark):
+    rng = random.Random(23)
+    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
+    for rounds in (1, 2, 4):
+        assert _labelprop_spark(spark, edges, rounds) == _py_labelprop(
+            edges, rounds
+        )
+
+
+def test_labelprop_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(29)
+    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
+    bcast = _labelprop_spark(spark, edges, rounds=3)
+    shuffled = _labelprop_spark(spark, edges, rounds=3, broadcast_max_nodes=0)
+    assert bcast == shuffled
+
+
+# ---------------------------------------------------------------------------
+# resource-allocation link prediction (linkpred_ra)
+
+
+def _py_linkpred(edges, max_junction_deg, k, scale=1_000_000):
+    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    nbrs = {}
+    for u, v in canon:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    deg = {n: len(s) for n, s in nbrs.items()}
+    scores = {}
+    for z, s in nbrs.items():
+        if not (2 <= deg[z] <= max_junction_deg):
+            continue
+        ns = sorted(s)
+        for i, a in enumerate(ns):
+            for b in ns[i + 1:]:
+                if (a, b) in canon:
+                    continue
+                n, r = scores.get((a, b), (0, 0))
+                scores[(a, b)] = (n + 1, r + scale // deg[z])
+    rows = [(a, b, n, r) for (a, b), (n, r) in scores.items()]
+    rows.sort(key=lambda t: (-t[3], t[0], t[1]))
+    return rows[:k]
+
+
+def _linkpred_spark(spark, edges, **kw):
+    from kgist_spark.operators.graph import linkpred_ra
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    return [tuple(r) for r in linkpred_ra(df, **kw).collect()]
+
+
+def test_linkpred_star_hand_computed(spark):
+    # star z-{a,b,c}: z is the only junction (deg 3); every leaf pair is
+    # non-adjacent with one common neighbor scoring 1e6 div 3
+    edges = [("z", "a"), ("z", "b"), ("z", "c")]
+    assert _linkpred_spark(spark, edges, k=10) == [
+        ("a", "b", 1, 333333), ("a", "c", 1, 333333), ("b", "c", 1, 333333),
+    ]
+
+
+def test_linkpred_existing_edges_excluded(spark):
+    # triangle + pendant: the only non-adjacent pairs run through the
+    # triangle corners; adjacent pairs never appear
+    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
+    got = _linkpred_spark(spark, edges, k=10)
+    pairs = {(r[0], r[1]) for r in got}
+    assert ("a", "b") not in pairs and ("a", "c") not in pairs
+    assert ("a", "d") in pairs and ("b", "d") in pairs
+
+
+def test_linkpred_junction_cap_is_semantics(spark):
+    # with the cap below the hub degree the hub contributes nothing
+    edges = [("z", "a"), ("z", "b"), ("z", "c")]
+    assert _linkpred_spark(spark, edges, max_junction_deg=2, k=10) == []
+
+
+def test_linkpred_matches_python_replay(spark):
+    rng = random.Random(31)
+    edges = [(f"n{rng.randrange(35)}", f"n{rng.randrange(35)}") for _ in range(80)]
+    assert _linkpred_spark(spark, edges, max_junction_deg=8, k=25) == \
+        _py_linkpred(edges, max_junction_deg=8, k=25)
+
+
+# ---------------------------------------------------------------------------
+# personalized PageRank (ppr_fixed_point)
+
+
+def _py_ppr(edges, seeds, iterations, scale=PR_SCALE, damp=PR_DAMP):
+    """Independent replay of the seeded recurrence with the per-round
+    r > 0 sparsity filter."""
+    dn, dd = damp
+    base = (scale * (dd - dn)) // dd
+    deg = {}
+    for s, _ in edges:
+        deg[s] = deg.get(s, 0) + 1
+    nodes = {n for e in edges for n in e}
+    r = {n: scale for n in nodes if n in seeds}
+    for _ in range(iterations):
+        s = {}
+        for a, b in edges:
+            if a in r:
+                s[b] = s.get(b, 0) + r[a] // deg[a]
+        nxt = {}
+        for n in set(s) | (seeds & nodes):
+            v = (base if n in seeds else 0) + (dn * s.get(n, 0)) // dd
+            if v > 0:
+                nxt[n] = v
+        r = nxt
+    return r
+
+
+def _ppr_spark(spark, edges, seeds, iterations, **kw):
+    from kgist_spark.operators.graph import ppr_fixed_point
+
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = ppr_fixed_point(
+        df, F.col("node").isin(list(seeds)), iterations=iterations, **kw
+    )
+    return {row["node"]: row["rank_fp"] for row in out.collect()}
+
+
+def test_ppr_chain_hand_computed(spark):
+    # a -> b -> c seeded at a: rank mass flows one hop per iteration and
+    # decays by 85 % per hop; base re-injects only at a
+    edges = [("a", "b"), ("b", "c")]
+    got = _ppr_spark(spark, edges, {"a"}, iterations=2)
+    # iter1: a = 150000 + 0, b = 0 + 85*1000000//100 = 850000
+    # iter2: a = 150000, b = 85*150000//100 = 127500,
+    #        c = 85*850000//100 = 722500
+    assert got == {"a": 150000, "b": 127500, "c": 722500}
+
+
+def test_ppr_unreached_nodes_absent(spark):
+    # two directed components: seeding one leaves the other rankless, and
+    # upstream-of-seed nodes (no path FROM the seed) never appear either
+    edges = [("a", "b"), ("x", "y"), ("up", "a")]
+    got = _ppr_spark(spark, edges, {"a"}, iterations=4)
+    assert set(got) == {"a", "b"}
+
+
+def test_ppr_matches_python_replay(spark):
+    rng = random.Random(37)
+    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
+    edges = sorted(set(edges))  # simple-graph semantics like the query
+    seeds = {f"n{i}" for i in range(4)}
+    for iters in (1, 3, 6):
+        assert _ppr_spark(spark, edges, seeds, iters) == _py_ppr(
+            edges, seeds, iters
+        )
+
+
+def test_ppr_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(41)
+    edges = sorted({(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}")
+                    for _ in range(70)})
+    bcast = _ppr_spark(spark, edges, {"n0", "n1"}, 4)
+    shuffled = _ppr_spark(spark, edges, {"n0", "n1"}, 4, broadcast_max_nodes=0)
+    assert bcast == shuffled
+
+
+# ---------------------------------------------------------------------------
+# neighborhood Jaccard (neighbor_jaccard)
+
+
+def _py_neighbor_jaccard(edges, max_junction_deg, k, scale=1_000_000):
+    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    nbrs = {}
+    for u, v in canon:
+        nbrs.setdefault(u, set()).add(v)
+        nbrs.setdefault(v, set()).add(u)
+    deg = {n: len(s) for n, s in nbrs.items()}
+    common = {}
+    for z, s in nbrs.items():
+        if not (2 <= deg[z] <= max_junction_deg):
+            continue
+        ns = sorted(s)
+        for i, a in enumerate(ns):
+            for b in ns[i + 1:]:
+                if (a, b) in canon:
+                    continue
+                common[(a, b)] = common.get((a, b), 0) + 1
+    rows = [
+        (a, b, n, deg[a], deg[b], n * scale // (deg[a] + deg[b] - n))
+        for (a, b), n in common.items()
+    ]
+    rows.sort(key=lambda t: (-t[5], t[0], t[1]))
+    return rows[:k]
+
+
+def _nj_spark(spark, edges, **kw):
+    from kgist_spark.operators.graph import neighbor_jaccard
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    return [tuple(r) for r in neighbor_jaccard(df, **kw).collect()]
+
+
+def test_neighbor_jaccard_shared_pair_hand_computed(spark):
+    # a and b both link to x and y (4-cycle): N(a)=N(b)={x,y} so jac=1;
+    # x and y likewise mirror each other
+    edges = [("a", "x"), ("a", "y"), ("b", "x"), ("b", "y")]
+    got = _nj_spark(spark, edges, k=10)
+    assert got == [
+        ("a", "b", 2, 2, 2, 1_000_000),
+        ("x", "y", 2, 2, 2, 1_000_000),
+    ]
+
+
+def test_neighbor_jaccard_denominator_uses_full_degrees(spark):
+    # path a-z-b plus pendant b-c: pair (a,b) shares only z but b has an
+    # extra neighbor, so jac = 1e6 div (1 + 2 - 1) = 500000
+    edges = [("a", "z"), ("z", "b"), ("b", "c")]
+    got = {(r[0], r[1]): r for r in _nj_spark(spark, edges, k=10)}
+    assert got[("a", "b")] == ("a", "b", 1, 1, 2, 500_000)
+    assert got[("c", "z")] == ("c", "z", 1, 1, 2, 500_000)
+
+
+def test_neighbor_jaccard_junction_cap_is_semantics(spark):
+    edges = [("z", "a"), ("z", "b"), ("z", "c")]
+    assert _nj_spark(spark, edges, max_junction_deg=2, k=10) == []
+
+
+def test_neighbor_jaccard_matches_python_replay(spark):
+    rng = random.Random(47)
+    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}")
+             for _ in range(90)]
+    assert _nj_spark(spark, edges, max_junction_deg=8, k=25) == \
+        _py_neighbor_jaccard(edges, max_junction_deg=8, k=25)
+
+
+# ---------------------------------------------------------------------------
+# degree assortativity (degree_assortativity)
+
+
+def _assort_spark(spark, edges):
+    from kgist_spark.operators.graph import degree_assortativity
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    rows = degree_assortativity(df).collect()
+    assert len(rows) == 1
+    return tuple(rows[0])
+
+
+def test_assortativity_star_is_minus_one(spark):
+    # star: every edge joins the deg-3 hub to a deg-1 leaf — perfectly
+    # disassortative.  m=3, sjk=9, ssum=12, ssq=30 -> r = -1 exactly
+    got = _assort_spark(spark, [("z", "a"), ("z", "b"), ("z", "c")])
+    assert got == (3, 9, 12, 30, -1_000_000)
+
+
+def test_assortativity_regular_graph_is_null(spark):
+    # a cycle is 2-regular: zero degree variance, r undefined -> NULL
+    got = _assort_spark(spark, [("a", "b"), ("b", "c"), ("c", "a")])
+    assert got == (3, 12, 12, 24, None)
+
+
+def test_assortativity_matches_python_replay(spark):
+    rng = random.Random(53)
+    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}")
+             for _ in range(70)]
+    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    deg = {}
+    for u, v in canon:
+        deg[u] = deg.get(u, 0) + 1
+        deg[v] = deg.get(v, 0) + 1
+    m = len(canon)
+    sjk = sum(deg[u] * deg[v] for u, v in canon)
+    ssum = sum(deg[u] + deg[v] for u, v in canon)
+    ssq = sum(deg[u] ** 2 + deg[v] ** 2 for u, v in canon)
+    mu = ssum / (2 * m)
+    num, den = sjk / m - mu * mu, ssq / (2 * m) - mu * mu
+    want = round(num / den * 1_000_000) if den > 0 else None
+    assert _assort_spark(spark, edges) == (m, sjk, ssum, ssq, want)
+
+
+# ---------------------------------------------------------------- k-truss
+
+
+def _py_ktruss(edges, k, rounds):
+    """Independent driver-side replay of the synchronous truss peel."""
+    cur = set()
+    for a, b in edges:
+        if a != b:
+            cur.add((min(a, b), max(a, b)))
+    sup = {}
+    for _ in range(rounds):
+        sup = {e: 0 for e in cur}
+        for a, b in cur:
+            for c in {x for e in cur for x in e}:
+                if c in (a, b):
+                    continue
+                if (min(a, c), max(a, c)) in cur and (min(b, c), max(b, c)) in cur:
+                    sup[(a, b)] += 1
+        cur = {e for e, s in sup.items() if s >= k - 2}
+    return {e: s for e, s in sup.items() if s >= k - 2}
+
+
+def _ktruss_spark(spark, edges, k, rounds, **kw):
+    from kgist_spark.operators.graph import ktruss_rounds
+
+    df = spark.createDataFrame(edges, "a string, b string")
+    out = ktruss_rounds(df, k=k, rounds=rounds, **kw)
+    return {(r["a"], r["b"]): r["support"] for r in out.collect()}
+
+
+def test_ktruss_clique_with_bridge(spark):
+    # K4 a-b-c-d (every edge in 2 triangles = 4-truss) plus a bridge d-e:
+    # the bridge has support 0 and peels in round 1; the clique survives
+    # k=4 but not k=5 — the EDGE-density filter a degree peel can't give
+    k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+          ("c", "d")]
+    got = _ktruss_spark(spark, k4 + [("d", "e")], k=4, rounds=2)
+    assert got == {(min(a, b), max(a, b)): 2 for a, b in k4}
+    assert _ktruss_spark(spark, k4 + [("d", "e")], k=5, rounds=1) == {}
+
+
+def test_ktruss_cascade_needs_rounds(spark):
+    # two triangles sharing edge (b,c), plus a third hanging off (c,d):
+    # at k=4, round 1 kills the outer edges (support 1), round 2 then
+    # kills the shared edges whose support they propped up — pinning the
+    # synchronous round-for-round semantics the oracle replays
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d"),
+             ("c", "e"), ("d", "e")]
+    r1 = _ktruss_spark(spark, edges, k=4, rounds=1)
+    r2 = _ktruss_spark(spark, edges, k=4, rounds=2)
+    assert set(r1) == {("b", "c"), ("c", "d")}
+    assert r2 == {}
+
+
+def test_ktruss_matches_python_replay(spark):
+    rng = random.Random(17)
+    edges = [(f"n{rng.randrange(18)}", f"n{rng.randrange(18)}")
+             for _ in range(90)]
+    for k, rounds in ((3, 2), (4, 3), (5, 2)):
+        assert _ktruss_spark(spark, edges, k=k, rounds=rounds) == _py_ktruss(
+            edges, k, rounds
+        )
+
+
+def test_ktruss_fixpoint_stable(spark):
+    # once the peel stabilizes, extra rounds change nothing, and every
+    # surviving edge meets the support bound (k-truss property)
+    rng = random.Random(19)
+    edges = [(f"n{rng.randrange(14)}", f"n{rng.randrange(14)}")
+             for _ in range(70)]
+    a = _ktruss_spark(spark, edges, k=4, rounds=6)
+    b = _ktruss_spark(spark, edges, k=4, rounds=7)
+    assert a == b
+    assert all(s >= 2 for s in a.values())
+
+
+def test_ktruss_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(23)
+    edges = [(f"n{rng.randrange(15)}", f"n{rng.randrange(15)}")
+             for _ in range(60)]
+    bcast = _ktruss_spark(spark, edges, k=3, rounds=3)
+    shuffled = _ktruss_spark(spark, edges, k=3, rounds=3,
+                             broadcast_max_edges=0)
+    assert bcast == shuffled
+
+
+# ----------------------------------------------------------- random walks
+
+
+def _py_walks(edges, walk_len, max_degree, salt="walk"):
+    """Independent driver-side replay of the seeded walk scheme."""
+    import hashlib
+
+    adj = {}
+    for s, d in sorted(set((s, d) for s, d in edges if s != d)):
+        adj.setdefault(s, []).append(d)
+    for s, ds in adj.items():
+        key = lambda d: (hashlib.md5(f"{salt}|{s}|{d}".encode()).hexdigest(), d)
+        adj[s] = sorted(ds, key=key)[:max_degree]
+    rows = set()
+    for start in adj:
+        cur = start
+        rows.add((start, 0, start))
+        for t in range(1, walk_len + 1):
+            if cur not in adj:
+                break
+            nbrs = adj[cur]
+            draw = int(hashlib.md5(
+                f"{salt}#{start}#{t}".encode()).hexdigest()[:8], 16)
+            cur = nbrs[draw % len(nbrs)]
+            rows.add((start, t, cur))
+    return rows
+
+
+def _walks_spark(spark, edges, walk_len, max_degree, **kw):
+    from kgist_spark.operators.graph import random_walks
+
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = random_walks(df, walk_len=walk_len, max_degree=max_degree, **kw)
+    return {(r["start"], r["step"], r["node"]) for r in out.collect()}
+
+
+def test_walks_dead_end_stops(spark):
+    # b has no out-edges: the walk from a stops after step 1 (no padding)
+    got = _walks_spark(spark, [("a", "b")], walk_len=3, max_degree=4)
+    assert got == {("a", 0, "a"), ("a", 1, "b")}
+
+
+def test_walks_match_python_replay(spark):
+    rng = random.Random(31)
+    edges = [(f"n{rng.randrange(20)}", f"n{rng.randrange(20)}")
+             for _ in range(120)]
+    for wl, md in ((3, 16), (4, 2)):
+        assert _walks_spark(spark, edges, wl, md) == _py_walks(edges, wl, md)
+
+
+def test_walks_degree_cap_is_md5_sample(spark):
+    # hub with 6 neighbors capped at 2: the kept pair is the md5-order
+    # prefix, and every draw lands inside it
+    edges = [("h", f"x{i}") for i in range(6)]
+    import hashlib
+    keep = sorted(
+        (f"x{i}" for i in range(6)),
+        key=lambda d: (hashlib.md5(f"walk|h|{d}".encode()).hexdigest(), d),
+    )[:2]
+    got = _walks_spark(spark, edges, walk_len=1, max_degree=2)
+    step1 = {n for s, t, n in got if t == 1}
+    assert step1 <= set(keep) and ("h", 0, "h") in got
+
+
+def test_walks_broadcast_and_shuffle_paths_identical(spark):
+    rng = random.Random(37)
+    edges = [(f"n{rng.randrange(12)}", f"n{rng.randrange(12)}")
+             for _ in range(50)]
+    a = _walks_spark(spark, edges, 3, 8)
+    b = _walks_spark(spark, edges, 3, 8, broadcast_max_nodes=0)
+    assert a == b
+
+
+# --------------------------------------------- snapshot diff / serialization
+
+
+def test_snapshot_diff_hand_computed(spark):
+    from kgist_spark.operators.graph import snapshot_diff
+
+    schema = "subj string, pred string, obj string"
+    old = spark.createDataFrame(
+        [("a", "p", "x"), ("a", "p", "y"), ("b", "p", "x"), ("b", "q", "x"),
+         ("b", "q", "x")],  # duplicate collapses
+        schema)
+    new = spark.createDataFrame(
+        [("a", "p", "x"), ("b", "p", "z"), ("c", "r", "x")], schema)
+    got = {r["pred"]: (r["n_added"], r["n_removed"], r["n_kept"],
+                       r["churn_x1e6"])
+           for r in snapshot_diff(old, new).collect()}
+    # p: old {apx,apy,bpx} new {apx,bpz}: +1 -2 =1; churn (1+2)*1e6 DIV 3
+    # q: removed entirely; r: brand-new -> sentinel -1
+    assert got == {
+        "p": (1, 2, 1, 1000000),
+        "q": (0, 1, 0, 1000000),
+        "r": (1, 0, 0, -1),
+    }
+
+
+def test_snapshot_diff_identical_snapshots(spark):
+    from kgist_spark.operators.graph import snapshot_diff
+
+    schema = "subj string, pred string, obj string"
+    kg = spark.createDataFrame([("a", "p", "x"), ("b", "p", "y")], schema)
+    (row,) = snapshot_diff(kg, kg).collect()
+    assert (row["n_added"], row["n_removed"], row["n_kept"],
+            row["churn_x1e6"]) == (0, 0, 2, 0)
+
+
+def test_kg_sentences_serialization_and_cap(spark):
+    from kgist_spark.operators.graph import kg_sentences
+
+    schema = "subj string, pred string, obj string"
+    t = spark.createDataFrame(
+        [("a", "p", "x"), ("a", "q", "y"), ("a", "p", "x"),  # dup collapses
+         ("h", "p", "n1"), ("h", "p", "n2"), ("h", "p", "n3")],
+        schema)
+    got = {r["subj"]: (r["n_facts"], r["n_facts_kept"], r["text"])
+           for r in kg_sentences(t, max_facts=2).collect()}
+    assert got["a"] == (2, 2, "a p x. a q y")
+    # hub capped at 2: true count 3, kept 2, lexicographically first two
+    assert got["h"] == (3, 2, "h p n1. h p n2")
+
+
+# ---------------------------------------------------------------------------
+# predicate_schema (domain/range type profile with fixed-point entropy)
+# ---------------------------------------------------------------------------
 
 
 def test_predicate_schema_hand_computed(spark):
@@ -121,3 +1095,233 @@ def test_schema_violations_detects_noise(spark):
     assert ps["expected_label"] == "order"
     assert (ps["n_checked"], ps["n_violations"]) == (20, 1)
     assert ps["viol_rate_x1e6"] == 1_000_000 // 20
+
+
+def test_pseudo_diameter_path_graph(spark):
+    """On a path a-b-c-d-e the double sweep finds the TRUE diameter (4)
+    even though the start node sits mid-path by id order."""
+    from kgist_spark.operators.graph import pseudo_diameter
+
+    edges = spark.createDataFrame(
+        [("c", "b"), ("b", "a"), ("c", "d"), ("d", "e")],
+        "a string, b string",
+    )
+    r = pseudo_diameter(edges, rounds=5).collect()[0]
+    # start = min id 'a' (an endpoint): ecc1 = 4 reaching 'e'; second
+    # sweep from 'e' confirms 4
+    assert (r["start_node"], r["ecc1"], r["far_node"], r["ecc2"]) == (
+        "a", 4, "e", 4)
+
+
+def test_pseudo_diameter_round_bound_and_tiebreak(spark):
+    from kgist_spark.operators.graph import pseudo_diameter
+
+    # star: center 'm' with leaves p,q,r -> diameter 2; rounds=1 caps the
+    # bound at 1 and the farthest tie (all dist 1) breaks to min node id
+    edges = spark.createDataFrame(
+        [("m", "p"), ("m", "q"), ("m", "r")], "a string, b string"
+    )
+    r1 = pseudo_diameter(edges, rounds=1).collect()[0]
+    assert r1["start_node"] == "m"
+    assert r1["ecc1"] == 1 and r1["far_node"] == "p" and r1["ecc2"] == 1
+    r2 = pseudo_diameter(edges, rounds=3).collect()[0]
+    assert r2["ecc2"] == 2  # true diameter once rounds cover it
+
+
+def test_dense_node_index_matches_global_window(spark):
+    """The two-phase md5-prefix index reproduces the single global
+    ROW_NUMBER (pinned at several bucket granularities)."""
+    import hashlib
+
+    from kgist_spark.operators.graph import _dense_node_index
+
+    names = [f"node{i:03d}" for i in range(300)]
+    want = {
+        n: i
+        for i, n in enumerate(sorted(
+            names, key=lambda n: (hashlib.md5(("s" + n).encode()).hexdigest(), n)
+        ))
+    }
+    nodes = spark.createDataFrame([(n,) for n in names], "node string")
+    for bh in (1, 2, 3):
+        got = {r["node"]: r["idx"]
+               for r in _dense_node_index(nodes, "s", bucket_hex=bh).collect()}
+        assert got == want, bh
+
+
+def test_negative_samples_properties(spark):
+    """Draws are deterministic, tails come from the node set, true-edge
+    corruptions are filtered, drops are visible as missing k_idx."""
+    from kgist_spark.operators.graph import negative_samples
+
+    triples = spark.createDataFrame(
+        [("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")],
+        "subj string, pred string, obj string",
+    )
+    out1 = sorted(map(tuple, negative_samples(triples, n_neg=3).collect()))
+    out2 = sorted(map(tuple, negative_samples(triples, n_neg=3).collect()))
+    assert out1 == out2  # bit-deterministic
+    nodes = {"a", "b", "c", "d"}
+    true = {("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")}
+    assert out1, "some negatives must survive"
+    for s, p, o, k, neg in out1:
+        assert neg in nodes
+        assert (s, p, neg) not in true  # filtered protocol
+        assert 1 <= k <= 3
+    # a different salt yields a different (still valid) draw sequence
+    other = sorted(map(tuple,
+                       negative_samples(triples, n_neg=3, salt="x").collect()))
+    assert other != out1
+
+
+def test_pivot_scc_cycle_plus_tail(spark):
+    """Directed cycle a->b->c->a with an outgoing tail c->d and an
+    incoming feeder e->a: the pivot ('a') SCC is exactly {a, b, c} —
+    d is reachable but can't return, e reaches but isn't reached."""
+    from kgist_spark.operators.graph import pivot_scc
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "a")],
+        "src string, dst string",
+    )
+    rows = {r["node"]: (r["fwd_dist"], r["bwd_dist"])
+            for r in pivot_scc(edges, rounds=4).collect()}
+    assert rows == {"a": (0, 0), "b": (1, 2), "c": (2, 1)}
+
+
+def test_pivot_scc_round_bound(spark):
+    """A 5-cycle needs 4 hops to close; rounds=2 keeps only the nodes
+    whose BOTH distances fit the bound."""
+    from kgist_spark.operators.graph import pivot_scc
+
+    cyc = [("n0", "n1"), ("n1", "n2"), ("n2", "n3"), ("n3", "n4"),
+           ("n4", "n0")]
+    edges = spark.createDataFrame(cyc, "src string, dst string")
+    full = {r["node"] for r in pivot_scc(edges, rounds=4).collect()}
+    assert full == {"n0", "n1", "n2", "n3", "n4"}
+    bounded = {r["node"] for r in pivot_scc(edges, rounds=2).collect()}
+    # fwd within 2: n0,n1,n2; bwd within 2: n0,n4,n3 -> intersection n0
+    assert bounded == {"n0"}
+
+
+def test_schema_drift_hand_computed(spark):
+    """Matched slots report the entropy delta and top flips; one-sided
+    slots stay visible with NULL-free sentinels."""
+    from kgist_spark.operators.graph import predicate_schema, schema_drift
+
+    labels = spark.createDataFrame(
+        [("a", "T1"), ("b", "T1"), ("c", "T2"), ("x", "TX")],
+        "node string, label string",
+    )
+    old = spark.createDataFrame(
+        [("a", "p", "x"), ("b", "p", "x"),       # p/s all T1 (entropy 0)
+         ("a", "gone", "x")],                     # pred vanishes
+        "subj string, pred string, obj string",
+    )
+    new = spark.createDataFrame(
+        [("a", "p", "x"), ("c", "p", "x"),       # p/s now T1+T2 -> entropy>0
+         ("c", "fresh", "x")],                    # new pred appears
+        "subj string, pred string, obj string",
+    )
+    rows = {(r["pred"], r["side"]): r
+            for r in schema_drift(old, new, labels).collect()}
+    ps = rows[("p", "s")]
+    assert ps["status"] == "both"
+    assert ps["old_entropy_x1e6"] == 0 and ps["new_entropy_x1e6"] > 0
+    assert ps["d_entropy_x1e6"] == ps["new_entropy_x1e6"]
+    assert ps["top_changed"] is False  # T1 still dominant (tie -> T1)
+    g = rows[("gone", "s")]
+    assert g["status"] == "old_only" and g["new_entropy_x1e6"] == -1
+    assert g["new_top"] == "" and g["d_entropy_x1e6"] == 0
+    f = rows[("fresh", "s")]
+    assert f["status"] == "new_only" and f["old_entropy_x1e6"] == -1
+    # drift numbers agree with profiling each snapshot independently
+    new_prof = {(r["pred"], r["side"]): r["entropy_x1e6"]
+                for r in predicate_schema(new, labels).collect()}
+    assert ps["new_entropy_x1e6"] == new_prof[("p", "s")]
+
+
+def test_metapath_hand_computed_and_junction_cap(spark):
+    from kgist_spark.operators.graph import metapath_topk
+
+    triples = spark.createDataFrame(
+        # customer c1 <- orders o1,o2; c2 <- o3
+        [("o1", "placed_by", "c1"), ("o2", "placed_by", "c1"),
+         ("o3", "placed_by", "c2"),
+         # o1 -> p1, p2; o2 -> p1; o3 -> p1
+         ("o1", "contains_part", "p1"), ("o1", "contains_part", "p2"),
+         ("o2", "contains_part", "p1"), ("o3", "contains_part", "p1"),
+         # p1 -> s1; p2 -> s1, s2
+         ("p1", "supplied_by", "s1"), ("p2", "supplied_by", "s1"),
+         ("p2", "supplied_by", "s2")],
+        "subj string, pred string, obj string",
+    )
+    path = [("placed_by", "rev"), ("contains_part", "fwd"),
+            ("supplied_by", "fwd")]
+    rows = {(r["start"], r["end"]): r["n_paths"]
+            for r in metapath_topk(triples, path, k=10).collect()}
+    # c1->s1: o1p1, o1p2, o2p1 = 3; c1->s2: o1p2 = 1; c2->s1: o3p1 = 1
+    assert rows == {("c1", "s1"): 3, ("c1", "s2"): 1, ("c2", "s1"): 1}
+    # junction cap: capping order out-degree at 1 drops o1 (degree 2)
+    capped = {(r["start"], r["end"]): r["n_paths"]
+              for r in metapath_topk(triples, path, k=10,
+                                     max_junction_deg=1).collect()}
+    assert capped == {("c1", "s1"): 1, ("c2", "s1"): 1}
+
+
+def test_negative_samples_head_corruption(spark):
+    from kgist_spark.operators.graph import negative_samples
+
+    triples = spark.createDataFrame(
+        [("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")],
+        "subj string, pred string, obj string",
+    )
+    head = negative_samples(triples, n_neg=3, corrupt="head").collect()
+    assert head and "neg_subj" in head[0].asDict()
+    true = {("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")}
+    for r in head:
+        assert (r["neg_subj"], r["pred"], r["obj"]) not in true
+    # independent streams: the head draws differ from the tail draws
+    tail = {(r["subj"], r["pred"], r["obj"], r["k_idx"], r["neg_obj"])
+            for r in negative_samples(triples, n_neg=3).collect()}
+    headset = {(r["subj"], r["pred"], r["obj"], r["k_idx"], r["neg_subj"])
+               for r in head}
+    assert headset != tail
+
+
+def test_pagerank_weighted_hand_computed(spark):
+    """Strength-proportional split: a 3x-weighted edge carries 3x the
+    mass of its sibling; weight-1 everywhere degenerates to the
+    unweighted operator exactly."""
+    from kgist_spark.operators.graph import (
+        PR_DAMP,
+        PR_SCALE,
+        pagerank_fixed_point,
+        pagerank_weighted,
+    )
+
+    edges = spark.createDataFrame(
+        [("s", "a", 3), ("s", "b", 1)], "src string, dst string, w long"
+    )
+    r = {x["node"]: x["rank_fp"]
+         for x in pagerank_weighted(edges, iterations=1).collect()}
+    dn, dd = PR_DAMP
+    base = (PR_SCALE * (dd - dn)) // dd
+    # s splits its initial rank 3:1
+    assert r["a"] == base + (dn * ((PR_SCALE * 3) // 4)) // dd
+    assert r["b"] == base + (dn * (PR_SCALE // 4)) // dd
+    assert r["s"] == base  # no in-edges
+
+    # weight-1 degeneracy on a seeded random graph
+    import random
+
+    rng = random.Random(7)
+    ew = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}")
+          for _ in range(120)]
+    ew = [(a, b) for a, b in dict.fromkeys(ew) if a != b]
+    uw = spark.createDataFrame(ew, "src string, dst string")
+    w1 = spark.createDataFrame([(a, b, 1) for a, b in ew],
+                               "src string, dst string, w long")
+    got_u = sorted(map(tuple, pagerank_fixed_point(uw, iterations=4).collect()))
+    got_w = sorted(map(tuple, pagerank_weighted(w1, iterations=4).collect()))
+    assert got_u == got_w

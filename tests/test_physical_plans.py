@@ -5,13 +5,9 @@ ranking reproduces the oracle's exact candidate order."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import FIXTURES, fixture_kg
+from tests.conftest import FIXTURES, fixture_kg, plan_of
 
 pytestmark = pytest.mark.spark
-
-
-def plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -195,23 +191,6 @@ def test_priority_sample_single_corpus_pass(spark):
     assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan
     assert "Scan parquet" not in plan and "LocalTableScan" not in plan
     assert out.count() == 20
-
-
-def test_url_frontier_is_jvm_single_window(spark):
-    """Canonicalization is a pure codegen projection (no UDF, no regex
-    escape into Python) and the decision table adds exactly ONE window
-    (the canonical-key partition) — no extra shuffles."""
-    from kgist_spark.operators.url import url_frontier_dedup
-
-    pages = spark.createDataFrame(
-        [(1, "http://WWW.a.com:80/p/"), (2, "http://a.com/p")],
-        "doc_id long, url string",
-    )
-    df = url_frontier_dedup(pages)
-    df.collect()
-    plan = plan_of(df)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert plan.count("Window") <= 2  # one logical window (+AQE reuse line)
 
 
 def test_winnow_selection_stays_in_row(spark):

@@ -1,7 +1,6 @@
 """End-to-end KG-construction pipeline tests: extraction P/R against the
 independent corpus generator, the byte-identity invariant, canonicalization,
-materialization + resume (with scan and partition pruning), and
-summarization over the constructed KG."""
+materialization + resume, and summarization over the constructed KG."""
 
 import json
 
@@ -9,7 +8,6 @@ import pytest
 
 from kgist_spark.pipeline import spec
 from kgist_spark.sources import webpages as W
-from tests.conftest import plan_of
 
 pytestmark = pytest.mark.spark
 
@@ -566,50 +564,3 @@ def test_run_pipeline_schema_report(spark, tmp_path, capsys):
     viol = spark.read.parquet(f"{out}/schema_violations")
     assert {"expected_label", "viol_rate_x1e6"} <= set(viol.columns)
     assert viol.count() == rep["n_schema_constraints"]
-
-
-def test_parquet_scan_pruned_and_filtered(spark, tmp_path):
-    from kgist_spark.sources.webpages import World, generate_pages
-
-    path = str(tmp_path / "pages")
-    generate_pages(spark, 200, seed=42, world=World(42)).write.parquet(path)
-    pages = spark.read.parquet(path)
-
-    from kgist_spark.pipeline.extract import extract_triples
-
-    plan = plan_of(extract_triples(pages))
-    # column pruning: the wide html binary column never leaves the scan
-    assert "html" not in plan.split("ReadSchema")[-1]
-    # the lang predicate is pushed into the parquet scan
-    assert "PushedFilters" in plan and "lang" in plan.split("PushedFilters")[-1][:200]
-
-
-def test_adjacency_single_scan(spark):
-    from kgist_spark.pipeline.materialize import adjacency
-
-    triples = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").selectExpr(
-        "cast(l_orderkey as string) as subj", "'contains' as pred",
-        "cast(l_partkey as string) as obj"
-    )
-    plan = plan_of(adjacency(triples))
-    assert plan.count("Scan parquet") == 1, plan
-
-
-def test_materialized_kg_partition_pruning(spark, tmp_path):
-    """Reading one bucket of the materialized KG touches only that bucket's
-    directory (partition pruning on the S7 layout)."""
-    from kgist_spark.pipeline.materialize import materialize_kg
-
-    triples = spark.createDataFrame(
-        [(f"s{i}", "p", f"o{i}", f"u{i}") for i in range(40)],
-        "subj string, pred string, obj string, url string",
-    )
-    labels = spark.createDataFrame(
-        [(f"s{i}", "thing", 0) for i in range(40)], "node string, label string, pos int"
-    )
-    out = str(tmp_path / "kg")
-    materialize_kg(spark, triples, labels, out, n_buckets=4)
-    df = spark.read.parquet(out + "/kg_triples").where("bucket = 2")
-    plan = plan_of(df)
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[-1][:120]
-    assert df.count() > 0

@@ -262,63 +262,7 @@ def test_priority_sample_weight_monotone(spark):
     assert b >= a
 
 
-# --------------------------------------------------- packing layout
-
-
-def test_pack_layout_matches_single_window_replay(spark):
-    import hashlib
-
-    from kgist_spark.operators.pack import pack_layout
-
-    rows = [(i, " ".join(f"t{j}" for j in range((i * 7) % 23 + 1)))
-            for i in range(120)] + [(999, "   ")]  # whitespace-only: excluded
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    ctx = 16
-    got = {r["doc_id"]: (r["n_tokens"], r["tok_start"], r["chunk_first"],
-                         r["chunk_last"], r["offset_in_chunk"])
-           for r in pack_layout(df, ctx=ctx).collect()}
-    # python replay: one global-order running sum
-    order = sorted(
-        (d for d, t in rows if t.strip()),
-        key=lambda d: (hashlib.md5(f"pack|{d}".encode()).hexdigest(), d),
-    )
-    ntok = {d: len(t.split()) for d, t in rows if t.strip()}
-    want, run = {}, 0
-    for d in order:
-        n = ntok[d]
-        want[d] = (n, run, run // ctx, (run + n - 1) // ctx, run % ctx)
-        run += n
-    assert got == want
-    assert 999 not in got
-
-
-def test_pack_layout_bucket_hex_invariant(spark):
-    # the two-phase prefix sum must give the same layout at any shard
-    # granularity — bucketing is an execution detail, not semantics
-    from kgist_spark.operators.pack import pack_layout
-
-    rows = [(i, " ".join(f"w{j}" for j in range((i * 5) % 11 + 1)))
-            for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, pack_layout(df, ctx=8, bucket_hex=1).collect()))
-    b = sorted(map(tuple, pack_layout(df, ctx=8, bucket_hex=3).collect()))
-    assert a == b
-
-
-def test_pack_layout_stream_is_gapless(spark):
-    # consecutive documents in layout order tile the token stream exactly:
-    # sorted tok_starts advance by n_tokens with no gaps or overlaps
-    from kgist_spark.operators.pack import pack_layout
-
-    rows = [(i, " ".join("x" * 1 for _ in range((i * 3) % 9 + 1)))
-            for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted((r["tok_start"], r["n_tokens"])
-                 for r in pack_layout(df, ctx=64).collect())
-    pos = 0
-    for start, n in got:
-        assert start == pos
-        pos += n
+# --------------------------------------------------- hash splits
 
 
 def test_hash_split_disjoint_complete_stable(spark):
@@ -382,37 +326,3 @@ def test_mixture_plan_rates_and_deficit(spark):
             s2["deficit_tokens"]) == (1_000_000, 2, 2)
     s3 = plan["s3"]
     assert (s3["weight_x1e6"], s3["rate_x1e6"]) == (0, 0)  # listed, dropped
-
-
-def test_pack_chunks_gapless_tiling_and_inverse(spark):
-    """Every chunk except the last tiles exactly ctx tokens from its
-    segments; segment bounds invert the layout exactly."""
-    from pyspark.sql import functions as F
-
-    from kgist_spark.operators.pack import pack_chunks, pack_layout
-
-    docs = spark.createDataFrame(
-        [(str(i), " ".join(f"t{j}" for j in range(1 + (i * 7) % 23)))
-         for i in range(40)],
-        "doc_id string, text string",
-    )
-    ctx = 16
-    chunks = pack_chunks(docs, ctx=ctx).collect()
-    lay = {r["doc_id"]: r for r in pack_layout(docs, ctx=ctx).collect()}
-    total = sum(lay[d]["n_tokens"] for d in lay)
-    last_chunk = (total - 1) // ctx
-    from collections import defaultdict
-
-    per_chunk = defaultdict(int)
-    per_doc = defaultdict(int)
-    for r in chunks:
-        assert 1 <= r["seg_start"] <= lay[r["doc_id"]]["n_tokens"]
-        assert r["seg_len"] >= 1
-        assert 0 <= r["offset_in_chunk"] < ctx
-        per_chunk[r["chunk_id"]] += r["seg_len"]
-        per_doc[r["doc_id"]] += r["seg_len"]
-    for cid, n in per_chunk.items():
-        assert n == (ctx if cid < last_chunk else total - last_chunk * ctx)
-    # every document's segments cover it exactly once
-    for d, row in lay.items():
-        assert per_doc[d] == row["n_tokens"]

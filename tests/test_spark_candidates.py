@@ -1,11 +1,10 @@
-"""Parity: distributed candidate generation == oracle index (in the
-oracle's exact ranking order, on a JVM-only physical plan), and the
+"""Parity: distributed candidate generation == oracle index, and the
 Spark-backed summarizer selects the identical model."""
 
 import pytest
 
 from kgist_spark.oracle.engine import GreedySearcher, ModelEvaluator
-from tests.conftest import FIXTURES, fixture_kg, plan_of
+from tests.conftest import FIXTURES, fixture_kg
 
 pytestmark = pytest.mark.spark
 
@@ -136,39 +135,3 @@ def test_candidate_rule_stats_string_eid_null_first_seen(spark):
     }
     assert all(r["first_seen"] is None for r in rows)
     assert all(r["n_edges"] == 1 and r["n_cas"] == 1 for r in rows)
-
-
-def test_candidate_path_is_jvm_only(loaded):
-    from kgist_spark.operators import candidates as C
-    from kgist_spark.sources.edgelist import explode_labels
-
-    triples, labels = loaded
-    lf = explode_labels(labels)
-    stats_df = C.candidate_stats(C.candidate_edges(triples, lf))
-    stats_df.collect()  # finalize the adaptive plan so codegen spans appear
-    plan = plan_of(stats_df)
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
-    assert "BroadcastHashJoin" in plan  # labels side broadcast, big side unshuffled
-    # "*(N)" prefixes mark whole-stage-codegen spans in the finalized plan
-    assert "WholeStageCodegen" in plan or "*(" in plan
-    assert "SortAggregate" not in plan  # packed first-seen keeps hash aggregation
-
-
-def test_distributed_ranking_matches_oracle_order(spark, loaded):
-    from kgist_spark.operators import candidates as C
-    from kgist_spark.oracle.engine import GreedySearcher
-    from kgist_spark.plans.summarizer import graph_stats
-    from kgist_spark.sources.edgelist import explode_labels
-
-    triples, labels = loaded
-    lf = explode_labels(labels)
-    stats = graph_stats(triples, lf)
-    ranked_df = C.rank_candidates(C.candidate_stats(C.candidate_edges(triples, lf)), stats)
-    got = [
-        ((r["root_label"],), ((r["pred"], r["dir"], ((r["child_label"],), ())),))
-        for r in ranked_df.collect()
-    ]
-    kg = fixture_kg("test", idify=False)
-    searcher = GreedySearcher(kg)
-    searcher.rank()  # no qualification: compare raw candidate ranking
-    assert got == searcher.cands
