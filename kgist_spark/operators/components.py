@@ -249,15 +249,13 @@ def minlabel_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
     The oracle-replayable face of :func:`connected_components`: a fixed
     round count (no convergence probe, no driver path, no star handoff)
     makes the computation a pure dataflow an ANSI-SQL oracle replays as
-    ``rounds`` chained CTEs — the PageRank pattern applied to components.
+    ``rounds`` chained CTEs.
     When ``rounds`` ≥ the distance from each component's minimum-id node
     to its farthest member, the output IS connected components (tests pin
     round-R == round-R+1 on the target graph); either way the result is
     deterministic at any parallelism (min over ids commutes).
 
-    Loop shape — the ``pagerank_fixed_point`` discipline applied to labels
-    (the first cut ran ~20 s at sf0.1 where the PageRank twin over the
-    same KG ran ~6 s; this shape closes that gap):
+    Loop shape (a first cut without it ran ~20 s at sf0.1):
 
     * when the MEASURED node count fits ``broadcast_max_nodes`` the label
       table (the graph's node set — orders of magnitude narrower than the
@@ -348,8 +346,8 @@ def minlabel_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
 def minlabel_oracle_sql(edges_sql: str, rounds: int = 8,
                         src: str = "a", dst: str = "b") -> str:
     """ANSI-SQL replay of :func:`minlabel_rounds`: the same ``rounds``
-    synchronous min-label rounds unrolled as chained CTEs (the PageRank
-    oracle pattern) over ``edges_sql`` (a query producing columns
+    synchronous min-label rounds unrolled as chained CTEs over
+    ``edges_sql`` (a query producing columns
     ``src, dst``).  Hash equality of the final (node, component) table
     proves the distributed loop round-for-round.
 

@@ -1,366 +1,31 @@
-"""Whole-KG graph analytics: fixed-point PageRank and degree/skew stats.
+"""Whole-KG graph analytics: degree and path stats, triangle and
+neighborhood measures, deterministic walks and negative samples, snapshot
+churn, and the per-predicate schema profile.
 
-Neither exists in the reference (GemsLab/KGist builds rules, not centrality),
-but a KG-construction pipeline at web scale needs both: PageRank-style
-centrality to prioritize entities for linking/QA, and per-predicate degree
-stats to decide which predicates need skew-join handling BEFORE the
-expensive joins run.
+None of these exists in the reference (GemsLab/KGist builds rules only).
+``run_pipeline.py --schema-report`` calls :func:`predicate_schema` and
+:func:`schema_violations`; the testdata query catalogue
+(``plans/testdata_queries.py``) checks each operator against a DuckDB
+replay, built by the ``*_oracle_sql`` next to it where one exists.
 
-PageRank here is **integer fixed-point**, not float, on purpose: float
-PageRank sums contributions in partition order, so two runs at different
-parallelism disagree in the low bits — the exact nondeterminism class this
-engine goes to great lengths to avoid elsewhere (see the float-order replay
-machinery in ``plans/greedy_delta.py``).  With every rank a scaled int64 and
-every operation (integer div by out-degree, damped sum) exact, the result is
-bit-identical at ANY partitioning/cluster size, which also makes it
-hash-oracle-able in ANSI SQL (DuckDB replays the same arithmetic).
+Shared discipline:
 
-Scale shape (the 100 TB lens):
-
-* the adjacency is joined with out-degrees ONCE, hash-partitioned on ``src``
-  and persisted — each iteration's rank⋈adjacency join reuses that layout,
-  so only the (much smaller-per-row) rank table shuffles per iteration;
-* per-iteration work is one join + one partial-aggregated ``sum`` (map-side
-  combine on ``dst``) — no driver collect, rank never materializes on the
-  driver;
-* lineage is cut every iteration (``localCheckpoint``) so the plan stays
-  depth-1 instead of growing 3 operators per iteration (query planning cost
-  and recovery-recompute depth would otherwise grow linearly with
-  iterations);
-* int64 bounds: total rank mass is conserved below ``n_nodes * scale``, so
-  a damped contribution sum stays under 2^63 for ``n_nodes * scale *
-  damp_num < 2^63`` — the default ``scale=10**6`` is safe past 10^11 nodes
-  (dangling-node mass leaks, i.e. is NOT redistributed; documented choice,
-  identical in the oracle).
+* output never depends on partitioning: scores are scaled int64 with
+  truncating integer ``div`` (or one fixed-order float expression over
+  integer sums), and sampling draws are md5 of the row, not RNG state — so
+  results are bit-identical at any parallelism and hash-comparable with
+  the SQL replay;
+* hub skew is bounded by definition: pair and walk enumerations cap the
+  junction/group degree as part of the operator's semantics (the oracle
+  applies the same cap), and triangle enumeration orients edges by degree
+  so wedges stay O(m^1.5) whatever the skew;
+* broadcasts are gated on a measured count, never forced.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-#: fixed-point scale: rank 1.0 == SCALE.  10**6 keeps the damped sum within
-#: int64 up to ~10^11 nodes (see module docstring).
-PR_SCALE = 1_000_000
-#: damping factor 0.85 as an exact rational (numerator, denominator)
-PR_DAMP = (85, 100)
-
-
-def pagerank_fixed_point(edges: DataFrame, src: str = "src", dst: str = "dst",
-                         iterations: int = 10, scale: int = PR_SCALE,
-                         damp: tuple[int, int] = PR_DAMP,
-                         rows_per_partition: int = 200_000,
-                         broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Integer fixed-point PageRank over a directed edge list.
-
-    ``(node, rank_fp)`` where ``rank_fp`` is the per-node-form PageRank
-    ``r = (1-d) + d * sum(r_in / deg_out)`` with every term a scaled int64:
-    the base term ``(1-d)*scale`` and the damping ``d * s`` are exact integer
-    expressions (``div`` — both engines truncate identically for positive
-    operands), so the output is bit-identical at any parallelism.
-
-    Loop shape (measured at sf0.1 — the naive 3-shuffle loop under the
-    session's global shuffle width ran ~2.5 s/iteration; this shape ~1 s):
-
-    * the edge list is persisted ONCE and every derived table reads the
-      cache — without the pin, each derivation re-ran the caller's whole
-      upstream plan; the node table (node, out_deg, has_in) comes from ONE
-      exploded aggregation pass over the edges, not three (a degree
-      group-by + a node-set union-distinct + a dangling-in anti-join each
-      re-shuffle the full edge list);
-    * nodes with no in-edges rank exactly ``base`` every iteration, so
-      instead of a per-iteration left join against the full node set the
-      loop unions a small cached constant frame — 2 shuffles/iteration
-      (rank→src join, contribution sum), not 3;
-    * when the MEASURED node count fits ``broadcast_max_nodes`` the rank
-      table is broadcast into the adjacency join instead (the rank table is
-      the graph's node set — orders of magnitude narrower than the
-      adjacency), leaving the contribution sum as the loop's ONLY shuffle —
-      measured ~2x on the sf0.1 KG; above the gate the loop falls back to
-      the shuffle join with the adjacency pre-partitioned on ``src`` (the
-      broadcast hint is size-GATED, never forced — the unbounded-broadcast
-      mistake flagged on the incremental linker in round 3 is exactly what
-      this avoids);
-    * the loop's shuffle width is sized from the measured edge count
-      (``rows_per_partition``), capped at the session's parallelism — a
-      fixed global width pays per-task scheduling overhead ~width×iterations
-      times on small graphs and under-parallelizes huge ones; the width is
-      scoped to the loop and restored after (same pattern as the greedy
-      accept loop, ``plans/greedy_delta.py``);
-    * ``localCheckpoint(eager=False)`` per iteration pins lineage at depth 1
-      WITHOUT forcing a job per iteration: one eager checkpoint on the LAST
-      iteration sweeps through all of them in a single job, checkpointing
-      each intermediate as a side effect — k-1 fewer job-scheduling barriers
-      than all-eager checkpoints.
-
-    Multi-edges and predicates must be resolved by the CALLER (pass distinct
-    (src, dst) pairs for simple-graph semantics); dangling-node mass leaks
-    (not redistributed) — both choices replayed exactly by the SQL oracle.
-    """
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    n_edges = e.count()  # materializes the pin; sizes the loop width
-    width = max(1, min(
-        spark.sparkContext.defaultParallelism,
-        -(-n_edges // rows_per_partition),
-    ))
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(width))
-    # ONE aggregation pass derives the whole node table: out-degree and an
-    # incoming-edge flag per node (single explode over the cached edges,
-    # single shuffle — vs the 3 full-edge shuffles of deg group-by +
-    # node-set union-distinct + dangling-in anti-join)
-    node_tbl = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.lit(1).alias("is_src")),
-                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("is_src")),
-                )
-            ).alias("x")
-        )
-        .groupBy(F.col("x.node").alias("node"))
-        .agg(
-            F.sum("x.is_src").alias("out_deg"),
-            F.max(1 - F.col("x.is_src")).alias("has_in"),
-        )
-        .persist()
-    )
-    n_nodes = node_tbl.count()
-    nodes = node_tbl.select("node")
-    bcast = n_nodes <= broadcast_max_nodes
-    # one cached adjacency reused by every iteration; in shuffle-join mode it
-    # is pre-partitioned on src so only the (narrow) rank table re-shuffles
-    adj = e.join(
-        node_tbl.where("out_deg > 0")
-        .select(F.col("node").alias("src"), F.col("out_deg").alias("deg")),
-        "src",
-    )
-    if not bcast:
-        adj = adj.repartition("src")
-    adj = adj.persist()
-    # nodes with no in-edges: constant rank `base` from iteration 1 on
-    # (contribution sum is always empty) — computed once, unioned per
-    # iteration instead of left-joining the full node set every time
-    no_in = (
-        node_tbl.where("has_in = 0")
-        .select("node", F.lit(base).cast("long").alias("r"))
-        .persist()
-    )
-    no_in.count()
-    try:
-        # intermediate checkpoints are LAZY (no job per iteration); the LAST
-        # one is EAGER so the single sweeping job executes while the scoped
-        # shuffle width and the adj/e/no_in caches are still in effect — the
-        # finally block below tears those down, which would otherwise apply
-        # BEFORE the caller's first action ran the (lazy) chain
-        ranks = nodes.select(
-            "node", F.lit(scale).cast("long").alias("r")
-        ).localCheckpoint(eager=iterations == 0)
-        for i in range(iterations):
-            r = ranks.withColumnRenamed("node", "src")
-            if bcast:
-                r = F.broadcast(r)
-            contribs = (
-                adj.join(r, "src")
-                .select("dst", F.expr("r div deg").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = (
-                contribs.select(
-                    F.col("dst").alias("node"),
-                    F.expr(f"cast({base} + ({dn} * s) div {dd} as long)").alias("r"),
-                )
-                .unionAll(no_in)
-                # pin lineage at depth 1: without the cut the final action
-                # re-derives all previous iterations as one 3*k-deep plan
-                .localCheckpoint(eager=i == iterations - 1)
-            )
-        return ranks.select("node", F.col("r").alias("rank_fp"))
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        adj.unpersist()
-        node_tbl.unpersist()
-        no_in.unpersist()
-        e.unpersist()
-
-
-def pagerank_oracle_sql(edges_sql: str, iterations: int = 10,
-                        scale: int = PR_SCALE,
-                        damp: tuple[int, int] = PR_DAMP) -> str:
-    """ANSI-SQL replay of :func:`pagerank_fixed_point` — the fixed iteration
-    count is UNROLLED as chained CTEs (pr0..prK), each a plain grouped join,
-    because aggregates inside a recursive CTE are not portable.  All
-    arithmetic is the same truncating integer div (DuckDB ``//``; operands
-    positive), so the replay is bit-exact.  ``edges_sql`` must yield
-    ``(src, dst)``."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-    ctes = [
-        f"edges AS ({edges_sql})",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        f"pr0 AS (SELECT node, CAST({scale} AS BIGINT) AS r FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""pr{i} AS (
-            SELECT n.node,
-                   CAST({base} + ({dn} * COALESCE(s.s, 0)) // {dd} AS BIGINT) AS r
-            FROM nodes n LEFT JOIN (
-                SELECT e.dst AS node, SUM(p.r // a.deg) AS s
-                FROM pr{i - 1} p
-                JOIN deg a ON p.node = a.src
-                JOIN edges e ON e.src = a.src
-                GROUP BY e.dst
-            ) s ON n.node = s.node)"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT node, r AS rank_fp FROM pr{iterations}"
-    )
-
-
-def ppr_fixed_point(edges: DataFrame, seed_predicate, src: str = "src",
-                    dst: str = "dst", iterations: int = 6,
-                    scale: int = PR_SCALE, damp: tuple[int, int] = PR_DAMP,
-                    rows_per_partition: int = 200_000,
-                    broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Personalized PageRank: :func:`pagerank_fixed_point`'s recurrence with
-    the restart mass confined to a SEED set — ``r = (1-d)*scale*1[seed] +
-    d * sum(r_in div deg_out)`` — the KG-relatedness primitive global
-    PageRank cannot give (rank *relative to* an entity class: linking
-    disambiguation, neighborhood-scoped QA prioritization, crawl frontier
-    scoring from trusted hubs).  ``seed_predicate`` is a Column predicate
-    over ``node``.
-
-    Returns ``(node, rank_fp)`` for nodes with ``rank_fp > 0`` ONLY — and
-    that sparsity is the algorithm's scale story: a zero-rank node
-    contributes exactly 0 to every neighbor (integer div), so the rank
-    table is the seed set's expanding forward closure, never the full node
-    set.  On a web-scale KG with a localized seed class, each iteration's
-    join touches O(frontier) adjacency rows instead of O(n); the
-    ``WHERE r > 0`` filter is applied per iteration in BOTH engines so the
-    frames stay identical.
-
-    Same integer arithmetic (bit-exact at any parallelism), same loop
-    discipline (adjacency joined with degrees once and persisted,
-    size-gated broadcast of the rank frontier, scoped shuffle width, lazy
-    checkpoints + one eager sweep) as global PageRank.  The per-iteration
-    seed re-injection is a UNION of seed base rows into the damped
-    contribution aggregate (one map-side-partial grouped SUM — exact
-    because the damped div is applied BEFORE the base row joins the sum),
-    never a full-outer join (which can't broadcast-hash).  Dangling mass
-    leaks, exactly as documented for the global variant; oracle:
-    :func:`ppr_oracle_sql`."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    n_edges = e.count()
-    width = max(1, min(
-        spark.sparkContext.defaultParallelism,
-        -(-n_edges // rows_per_partition),
-    ))
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(width))
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # the rank table is bounded by the node set, so the same size gate as
-    # global PageRank decides broadcast-vs-shuffle for the whole loop (the
-    # sparse frontier is strictly smaller than the gate's bound); in
-    # shuffle mode the adjacency is pre-partitioned on src once so only the
-    # frontier re-shuffles per iteration
-    bcast = nodes.count() <= broadcast_max_nodes
-    adj = e.join(deg, "src")
-    if not bcast:
-        adj = adj.repartition("src")
-    adj = adj.persist()
-    seeds = nodes.where(seed_predicate).persist()
-    seeds.count()
-    try:
-        ranks = seeds.select(
-            "node", F.lit(scale).cast("long").alias("r")
-        ).localCheckpoint(eager=iterations == 0)
-        for i in range(iterations):
-            r = ranks.withColumnRenamed("node", "src")
-            if bcast:
-                r = F.broadcast(r)
-            # seed re-injection as UNION + grouped SUM, not a full-outer
-            # join (full outer can't broadcast-hash in Spark; the sum is
-            # map-side partial and exact because the damped term is
-            # aggregated BEFORE the base is added — the base rides in as
-            # its own row)
-            damped = (
-                adj.join(r, "src")
-                .select("dst", F.expr("r div deg").alias("c"))
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.expr(f"cast(({dn} * sum(c)) div {dd} as long)").alias("v"))
-            )
-            ranks = (
-                damped.unionAll(
-                    seeds.select("node", F.lit(base).cast("long").alias("v"))
-                )
-                .groupBy("node")
-                .agg(F.sum("v").alias("r"))
-                .where(F.col("r") > 0)
-                .localCheckpoint(eager=i == iterations - 1)
-            )
-        return ranks.select("node", F.col("r").alias("rank_fp"))
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        adj.unpersist()
-        seeds.unpersist()
-        e.unpersist()
-
-
-def ppr_oracle_sql(edges_sql: str, seed_where: str, iterations: int = 6,
-                   scale: int = PR_SCALE,
-                   damp: tuple[int, int] = PR_DAMP) -> str:
-    """ANSI-SQL replay of :func:`ppr_fixed_point` — iterations unrolled as
-    chained CTEs; each round is the contribution aggregate FULL OUTER
-    JOINed with the seed frame, filtered to ``r > 0`` exactly like the
-    engine.  ``edges_sql`` must yield ``(src, dst)``; ``seed_where`` is a
-    SQL predicate over ``node``."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-    ctes = [
-        f"edges AS ({edges_sql})",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        f"seeds AS (SELECT node FROM nodes WHERE {seed_where})",
-        f"pr0 AS (SELECT node, CAST({scale} AS BIGINT) AS r FROM seeds)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""pr{i} AS (
-            SELECT node, CAST(SUM(v) AS BIGINT) AS r FROM (
-                SELECT node, CAST(({dn} * s) // {dd} AS BIGINT) AS v FROM (
-                    SELECT e.dst AS node, SUM(p.r // a.deg) AS s
-                    FROM pr{i - 1} p
-                    JOIN deg a ON p.node = a.src
-                    JOIN edges e ON e.src = a.src
-                    GROUP BY e.dst
-                )
-                UNION ALL
-                SELECT node, CAST({base} AS BIGINT) AS v FROM seeds
-            ) GROUP BY node HAVING SUM(v) > 0)"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT node, r AS rank_fp FROM pr{iterations}"
-    )
 
 
 def path2_stats(triples: DataFrame) -> DataFrame:
@@ -474,7 +139,7 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b",
     The closure join is the wedge stream's only wide op (|wedges| ≈ 30×
     |edges| on the sf0.1 co-order graph) — when the MEASURED edge count
     fits ``broadcast_max_edges`` the edge set broadcasts and the wedges
-    never shuffle (the size-gated pattern of :func:`pagerank_fixed_point`;
+    never shuffle (size-gated,
     never forced — above the gate the join falls back to hash-shuffle,
     where AQE's skew split handles a hot wedge key)."""
     # normalize to id-ordered simple edges (callers may pass either
@@ -2751,149 +2416,4 @@ def metapath_oracle_sql(triples_sql: str, path: list, k: int = 50,
     FROM p{last} GROUP BY start, cur
     ORDER BY n_paths DESC, start, "end" LIMIT {k}
     """
-    )
-
-
-def pagerank_weighted(edges: DataFrame, src: str = "src", dst: str = "dst",
-                      weight: str = "w", iterations: int = 8,
-                      scale: int = PR_SCALE,
-                      damp: tuple = PR_DAMP,
-                      rows_per_partition: int = 200_000,
-                      broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Weighted integer fixed-point PageRank — the evidence-weighted
-    traversal the simple-graph variant throws away (a constructed KG's
-    edge MULTIPLICITY is signal: an (order, part) edge backed by 40
-    lineitems should carry 40× the mass of a singleton): contribution =
-    ``(r * w) div W(src)`` with ``W`` the source's out-STRENGTH (Σ w), a
-    strength-proportional split of the node's rank.  All arithmetic is
-    the same truncating integer div on positive operands, so the result
-    is bit-identical at any parallelism and replayed exactly by
-    :func:`pagerank_weighted_oracle_sql`.
-
-    int64 bound: the per-edge product ``r * w`` must fit — with ranks
-    bounded by ``n_nodes * scale`` (total-mass worst case) the safe
-    envelope is ``w_max * n_nodes * scale < 2^63`` (w ≤ 10⁴ is safe past
-    10⁸ nodes at scale 1e6; the unweighted loop divides before anything
-    multiplies and has no such product).  Callers aggregate multi-edges
-    into the weight column; weights must be ≥ 1.
-
-    Loop shape identical to :func:`pagerank_fixed_point` (persisted
-    adjacency, one-pass node table, size-gated rank broadcast, scoped
-    width, lazy checkpoints with one eager sweep)."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    ).persist()
-    n_edges = e.count()
-    width = max(1, min(
-        spark.sparkContext.defaultParallelism,
-        -(-n_edges // rows_per_partition),
-    ))
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(width))
-    node_tbl = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"),
-                             F.col("w").alias("ws")),
-                    F.struct(F.col("dst").alias("node"),
-                             F.lit(0).cast("long").alias("ws")),
-                )
-            ).alias("x")
-        )
-        .groupBy(F.col("x.node").alias("node"))
-        .agg(
-            F.sum("x.ws").alias("out_w"),
-            F.max((F.col("x.ws") == 0).cast("int")).alias("has_in"),
-        )
-        .persist()
-    )
-    n_nodes = node_tbl.count()
-    nodes = node_tbl.select("node")
-    bcast = n_nodes <= broadcast_max_nodes
-    adj = e.join(
-        node_tbl.where("out_w > 0")
-        .select(F.col("node").alias("src"), F.col("out_w").alias("sw")),
-        "src",
-    )
-    if not bcast:
-        adj = adj.repartition("src")
-    adj = adj.persist()
-    no_in = (
-        node_tbl.where("has_in = 0")
-        .select("node", F.lit(base).cast("long").alias("r"))
-        .persist()
-    )
-    no_in.count()
-    try:
-        ranks = nodes.select(
-            "node", F.lit(scale).cast("long").alias("r")
-        ).localCheckpoint(eager=iterations == 0)
-        for i in range(iterations):
-            r = ranks.withColumnRenamed("node", "src")
-            if bcast:
-                r = F.broadcast(r)
-            contribs = (
-                adj.join(r, "src")
-                .select("dst", F.expr("(r * w) div sw").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = (
-                contribs.select(
-                    F.col("dst").alias("node"),
-                    F.expr(f"cast({base} + ({dn} * s) div {dd} as long)")
-                    .alias("r"),
-                )
-                .unionAll(no_in)
-                .localCheckpoint(eager=i == iterations - 1)
-            )
-        return ranks.select("node", F.col("r").alias("rank_fp"))
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        adj.unpersist()
-        node_tbl.unpersist()
-        no_in.unpersist()
-        e.unpersist()
-
-
-def pagerank_weighted_oracle_sql(edges_sql: str, iterations: int = 8,
-                                 scale: int = PR_SCALE,
-                                 damp: tuple = PR_DAMP) -> str:
-    """ANSI-SQL replay of :func:`pagerank_weighted` — unrolled CTEs with
-    the identical strength-proportional integer contribution.
-    ``edges_sql`` must yield ``(src, dst, w)``."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-    ctes = [
-        f"edges AS MATERIALIZED ({edges_sql})",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "st AS (SELECT src, CAST(SUM(w) AS BIGINT) AS W FROM edges"
-        " GROUP BY src)",
-        f"pr0 AS (SELECT node, CAST({scale} AS BIGINT) AS r FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""pr{i} AS (
-            SELECT n.node,
-                   CAST({base} + ({dn} * COALESCE(s.s, 0)) // {dd}
-                        AS BIGINT) AS r
-            FROM nodes n LEFT JOIN (
-                SELECT e.dst AS node,
-                       CAST(SUM((p.r * e.w) // a.W) AS BIGINT) AS s
-                FROM pr{i - 1} p
-                JOIN st a ON p.node = a.src
-                JOIN edges e ON e.src = a.src
-                GROUP BY e.dst
-            ) s ON n.node = s.node)"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT node, r AS rank_fp FROM pr{iterations}"
     )

@@ -8,14 +8,14 @@ only WITHIN a cell — the SemDeDup recipe (Abbas et al. 2023): at web scale
 ``k`` grows with the corpus (k ≈ n / target_cell_size), so per-cell work
 stays O((n/k)²) bounded and the all-pairs O(n²) never materializes.
 
-Determinism discipline (the PageRank/lm_score class — bit-identical at any
-parallelism AND replayable in ANSI SQL):
+Determinism discipline (bit-identical at any parallelism AND replayable in
+ANSI SQL):
 
 * Every centroid coordinate lives in **positive fixed-point offset space**:
   ``fp(x) = cast(round(x * 1e6) as long) + 2^21``.  The offset keeps every
   operand positive, so Spark's truncating ``div`` and DuckDB's ``//`` agree
-  (floor == trunc for positives — the exact trap the PageRank oracle
-  documents), and it cancels in every distance: (a+o)-(b+o) = a-b.
+  (floor == trunc for positives), and it cancels in every distance:
+  (a+o)-(b+o) = a-b.
 * Assignment = argmin of INTEGER squared distances, ties to the smaller
   cluster id (lexicographic ``struct(dist, cid)`` min) — no float order
   anywhere, so reassignment is reproducible row-by-row.
@@ -23,7 +23,7 @@ parallelism AND replayable in ANSI SQL):
   addition commutes, so partition order cannot change the result (a float
   mean here would drift between engines and between runs).
 * Iteration count is FIXED (no convergence float test); the DuckDB oracle
-  unrolls it as chained CTEs exactly like ``pagerank_oracle_sql``.
+  unrolls it as chained CTEs like ``components.minlabel_oracle_sql``.
 
 Scale shape — TWO gated assignment strategies, same arithmetic:
 

@@ -653,23 +653,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
-#: PageRank query params — shared by the Spark query and its SQL oracle so
-#: the two always replay the same fixed-point arithmetic
-_PR_ITERS = 8
-
-
-def q_kg_pagerank(spark, sf_dir):
-    """Fixed-point integer PageRank over the derived KG (simple-graph
-    semantics: distinct (subj, obj) pairs, predicates ignored) — bit-exact
-    at any parallelism, see :mod:`kgist_spark.operators.graph`."""
-    from kgist_spark.operators.graph import pagerank_fixed_point
-
-    edges = derived_triples(spark, sf_dir).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    ).distinct()
-    return pagerank_fixed_point(edges, iterations=_PR_ITERS)
-
-
 #: HITS iteration count — shared by the Spark query and its SQL oracle
 _HITS_ITERS = 6
 
@@ -1083,28 +1066,6 @@ def q_kg_linkpred(spark, sf_dir):
     return linkpred_ra(
         t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
         max_junction_deg=_LINKPRED_MAX_DEG, k=_LINKPRED_K,
-    )
-
-
-#: personalized-PageRank iterations for kg_ppr (frontier closure from the
-#: nation seed class is complete by round 3 on the test KGs; 6 keeps the
-#: ranks converging and Spark/oracle round-for-round identical)
-_PPR_ITERS = 6
-
-
-def q_kg_ppr(spark, sf_dir):
-    """Personalized PageRank over the derived KG (directed, simple-graph
-    semantics like kg_pagerank) with restart mass confined to the ORDER
-    seed class — the KG's only sources, so rank flows the full
-    o -> c/p -> s -> n closure; only reached nodes emit rows (the
-    sparse-frontier property IS the operator's scale story)."""
-    from kgist_spark.operators.graph import ppr_fixed_point
-
-    edges = derived_triples(spark, sf_dir).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    ).distinct()
-    return ppr_fixed_point(
-        edges, F.col("node").startswith("o"), iterations=_PPR_ITERS
     )
 
 
@@ -1594,70 +1555,6 @@ def q_split_leakage(spark, sf_dir):
     )
 
 
-#: evidence-weighted KG edge list: lineitem MULTIPLICITY is the weight on
-#: the order->part and part->supplier edges (the signal the simple-graph
-#: derivation's distinct throws away); the other branches weigh 1
-_WEIGHTED_EDGES_SQL = """
-    SELECT 'o' || l_orderkey AS src, 'p' || l_partkey AS dst,
-           CAST(COUNT(*) AS BIGINT) AS w
-    FROM lineitem GROUP BY 'o' || l_orderkey, 'p' || l_partkey
-    UNION ALL
-    SELECT 'p' || l_partkey, 's' || l_suppkey, CAST(COUNT(*) AS BIGINT)
-    FROM lineitem GROUP BY 'p' || l_partkey, 's' || l_suppkey
-    UNION ALL
-    SELECT 'o' || o_orderkey, 'c' || o_custkey, CAST(1 AS BIGINT) FROM orders
-    UNION ALL
-    SELECT 'c' || c_custkey, 'n' || c_nationkey, CAST(1 AS BIGINT)
-    FROM customer
-    UNION ALL
-    SELECT 's' || s_suppkey, 'n' || s_nationkey, CAST(1 AS BIGINT)
-    FROM supplier
-"""
-
-_WPR_ITERS = 8
-
-
-def weighted_edges(spark, sf_dir):
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-
-    def grp(df, s_pre, s_col, o_pre, o_col):
-        return (
-            df.groupBy(
-                F.concat(F.lit(s_pre), F.col(s_col)).alias("src"),
-                F.concat(F.lit(o_pre), F.col(o_col)).alias("dst"),
-            ).agg(F.count("*").cast("long").alias("w"))
-        )
-
-    def one(df, s_pre, s_col, o_pre, o_col):
-        return df.select(
-            F.concat(F.lit(s_pre), F.col(s_col)).alias("src"),
-            F.concat(F.lit(o_pre), F.col(o_col)).alias("dst"),
-            F.lit(1).cast("long").alias("w"),
-        )
-
-    return (
-        grp(lineitem, "o", "l_orderkey", "p", "l_partkey")
-        .unionAll(grp(lineitem, "p", "l_partkey", "s", "l_suppkey"))
-        .unionAll(one(orders, "o", "o_orderkey", "c", "o_custkey"))
-        .unionAll(one(customer, "c", "c_custkey", "n", "c_nationkey"))
-        .unionAll(one(supplier, "s", "s_suppkey", "n", "s_nationkey"))
-    )
-
-
-def q_kg_pagerank_weighted(spark, sf_dir):
-    """Evidence-weighted PageRank: lineitem multiplicity weights the
-    order->part->supplier edges, contributions split strength
-    -proportionally ((r*w) div W) — bit-exact integer iterations vs the
-    unrolled-CTE oracle."""
-    from kgist_spark.operators.graph import pagerank_weighted
-
-    return pagerank_weighted(weighted_edges(spark, sf_dir),
-                             iterations=_WPR_ITERS)
-
-
 def q_tfidf_clusters(spark, sf_dir):
     """TF-IDF near-dup decision table: the weighted-lexical pairs closed
     into components, each cluster keeping its minimum id — the APPLY
@@ -1815,7 +1712,6 @@ QUERIES = {
     "decontaminate": q_decontaminate,
     "repetition": q_repetition,
     "domain_cap": q_domain_cap,
-    "kg_pagerank": q_kg_pagerank,
     "kg_components": q_kg_components,
     "kg_degree_stats": q_kg_degree_stats,
     "kg_path2_stats": q_kg_path2_stats,
@@ -1841,7 +1737,6 @@ QUERIES = {
     "kg_labelprop": q_kg_labelprop,
     "kg_linkpred": q_kg_linkpred,
     "tfidf_terms": q_tfidf_terms,
-    "kg_ppr": q_kg_ppr,
     "events_hll": q_events_hll,
     "cms_user_counts": q_cms_user_counts,
     "kg_hits": q_kg_hits,
@@ -1876,7 +1771,6 @@ QUERIES = {
     "mixture_plan": q_mixture_plan,
     "kg_negatives_head": q_kg_negatives_head,
     "split_leakage": q_split_leakage,
-    "kg_pagerank_weighted": q_kg_pagerank_weighted,
     "tfidf_clusters": q_tfidf_clusters,
     "containment_keep": q_containment_keep,
     "excise_spans": q_excise_spans,
@@ -2357,20 +2251,6 @@ ORACLE_SQL["embedding_ann_lsh"] = rf"""
 """
 
 
-def _pagerank_oracle() -> str:
-    from kgist_spark.operators.graph import pagerank_oracle_sql
-
-    edges = (
-        f"SELECT DISTINCT subj AS src, obj AS dst FROM ({DERIVED_TRIPLES_SQL})"
-    )
-    return pagerank_oracle_sql(edges, iterations=_PR_ITERS)
-
-
-# integer fixed-point PageRank: bit-exact in both engines (truncating int
-# division, order-independent int sums), iterations unrolled as chained CTEs
-ORACLE_SQL["kg_pagerank"] = _pagerank_oracle()
-
-
 def _components_oracle() -> str:
     from kgist_spark.operators.components import minlabel_oracle_sql
 
@@ -2470,21 +2350,6 @@ def _tfidf_oracle() -> str:
 # integer fixed-point tf-idf (linear rarity weight — log-free, truncating
 # div), same tokenization and (score DESC, term ASC) per-doc pick
 ORACLE_SQL["tfidf_terms"] = _tfidf_oracle()
-
-
-def _ppr_oracle() -> str:
-    from kgist_spark.operators.graph import ppr_oracle_sql
-
-    edges = (f"SELECT DISTINCT subj AS src, obj AS dst"
-             f" FROM ({DERIVED_TRIPLES_SQL})")
-    return ppr_oracle_sql(edges, seed_where="node LIKE 'o%'",
-                          iterations=_PPR_ITERS)
-
-
-# personalized PageRank: iterations unrolled as chained CTEs, seed base
-# rows UNIONed into the damped contribution sum, r > 0 sparsity filter
-# applied per round exactly like the engine
-ORACLE_SQL["kg_ppr"] = _ppr_oracle()
 
 
 def _hll_oracle() -> str:
@@ -3748,18 +3613,6 @@ def _split_leakage_oracle() -> str:
 # split_leakage: the two oracled components (exact near-dup pairs, md5
 # -interval splits) composed; off-diagonal rows are the contamination
 ORACLE_SQL["split_leakage"] = _split_leakage_oracle()
-
-
-def _kg_pagerank_weighted_oracle() -> str:
-    from kgist_spark.operators.graph import pagerank_weighted_oracle_sql
-
-    return pagerank_weighted_oracle_sql(_WEIGHTED_EDGES_SQL,
-                                        iterations=_WPR_ITERS)
-
-
-# kg_pagerank_weighted: identical weighted edge derivation, identical
-# strength-proportional integer contributions, iterations unrolled
-ORACLE_SQL["kg_pagerank_weighted"] = _kg_pagerank_weighted_oracle()
 
 
 def _tfidf_clusters_oracle() -> str:

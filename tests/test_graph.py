@@ -1,10 +1,9 @@
-"""Graph analytics operators: fixed-point PageRank + degree stats.
+"""Graph analytics operators over KG and co-occurrence edge lists.
 
-PageRank's selling point is bit-exactness at any parallelism (integer
-arithmetic only), so the tests pin (a) hand-computed fixed-point values on a
-tiny graph, (b) equality against an independent pure-Python replay on a
-seeded random graph, and (c) bit-identical output across different
-partitionings of the same input.
+Each operator is pinned by hand-computed values on tiny graphs, by
+equality with an independent pure-Python replay on seeded random graphs,
+and, where it has a size-gated broadcast, by identical output on both
+join paths.
 """
 
 import random
@@ -14,95 +13,12 @@ from pyspark.sql import functions as F
 
 from kgist_spark.operators.graph import (
     HITS_SCALE,
-    PR_DAMP,
-    PR_SCALE,
     hits_fixed_point,
-    pagerank_fixed_point,
     path2_stats,
     pred_degree_stats,
 )
 
 pytestmark = pytest.mark.spark
-
-
-def _py_pagerank(edges, iterations, scale=PR_SCALE, damp=PR_DAMP):
-    """Independent driver-side replay of the exact integer recurrence."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-    nodes = {n for e in edges for n in e}
-    deg = {}
-    for s, _ in edges:
-        deg[s] = deg.get(s, 0) + 1
-    r = {n: scale for n in nodes}
-    for _ in range(iterations):
-        s = {n: 0 for n in nodes}
-        for a, b in edges:
-            s[b] += r[a] // deg[a]
-        r = {n: base + (dn * s[n]) // dd for n in nodes}
-    return r
-
-
-def _run(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    out = pagerank_fixed_point(df, **kw)
-    return {row["node"]: row["rank_fp"] for row in out.collect()}
-
-
-def test_pagerank_tiny_hand_computed(spark):
-    # a -> b, a -> c, b -> c, c -> a : the classic 3-node cycle-ish graph
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a")]
-    got = _run(spark, edges, iterations=2)
-    # by hand, scale=1e6, damp 85/100, base 150000:
-    # iter1: s(b)=1e6//2=500000, s(c)=500000+1e6=1500000, s(a)=1e6
-    #        r=(base + 85*s//100): a=1000000, b=575000, c=1425000
-    # iter2: s(b)=500000, s(c)=500000+575000=1075000, s(a)=1425000
-    #        a=1361250, b=575000, c=1063750
-    assert got == {"a": 1361250, "b": 575000, "c": 1063750}
-
-
-def test_pagerank_matches_python_replay(spark):
-    rng = random.Random(7)
-    nodes = [f"n{i}" for i in range(80)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(400)})
-    edges = [(a, b) for a, b in edges if a != b]
-    got = _run(spark, edges, iterations=6)
-    want = _py_pagerank(edges, iterations=6)
-    assert got == want
-
-
-def test_pagerank_bit_identical_across_parallelism(spark):
-    rng = random.Random(11)
-    nodes = [f"n{i}" for i in range(60)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(300)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    one = pagerank_fixed_point(df.coalesce(1), iterations=5)
-    many = pagerank_fixed_point(df.repartition(17), iterations=5)
-    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
-
-
-def test_pagerank_broadcast_and_shuffle_paths_identical(spark):
-    """The size-gated broadcast of the rank table is a physical-plan choice
-    only — forcing the shuffle-join fallback must give bit-identical ranks."""
-    rng = random.Random(3)
-    nodes = [f"n{i}" for i in range(50)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(250)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    bc = pagerank_fixed_point(df, iterations=4)
-    sh = pagerank_fixed_point(df, iterations=4, broadcast_max_nodes=0)
-    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
-
-
-def test_pagerank_dangling_and_isolated_in_nodes(spark):
-    # b has no out-edges (dangling: its mass leaks); a has no in-edges
-    # (rank = base after iter 1)
-    got = _run(spark, [("a", "b")], iterations=3)
-    dn, dd = PR_DAMP
-    base = (PR_SCALE * (dd - dn)) // dd
-    assert got["a"] == base
-    # b: iter1 gets 85%*1e6, iter2 85%*r(a)=85%*base, iter3 same
-    assert got["b"] == base + (dn * base) // dd
 
 
 def _py_hits(edges, iterations, scale=HITS_SCALE):
@@ -578,79 +494,6 @@ def test_linkpred_matches_python_replay(spark):
 
 # ---------------------------------------------------------------------------
 # personalized PageRank (ppr_fixed_point)
-
-
-def _py_ppr(edges, seeds, iterations, scale=PR_SCALE, damp=PR_DAMP):
-    """Independent replay of the seeded recurrence with the per-round
-    r > 0 sparsity filter."""
-    dn, dd = damp
-    base = (scale * (dd - dn)) // dd
-    deg = {}
-    for s, _ in edges:
-        deg[s] = deg.get(s, 0) + 1
-    nodes = {n for e in edges for n in e}
-    r = {n: scale for n in nodes if n in seeds}
-    for _ in range(iterations):
-        s = {}
-        for a, b in edges:
-            if a in r:
-                s[b] = s.get(b, 0) + r[a] // deg[a]
-        nxt = {}
-        for n in set(s) | (seeds & nodes):
-            v = (base if n in seeds else 0) + (dn * s.get(n, 0)) // dd
-            if v > 0:
-                nxt[n] = v
-        r = nxt
-    return r
-
-
-def _ppr_spark(spark, edges, seeds, iterations, **kw):
-    from kgist_spark.operators.graph import ppr_fixed_point
-
-    df = spark.createDataFrame(edges, "src string, dst string")
-    out = ppr_fixed_point(
-        df, F.col("node").isin(list(seeds)), iterations=iterations, **kw
-    )
-    return {row["node"]: row["rank_fp"] for row in out.collect()}
-
-
-def test_ppr_chain_hand_computed(spark):
-    # a -> b -> c seeded at a: rank mass flows one hop per iteration and
-    # decays by 85 % per hop; base re-injects only at a
-    edges = [("a", "b"), ("b", "c")]
-    got = _ppr_spark(spark, edges, {"a"}, iterations=2)
-    # iter1: a = 150000 + 0, b = 0 + 85*1000000//100 = 850000
-    # iter2: a = 150000, b = 85*150000//100 = 127500,
-    #        c = 85*850000//100 = 722500
-    assert got == {"a": 150000, "b": 127500, "c": 722500}
-
-
-def test_ppr_unreached_nodes_absent(spark):
-    # two directed components: seeding one leaves the other rankless, and
-    # upstream-of-seed nodes (no path FROM the seed) never appear either
-    edges = [("a", "b"), ("x", "y"), ("up", "a")]
-    got = _ppr_spark(spark, edges, {"a"}, iterations=4)
-    assert set(got) == {"a", "b"}
-
-
-def test_ppr_matches_python_replay(spark):
-    rng = random.Random(37)
-    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
-    edges = sorted(set(edges))  # simple-graph semantics like the query
-    seeds = {f"n{i}" for i in range(4)}
-    for iters in (1, 3, 6):
-        assert _ppr_spark(spark, edges, seeds, iters) == _py_ppr(
-            edges, seeds, iters
-        )
-
-
-def test_ppr_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(41)
-    edges = sorted({(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}")
-                    for _ in range(70)})
-    bcast = _ppr_spark(spark, edges, {"n0", "n1"}, 4)
-    shuffled = _ppr_spark(spark, edges, {"n0", "n1"}, 4, broadcast_max_nodes=0)
-    assert bcast == shuffled
 
 
 # ---------------------------------------------------------------------------
@@ -1287,41 +1130,3 @@ def test_negative_samples_head_corruption(spark):
     headset = {(r["subj"], r["pred"], r["obj"], r["k_idx"], r["neg_subj"])
                for r in head}
     assert headset != tail
-
-
-def test_pagerank_weighted_hand_computed(spark):
-    """Strength-proportional split: a 3x-weighted edge carries 3x the
-    mass of its sibling; weight-1 everywhere degenerates to the
-    unweighted operator exactly."""
-    from kgist_spark.operators.graph import (
-        PR_DAMP,
-        PR_SCALE,
-        pagerank_fixed_point,
-        pagerank_weighted,
-    )
-
-    edges = spark.createDataFrame(
-        [("s", "a", 3), ("s", "b", 1)], "src string, dst string, w long"
-    )
-    r = {x["node"]: x["rank_fp"]
-         for x in pagerank_weighted(edges, iterations=1).collect()}
-    dn, dd = PR_DAMP
-    base = (PR_SCALE * (dd - dn)) // dd
-    # s splits its initial rank 3:1
-    assert r["a"] == base + (dn * ((PR_SCALE * 3) // 4)) // dd
-    assert r["b"] == base + (dn * (PR_SCALE // 4)) // dd
-    assert r["s"] == base  # no in-edges
-
-    # weight-1 degeneracy on a seeded random graph
-    import random
-
-    rng = random.Random(7)
-    ew = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}")
-          for _ in range(120)]
-    ew = [(a, b) for a, b in dict.fromkeys(ew) if a != b]
-    uw = spark.createDataFrame(ew, "src string, dst string")
-    w1 = spark.createDataFrame([(a, b, 1) for a, b in ew],
-                               "src string, dst string, w long")
-    got_u = sorted(map(tuple, pagerank_fixed_point(uw, iterations=4).collect()))
-    got_w = sorted(map(tuple, pagerank_weighted(w1, iterations=4).collect()))
-    assert got_u == got_w
