@@ -776,174 +776,6 @@ def pred_reciprocity(triples: DataFrame) -> DataFrame:
     )
 
 
-#: HITS fixed-point scale.  1e5 (not PageRank's 1e6) because normalization
-#: multiplies a contribution SUM by the scale before the truncating div:
-#: sum <= max_in_degree * scale, so the product stays int64-exact while
-#: max_in_degree * scale^2 < 2^63 — i.e. hubs/authorities are exact up to
-#: ~9.2e8 in-degree at this scale (a web-graph-sized bound; PageRank's own
-#: bound story is per-node and looser).
-HITS_SCALE = 100_000
-
-
-def hits_fixed_point(edges: DataFrame, src: str = "src", dst: str = "dst",
-                     iterations: int = 8, scale: int = HITS_SCALE,
-                     rows_per_partition: int = 200_000,
-                     broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Integer fixed-point HITS (Kleinberg hubs/authorities) over a directed
-    edge list: ``(node, hub_fp, auth_fp)`` for every node, where each
-    iteration is the textbook pair of updates with L-infinity (max)
-    normalization in scaled int64 —
-
-    * ``auth'(j) = sum over i->j of hub(i)``, then
-      ``auth = (auth' * scale) div max(auth')``;
-    * ``hub'(i) = sum over i->j of auth(j)``, then the same normalization.
-
-    Max-normalization instead of the float L2 norm keeps EVERY operation an
-    exact int64 op (order-free sums, one truncating div of positive
-    operands), so the result is bit-identical at any parallelism and
-    replayable in ANSI SQL (:func:`hits_oracle_sql`) — the same
-    fixed-point discipline as :func:`pagerank_fixed_point`, and the same
-    reason: float HITS sums in partition order and drifts in the low bits
-    across cluster sizes.  L-inf-normalized iteration converges to the same
-    principal-eigenvector direction as L2 (the scaling cancels between
-    iterations); only the constant factor differs, and the top hub / top
-    authority land at exactly ``scale``.
-
-    Loop discipline (= PageRank's, see that docstring for the rationale):
-    edge list persisted once and, in shuffle-join mode, pre-partitioned
-    per join side; the hub/auth tables (node-set-sized, orders of magnitude
-    narrower than the adjacency) broadcast under a measured size gate so
-    each half-iteration's only shuffle is its map-side-combined sum;
-    loop-scoped shuffle width from the measured edge count; lazy
-    ``localCheckpoint`` lineage cuts with one eager sweep on the last
-    table.  Nodes with no out-edges have hub 0, no in-edges authority 0
-    (never joined, coalesced at the end) — every edge's src has out-degree
-    >= 1 by construction, so dropping zero-score nodes from the iterated
-    tables loses no contribution, in either engine.
-    """
-    if iterations < 1:
-        raise ValueError("hits needs at least 1 iteration")
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    n_edges = e.count()
-    width = max(1, min(
-        spark.sparkContext.defaultParallelism,
-        -(-max(n_edges, 1) // rows_per_partition),
-    ))
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(width))
-    nodes = (
-        e.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    bcast = n_nodes <= broadcast_max_nodes
-    e_by_src = e if bcast else e.repartition("src").persist()
-    e_by_dst = e if bcast else e.repartition("dst").persist()
-
-    def _norm(raw, score_col):
-        # (s * scale) div max(s): the 1-row max broadcasts; guard the
-        # empty/zero case so an edgeless input yields an empty table
-        mx = raw.agg(F.max("s").alias("mx"))
-        return raw.crossJoin(F.broadcast(mx)).select(
-            "node",
-            F.expr(f"case when mx is null or mx = 0 then cast(0 as long)"
-                   f" else (s * {scale}) div mx end").alias(score_col),
-        )
-
-    try:
-        hubs = nodes.select(
-            "node", F.lit(scale).cast("long").alias("h")
-        ).localCheckpoint(eager=iterations == 0)
-        auths = nodes.select("node", F.lit(0).cast("long").alias("a"))
-        for i in range(iterations):
-            h = hubs.withColumnRenamed("node", "src")
-            if bcast:
-                h = F.broadcast(h)
-            a_raw = (
-                e_by_src.join(h, "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("h").alias("s"))
-            )
-            auths = _norm(a_raw, "a").localCheckpoint(eager=False)
-            a = auths.withColumnRenamed("node", "dst")
-            if bcast:
-                a = F.broadcast(a)
-            h_raw = (
-                e_by_dst.join(a, "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("a").alias("s"))
-            )
-            hubs = _norm(h_raw, "h").localCheckpoint(eager=i == iterations - 1)
-        return (
-            nodes.join(hubs, "node", "left")
-            .join(auths, "node", "left")
-            .select(
-                "node",
-                F.coalesce("h", F.lit(0)).cast("long").alias("hub_fp"),
-                F.coalesce("a", F.lit(0)).cast("long").alias("auth_fp"),
-            )
-        )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        nodes.unpersist()
-        if not bcast:
-            e_by_src.unpersist()
-            e_by_dst.unpersist()
-        e.unpersist()
-
-
-def hits_oracle_sql(edges_sql: str, iterations: int = 8,
-                    scale: int = HITS_SCALE) -> str:
-    """SQL replay of :func:`hits_fixed_point` — iterations unrolled as
-    chained CTEs (the PageRank-oracle pattern), same truncating integer
-    div on positive operands, same max normalization.  Two deliberate
-    deviations from the plain-CTE PageRank oracle, both because HITS
-    references each level MORE than once: the per-level max is a window
-    ``MAX(s) OVER ()`` (a scalar subquery would reference the level twice
-    and, under DuckDB's CTE inlining, expand the plan exponentially in the
-    iteration count — observed as thousands of re-opened parquet scans),
-    and every CTE is ``MATERIALIZED`` so each level executes exactly once.
-    ``edges_sql`` must yield ``(src, dst)``."""
-    ctes = [
-        f"edges AS MATERIALIZED ({edges_sql})",
-        "nodes AS MATERIALIZED "
-        "(SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        f"h0 AS MATERIALIZED "
-        f"(SELECT node, CAST({scale} AS BIGINT) AS h FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(f"""ar{i} AS MATERIALIZED (
-            SELECT node, s, MAX(s) OVER () AS mx FROM (
-                SELECT e.dst AS node, SUM(h.h) AS s
-                FROM edges e JOIN h{i - 1} h ON h.node = e.src
-                GROUP BY e.dst))""")
-        ctes.append(f"""a{i} AS MATERIALIZED (
-            SELECT node, CAST(CASE WHEN mx = 0 THEN 0
-                ELSE (s * {scale}) // mx END AS BIGINT) AS a
-            FROM ar{i})""")
-        ctes.append(f"""hr{i} AS MATERIALIZED (
-            SELECT node, s, MAX(s) OVER () AS mx FROM (
-                SELECT e.src AS node, SUM(a.a) AS s
-                FROM edges e JOIN a{i} a ON a.node = e.dst
-                GROUP BY e.src))""")
-        ctes.append(f"""h{i} AS MATERIALIZED (
-            SELECT node, CAST(CASE WHEN mx = 0 THEN 0
-                ELSE (s * {scale}) // mx END AS BIGINT) AS h
-            FROM hr{i})""")
-    k = iterations
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-    SELECT n.node, CAST(COALESCE(h.h, 0) AS BIGINT) AS hub_fp,
-           CAST(COALESCE(a.a, 0) AS BIGINT) AS auth_fp
-    FROM nodes n
-    LEFT JOIN h{k} h ON h.node = n.node
-    LEFT JOIN a{k} a ON a.node = n.node"""
-    )
-
-
 def neighbor_jaccard(edges: DataFrame, a: str = "a", b: str = "b",
                      max_junction_deg: int = 64, k: int = 50,
                      scale: int = 1_000_000) -> DataFrame:

@@ -653,22 +653,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
-#: HITS iteration count — shared by the Spark query and its SQL oracle
-_HITS_ITERS = 6
-
-
-def q_kg_hits(spark, sf_dir):
-    """Integer fixed-point HITS hubs/authorities over the derived KG
-    (distinct (subj, obj) pairs) — max-normalized so every op is exact
-    int64, bit-identical at any parallelism; unrolled-CTE oracle."""
-    from kgist_spark.operators.graph import hits_fixed_point
-
-    edges = derived_triples(spark, sf_dir).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    ).distinct()
-    return hits_fixed_point(edges, iterations=_HITS_ITERS)
-
-
 #: BM25 query terms — shared by the Spark query and the oracle
 _BM25_TERMS = ["spark", "join", "hash"]
 
@@ -1739,7 +1723,6 @@ QUERIES = {
     "tfidf_terms": q_tfidf_terms,
     "events_hll": q_events_hll,
     "cms_user_counts": q_cms_user_counts,
-    "kg_hits": q_kg_hits,
     "kg_neighbor_jaccard": q_kg_neighbor_jaccard,
     "kg_assortativity": q_kg_assortativity,
     "bloom_decontaminate": q_bloom_decontaminate,
@@ -2398,19 +2381,6 @@ def _cms_oracle() -> str:
 # min-over-rows point estimates for the exact top-16 probe set
 ORACLE_SQL["cms_user_counts"] = _cms_oracle()
 
-
-def _hits_oracle() -> str:
-    from kgist_spark.operators.graph import hits_oracle_sql
-
-    edges = (
-        f"SELECT DISTINCT subj AS src, obj AS dst FROM ({DERIVED_TRIPLES_SQL})"
-    )
-    return hits_oracle_sql(edges, iterations=_HITS_ITERS)
-
-
-# integer fixed-point HITS: max-normalized hubs/authorities, iterations
-# unrolled as chained CTEs (the PageRank oracle pattern)
-ORACLE_SQL["kg_hits"] = _hits_oracle()
 
 # dup_ngrams: the oracle replays the identical in-row 5-gram windows (md5
 # over the space-joined token slice), the distinct-(gram, doc) collapse,

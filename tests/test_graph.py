@@ -11,101 +11,9 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from kgist_spark.operators.graph import (
-    HITS_SCALE,
-    hits_fixed_point,
-    path2_stats,
-    pred_degree_stats,
-)
+from kgist_spark.operators.graph import path2_stats, pred_degree_stats
 
 pytestmark = pytest.mark.spark
-
-
-def _py_hits(edges, iterations, scale=HITS_SCALE):
-    """Independent driver-side replay of the exact max-normalized integer
-    HITS recurrence (auth update from hubs, then hub update from the NEW
-    auths, truncating div by the per-side max)."""
-    nodes = {n for e in edges for n in e}
-    h = {n: scale for n in nodes}
-    a = {n: 0 for n in nodes}
-    for _ in range(iterations):
-        ar = {}
-        for s, d in edges:
-            ar[d] = ar.get(d, 0) + h.get(s, 0)
-        mx = max(ar.values(), default=0)
-        a = {n: 0 for n in nodes}
-        for n, v in ar.items():
-            a[n] = 0 if mx == 0 else (v * scale) // mx
-        hr = {}
-        for s, d in edges:
-            hr[s] = hr.get(s, 0) + a.get(d, 0)
-        mx = max(hr.values(), default=0)
-        h = {n: 0 for n in nodes}
-        for n, v in hr.items():
-            h[n] = 0 if mx == 0 else (v * scale) // mx
-    return {n: (h[n], a[n]) for n in nodes}
-
-
-def _run_hits(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    out = hits_fixed_point(df, **kw)
-    return {row["node"]: (row["hub_fp"], row["auth_fp"]) for row in out.collect()}
-
-
-def test_hits_tiny_hand_computed(spark):
-    # a -> c, b -> c, b -> d: b points at both sinks (best hub), c is cited
-    # by both sources (best authority)
-    edges = [("a", "c"), ("b", "c"), ("b", "d")]
-    got = _run_hits(spark, edges, iterations=2)
-    # iter1: ar c=200000 d=100000, mx 2e5 -> a(c)=100000 a(d)=50000;
-    #        hr a=100000 b=150000, mx 1.5e5 -> h(a)=66666 h(b)=100000
-    # iter2: ar c=166666 d=100000 -> a(c)=100000 a(d)=60000;
-    #        hr a=100000 b=160000 -> h(a)=62500 h(b)=100000
-    assert got == {
-        "a": (62500, 0),
-        "b": (100000, 0),
-        "c": (0, 100000),
-        "d": (0, 60000),
-    }
-
-
-def test_hits_matches_python_replay(spark):
-    rng = random.Random(13)
-    nodes = [f"n{i}" for i in range(70)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(350)})
-    edges = [(a, b) for a, b in edges if a != b]
-    got = _run_hits(spark, edges, iterations=6)
-    want = _py_hits(edges, iterations=6)
-    assert got == want
-
-
-def test_hits_bit_identical_across_parallelism(spark):
-    rng = random.Random(17)
-    nodes = [f"n{i}" for i in range(50)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(250)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    one = hits_fixed_point(df.coalesce(1), iterations=5)
-    many = hits_fixed_point(df.repartition(17), iterations=5)
-    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
-
-
-def test_hits_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(23)
-    nodes = [f"n{i}" for i in range(40)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(200)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    bc = hits_fixed_point(df, iterations=4)
-    sh = hits_fixed_point(df, iterations=4, broadcast_max_nodes=0)
-    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
-
-
-def test_hits_source_and_sink_roles(spark):
-    # single edge: a is a pure hub (auth 0), b a pure authority (hub 0),
-    # both pinned at exactly scale by the max normalization
-    got = _run_hits(spark, [("a", "b")], iterations=3)
-    assert got == {"a": (HITS_SCALE, 0), "b": (0, HITS_SCALE)}
 
 
 def test_degree_stats_hand_computed(spark):
