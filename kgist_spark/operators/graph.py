@@ -204,142 +204,6 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b",
     )
 
 
-def kcore_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
-                 k: int = 3, rounds: int = 8,
-                 rows_per_partition: int = 200_000,
-                 broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """``(node, degree)`` for nodes surviving EXACTLY ``rounds`` synchronous
-    k-core peeling rounds — each round simultaneously removes every node
-    whose degree in the surviving subgraph is below ``k``, then recomputes
-    degrees.  When ``rounds`` reaches the peel's fixpoint the output IS the
-    exact k-core (Seidman 1983); a fixed round count (no convergence probe)
-    keeps the computation a pure dataflow an ANSI-SQL oracle replays as
-    ``rounds`` chained CTEs, and the result is deterministic at any
-    parallelism either way (degree counts are integers).
-
-    No reference counterpart (GemsLab/KGist has no core decomposition); the
-    operator exists because a constructed web-scale KG needs a density
-    filter — the k-core is the standard "drop the sparse fringe before
-    expensive mining" step, and its peel is the same loop discipline as
-    :func:`pagerank_fixed_point` / ``components.minlabel_rounds``:
-
-    * the symmetric edge list is persisted once; each round's degree table
-      (one grouped count, map-side partials) is node-sized and BROADCAST
-      into the two survivor semi-joins while the MEASURED node count fits
-      ``broadcast_max_nodes`` (size-gated, never forced) — above the gate
-      the edge list is pre-partitioned on ``u`` once so each round only
-      shuffles the narrow degree table;
-    * the loop's shuffle width is sized from the measured edge count and
-      scoped to the loop;
-    * ``localCheckpoint(eager=False)`` pins lineage at depth 1 per round;
-      only the LAST round's checkpoint is eager.
-    """
-    spark = edges.sparkSession
-    # canonical (least, greatest) distinct FIRST, symmetric explode AFTER:
-    # the dedup shuffle moves half the rows of the explode-then-distinct
-    # order (at web scale the distinct is the prep's dominant shuffle)
-    sym = (
-        edges.where(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-            & (F.col(src) != F.col(dst))
-        )
-        .select(
-            F.least(src, dst).alias("cu"), F.greatest(src, dst).alias("cv")
-        )
-        .distinct()
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("cu").alias("u"), F.col("cv").alias("v")),
-                    F.struct(F.col("cv").alias("u"), F.col("cu").alias("v")),
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .persist()
-    )
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_edges = sym.count()
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_edges // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        n_nodes = sym.select("u").distinct().count()
-        bcast = n_nodes <= broadcast_max_nodes
-        cur = sym
-        if not bcast:
-            cur = sym.repartition("u").persist()
-            cur.count()
-        for i in range(rounds):
-            # the survivor set gates BOTH endpoints, so it feeds two joins.
-            # Join it with EXPLICIT conditions on one un-renamed plan (not
-            # a withColumnRenamed twin): the two exchanges then canonicalize
-            # identically and ReuseExchange builds ONE broadcast per round —
-            # the renamed twin forced two, each re-running the degree
-            # aggregation (measured 4x on the loop body at sf0.1).  An
-            # eager per-round pin was also tried and measured ~2x slower
-            # than the fused lazy chain (2×rounds scheduled jobs).
-            keep = (
-                cur.groupBy("u").agg(F.count("*").alias("du"))
-                .where(F.col("du") >= k)
-                .select("u")
-            )
-            if bcast:
-                keep = F.broadcast(keep)
-            c = cur.alias("c")
-            cur = (
-                c.join(keep.alias("k1"),
-                       F.col("c.u") == F.col("k1.u"), "leftsemi")
-                .join(keep.alias("k2"),
-                      F.col("c.v") == F.col("k2.u"), "leftsemi")
-                .localCheckpoint(eager=i == rounds - 1)
-            )
-        return cur.groupBy(F.col("u").alias("node")).agg(
-            F.count("*").alias("degree")
-        )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        sym.unpersist()
-
-
-def kcore_oracle_sql(edges_sql: str, k: int = 3, rounds: int = 8,
-                     src: str = "a", dst: str = "b") -> str:
-    """ANSI-SQL replay of :func:`kcore_rounds`: ``rounds`` synchronous peel
-    rounds unrolled as chained CTEs over ``edges_sql`` (a query producing
-    columns ``src, dst``).  Each round CTE references its predecessor
-    exactly ONCE (the ``minlabel_oracle_sql`` lesson: engines that inline
-    CTEs re-evaluate the whole chain per reference) — both endpoint degrees
-    come from two window counts over the symmetric edge list in a single
-    subquery, which equals the Spark loop's grouped-count + two semi-joins
-    because the list carries both directions."""
-    ctes = [
-        f"""e_in AS ({edges_sql}),
-    e0 AS (
-        SELECT {src} AS u, {dst} AS v FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {src} FROM e_in WHERE {src} != {dst}
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""e{i} AS (
-        SELECT u, v FROM (
-            SELECT u, v,
-                   COUNT(*) OVER (PARTITION BY u) AS du,
-                   COUNT(*) OVER (PARTITION BY v) AS dv
-            FROM e{i - 1}
-        ) WHERE du >= {k} AND dv >= {k}
-    )"""
-        )
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + f"\n    SELECT u AS node, COUNT(*) AS degree FROM e{rounds} GROUP BY u"
-    )
-
-
 def clustering_coefficients(edges: DataFrame, a: str = "a", b: str = "b",
                             coeff_scale: int = 1_000_000,
                             broadcast_max_edges: int = 5_000_000) -> DataFrame:
@@ -1012,149 +876,6 @@ def assortativity_oracle_sql(edges_sql: str,
                 THEN CAST(round(({r}) * {scale}) AS BIGINT) END AS r_x1e6
     FROM sums
     """
-
-
-def _edge_support(e: DataFrame, m: int,
-                  broadcast_max_edges: int) -> DataFrame:
-    """Per-edge triangle support of a pinned canonical edge set: the
-    degree-oriented O(m^1.5) wedge enumeration of :func:`triangle_count`,
-    with each closed triangle exploded to its 3 canonical member edges
-    before a grouped count (the edge-level analogue of
-    :func:`clustering_coefficients`' node explode)."""
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
-    if m <= broadcast_max_edges:
-        da, db = F.broadcast(da), F.broadcast(db)
-    a_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        )
-    )
-    x, y = oriented.alias("x"), oriented.alias("y")
-    wedges = (
-        x.join(y, "src")
-        .where(F.col("x.dst") < F.col("y.dst"))
-        .select("src", F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
-    )
-    closure = F.broadcast(e) if m <= broadcast_max_edges else e
-    tri_edges = (
-        wedges.join(closure, ["a", "b"])
-        .select(F.explode(F.array(
-            F.struct(F.least("src", "a").alias("a"),
-                     F.greatest("src", "a").alias("b")),
-            F.struct(F.least("src", "b").alias("a"),
-                     F.greatest("src", "b").alias("b")),
-            F.struct(F.col("a").alias("a"), F.col("b").alias("b")),
-        )).alias("t"))
-        .select("t.a", "t.b")
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("support"))
-    )
-    return e.join(tri_edges, ["a", "b"], "left").select(
-        "a", "b",
-        F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
-    )
-
-
-def ktruss_rounds(edges: DataFrame, a: str = "a", b: str = "b",
-                  k: int = 5, rounds: int = 3,
-                  broadcast_max_edges: int = 5_000_000) -> DataFrame:
-    """``rounds`` synchronous peel rounds toward the k-truss (Cohen 2008):
-    each round computes every edge's triangle SUPPORT within the current
-    edge set and drops edges with ``support < k-2``; output is the final
-    surviving edge set with its qualifying round-``rounds`` support —
-    ``(a, b, support)``.  The EDGE-level density filter that k-core's
-    degree peel can't give (a degree-k node glued on by k bridge edges
-    survives the core but carries no triangles): in a co-occurrence KG,
-    the truss keeps the cliquish community fabric and sheds
-    tree-like/bipartite attachment noise.
-
-    Like :func:`kcore_rounds`, the round count is FIXED semantics (not
-    run-to-convergence) so the DuckDB oracle replays round-for-round as
-    chained materialized CTEs; callers pick rounds where the test graphs
-    converge and the fixture pins convergence separately.
-
-    Scale shape: each round is one degree-oriented wedge pass
-    (O(m_i^1.5) with m_i shrinking monotonically), 3 integer rows per
-    closed triangle into a map-side-combined grouped count, one left
-    join back to the edges; edge/degree tables are pinned per round and
-    the closure join broadcasts under the measured size gate.  At truss
-    scale beyond memory, production systems decrement supports
-    incrementally instead of recomputing — the synchronous recompute is
-    the replayable choice and costs rounds × census, with rounds small
-    and fixed."""
-    if rounds < 1:
-        raise ValueError("ktruss_rounds needs rounds >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    min_sup = k - 2
-    sup = None
-    for _ in range(rounds):
-        m = e.count()
-        if m == 0:
-            return e.select(
-                "a", "b", F.lit(0).cast("long").alias("support")
-            ).where(F.lit(False))
-        sup = _edge_support(e, m, broadcast_max_edges).localCheckpoint(
-            eager=False
-        )
-        e = sup.where(F.col("support") >= min_sup).select("a", "b") \
-            .localCheckpoint(eager=False)
-    return sup.where(F.col("support") >= min_sup)
-
-
-def ktruss_oracle_sql(edges_sql: str, k: int = 5, rounds: int = 3) -> str:
-    """DuckDB replay of :func:`ktruss_rounds`: the same fixed peel rounds
-    as chained CTEs — each round enumerates triangles naively
-    (a<b<c three-way self-join), fans each to its 3 edges, counts, and
-    filters.  ``MATERIALIZED`` pins each round's edge set so the
-    triple-reference per round doesn't re-expand the whole chain."""
-    min_sup = k - 2
-    parts = [f"e0 AS MATERIALIZED (\n"
-             f"        SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b\n"
-             f"        FROM ({edges_sql}) WHERE a != b\n    )"]
-    for i in range(1, rounds + 1):
-        p = i - 1
-        parts.append(f"""tri{i} AS MATERIALIZED (
-        SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM e{p} e1
-        JOIN e{p} e2 ON e2.a = e1.a AND e2.b > e1.b
-        JOIN e{p} e3 ON e3.a = e1.b AND e3.b = e2.b
-    )""")
-        parts.append(f"""sup{i} AS MATERIALIZED (
-        SELECT e.a, e.b, CAST(COALESCE(s.c, 0) AS BIGINT) AS support
-        FROM e{p} e LEFT JOIN (
-            SELECT a, b, COUNT(*) AS c FROM (
-                SELECT x AS a, y AS b FROM tri{i}
-                UNION ALL SELECT x, z FROM tri{i}
-                UNION ALL SELECT y, z FROM tri{i}
-            ) GROUP BY a, b
-        ) s ON s.a = e.a AND s.b = e.b
-    )""")
-        parts.append(f"""e{i} AS MATERIALIZED (
-        SELECT a, b FROM sup{i} WHERE support >= {min_sup}
-    )""")
-    return (f"    WITH {', '.join(parts)}\n"
-            f"    SELECT a, b, support FROM sup{rounds}"
-            f" WHERE support >= {min_sup}")
 
 
 def random_walks(edges: DataFrame, src: str = "src", dst: str = "dst",

@@ -868,27 +868,6 @@ def q_token_pmi(spark, sf_dir):
     )
 
 
-#: k-core query params — k=5 peels ~40% of the derived KG and converges at
-#: round 5 on the test SFs; 6 leaves a margin, and the FIXED round count
-#: keeps Spark and the oracle round-for-round identical either way
-_KCORE_K, _KCORE_ROUNDS = 5, 6
-
-
-def q_kg_kcore(spark, sf_dir):
-    """k-core of the derived KG (undirected) via EXACTLY ``_KCORE_ROUNDS``
-    synchronous peel rounds — the density filter that drops the sparse
-    fringe before expensive mining; same loop discipline (size-gated
-    broadcast, scoped shuffle width, lazy checkpoints) as kg_pagerank /
-    kg_components."""
-    from kgist_spark.operators.graph import kcore_rounds
-
-    t = derived_triples(spark, sf_dir)
-    return kcore_rounds(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        k=_KCORE_K, rounds=_KCORE_ROUNDS,
-    )
-
-
 def q_pii_scrub(spark, sf_dir):
     """PII redaction audit: emails / IPv4s / phone numbers counted and
     replaced in one zero-shuffle codegen pass; ``clean_fp`` fingerprints
@@ -1093,27 +1072,6 @@ def q_tfidf_terms(spark, sf_dir):
     from kgist_spark.operators.search import tfidf_top_terms
 
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), per_doc_k=3)
-
-
-#: k-truss query params — its OWN co-occurrence cap (16, tighter than the
-#: census's 32: truss rounds pay the wedge pass per round), k=5 (edges must
-#: sit in >= 3 triangles), 2 fixed peel rounds (round-for-round oracle)
-_TRUSS_CAP, _TRUSS_K, _TRUSS_ROUNDS = 16, 5, 2
-
-
-def q_part_truss(spark, sf_dir):
-    """k-truss peel of the part co-occurrence graph: EXACTLY
-    ``_TRUSS_ROUNDS`` synchronous support-recompute-and-filter rounds —
-    the EDGE-level density filter k-core can't give (bridge edges with
-    high-degree endpoints survive the core but carry no triangles);
-    keeps the cliquish catalog fabric, sheds attachment noise."""
-    from kgist_spark.operators.graph import cooccur_edges, ktruss_rounds
-
-    edges = cooccur_edges(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        max_group=_TRUSS_CAP,
-    )
-    return ktruss_rounds(edges, k=_TRUSS_K, rounds=_TRUSS_ROUNDS)
 
 
 def q_dup_spans(spark, sf_dir):
@@ -1713,7 +1671,6 @@ QUERIES = {
     "semdedup_keep_best": q_semdedup_keep_best,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
-    "kg_kcore": q_kg_kcore,
     "part_clustering": q_part_clustering,
     "kg_reciprocity": q_kg_reciprocity,
     "embedding_ann_q8": q_embedding_ann_q8,
@@ -1726,7 +1683,6 @@ QUERIES = {
     "kg_neighbor_jaccard": q_kg_neighbor_jaccard,
     "kg_assortativity": q_kg_assortativity,
     "bloom_decontaminate": q_bloom_decontaminate,
-    "part_truss": q_part_truss,
     "dup_spans": q_dup_spans,
     "priority_sample": q_priority_sample,
     "kg_walks": q_kg_walks,
@@ -2245,19 +2201,6 @@ def _components_oracle() -> str:
 # rounds, so the tables agree round-for-round (convergence at round 7 on the
 # test SFs makes the result true connected components — pinned by pytest)
 ORACLE_SQL["kg_components"] = _components_oracle()
-
-
-def _kcore_oracle() -> str:
-    from kgist_spark.operators.graph import kcore_oracle_sql
-
-    edges = f"SELECT subj AS a, obj AS b FROM ({DERIVED_TRIPLES_SQL})"
-    return kcore_oracle_sql(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
-
-
-# fixed-round synchronous k-core peel, rounds unrolled as chained CTEs (one
-# predecessor reference per round: both endpoint degrees come from two
-# window counts over the symmetric list in a single subquery)
-ORACLE_SQL["kg_kcore"] = _kcore_oracle()
 
 
 def _bfs_oracle() -> str:
@@ -3206,31 +3149,6 @@ ORACLE_SQL["curate_summary"] = _curate_oracle(
               COUNT(*) AS n_docs
        FROM final GROUP BY 1"""
 )
-
-
-def _truss_cooccur_sql(cap: int) -> str:
-    """Capped part co-occurrence edges as a plain subquery (the
-    part_triangles `ed` CTE inlined — the truss oracle materializes it
-    once as its e0)."""
-    items = "SELECT DISTINCT l_orderkey AS g, l_partkey AS it FROM lineitem"
-    keep = (f"SELECT it, i.g FROM ({items}) i JOIN "
-            f"(SELECT g, COUNT(*) AS n FROM ({items}) GROUP BY g) s "
-            f"ON i.g = s.g WHERE s.n >= 2 AND s.n <= {cap}")
-    return (f"SELECT DISTINCT x.it AS a, y.it AS b FROM ({keep}) x "
-            f"JOIN ({keep}) y ON x.g = y.g AND x.it < y.it")
-
-
-def _part_truss_oracle() -> str:
-    from kgist_spark.operators.graph import ktruss_oracle_sql
-
-    return ktruss_oracle_sql(
-        _truss_cooccur_sql(_TRUSS_CAP), k=_TRUSS_K, rounds=_TRUSS_ROUNDS
-    )
-
-
-# part_truss: same capped co-occurrence edges, same fixed peel rounds —
-# naive triangle enumeration per round, 3-edge fan-out, grouped count
-ORACLE_SQL["part_truss"] = _part_truss_oracle()
 
 
 def _kg_walks_oracle() -> str:

@@ -134,76 +134,6 @@ def test_cooccur_edges_cap_and_triangles(spark):
     assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (3, 3, 1)
 
 
-# ---------------------------------------------------------------- k-core
-
-
-def _py_kcore(edges, k, rounds):
-    """Independent driver-side replay of the synchronous peel."""
-    cur = set()
-    for a, b in edges:
-        if a != b:
-            cur.add((a, b))
-            cur.add((b, a))
-    for _ in range(rounds):
-        deg = {}
-        for u, _ in cur:
-            deg[u] = deg.get(u, 0) + 1
-        keep = {u for u, d in deg.items() if d >= k}
-        cur = {(u, v) for u, v in cur if u in keep and v in keep}
-    out = {}
-    for u, _ in cur:
-        out[u] = out.get(u, 0) + 1
-    return out
-
-
-def _kcore_spark(spark, edges, k, rounds, **kw):
-    from kgist_spark.operators.graph import kcore_rounds
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    out = kcore_rounds(df, k=k, rounds=rounds, **kw)
-    return {r["node"]: r["degree"] for r in out.collect()}
-
-
-def test_kcore_triangle_with_tail(spark):
-    # triangle a-b-c (2-core) with a pendant chain c-d-e: the chain peels
-    # off over TWO rounds (e first, then d), pinning the synchronous
-    # round-by-round semantics
-    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
-    assert _kcore_spark(spark, edges, k=2, rounds=1) == {
-        "a": 2, "b": 2, "c": 3, "d": 1,  # e gone; d keeps its edge to c
-    }
-    assert _kcore_spark(spark, edges, k=2, rounds=2) == {"a": 2, "b": 2, "c": 2}
-
-
-def test_kcore_matches_python_replay(spark):
-    rng = random.Random(7)
-    edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(120)]
-    for k, rounds in ((2, 3), (3, 4), (4, 6)):
-        assert _kcore_spark(spark, edges, k=k, rounds=rounds) == _py_kcore(
-            edges, k, rounds
-        )
-
-
-def test_kcore_fixpoint_is_exact_kcore(spark):
-    # once the peel stabilizes, extra rounds change nothing — the fixed
-    # round count in the query is the exact k-core plus margin
-    rng = random.Random(11)
-    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
-    a = _kcore_spark(spark, edges, k=3, rounds=8)
-    b = _kcore_spark(spark, edges, k=3, rounds=9)
-    assert a == b
-    # and every survivor meets the degree bound (k-core property)
-    assert all(d >= 3 for d in a.values())
-
-
-def test_kcore_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(13)
-    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
-    bcast = _kcore_spark(spark, edges, k=2, rounds=4)
-    shuffled = _kcore_spark(spark, edges, k=2, rounds=4, broadcast_max_nodes=0)
-    assert bcast == shuffled
-
-
 # ---------------------------------------------------------------------------
 # multi-source BFS (bfs_rounds)
 
@@ -401,10 +331,6 @@ def test_linkpred_matches_python_replay(spark):
 
 
 # ---------------------------------------------------------------------------
-# personalized PageRank (ppr_fixed_point)
-
-
-# ---------------------------------------------------------------------------
 # neighborhood Jaccard (neighbor_jaccard)
 
 
@@ -516,92 +442,6 @@ def test_assortativity_matches_python_replay(spark):
     num, den = sjk / m - mu * mu, ssq / (2 * m) - mu * mu
     want = round(num / den * 1_000_000) if den > 0 else None
     assert _assort_spark(spark, edges) == (m, sjk, ssum, ssq, want)
-
-
-# ---------------------------------------------------------------- k-truss
-
-
-def _py_ktruss(edges, k, rounds):
-    """Independent driver-side replay of the synchronous truss peel."""
-    cur = set()
-    for a, b in edges:
-        if a != b:
-            cur.add((min(a, b), max(a, b)))
-    sup = {}
-    for _ in range(rounds):
-        sup = {e: 0 for e in cur}
-        for a, b in cur:
-            for c in {x for e in cur for x in e}:
-                if c in (a, b):
-                    continue
-                if (min(a, c), max(a, c)) in cur and (min(b, c), max(b, c)) in cur:
-                    sup[(a, b)] += 1
-        cur = {e for e, s in sup.items() if s >= k - 2}
-    return {e: s for e, s in sup.items() if s >= k - 2}
-
-
-def _ktruss_spark(spark, edges, k, rounds, **kw):
-    from kgist_spark.operators.graph import ktruss_rounds
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    out = ktruss_rounds(df, k=k, rounds=rounds, **kw)
-    return {(r["a"], r["b"]): r["support"] for r in out.collect()}
-
-
-def test_ktruss_clique_with_bridge(spark):
-    # K4 a-b-c-d (every edge in 2 triangles = 4-truss) plus a bridge d-e:
-    # the bridge has support 0 and peels in round 1; the clique survives
-    # k=4 but not k=5 — the EDGE-density filter a degree peel can't give
-    k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
-          ("c", "d")]
-    got = _ktruss_spark(spark, k4 + [("d", "e")], k=4, rounds=2)
-    assert got == {(min(a, b), max(a, b)): 2 for a, b in k4}
-    assert _ktruss_spark(spark, k4 + [("d", "e")], k=5, rounds=1) == {}
-
-
-def test_ktruss_cascade_needs_rounds(spark):
-    # two triangles sharing edge (b,c), plus a third hanging off (c,d):
-    # at k=4, round 1 kills the outer edges (support 1), round 2 then
-    # kills the shared edges whose support they propped up — pinning the
-    # synchronous round-for-round semantics the oracle replays
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d"),
-             ("c", "e"), ("d", "e")]
-    r1 = _ktruss_spark(spark, edges, k=4, rounds=1)
-    r2 = _ktruss_spark(spark, edges, k=4, rounds=2)
-    assert set(r1) == {("b", "c"), ("c", "d")}
-    assert r2 == {}
-
-
-def test_ktruss_matches_python_replay(spark):
-    rng = random.Random(17)
-    edges = [(f"n{rng.randrange(18)}", f"n{rng.randrange(18)}")
-             for _ in range(90)]
-    for k, rounds in ((3, 2), (4, 3), (5, 2)):
-        assert _ktruss_spark(spark, edges, k=k, rounds=rounds) == _py_ktruss(
-            edges, k, rounds
-        )
-
-
-def test_ktruss_fixpoint_stable(spark):
-    # once the peel stabilizes, extra rounds change nothing, and every
-    # surviving edge meets the support bound (k-truss property)
-    rng = random.Random(19)
-    edges = [(f"n{rng.randrange(14)}", f"n{rng.randrange(14)}")
-             for _ in range(70)]
-    a = _ktruss_spark(spark, edges, k=4, rounds=6)
-    b = _ktruss_spark(spark, edges, k=4, rounds=7)
-    assert a == b
-    assert all(s >= 2 for s in a.values())
-
-
-def test_ktruss_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(23)
-    edges = [(f"n{rng.randrange(15)}", f"n{rng.randrange(15)}")
-             for _ in range(60)]
-    bcast = _ktruss_spark(spark, edges, k=3, rounds=3)
-    shuffled = _ktruss_spark(spark, edges, k=3, rounds=3,
-                             broadcast_max_edges=0)
-    assert bcast == shuffled
 
 
 # ----------------------------------------------------------- random walks
