@@ -286,243 +286,6 @@ def clustering_coefficients(edges: DataFrame, a: str = "a", b: str = "b",
     )
 
 
-def _symmetric_selfloop_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Canonical undirected edge list exploded to both directions PLUS a
-    zero-weight self-loop per node: ``(u, v, w)`` with ``w`` the hop cost
-    (1 for a real edge, 0 for the self-loop).  The self-loop is the
-    single-CTE-reference trick from ``minlabel_oracle_sql``: a propagation
-    round that must keep a node's own value ("min over neighbors AND
-    self") becomes ONE join + ONE grouped min instead of a union that
-    references the previous round twice (which inlining engines
-    re-evaluate exponentially).  Dedup runs on the canonical (least,
-    greatest) pairs BEFORE the 2x explode — half the shuffle."""
-    canon = (
-        edges.where(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-            & (F.col(src) != F.col(dst))
-        )
-        .select(
-            F.least(src, dst).alias("cu"), F.greatest(src, dst).alias("cv")
-        )
-        .distinct()
-    )
-    return (
-        canon.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("cu").alias("u"), F.col("cv").alias("v")),
-                    F.struct(F.col("cv").alias("u"), F.col("cu").alias("v")),
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v", F.lit(1).alias("w"))
-        .unionAll(
-            canon.select(F.explode(F.array("cu", "cv")).alias("u"))
-            .distinct()
-            .select("u", F.col("u").alias("v"), F.lit(0).alias("w"))
-        )
-    )
-
-
-def bfs_rounds(edges: DataFrame, seed_predicate, src: str = "a",
-               dst: str = "b", rounds: int = 4,
-               rows_per_partition: int = 200_000,
-               broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """``(node, dist)`` = minimum hop count from any SEED node reachable
-    within EXACTLY ``rounds`` synchronous frontier rounds over the
-    UNDIRECTED graph; nodes not reached within ``rounds`` are absent.
-    ``seed_predicate`` is a Column predicate over ``node`` selecting the
-    seed set (dist 0).
-
-    The multi-source-BFS member of the fixed-round loop family
-    (:func:`pagerank_fixed_point` / ``components.minlabel_rounds`` /
-    :func:`kcore_rounds`) — in a constructed KG this is the "entity
-    neighborhood radius" primitive: how far is every node from the seed
-    class (QA: orphaned islands have no row; curation: cap crawl depth
-    from trusted hubs).  No reference counterpart (GemsLab/KGist has no
-    traversal op).
-
-    Determinism: dist is an integer min over (previous dist + hop cost)
-    including a zero-cost self-loop, so each round is one join + one
-    grouped MIN — commutes at any parallelism, and the oracle unrolls the
-    identical rounds as chained CTEs each referencing its predecessor
-    exactly once (:func:`bfs_oracle_sql`).  Loop discipline as everywhere:
-    edge list persisted once, dist table (node-sized) size-gate-broadcast
-    into the round join, scoped shuffle width, lazy checkpoints with one
-    eager sweep."""
-    spark = edges.sparkSession
-    sl = _symmetric_selfloop_edges(edges, src, dst).persist()
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_rows = sl.count()
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_rows // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        nodes = sl.where("w = 0").select(F.col("u").alias("node"))
-        n_nodes = nodes.count()
-        bcast = n_nodes <= broadcast_max_nodes
-        if not bcast:
-            sl = sl.repartition("u").persist()
-            sl.count()
-        dist = nodes.where(seed_predicate).select(
-            "node", F.lit(0).cast("long").alias("dist")
-        ).localCheckpoint(eager=rounds == 0)
-        for i in range(rounds):
-            d = dist.withColumnRenamed("node", "u")
-            if bcast:
-                d = F.broadcast(d)
-            dist = (
-                sl.join(d, "u")
-                .groupBy(F.col("v").alias("node"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-                .localCheckpoint(eager=i == rounds - 1)
-            )
-        return dist
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        sl.unpersist()
-
-
-def bfs_oracle_sql(edges_sql: str, seed_where: str, rounds: int = 4,
-                   src: str = "a", dst: str = "b") -> str:
-    """ANSI-SQL replay of :func:`bfs_rounds` — ``rounds`` frontier rounds
-    unrolled as chained CTEs over ``edges_sql`` (columns ``src, dst``),
-    seeds selected by the SQL predicate ``seed_where`` over ``node``.
-    The symmetric list carries zero-weight self-loops so each round CTE
-    references its predecessor exactly ONCE (the ``minlabel_oracle_sql``
-    inlining lesson)."""
-    ctes = [
-        f"""e_in AS ({edges_sql}),
-    und AS (
-        SELECT {src} AS u, {dst} AS v, 1 AS w FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {src}, 1 FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {src}, {src}, 0 FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {dst}, 0 FROM e_in WHERE {src} != {dst}
-    ),
-    d0 AS (
-        SELECT node, CAST(0 AS BIGINT) AS dist
-        FROM (SELECT DISTINCT u AS node FROM und) WHERE {seed_where}
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""d{i} AS (
-        SELECT e.v AS node, MIN(d.dist + e.w) AS dist
-        FROM und e JOIN d{i - 1} d ON d.node = e.u
-        GROUP BY e.v
-    )"""
-        )
-    return "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, dist FROM d{rounds}"
-
-
-def labelprop_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
-                     rounds: int = 4, rows_per_partition: int = 200_000,
-                     broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """``(node, community)`` after EXACTLY ``rounds`` synchronous label-
-    propagation rounds (Raghavan et al. 2007): every node simultaneously
-    adopts the most frequent label among its neighbors-including-self,
-    ties to the LEXICOGRAPHICALLY SMALLEST label.  Communities (dense
-    locally-connected groups), not components — the min-label loop
-    (``components.minlabel_rounds``) floods one id per connected region;
-    LPA stops at frequency boundaries, which is the KG-curation signal
-    ("this entity cluster is one topic") a components pass cannot give.
-
-    Determinism: synchronous updates + a total tie order make each round a
-    pure function of the last — label counts are integers and the pick is
-    the lexicographic MIN of ``(-n, label)``, one grouped count + one
-    grouped min-struct (both map-side-partial aggregations; a window
-    row_number pick would sort-shuffle every neighbor row instead).
-    Including self in the vote uses the zero-weight self-loop row from the
-    shared symmetric list, keeping the oracle's per-round CTE to a single
-    predecessor reference.  Fixed rounds, no convergence probe — the
-    known LPA label-oscillation regime is harmless here because EXACTLY
-    ``rounds`` synchronous rounds is the defined (and replayed) semantics.
-    Same loop discipline as every fixed-round graph op in this module."""
-    spark = edges.sparkSession
-    sl = _symmetric_selfloop_edges(edges, src, dst).persist()
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_rows = sl.count()
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_rows // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        nodes = sl.where("w = 0").select(F.col("u").alias("node"))
-        n_nodes = nodes.count()
-        bcast = n_nodes <= broadcast_max_nodes
-        if not bcast:
-            sl = sl.repartition("u").persist()
-            sl.count()
-        lab = nodes.select(
-            "node", F.col("node").alias("community")
-        ).localCheckpoint(eager=rounds == 0)
-        for i in range(rounds):
-            l = lab.withColumnRenamed("node", "u")
-            if bcast:
-                l = F.broadcast(l)
-            lab = (
-                sl.join(l, "u")
-                .groupBy(F.col("v").alias("node"), "community")
-                .agg(F.count("*").alias("n"))
-                .groupBy("node")
-                .agg(F.min(F.struct((-F.col("n")).alias("negn"),
-                                    F.col("community").alias("community"))).alias("m"))
-                .select("node", F.col("m.community").alias("community"))
-                .localCheckpoint(eager=i == rounds - 1)
-            )
-        return lab
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        sl.unpersist()
-
-
-def labelprop_oracle_sql(edges_sql: str, rounds: int = 4,
-                         src: str = "a", dst: str = "b") -> str:
-    """ANSI-SQL replay of :func:`labelprop_rounds`: per round, one count
-    CTE + one pick CTE (row_number over ``n DESC, community`` — the same
-    total order as Spark's min-struct on ``(-n, community)``), each CTE
-    referencing its predecessor exactly once."""
-    ctes = [
-        f"""e_in AS ({edges_sql}),
-    und AS (
-        SELECT {src} AS u, {dst} AS v FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {src} FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {src}, {src} FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {dst} FROM e_in WHERE {src} != {dst}
-    ),
-    l0 AS (SELECT DISTINCT u AS node, u AS community FROM und)"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""c{i} AS (
-        SELECT e.v AS node, l.community, COUNT(*) AS n
-        FROM und e JOIN l{i - 1} l ON l.node = e.u
-        GROUP BY e.v, l.community
-    ),
-    l{i} AS (
-        SELECT node, community FROM (
-            SELECT node, community,
-                   ROW_NUMBER() OVER (PARTITION BY node
-                                      ORDER BY n DESC, community) AS rn
-            FROM c{i}
-        ) WHERE rn = 1
-    )"""
-        )
-    return ("WITH " + ",\n    ".join(ctes)
-            + f"\n    SELECT node, community FROM l{rounds}")
-
-
 def linkpred_ra(edges: DataFrame, a: str = "a", b: str = "b",
                 max_junction_deg: int = 64, k: int = 50,
                 scale: int = 1_000_000) -> DataFrame:
@@ -1350,153 +1113,6 @@ def schema_violations_oracle_sql(triples_sql: str, labels_sql: str,
     FROM ranked
     WHERE rn = 1 AND c_occ * 1000000 >= {min_share_x1e6} * n_checked
     """
-
-
-def pseudo_diameter(edges: DataFrame, src: str = "a", dst: str = "b",
-                    rounds: int = 4,
-                    rows_per_partition: int = 200_000,
-                    broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Double-sweep pseudo-diameter (the classic 2-BFS lower bound,
-    Magnien/Latapy/Habib 2009): BFS from the minimum-id node, take its
-    farthest reachable node (the periphery), BFS again from there — the
-    second eccentricity is a diameter LOWER BOUND that is exact on trees
-    and empirically tight on web/social graphs.  The one-number "how
-    stretched is this KG" diagnostic next to the density family
-    (assortativity, clustering, degree stats).
-
-    Fixed ``rounds`` per sweep keeps the computation a pure dataflow
-    (the package's loop-oracle contract): each sweep's distances are
-    min-hop within ``rounds``, so the reported bound is
-    ``min(pseudo_diameter, rounds)`` — callers size ``rounds`` to the
-    expected radius exactly as the components/BFS queries do.  Farthest
-    selection orders ``(dist DESC, node)`` — deterministic tie-break,
-    replayed by the oracle.
-
-    Output: ONE row ``(start_node, ecc1, far_node, ecc2)`` where
-    ``ecc2`` is the pseudo-diameter bound.
-
-    Scale shape: two runs of the shared frontier loop (edge list
-    symmetrized, persisted and size-gate-broadcast exactly as
-    :func:`bfs_rounds`); the seed handoff between sweeps is a 1-row
-    TakeOrdered + broadcast join — no driver round-trip."""
-    spark = edges.sparkSession
-    sl = _symmetric_selfloop_edges(edges, src, dst).persist()
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_rows = sl.count()
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_rows // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        nodes = sl.where("w = 0").select(F.col("u").alias("node"))
-        n_nodes = nodes.count()
-        bcast = n_nodes <= broadcast_max_nodes
-
-        def sweep(seed_df):
-            dist = seed_df.select(
-                "node", F.lit(0).cast("long").alias("dist")
-            ).localCheckpoint(eager=False)
-            for i in range(rounds):
-                d = dist.withColumnRenamed("node", "u")
-                if bcast:
-                    d = F.broadcast(d)
-                dist = (
-                    sl.join(d, "u")
-                    .groupBy(F.col("v").alias("node"))
-                    .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-                    .localCheckpoint(eager=i == rounds - 1)
-                )
-            return dist
-
-        def farthest(dist_df):
-            return (
-                dist_df.orderBy(F.desc("dist"), F.asc("node"))
-                .limit(1)
-                .localCheckpoint()
-            )
-
-        start = nodes.agg(F.min("node").alias("node"))
-        d1 = sweep(start)
-        far1 = farthest(d1)  # (node, dist) = (far_node, ecc1)
-        d2 = sweep(far1.select("node"))
-        far2 = farthest(d2)
-        return (
-            start.select(F.col("node").alias("start_node"))
-            .crossJoin(
-                far1.select(
-                    F.col("dist").alias("ecc1"), F.col("node").alias("far_node")
-                )
-            )
-            .crossJoin(far2.select(F.col("dist").alias("ecc2")))
-            .select("start_node", "ecc1", "far_node", "ecc2")
-        )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        sl.unpersist()
-
-
-def pseudo_diameter_oracle_sql(edges_sql: str, rounds: int = 4,
-                               src: str = "a", dst: str = "b") -> str:
-    """DuckDB replay of :func:`pseudo_diameter`: the two fixed-round
-    sweeps unrolled as MATERIALIZED CTE chains, seed handoff via the
-    identical ``(dist DESC, node)`` 1-row selection."""
-    ctes = [
-        f"e_in AS MATERIALIZED ({edges_sql})",
-        f"""und AS MATERIALIZED (
-        SELECT {src} AS u, {dst} AS v, 1 AS w FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {src}, 1 FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {src}, {src}, 0 FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {dst}, 0 FROM e_in WHERE {src} != {dst}
-    )""",
-        """d0 AS (
-        SELECT MIN(u) AS node, CAST(0 AS BIGINT) AS dist FROM und
-    )""",
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""d{i} AS MATERIALIZED (
-        SELECT e.v AS node, MIN(d.dist + e.w) AS dist
-        FROM und e JOIN d{i - 1} d ON d.node = e.u
-        GROUP BY e.v
-    )"""
-        )
-    ctes.append(
-        f"""far1 AS (
-        SELECT node, dist FROM d{rounds} ORDER BY dist DESC, node LIMIT 1
-    )""",
-    )
-    ctes.append(
-        """s0 AS (
-        SELECT node, CAST(0 AS BIGINT) AS dist FROM far1
-    )"""
-    )
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""s{i} AS MATERIALIZED (
-        SELECT e.v AS node, MIN(d.dist + e.w) AS dist
-        FROM und e JOIN s{i - 1} d ON d.node = e.u
-        GROUP BY e.v
-    )"""
-        )
-    ctes.append(
-        f"""far2 AS (
-        SELECT node, dist FROM s{rounds} ORDER BY dist DESC, node LIMIT 1
-    )"""
-    )
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + """
-    SELECT (SELECT MIN(u) FROM und) AS start_node,
-           (SELECT dist FROM far1) AS ecc1,
-           (SELECT node FROM far1) AS far_node,
-           (SELECT dist FROM far2) AS ecc2
-    """
-    )
 
 
 def _dense_node_index(nodes: DataFrame, salt: str,

@@ -973,49 +973,11 @@ def q_semdedup_keep_best(spark, sf_dir):
                               centroids=_kmeans_cents(spark, sf_dir))
 
 
-#: synchronous BFS frontier rounds for kg_bfs — the derived KG's diameter
-#: from the nation seed class is 3 (n→c/s→o/p closes at round 3 on both
-#: test SFs); 4 leaves a margin and the fixed count keeps Spark and the
-#: oracle round-for-round identical either way
-_BFS_ROUNDS = 4
-#: synchronous label-propagation rounds for kg_labelprop (fixed-round
-#: semantics — EXACTLY this many rounds IS the contract, convergence not
-#: required; see labelprop_rounds)
-_LP_ROUNDS = 4
 #: link-prediction knobs: junction degree cutoff (hub discount ~0 there
 #: anyway — the quadratic wedge cost is dropped exactly where the signal
 #: vanishes) and the returned top-k
 _LINKPRED_MAX_DEG = 64
 _LINKPRED_K = 50
-
-
-def q_kg_bfs(spark, sf_dir):
-    """Multi-source BFS over the undirected derived KG from the nation
-    seed class ('n'-prefixed nodes): (node, dist) = min hops within
-    EXACTLY _BFS_ROUNDS synchronous frontier rounds — integer min over a
-    self-loop-carrying symmetric list, bit-exact at any parallelism."""
-    from kgist_spark.operators.graph import bfs_rounds
-
-    t = derived_triples(spark, sf_dir)
-    return bfs_rounds(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        seed_predicate=F.col("node").startswith("n"),
-        rounds=_BFS_ROUNDS,
-    )
-
-
-def q_kg_labelprop(spark, sf_dir):
-    """Synchronous label-propagation communities over the undirected
-    derived KG — EXACTLY _LP_ROUNDS rounds, most-frequent neighbor label
-    with ties to the smallest (lexicographic min of (-n, label)): dense
-    local communities, not components."""
-    from kgist_spark.operators.graph import labelprop_rounds
-
-    t = derived_triples(spark, sf_dir)
-    return labelprop_rounds(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        rounds=_LP_ROUNDS,
-    )
 
 
 def q_kg_linkpred(spark, sf_dir):
@@ -1245,20 +1207,6 @@ def q_kg_violations(spark, sf_dir):
 #: pseudo-diameter sweep depth — sized to the derived KG's radius (the
 #: customer-order-part-supplier chain is ~6 hops end to end)
 _PD_ROUNDS = 6
-
-
-def q_kg_diameter(spark, sf_dir):
-    """Double-sweep pseudo-diameter of the derived KG: BFS from the
-    min-id node, re-BFS from its periphery — the classic 2-sweep
-    diameter lower bound (exact on trees, tight on web graphs), bounded
-    by the fixed sweep depth per the package's loop-oracle contract."""
-    from kgist_spark.operators.graph import pseudo_diameter
-
-    t = derived_triples(spark, sf_dir)
-    return pseudo_diameter(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        rounds=_PD_ROUNDS,
-    )
 
 
 def q_hash_split(spark, sf_dir):
@@ -1674,8 +1622,6 @@ QUERIES = {
     "part_clustering": q_part_clustering,
     "kg_reciprocity": q_kg_reciprocity,
     "embedding_ann_q8": q_embedding_ann_q8,
-    "kg_bfs": q_kg_bfs,
-    "kg_labelprop": q_kg_labelprop,
     "kg_linkpred": q_kg_linkpred,
     "tfidf_terms": q_tfidf_terms,
     "events_hll": q_events_hll,
@@ -1692,7 +1638,6 @@ QUERIES = {
     "kg_schema": q_kg_schema,
     "winnow_fp": q_winnow_fp,
     "kg_violations": q_kg_violations,
-    "kg_diameter": q_kg_diameter,
     "hash_split": q_hash_split,
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
@@ -2202,32 +2147,6 @@ def _components_oracle() -> str:
 # test SFs makes the result true connected components — pinned by pytest)
 ORACLE_SQL["kg_components"] = _components_oracle()
 
-
-def _bfs_oracle() -> str:
-    from kgist_spark.operators.graph import bfs_oracle_sql
-
-    edges = f"SELECT subj AS a, obj AS b FROM ({DERIVED_TRIPLES_SQL})"
-    return bfs_oracle_sql(edges, seed_where="node LIKE 'n%'",
-                          rounds=_BFS_ROUNDS)
-
-
-# fixed-round multi-source BFS: integer min over a self-loop-carrying
-# symmetric list, rounds unrolled as chained CTEs (one predecessor
-# reference per round)
-ORACLE_SQL["kg_bfs"] = _bfs_oracle()
-
-
-def _labelprop_oracle() -> str:
-    from kgist_spark.operators.graph import labelprop_oracle_sql
-
-    edges = f"SELECT subj AS a, obj AS b FROM ({DERIVED_TRIPLES_SQL})"
-    return labelprop_oracle_sql(edges, rounds=_LP_ROUNDS)
-
-
-# fixed-round synchronous label propagation: the oracle's per-round
-# ROW_NUMBER pick (n DESC, community ASC) is the same total order as
-# Spark's grouped min-struct on (-n, community)
-ORACLE_SQL["kg_labelprop"] = _labelprop_oracle()
 
 # resource-allocation link prediction: identical junction-degree cutoff,
 # truncating integer div contribution, anti-join of existing canonical
@@ -3368,17 +3287,6 @@ def _kg_violations_oracle() -> str:
 # (share gate imported from the operator), probed with the identical
 # labeled-occurrence / expected-membership aggregation
 ORACLE_SQL["kg_violations"] = _kg_violations_oracle()
-
-
-def _kg_diameter_oracle() -> str:
-    from kgist_spark.operators.graph import pseudo_diameter_oracle_sql
-
-    return pseudo_diameter_oracle_sql(_DERIVED_AB_SQL, rounds=_PD_ROUNDS)
-
-
-# kg_diameter: both sweeps unrolled as materialized CTE chains; the seed
-# handoff replays the identical (dist DESC, node) 1-row selection
-ORACLE_SQL["kg_diameter"] = _kg_diameter_oracle()
 
 
 def _hash_split_oracle() -> str:

@@ -135,136 +135,6 @@ def test_cooccur_edges_cap_and_triangles(spark):
 
 
 # ---------------------------------------------------------------------------
-# multi-source BFS (bfs_rounds)
-
-
-def _py_bfs(edges, seeds, rounds):
-    """Independent replay: synchronous frontier rounds over the undirected
-    simple graph, min over (prev dist + hop cost) including the zero-cost
-    self-loop — identical recurrence, no shortest-path shortcuts."""
-    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    sym = [(u, v, 1) for u, v in canon] + [(v, u, 1) for u, v in canon]
-    nodes = {n for e in canon for n in e}
-    sym += [(n, n, 0) for n in nodes]
-    dist = {n: 0 for n in nodes if n in seeds}
-    for _ in range(rounds):
-        nxt = {}
-        for u, v, w in sym:
-            if u in dist:
-                d = dist[u] + w
-                if v not in nxt or d < nxt[v]:
-                    nxt[v] = d
-        dist = nxt
-    return dist
-
-
-def _bfs_spark(spark, edges, seeds, rounds, **kw):
-    from kgist_spark.operators.graph import bfs_rounds
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    out = bfs_rounds(df, F.col("node").isin(list(seeds)), rounds=rounds, **kw)
-    return {r["node"]: r["dist"] for r in out.collect()}
-
-
-def test_bfs_path_hand_computed(spark):
-    # path a-b-c-d-e seeded at a: frontier reaches one node per round
-    edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
-    assert _bfs_spark(spark, edges, {"a"}, rounds=2) == {"a": 0, "b": 1, "c": 2}
-    assert _bfs_spark(spark, edges, {"a"}, rounds=4) == {
-        "a": 0, "b": 1, "c": 2, "d": 3, "e": 4,
-    }
-
-
-def test_bfs_multi_seed_matches_python_replay(spark):
-    rng = random.Random(17)
-    edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(100)]
-    seeds = {f"n{i}" for i in range(5)}
-    for rounds in (0, 1, 3):
-        assert _bfs_spark(spark, edges, seeds, rounds) == _py_bfs(
-            edges, seeds, rounds
-        )
-
-
-def test_bfs_unreached_nodes_absent(spark):
-    # two components; seeding one must never emit rows for the other
-    edges = [("a", "b"), ("x", "y")]
-    assert _bfs_spark(spark, edges, {"a"}, rounds=3) == {"a": 0, "b": 1}
-
-
-def test_bfs_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(19)
-    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
-    bcast = _bfs_spark(spark, edges, {"n0", "n1"}, rounds=3)
-    shuffled = _bfs_spark(
-        spark, edges, {"n0", "n1"}, rounds=3, broadcast_max_nodes=0
-    )
-    assert bcast == shuffled
-
-
-# ---------------------------------------------------------------------------
-# synchronous label propagation (labelprop_rounds)
-
-
-def _py_labelprop(edges, rounds):
-    """Independent replay: every node simultaneously adopts the most
-    frequent label among neighbors-including-self, ties to the smallest."""
-    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    nbrs = {}
-    for u, v in canon:
-        nbrs.setdefault(u, set()).add(v)
-        nbrs.setdefault(v, set()).add(u)
-    lab = {n: n for n in nbrs}
-    for _ in range(rounds):
-        nxt = {}
-        for v in nbrs:
-            votes = {}
-            for u in nbrs[v] | {v}:
-                votes[lab[u]] = votes.get(lab[u], 0) + 1
-            nxt[v] = min(votes, key=lambda c: (-votes[c], c))
-        lab = nxt
-    return lab
-
-
-def _labelprop_spark(spark, edges, rounds, **kw):
-    from kgist_spark.operators.graph import labelprop_rounds
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    out = labelprop_rounds(df, rounds=rounds, **kw)
-    return {r["node"]: r["community"] for r in out.collect()}
-
-
-def test_labelprop_two_cliques_with_bridge(spark):
-    # two triangles joined by one bridge edge: labels flood to each
-    # clique's lexicographic min and the bridge does NOT merge them
-    clique1 = [("a", "b"), ("b", "c"), ("a", "c")]
-    clique2 = [("x", "y"), ("y", "z"), ("x", "z")]
-    got = _labelprop_spark(spark, clique1 + clique2 + [("c", "x")], rounds=4)
-    assert got["a"] == got["b"] == got["c"] == "a"
-    assert got["x"] == got["y"] == got["z"] == "a" or (
-        got["y"] == got["z"] == got["x"]
-    )
-    # the two triangle interiors stay internally uniform
-    assert len({got["x"], got["y"], got["z"]}) == 1
-
-
-def test_labelprop_matches_python_replay(spark):
-    rng = random.Random(23)
-    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}") for _ in range(90)]
-    for rounds in (1, 2, 4):
-        assert _labelprop_spark(spark, edges, rounds) == _py_labelprop(
-            edges, rounds
-        )
-
-
-def test_labelprop_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(29)
-    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
-    bcast = _labelprop_spark(spark, edges, rounds=3)
-    shuffled = _labelprop_spark(spark, edges, rounds=3, broadcast_max_nodes=0)
-    assert bcast == shuffled
-
-
-# ---------------------------------------------------------------------------
 # resource-allocation link prediction (linkpred_ra)
 
 
@@ -686,37 +556,6 @@ def test_schema_violations_detects_noise(spark):
     assert ps["expected_label"] == "order"
     assert (ps["n_checked"], ps["n_violations"]) == (20, 1)
     assert ps["viol_rate_x1e6"] == 1_000_000 // 20
-
-
-def test_pseudo_diameter_path_graph(spark):
-    """On a path a-b-c-d-e the double sweep finds the TRUE diameter (4)
-    even though the start node sits mid-path by id order."""
-    from kgist_spark.operators.graph import pseudo_diameter
-
-    edges = spark.createDataFrame(
-        [("c", "b"), ("b", "a"), ("c", "d"), ("d", "e")],
-        "a string, b string",
-    )
-    r = pseudo_diameter(edges, rounds=5).collect()[0]
-    # start = min id 'a' (an endpoint): ecc1 = 4 reaching 'e'; second
-    # sweep from 'e' confirms 4
-    assert (r["start_node"], r["ecc1"], r["far_node"], r["ecc2"]) == (
-        "a", 4, "e", 4)
-
-
-def test_pseudo_diameter_round_bound_and_tiebreak(spark):
-    from kgist_spark.operators.graph import pseudo_diameter
-
-    # star: center 'm' with leaves p,q,r -> diameter 2; rounds=1 caps the
-    # bound at 1 and the farthest tie (all dist 1) breaks to min node id
-    edges = spark.createDataFrame(
-        [("m", "p"), ("m", "q"), ("m", "r")], "a string, b string"
-    )
-    r1 = pseudo_diameter(edges, rounds=1).collect()[0]
-    assert r1["start_node"] == "m"
-    assert r1["ecc1"] == 1 and r1["far_node"] == "p" and r1["ecc2"] == 1
-    r2 = pseudo_diameter(edges, rounds=3).collect()[0]
-    assert r2["ecc2"] == 2  # true diameter once rounds cover it
 
 
 def test_dense_node_index_matches_global_window(spark):
