@@ -1284,135 +1284,6 @@ def negative_samples_oracle_sql(triples_sql: str, n_neg: int = 2,
     """
 
 
-def pivot_scc(edges: DataFrame, src: str = "src", dst: str = "dst",
-              rounds: int = 4,
-              rows_per_partition: int = 200_000,
-              broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """The strongly connected component of the minimum-id PIVOT node via
-    bounded forward/backward reachability — the directed-graph
-    counterpart the undirected components family can't give (a KG's
-    citation/hyperlink-style predicates are directed; the pivot SCC is
-    the "mutual-reachability core" around the anchor node): a node is in
-    the pivot's SCC iff the pivot reaches it AND it reaches the pivot
-    (Fleischer/Hendrickson/Pinar's FW-BW step, restricted to the one
-    pivot that needs no recursion).  Fixed ``rounds`` per direction keeps
-    the loop a pure dataflow (the package's loop-oracle contract):
-    membership is exact for SCCs of directed diameter ≤ ``rounds``,
-    callers size rounds like every bounded loop here.
-
-    Output: one row per member — ``(node, fwd_dist, bwd_dist)`` (hops
-    from / to the pivot; the pivot itself is (0, 0)).
-
-    Scale shape: two runs of the directed frontier loop (edge list +
-    zero-cost self-loops persisted once; the backward sweep REUSES the
-    same persisted list with the join key flipped — no second edge
-    materialization), dist table size-gate-broadcast per round, scoped
-    shuffle width, lazy checkpoints; the intersection is one equi-join
-    of two node-sized tables."""
-    spark = edges.sparkSession
-    el = (
-        edges.where(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-            & (F.col(src) != F.col(dst))
-        )
-        .select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v"), F.lit(1).alias("w")),
-                    F.struct(F.col("u").alias("u"), F.col("u").alias("v"),
-                             F.lit(0).alias("w")),
-                    F.struct(F.col("v").alias("u"), F.col("v").alias("v"),
-                             F.lit(0).alias("w")),
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v", "p.w")
-        .distinct()
-        .persist()
-    )
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_rows = el.count()
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_rows // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        nodes = el.where("w = 0").select(F.col("u").alias("node")).distinct()
-        n_nodes = nodes.count()
-        bcast = n_nodes <= broadcast_max_nodes
-        pivot = nodes.agg(F.min("node").alias("node"))
-
-        def sweep(from_col, to_col):
-            dist = pivot.select(
-                "node", F.lit(0).cast("long").alias("dist")
-            ).localCheckpoint(eager=False)
-            for i in range(rounds):
-                d = dist.withColumnRenamed("node", from_col)
-                if bcast:
-                    d = F.broadcast(d)
-                dist = (
-                    el.join(d, from_col)
-                    .groupBy(F.col(to_col).alias("node"))
-                    .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-                    .localCheckpoint(eager=i == rounds - 1)
-                )
-            return dist
-
-        fwd = sweep("u", "v")
-        bwd = sweep("v", "u")
-        return (
-            fwd.select("node", F.col("dist").alias("fwd_dist"))
-            .join(bwd.select("node", F.col("dist").alias("bwd_dist")), "node")
-        )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        el.unpersist()
-
-
-def pivot_scc_oracle_sql(edges_sql: str, rounds: int = 4,
-                         src: str = "src", dst: str = "dst") -> str:
-    """DuckDB replay of :func:`pivot_scc`: both directed sweeps unrolled
-    as materialized CTE chains over the identical self-loop-augmented
-    edge list; membership = the equi-join of the two distance tables."""
-    ctes = [
-        f"e_in AS MATERIALIZED (SELECT DISTINCT {src} AS u, {dst} AS v"
-        f" FROM ({edges_sql}) WHERE {src} != {dst})",
-        """el AS MATERIALIZED (
-        SELECT u, v, 1 AS w FROM e_in
-        UNION
-        SELECT u, u, 0 FROM e_in
-        UNION
-        SELECT v, v, 0 FROM e_in
-    )""",
-        """p0 AS (
-        SELECT MIN(u) AS node, CAST(0 AS BIGINT) AS dist
-        FROM el WHERE w = 0
-    )""",
-    ]
-    for pre, fc, tc in (("f", "u", "v"), ("b", "v", "u")):
-        prev = "p0"
-        for i in range(1, rounds + 1):
-            ctes.append(
-                f"""{pre}{i} AS MATERIALIZED (
-        SELECT e.{tc} AS node, MIN(d.dist + e.w) AS dist
-        FROM el e JOIN {prev} d ON d.node = e.{fc}
-        GROUP BY e.{tc}
-    )"""
-            )
-            prev = f"{pre}{i}"
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + f"""
-    SELECT f.node, f.dist AS fwd_dist, b.dist AS bwd_dist
-    FROM f{rounds} f JOIN b{rounds} b ON f.node = b.node
-    """
-    )
-
-
 def schema_drift(old_triples: DataFrame, new_triples: DataFrame,
                  labels: DataFrame) -> DataFrame:
     """Schema-profile drift between two KG snapshots — the alarm table

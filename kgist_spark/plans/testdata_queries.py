@@ -1204,11 +1204,6 @@ def q_kg_violations(spark, sf_dir):
     )
 
 
-#: pseudo-diameter sweep depth — sized to the derived KG's radius (the
-#: customer-order-part-supplier chain is ~6 hops end to end)
-_PD_ROUNDS = 6
-
-
 def q_hash_split(spark, sf_dir):
     """Deterministic disjoint-and-complete train/val/test split: each doc
     assigned by its md5-interval — stable under repartitioning and
@@ -1248,21 +1243,6 @@ def q_kg_negatives(spark, sf_dir):
     from kgist_spark.operators.graph import negative_samples
 
     return negative_samples(derived_triples(spark, sf_dir), n_neg=2)
-
-
-def q_kg_pivot_scc(spark, sf_dir):
-    """The min-id pivot node's strongly connected component of the
-    DIRECTED derived KG (forward ∩ backward bounded reachability — the
-    FW-BW step at the one pivot that needs no recursion): the
-    mutual-reachability core the undirected components family can't
-    see."""
-    from kgist_spark.operators.graph import pivot_scc
-
-    t = derived_triples(spark, sf_dir)
-    return pivot_scc(
-        t.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
-        rounds=_PD_ROUNDS,
-    )
 
 
 def q_kg_schema_drift(spark, sf_dir):
@@ -1642,7 +1622,6 @@ QUERIES = {
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
     "kg_negatives": q_kg_negatives,
-    "kg_pivot_scc": q_kg_pivot_scc,
     "kg_schema_drift": q_kg_schema_drift,
     "ann_recall": q_ann_recall,
     "source_overlap": q_source_overlap,
@@ -3321,20 +3300,6 @@ def _kg_negatives_oracle() -> str:
 # two-phase distributed index must reproduce; draws + filtered anti-join
 # replay verbatim
 ORACLE_SQL["kg_negatives"] = _kg_negatives_oracle()
-
-
-def _kg_pivot_scc_oracle() -> str:
-    from kgist_spark.operators.graph import pivot_scc_oracle_sql
-
-    return pivot_scc_oracle_sql(
-        f"SELECT subj AS src, obj AS dst FROM ({DERIVED_TRIPLES_SQL})",
-        rounds=_PD_ROUNDS,
-    )
-
-
-# kg_pivot_scc: both directed sweeps unrolled as materialized CTE chains
-# over the identical self-loop-augmented edge list
-ORACLE_SQL["kg_pivot_scc"] = _kg_pivot_scc_oracle()
 
 
 def _kg_metapath_oracle() -> str:

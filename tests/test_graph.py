@@ -604,36 +604,6 @@ def test_negative_samples_properties(spark):
     assert other != out1
 
 
-def test_pivot_scc_cycle_plus_tail(spark):
-    """Directed cycle a->b->c->a with an outgoing tail c->d and an
-    incoming feeder e->a: the pivot ('a') SCC is exactly {a, b, c} —
-    d is reachable but can't return, e reaches but isn't reached."""
-    from kgist_spark.operators.graph import pivot_scc
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "a")],
-        "src string, dst string",
-    )
-    rows = {r["node"]: (r["fwd_dist"], r["bwd_dist"])
-            for r in pivot_scc(edges, rounds=4).collect()}
-    assert rows == {"a": (0, 0), "b": (1, 2), "c": (2, 1)}
-
-
-def test_pivot_scc_round_bound(spark):
-    """A 5-cycle needs 4 hops to close; rounds=2 keeps only the nodes
-    whose BOTH distances fit the bound."""
-    from kgist_spark.operators.graph import pivot_scc
-
-    cyc = [("n0", "n1"), ("n1", "n2"), ("n2", "n3"), ("n3", "n4"),
-           ("n4", "n0")]
-    edges = spark.createDataFrame(cyc, "src string, dst string")
-    full = {r["node"] for r in pivot_scc(edges, rounds=4).collect()}
-    assert full == {"n0", "n1", "n2", "n3", "n4"}
-    bounded = {r["node"] for r in pivot_scc(edges, rounds=2).collect()}
-    # fwd within 2: n0,n1,n2; bwd within 2: n0,n4,n3 -> intersection n0
-    assert bounded == {"n0"}
-
-
 def test_schema_drift_hand_computed(spark):
     """Matched slots report the entropy delta and top flips; one-sided
     slots stay visible with NULL-free sentinels."""
