@@ -87,7 +87,7 @@ def test_query_matches_oracle(spark, con, name):
     assert _normalize(spark_rows, spark_cols) == _normalize(oracle_rows, oracle_cols), name
 
 
-def test_all_queries_have_rows(spark):
-    for name, q in entry_mod.queries().items():
-        n = q(spark, SF_DIR).count()
-        assert n >= 0, name
+def test_all_queries_have_rows():
+    """Every catalogue query has an oracle and every oracle a query, so
+    test_query_matches_oracle covers the whole catalogue."""
+    assert set(entry_mod.queries()) == set(_oracle_keys())
