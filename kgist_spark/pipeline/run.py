@@ -129,12 +129,12 @@ def kg_to_summarizer_inputs(triples: DataFrame, labels: DataFrame):
 
 
 def summarize_constructed_kg(triples: DataFrame, labels: DataFrame,
-                             passes: int = 2, label_qualify: bool = True,
-                             idify: bool = True):
-    """Run KGist MDL summarization over a constructed KG."""
+                             passes: int = 2):
+    """Run KGist MDL summarization over a constructed KG (idified ids,
+    label-qualified rules)."""
     from kgist_spark.plans.summarizer import SparkSummarizer
 
     t, lab = kg_to_summarizer_inputs(triples, labels)
-    summ = SparkSummarizer(t, lab, idify=idify)
-    model = summ.fit(passes=passes, label_qualify=label_qualify)
+    summ = SparkSummarizer(t, lab, idify=True)
+    model = summ.fit(passes=passes, label_qualify=True)
     return summ, model

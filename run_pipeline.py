@@ -66,6 +66,12 @@ def main(argv=None, spark=None):
         ap.error("one of --input / --generate is required (unless --compact)")
     if args.incremental and not args.input:
         ap.error("--incremental requires --input (a directory new page files land in)")
+    if args.incremental and args.no_canonicalize:
+        ap.error("--incremental always canonicalizes against the grow-only "
+                 "dictionary: --no-canonicalize would be silently ignored")
+    if args.checkpoint is not None and not args.incremental:
+        ap.error("--checkpoint is the stream checkpoint of --incremental: "
+                 "without it the flag would be silently ignored")
 
     from pyspark.sql import SparkSession
 
@@ -134,11 +140,9 @@ def main(argv=None, spark=None):
         )
         if args.score_anomalies:
             from kgist_spark.operators.anomaly import score_edges
-            from kgist_spark.pipeline.run import kg_to_summarizer_inputs
 
             t2 = time.time()
-            t, _ = kg_to_summarizer_inputs(triples, labels)
-            scored = score_edges(spark, model, t.select("subj", "pred", "obj"))
+            scored = score_edges(spark, model, triples.select("subj", "pred", "obj"))
             scored.write.mode("overwrite").parquet(f"{args.out}/anomaly_scores")
             report["score_sec"] = round(time.time() - t2, 2)
 

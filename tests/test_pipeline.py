@@ -564,3 +564,27 @@ def test_run_pipeline_schema_report(spark, tmp_path, capsys):
     viol = spark.read.parquet(f"{out}/schema_violations")
     assert {"expected_label", "viol_rate_x1e6"} <= set(viol.columns)
     assert viol.count() == rep["n_schema_constraints"]
+
+
+def test_run_pipeline_score_anomalies(spark, tmp_path, capsys):
+    """`--summarize --score-anomalies` scores every constructed triple once
+    with a finite, non-negative bit cost."""
+    import json as _json
+    import math
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    import run_pipeline
+
+    out = str(tmp_path / "kg")
+    run_pipeline.main(
+        ["--generate", "300", "--out", out, "--summarize", "--score-anomalies"],
+        spark=spark,
+    )
+    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert {"n_rules", "objective_bits", "score_sec"} <= set(rep)
+    scores = [r["score"] for r in
+              spark.read.parquet(f"{out}/anomaly_scores").select("score").collect()]
+    assert len(scores) == rep["n_triples"]
+    assert all(math.isfinite(x) and x >= 0 for x in scores)

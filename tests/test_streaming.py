@@ -683,3 +683,18 @@ def test_compact_cli_rejects_other_flags_even_falsy():
 
     with pytest.raises(SystemExit):
         main(["--compact", "--generate", "0", "--out", "/tmp/nowhere"])
+
+
+def test_cli_rejects_flags_its_mode_ignores():
+    """--no-canonicalize under --incremental and --checkpoint without
+    --incremental are errors, not silently ignored flags."""
+    from run_pipeline import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--incremental", "--no-canonicalize", "--input", "/tmp/nowhere",
+              "--out", "/tmp/nowhere"])
+    assert exc.value.code == 2
+    with pytest.raises(SystemExit) as exc:
+        main(["--generate", "10", "--checkpoint", "/tmp/nowhere",
+              "--out", "/tmp/nowhere"])
+    assert exc.value.code == 2
