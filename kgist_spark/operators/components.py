@@ -255,7 +255,7 @@ def minlabel_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
     round-R == round-R+1 on the target graph); either way the result is
     deterministic at any parallelism (min over ids commutes).
 
-    Loop shape (a first cut without it ran ~20 s at sf0.1):
+    Loop shape:
 
     * when the MEASURED node count fits ``broadcast_max_nodes`` the label
       table (the graph's node set — orders of magnitude narrower than the

@@ -18,9 +18,8 @@ Scale + determinism shape:
   shuffle, no driver round-trip baked into the plan;
 * the score is a FIXED-ORDER column expression (term 0 + term 1 + ...),
   never a float ``sum()`` aggregation, so there is no partition-order
-  float drift — the same determinism discipline as the fixed-point
-  PageRank (``operators/graph.py``); DuckDB replays the identical
-  expression text, and the top-k orders by the ROUNDED score (then doc id)
+  float drift; DuckDB replays the identical expression text, and the
+  top-k orders by the ROUNDED score (then doc id)
   so a sub-rounding ulp difference can't flip the k boundary between
   engines;
 * top-k is ``orderBy(...).limit(k)`` — Spark's TakeOrderedAndProject

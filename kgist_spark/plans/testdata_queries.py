@@ -671,7 +671,7 @@ def q_kg_components(spark, sf_dir):
     variant of the X4 components family (the adaptive
     ``connected_components`` driver/star paths are pinned by pytest;
     this row pins the distributed min-label loop itself against chained
-    unrolled CTEs, the PageRank pattern)."""
+    unrolled CTEs)."""
     from kgist_spark.operators.components import minlabel_rounds
 
     t = derived_triples(spark, sf_dir)
@@ -931,7 +931,7 @@ def _kmeans_cents(spark, sf_dir, k=8, n_iter=3):
 def q_embedding_kmeans(spark, sf_dir):
     """Fixed-point Lloyd k-means cell assignment over the embeddings table
     (all-integer arithmetic — bit-identical at any parallelism and
-    replayed by iteration-unrolled DuckDB CTEs, the PageRank pattern)."""
+    replayed by iteration-unrolled DuckDB CTEs)."""
     from kgist_spark.operators.kmeans import kmeans_fit
 
     assigned, _ = kmeans_fit(_t(spark, sf_dir, "embeddings"), k=8, n_iter=3,
