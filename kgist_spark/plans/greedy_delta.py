@@ -12,7 +12,7 @@ the cluster and the driver holds only O(#candidates) counters:
 The key identity making this exact: when rule r is accepted, the newly
 covered set Δ = edges(r) − covered is disjoint from the old covered set, so
 for every candidate g the overlap increment is |edges(g) ∩ Δ| — additive.
-Trials are pure driver float math; one broadcast-join + group-by job per
+Trials are pure driver float math; one broadcast-join + group-by action per
 accepted BATCH (not per accept, not per trial) maintains every counter.
 Accepts are batched as long as each subsequent trial's rule has a predicate
 and child label provably disjoint from every pending accept (different
@@ -33,14 +33,16 @@ decision therefore runs on cheap histogram counters UNLESS its margin falls
 under ``_EDGE_TOL``, in which case it is re-run on the reference's floats
 reconstructed bitwise: per-head size sequences in candidate insertion order
 (ascending first-seen eid — fetched only for the rules the knife-edge
-touches, the only per-head data that ever reaches the driver), summed
-head-by-head (``evaluator.py:226-232``), with the accumulated model length
-refolded over the accept log in the reference's own association order
-(``evaluate_change``).  Guarded sites: rule-vs-reverse choice, the accept
-threshold, and qualification cost comparison.  The exact-mode path remains
-the bit-parity reference; tests assert both modes select the same model on
-the fixtures, a seeded fuzz sweeps random KG-shaped graphs, and the nightly
-pins full NELL (1,115 rules, one decided at 6.5e-10 bits).
+touches, the only per-head data that ever reaches the driver; a rule whose
+ca-size histogram has one size ``{s: h}`` replays on the driver as
+``[s] * h`` without a fetch), summed head-by-head (``evaluator.py:226-232``),
+with the accumulated model length refolded over the accept log in the
+reference's own association order (``evaluate_change``).  Guarded sites:
+rule-vs-reverse choice, the accept threshold, and qualification cost
+comparison.  The exact-mode path remains the bit-parity reference; tests
+assert both modes select the same model on the fixtures, a seeded fuzz
+sweeps random KG-shaped graphs, and the nightly pins full NELL (1,115
+rules, one decided at 6.5e-10 bits).
 """
 
 from __future__ import annotations
@@ -116,13 +118,21 @@ class DeltaGreedy:
         )
         self._cand_raw = cand
 
-        # one-time driver metadata
-        stats_rows = C.candidate_stats(cand).collect()
-        hist_rows = C.ca_size_histogram(cand).collect()
+        # one-time driver metadata: per-rule stats ('s') and ca-size
+        # histogram ('h') rows, tagged, in ONE collect
+        meta_rows = (
+            C.candidate_stats(cand).withColumn("kind", F.lit("s"))
+            .unionByName(C.ca_size_histogram(cand).withColumn("kind", F.lit("h")),
+                         allowMissingColumns=True)
+            .collect()
+        )
+        stats_rows = []
         hist: Dict[str, Dict[int, int]] = {}
-        for r in hist_rows:
-            k = _key(r)
-            hist.setdefault(k, {})[r["ca_size"]] = r["n_heads"]
+        for r in meta_rows:
+            if r["kind"] == "s":
+                stats_rows.append(r)
+            else:
+                hist.setdefault(_key(r), {})[r["ca_size"]] = r["n_heads"]
         self.meta: Dict[tuple, CandidateMeta] = {}
         order = []
         for r in stats_rows:
@@ -187,15 +197,27 @@ class DeltaGreedy:
     # association order (``evaluator.py:evaluate_change``).  Per-head sizes
     # ship to the driver only when a knife-edge fires, and only for the
     # trialed pair plus the ACCEPTED rules (the summary — small by
-    # definition), never for the full candidate set.
+    # definition), never for the full candidate set; rules with a one-size
+    # histogram replay on the driver with no fetch at all.
 
     _EDGE_TOL = 1e-6  # >> accumulated drift (~1e-9/rule), << any real gap
 
     def _ordered_sizes(self, metas: List[CandidateMeta]) -> None:
-        """Fetch per-head ca-size sequences in first-seen order for every
-        rule in ``metas`` not already cached — ONE filtered aggregate for
-        the lot (sizes are qualification-invariant, so keyed by df_key)."""
-        missing = {m.df_key for m in metas} - set(self._ordered_sizes_cache)
+        """Cache per-head ca-size sequences in first-seen order for every
+        rule in ``metas`` not already cached (sizes are
+        qualification-invariant, so keyed by df_key).  A one-size histogram
+        ``{s: h}`` fixes the sequence as ``[s] * h`` — any order sums the
+        same ``h`` equal terms — so it is filled on the driver; the rest
+        share ONE filtered aggregate."""
+        missing = set()
+        for m in metas:
+            if m.df_key in self._ordered_sizes_cache:
+                continue
+            if len(m.ca_hist) == 1:
+                ((size, heads),) = m.ca_hist.items()
+                self._ordered_sizes_cache[m.df_key] = [size] * heads
+            else:
+                missing.add(m.df_key)
         if not missing:
             return
         rows = (
@@ -311,7 +333,7 @@ class DeltaGreedy:
 
         return sorted(self.meta.values(), key=key, reverse=True)
 
-    # -- accept bookkeeping (ONE Spark job per accepted BATCH) -------------
+    # -- accept bookkeeping (ONE Spark action per accepted BATCH) ----------
     def _apply_batch(self, metas: List[CandidateMeta]):
         """Run the delta/overlap/covered maintenance for a batch of accepted
         rules whose coverage footprints are pairwise disjoint (guaranteed by
@@ -323,7 +345,8 @@ class DeltaGreedy:
         updated here — the caller already advanced them at accept time from
         the counter identity |Δᵢ| = n_edges(rᵢ) − overlap_e(rᵢ).
 
-        Physical shape — ONE Spark job per batch: the new covered state
+        Physical shape — ONE Spark action per batch (AQE splits it into ~4
+        jobs plus the checkpoint's): the new covered state
         ``covered ∪ Δ`` (delta rows tagged with this batch's serial) is a
         LAZY local checkpoint, and the single overlap-counter action joins
         the candidate tables against the just-tagged slice of it, so that

@@ -14,7 +14,8 @@ Split of labor (SURVEY.md §3.1/§7):
 
 At full web scale the exact per-rule edge-id sets stay on the cluster and the
 greedy runs in delta mode (:mod:`kgist_spark.plans.greedy_delta`) — same
-decisions, O(1) jobs per accepted rule, driver holds only counters.
+decisions, one Spark action per accepted batch of coverage-disjoint rules,
+driver holds only counters.
 """
 
 from __future__ import annotations
@@ -30,35 +31,57 @@ from kgist_spark.oracle.engine import GreedySearcher, ModelEvaluator, SummaryMod
 from kgist_spark.oracle.kg import CandRecord, LocalKG
 
 
-def graph_stats(triples: DataFrame, labels_flat: DataFrame) -> GraphStats:
-    """Scalar graph aggregates, computed distributedly (one pass each side)."""
-    m = triples.count()
-    node_label_counts = {
-        r["label"]: r["cnt"]
-        for r in labels_flat.where(F.col("label").isNotNull())
-        .groupBy("label").agg(F.count("*").alias("cnt")).collect()
-    }
-    edge_label_counts = {
-        r["pred"]: r["cnt"]
-        for r in triples.groupBy("pred").agg(F.count("*").alias("cnt")).collect()
-    }
-    n = (
+def _graph_aggregates(triples: DataFrame, labels_flat: DataFrame):
+    """(:class:`GraphStats`, label -> #distinct nodes carrying it) from ONE
+    collect over three tagged aggregates, so AQE runs their stages
+    together: per label (``l``) the non-null label rows and distinct nodes,
+    per predicate (``p``) the triples, and the distinct node count
+    (``n``).  ``label``/``pred`` keep their input dtypes (idified KGs carry
+    ints there)."""
+    per_label = labels_flat.groupBy("label").agg(
+        F.count("label").alias("cnt"), F.countDistinct("node").alias("n"),
+    )
+    per_pred = triples.groupBy("pred").agg(F.count("*").alias("cnt"))
+    nodes = (
         # explode, not a union of two projections — a union would scan the
         # triples subtree twice
         triples.select(F.explode(F.array("subj", "obj")).alias("node"))
         .unionByName(labels_flat.select("node"))
         .distinct()
-        .count()
+        .agg(F.count("*").alias("n"))
     )
-    return GraphStats(
+    rows = (
+        per_label.withColumn("kind", F.lit("l"))
+        .unionByName(per_pred.withColumn("kind", F.lit("p")), allowMissingColumns=True)
+        .unionByName(nodes.withColumn("kind", F.lit("n")), allowMissingColumns=True)
+        .collect()
+    )
+    node_label_counts, edge_label_counts, label_node_counts = {}, {}, {}
+    n = 0
+    for r in rows:
+        if r["kind"] == "l":
+            label_node_counts[r["label"]] = r["n"]
+            if r["label"] is not None:
+                node_label_counts[r["label"]] = r["cnt"]
+        elif r["kind"] == "p":
+            edge_label_counts[r["pred"]] = r["cnt"]
+        else:
+            n = r["n"]
+    stats = GraphStats(
         n=n,
-        m=m,
+        m=sum(edge_label_counts.values()),
         num_node_labels=len(node_label_counts),
         num_edge_labels=len(edge_label_counts),
         total_num_labels=sum(node_label_counts.values()),
         node_label_counts=node_label_counts,
         edge_label_counts=edge_label_counts,
     )
+    return stats, label_node_counts
+
+
+def graph_stats(triples: DataFrame, labels_flat: DataFrame) -> GraphStats:
+    """Scalar graph aggregates, computed distributedly in one action."""
+    return _graph_aggregates(triples, labels_flat)[0]
 
 
 def build_driver_index(
@@ -216,8 +239,9 @@ def fit_summary(triples: DataFrame, labels: DataFrame, passes: int = 2,
       index and the greedy runs entirely driver-side (bit-identical replay
       of the reference; ~27 s at full-NELL scale, see BENCH.md).
     * **delta** — contributions stay on the cluster; the greedy maintains
-      distributed coverage with O(1) jobs per accepted rule.  Slower per
-      accept but bounded driver memory — the beyond-driver-memory path.
+      distributed coverage with one action per accepted batch of
+      coverage-disjoint rules.  Slower per accept but bounded driver
+      memory — the beyond-driver-memory path.
 
     ``mode="auto"`` probes the candidate-contribution count with a plain
     ``count()`` — fully parallel, map-side combined (one long per task
@@ -271,12 +295,7 @@ def fit_summary(triples: DataFrame, labels: DataFrame, passes: int = 2,
                 "summarizer": summ,
             }
 
-        stats = graph_stats(triples, labels_flat)
-        lnc = {
-            r["label"]: r["n"]
-            for r in labels_flat.groupBy("label")
-            .agg(F.countDistinct("node").alias("n")).collect()
-        }
+        stats, lnc = _graph_aggregates(triples, labels_flat)
         dg = DeltaGreedy(triples, labels_flat, stats, lnc, cand=cand_edges)
         result = dg.fit(passes=passes, label_qualify=label_qualify)
         result["mode"] = "delta"
