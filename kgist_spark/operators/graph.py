@@ -28,71 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def path2_stats(triples: DataFrame) -> DataFrame:
-    """Length-2 path counts per predicate pair: ``(pred1, pred2, n_paths)``
-    where ``n_paths`` counts ordered edge pairs (e1, e2) with
-    ``e1.obj == e2.subj``.
-
-    The scale trick: the count NEVER enumerates paths.  A junction node
-    with in-degree a (under pred1) and out-degree b (under pred2)
-    contributes exactly ``a * b`` paths, so
-    ``n_paths(p1, p2) = Σ_node in_deg_p1(node) * out_deg_p2(node)`` —
-    two per-(node, pred) degree aggregations joined on the node and summed.
-    The naive triples self-join materializes O(Σ a·b) rows (quadratic in
-    junction-node degree — exactly the hub-skew blowup of a web KG, where
-    one celebrity entity yields 10^10 pairs); this plan's join is over the
-    DISTINCT (node, pred) degree tables, O(nodes·preds) rows, and the
-    output is O(preds²).  The correctness gate runs the ENUMERATING
-    self-join in DuckDB against this aggregation — hash equality proves
-    the rewrite.
-
-    int64 bound: ``n_paths`` per (pred1, pred2) must stay under 2^63 —
-    ~9.2e18 length-2 paths, beyond any real KG's path count but reachable
-    by adversarial hub constructions; the oracle's HUGEINT sum would
-    surface such an overflow as a hash mismatch rather than silence it.
-    """
-    inn = triples.groupBy(
-        F.col("obj").alias("node"), F.col("pred").alias("pred1")
-    ).agg(F.count("*").alias("n_in"))
-    out = triples.groupBy(
-        F.col("subj").alias("node"), F.col("pred").alias("pred2")
-    ).agg(F.count("*").alias("n_out"))
-    return (
-        inn.join(out, "node")
-        .groupBy("pred1", "pred2")
-        .agg(F.sum(F.col("n_in") * F.col("n_out")).alias("n_paths"))
-    )
-
-
-def pred_degree_stats(triples: DataFrame) -> DataFrame:
-    """Per-(predicate, direction) degree stats: ``(pred, dir, n_edges,
-    n_nodes, max_deg, avg_deg_x1000)`` — the planning table for skew
-    handling (a pred with ``max_deg >> avg`` wants AQE skew hints before
-    its join runs).
-
-    One scan: both directions come from a single ``explode(array(...))``
-    projection (a union of projections would re-execute the triples parent
-    per direction — see the candidate-generation plan note), then two
-    stacked aggregations, both with map-side partials.  ``avg_deg_x1000``
-    is integer (milli-degree) so the row stays hash-exact."""
-    both = triples.select(
-        "pred",
-        F.explode(
-            F.array(
-                F.struct(F.lit("out").alias("dir"), F.col("subj").alias("node")),
-                F.struct(F.lit("in").alias("dir"), F.col("obj").alias("node")),
-            )
-        ).alias("x"),
-    ).select("pred", F.col("x.dir").alias("dir"), F.col("x.node").alias("node"))
-    per_node = both.groupBy("pred", "dir", "node").agg(F.count("*").alias("d"))
-    return per_node.groupBy("pred", "dir").agg(
-        F.sum("d").alias("n_edges"),
-        F.count("*").alias("n_nodes"),
-        F.max("d").alias("max_deg"),
-        F.expr("cast(sum(d) * 1000 div count(*) as long)").alias("avg_deg_x1000"),
-    )
-
-
 def cooccur_edges(df: DataFrame, group_col: str, item_col: str,
                   max_group: int = 64, drop_stats=None) -> DataFrame:
     """Distinct undirected co-occurrence edges ``(a, b)`` between items

@@ -690,24 +690,6 @@ def q_bm25_topk(spark, sf_dir):
     return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=10)
 
 
-def q_kg_degree_stats(spark, sf_dir):
-    """Per-(predicate, direction) degree/skew stats over the derived KG —
-    the planning table that tells the engine which predicates need skew
-    handling before their joins run."""
-    from kgist_spark.operators.graph import pred_degree_stats
-
-    return pred_degree_stats(derived_triples(spark, sf_dir))
-
-
-def q_kg_path2_stats(spark, sf_dir):
-    """Length-2 path counts per predicate pair via the degree-product
-    aggregation (no path enumeration); the oracle ENUMERATES the naive
-    self-join — hash equality proves the rewrite."""
-    from kgist_spark.operators.graph import path2_stats
-
-    return path2_stats(derived_triples(spark, sf_dir))
-
-
 def _pii_enriched_docs(spark, sf_dir):
     """The documents table with deterministic synthetic PII appended to
     every third document (the testdata corpus has none) — the SAME
@@ -1583,8 +1565,6 @@ QUERIES = {
     "repetition": q_repetition,
     "domain_cap": q_domain_cap,
     "kg_components": q_kg_components,
-    "kg_degree_stats": q_kg_degree_stats,
-    "kg_path2_stats": q_kg_path2_stats,
     "bm25_topk": q_bm25_topk,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
@@ -2303,31 +2283,6 @@ ORACLE_SQL["domain_cap"] = f"""
         FROM documents
     ) WHERE rk <= 5
 """
-
-# the oracle ENUMERATES every length-2 path with the naive self-join that
-# the Spark plan deliberately avoids (degree-product aggregation) — hash
-# equality between the two IS the proof of the rewrite
-ORACLE_SQL["kg_path2_stats"] = f"""{_KG_CTE}
-    SELECT t1.pred AS pred1, t2.pred AS pred2, COUNT(*) AS n_paths
-    FROM triples t1 JOIN triples t2 ON t1.obj = t2.subj
-    GROUP BY t1.pred, t2.pred
-"""
-
-ORACLE_SQL["kg_degree_stats"] = f"""{_KG_CTE},
-    per AS (
-        SELECT pred, dir, node, COUNT(*) AS d FROM (
-            SELECT pred, 'out' AS dir, subj AS node FROM triples
-            UNION ALL SELECT pred, 'in' AS dir, obj AS node FROM triples
-        ) GROUP BY pred, dir, node
-    )
-    SELECT pred, dir,
-           CAST(SUM(d) AS BIGINT) AS n_edges,
-           COUNT(*) AS n_nodes,
-           MAX(d) AS max_deg,
-           CAST(SUM(d) * 1000 // COUNT(*) AS BIGINT) AS avg_deg_x1000
-    FROM per GROUP BY pred, dir
-"""
-
 
 def _pii_oracle() -> str:
     """Replays q_pii_scrub: the SAME injection expression, then the SAME

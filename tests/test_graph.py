@@ -11,73 +11,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from kgist_spark.operators.graph import path2_stats, pred_degree_stats
 
 pytestmark = pytest.mark.spark
-
-
-def test_degree_stats_hand_computed(spark):
-    triples = spark.createDataFrame(
-        [("a", "p", "x"), ("b", "p", "x"), ("b", "p", "y"), ("c", "q", "x")],
-        "subj string, pred string, obj string",
-    )
-    rows = {(r["pred"], r["dir"]): r for r in pred_degree_stats(triples).collect()}
-    p_out = rows[("p", "out")]
-    assert (p_out["n_edges"], p_out["n_nodes"], p_out["max_deg"]) == (3, 2, 2)
-    assert p_out["avg_deg_x1000"] == 1500
-    p_in = rows[("p", "in")]
-    assert (p_in["n_edges"], p_in["n_nodes"], p_in["max_deg"]) == (3, 2, 2)
-    q_out = rows[("q", "out")]
-    assert (q_out["n_edges"], q_out["n_nodes"], q_out["max_deg"]) == (1, 1, 1)
-
-
-def test_path2_degree_product_equals_enumeration(spark):
-    """The degree-product aggregation must count exactly what the naive
-    self-join enumerates — on a random multigraph with junction hubs."""
-    rng = random.Random(5)
-    nodes = [f"n{i}" for i in range(12)]
-    preds = ["p", "q", "r"]
-    triples = [
-        (rng.choice(nodes), rng.choice(preds), rng.choice(nodes))
-        for _ in range(150)
-    ]
-    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
-    got = {(r["pred1"], r["pred2"]): r["n_paths"]
-           for r in path2_stats(df).collect()}
-    want = {}
-    for s1, p1, o1 in triples:
-        for s2, p2, o2 in triples:
-            if o1 == s2:
-                want[(p1, p2)] = want.get((p1, p2), 0) + 1
-    assert got == want
-
-
-def test_path2_plan_never_joins_triples_with_triples(spark):
-    """The join must be over the (node, pred) degree aggregates — both join
-    children carry an Aggregate below them, i.e. no raw self-join."""
-    df = spark.createDataFrame(
-        [("a", "p", "b"), ("b", "q", "c")], "subj string, pred string, obj string"
-    )
-    plan = path2_stats(df)._jdf.queryExecution().optimizedPlan().toString()
-    join_pos = plan.find("Join")
-    assert join_pos != -1
-    below = plan[join_pos:]
-    # the enumerating plan would have a Join whose children are plain scans;
-    # here every scan sits under an Aggregate
-    assert below.count("Aggregate") >= 2
-
-
-def test_degree_stats_single_scan_plan(spark):
-    """The two directions must come from ONE explode over the triples scan,
-    not a union re-executing the parent per direction."""
-    triples = spark.range(100).select(
-        F.concat(F.lit("s"), F.col("id")).alias("subj"),
-        F.lit("p").alias("pred"),
-        F.concat(F.lit("o"), (F.col("id") % 10)).alias("obj"),
-    )
-    plan = pred_degree_stats(triples)._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" not in plan
-    assert plan.count("Generate") == 1
 
 
 # ---------------------------------------------------------------------------
