@@ -28,199 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def cooccur_edges(df: DataFrame, group_col: str, item_col: str,
-                  max_group: int = 64, drop_stats=None) -> DataFrame:
-    """Distinct undirected co-occurrence edges ``(a, b)`` between items
-    sharing at least one group (parts co-ordered, entities co-mentioned,
-    docs co-cited — the standard recsys/KG co-occurrence graph).
-
-    A hot group contributes O(k²) pairs — the same quadratic blowup as a
-    degenerate LSH bucket — so this delegates to
-    :func:`kgist_spark.operators.minhash.candidate_pairs` with the group as
-    the bucket: groups larger than ``max_group`` are sized and dropped
-    BEFORE any per-group collection (spill-safe window count, single
-    shuffle), and the drops ride an ``Observation`` on the result
-    (``._drop_stats``) — never silent.  At web scale a celebrity group
-    (one order/page/session touching 10⁶ items) would otherwise emit 10¹²
-    pairs from one task."""
-    items = df.select(
-        F.col(item_col).alias("id"),
-        F.lit(0).alias("band"),
-        F.col(group_col).alias("bucket"),
-    ).distinct()
-    from kgist_spark.operators import minhash as MH
-
-    return MH.candidate_pairs(items, max_bucket=max_group,
-                              drop_stats=drop_stats)
-
-
-def triangle_count(edges: DataFrame, a: str = "a", b: str = "b",
-                   broadcast_max_edges: int = 5_000_000) -> DataFrame:
-    """Exact triangle count of an undirected simple graph, as one row
-    ``(n_nodes, n_edges, n_triangles)``.
-
-    Degree orientation (the node-iterator bound): every edge is directed
-    from its lower-(degree, id) endpoint to the higher one, wedges are
-    enumerated by self-joining the ORIENTED edges on their source, and a
-    wedge closes iff its two far endpoints are an edge (semi-join against
-    the undirected edge set).  Out-degree under this orientation is
-    O(√m), so wedge count is O(m^1.5) REGARDLESS of skew — a celebrity
-    node of degree 10⁷ enumerates no wedges at all from its own
-    adjacency (every neighbor orients INTO it); the naive neighbor
-    self-join would emit 10¹⁴ wedge rows from that one key.  The oracle
-    runs the naive enumeration at test scale — hash equality of the count
-    proves the oriented rewrite.
-
-    The closure join is the wedge stream's only wide op (|wedges| ≈ 30×
-    |edges| on the sf0.1 co-order graph) — when the MEASURED edge count
-    fits ``broadcast_max_edges`` the edge set broadcasts and the wedges
-    never shuffle (size-gated,
-    never forced — above the gate the join falls back to hash-shuffle,
-    where AQE's skew split handles a hot wedge key)."""
-    # normalize to id-ordered simple edges (callers may pass either
-    # orientation; self-loops can't be in a triangle); the edge set is
-    # consumed by FIVE plan branches (degree both endpoints, orientation,
-    # the closure join, the edge count) — pin it once or an expensive
-    # upstream (capped co-occurrence pair generation) re-executes per
-    # branch; the count for the broadcast gate (and the output's n_edges)
-    # reads the pinned data, not the upstream
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    m = e.count()
-    # the degree table feeds THREE consumers (both orientation joins and
-    # the node count) — pin it, or the 2|E|-row aggregation re-runs per
-    # consumer; it is one row per node (narrower than the edges), so the
-    # same measured gate that broadcasts e also lets the orientation joins
-    # broadcast it, leaving the wedge self-join as the census's only
-    # edge-scale shuffle
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
-    if m <= broadcast_max_edges:
-        da, db = F.broadcast(da), F.broadcast(db)
-    a_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        )
-    )
-    x, y = oriented.alias("x"), oriented.alias("y")
-    wedges = (
-        x.join(y, "src")
-        .where(F.col("x.dst") < F.col("y.dst"))
-        .select(F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
-    )
-    closure = F.broadcast(e) if m <= broadcast_max_edges else e
-    tri = wedges.join(closure, ["a", "b"]).agg(
-        F.count("*").alias("n_triangles")
-    )
-    return (
-        deg.agg(F.count("*").alias("n_nodes"))
-        .crossJoin(tri)
-        .select("n_nodes", F.lit(m).cast("long").alias("n_edges"),
-                "n_triangles")
-    )
-
-
-def clustering_coefficients(edges: DataFrame, a: str = "a", b: str = "b",
-                            coeff_scale: int = 1_000_000,
-                            broadcast_max_edges: int = 5_000_000) -> DataFrame:
-    """Per-node triangle counts and local clustering coefficients of an
-    undirected simple graph: ``(node, deg, n_tri, coeff_x1e6)`` with
-    ``coeff = 2·T(v) / (deg(v)·(deg(v)−1))`` as an integer-DIV fixed-point
-    (NULL when deg < 2 — the coefficient is undefined, no sentinels).
-
-    The node-level refinement of :func:`triangle_count` (Watts & Strogatz
-    1998's C_v): where the census answers "how clustered is the graph",
-    this ranks individual entities — high-coefficient nodes in a KG
-    co-occurrence graph sit inside cliquish communities (catalog
-    families), low ones are bridges.  Same degree-oriented O(m^1.5) wedge
-    enumeration, same size-gated broadcasts; the ONE extra cost vs the
-    census is exploding each closed triangle to its 3 member rows before
-    a grouped count (3 integer rows per triangle, map-side partials).
-    Every closed wedge is one distinct triangle (exactly one triangle
-    vertex sees both others oriented away), so no dedup pass is needed.
-    The oracle ENUMERATES the naive 3-way self-join per node — hash
-    equality proves both the oriented rewrite and the per-node explode.
-    """
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    m = e.count()
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
-    if m <= broadcast_max_edges:
-        da, db = F.broadcast(da), F.broadcast(db)
-    a_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        e.join(da, "a").join(db, "b")
-        .select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        )
-    )
-    x, y = oriented.alias("x"), oriented.alias("y")
-    wedges = (
-        x.join(y, "src")
-        .where(F.col("x.dst") < F.col("y.dst"))
-        .select("src", F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
-    )
-    closure = F.broadcast(e) if m <= broadcast_max_edges else e
-    tri_members = (
-        wedges.join(closure, ["a", "b"])
-        .select(F.explode(F.array("src", "a", "b")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_tri"))
-    )
-    return (
-        deg.join(tri_members, "node", "left")
-        .select(
-            "node",
-            "deg",
-            F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_tri"),
-            F.when(
-                F.col("deg") >= 2,
-                F.expr(
-                    f"2 * coalesce(n_tri, 0) * {coeff_scale}"
-                    " DIV (deg * (deg - 1))"
-                ).cast("long"),
-            ).alias("coeff_x1e6"),
-        )
-    )
-
-
 def linkpred_ra(edges: DataFrame, a: str = "a", b: str = "b",
                 max_junction_deg: int = 64, k: int = 50,
                 scale: int = 1_000_000) -> DataFrame:

@@ -726,25 +726,6 @@ def q_corpus_percentiles(spark, sf_dir):
     ).withColumnRenamed("stratum", "lang")
 
 
-#: co-occurrence group cap — shared by the Spark query and the oracle
-_COOCCUR_CAP = 32
-
-
-def q_part_triangles(spark, sf_dir):
-    """Triangle census of the part co-occurrence graph (parts sharing an
-    order): capped co-occurrence pair generation (hot groups dropped
-    two-phase, Observation-counted) feeding the degree-oriented exact
-    triangle count.  The oracle ENUMERATES the naive 3-way self-join —
-    hash equality of the count proves the O(m^1.5) oriented rewrite."""
-    from kgist_spark.operators.graph import cooccur_edges, triangle_count
-
-    edges = cooccur_edges(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        max_group=_COOCCUR_CAP,
-    )
-    return triangle_count(edges)
-
-
 def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
     bag log-likelihood ratio of every corpus document under
@@ -807,21 +788,6 @@ def q_kg_reciprocity(spark, sf_dir):
         ).alias("x")
     ).select("x.subj", "x.pred", "x.obj")
     return pred_reciprocity(enriched)
-
-
-def q_part_clustering(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficients of the part
-    co-occurrence graph — same degree-oriented O(m^1.5) kernel as
-    part_triangles, plus a 3-row-per-triangle explode and integer-DIV
-    coefficients; the oracle enumerates the naive 3-way self-join per
-    node."""
-    from kgist_spark.operators.graph import clustering_coefficients, cooccur_edges
-
-    edges = cooccur_edges(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
-        max_group=_COOCCUR_CAP,
-    )
-    return clustering_coefficients(edges)
 
 
 def q_dup_ngrams(spark, sf_dir):
@@ -1569,7 +1535,6 @@ QUERIES = {
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
     "dsir_weights": q_dsir_weights,
-    "part_triangles": q_part_triangles,
     "corpus_percentiles": q_corpus_percentiles,
     "curate": q_curate,
     "curate_summary": q_curate_summary,
@@ -1579,7 +1544,6 @@ QUERIES = {
     "semdedup_keep_best": q_semdedup_keep_best,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
-    "part_clustering": q_part_clustering,
     "kg_reciprocity": q_kg_reciprocity,
     "embedding_ann_q8": q_embedding_ann_q8,
     "kg_linkpred": q_kg_linkpred,
@@ -2335,37 +2299,6 @@ ORACLE_SQL["corpus_percentiles"] = """
     FROM documents WHERE n_chars IS NOT NULL GROUP BY lang
 """
 
-# part_triangles: the oracle builds the same capped co-occurrence graph and
-# counts triangles by NAIVE 3-way enumeration (id-ordered a<b<c) — the Spark
-# side uses degree orientation; count equality proves the rewrite
-ORACLE_SQL["part_triangles"] = f"""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey AS g, l_partkey AS it FROM lineitem
-    ),
-    sizes AS (SELECT g, COUNT(*) AS n FROM items GROUP BY g),
-    keep AS (
-        SELECT it, i.g FROM items i JOIN sizes s ON i.g = s.g
-        WHERE s.n >= 2 AND s.n <= {_COOCCUR_CAP}
-    ),
-    ed AS (
-        SELECT DISTINCT x.it AS a, y.it AS b
-        FROM keep x JOIN keep y ON x.g = y.g AND x.it < y.it
-    ),
-    nodes AS (
-        SELECT COUNT(*) AS n_nodes
-        FROM (SELECT a AS v FROM ed UNION SELECT b FROM ed)
-    ),
-    tri AS (
-        SELECT COUNT(*) AS n_triangles
-        FROM ed e1
-        JOIN ed e2 ON e2.a = e1.a AND e2.b > e1.b
-        JOIN ed e3 ON e3.a = e1.b AND e3.b = e2.b
-    )
-    SELECT (SELECT n_nodes FROM nodes) AS n_nodes,
-           (SELECT COUNT(*) FROM ed) AS n_edges,
-           (SELECT n_triangles FROM tri) AS n_triangles
-"""
-
 # embedding_ann_q8: the oracle quantizes the query AND every corpus vector
 # with the identical clamp-round expression and sums the SAME integer
 # products — exact replay of quantization and scoring, no float rounding
@@ -2418,50 +2351,6 @@ ORACLE_SQL["kg_reciprocity"] = f"""
     LEFT JOIN pairs r ON r.pred = p.pred AND r.s = p.o AND r.o = p.s
     GROUP BY p.pred
 """
-
-# part_clustering: naive per-node triangle enumeration + the same integer
-# coefficient arithmetic; hash equality proves the oriented rewrite AND the
-# 3-member explode (each triangle counted once per member, never more)
-ORACLE_SQL["part_clustering"] = f"""
-    WITH items AS (
-        SELECT DISTINCT l_orderkey AS g, l_partkey AS it FROM lineitem
-    ),
-    sizes AS (SELECT g, COUNT(*) AS n FROM items GROUP BY g),
-    keep AS (
-        SELECT it, i.g FROM items i JOIN sizes s ON i.g = s.g
-        WHERE s.n >= 2 AND s.n <= {_COOCCUR_CAP}
-    ),
-    ed AS (
-        SELECT DISTINCT x.it AS a, y.it AS b
-        FROM keep x JOIN keep y ON x.g = y.g AND x.it < y.it
-    ),
-    deg AS (
-        SELECT node, COUNT(*) AS deg FROM (
-            SELECT a AS node FROM ed UNION ALL SELECT b FROM ed
-        ) GROUP BY node
-    ),
-    tri AS (
-        SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM ed e1
-        JOIN ed e2 ON e2.a = e1.a AND e2.b > e1.b
-        JOIN ed e3 ON e3.a = e1.b AND e3.b = e2.b
-    ),
-    tn AS (
-        SELECT node, COUNT(*) AS n_tri FROM (
-            SELECT x AS node FROM tri
-            UNION ALL SELECT y FROM tri
-            UNION ALL SELECT z FROM tri
-        ) GROUP BY node
-    )
-    SELECT d.node, d.deg,
-           CAST(COALESCE(tn.n_tri, 0) AS BIGINT) AS n_tri,
-           CASE WHEN d.deg >= 2
-                THEN CAST(2 * COALESCE(tn.n_tri, 0) * 1000000
-                          // (d.deg * (d.deg - 1)) AS BIGINT)
-           END AS coeff_x1e6
-    FROM deg d LEFT JOIN tn ON tn.node = d.node
-"""
-
 
 # dsir_weights: the oracle replays the identical hashed-gram bucketing
 # (md5-prefix hex -> int, the engine's only cross-engine hash) and the

@@ -16,60 +16,6 @@ pytestmark = pytest.mark.spark
 
 
 # ---------------------------------------------------------------------------
-# co-occurrence graph + degree-oriented triangle counting
-# ---------------------------------------------------------------------------
-
-def _edges_df(spark, pairs):
-    return spark.createDataFrame(pairs, "a long, b long")
-
-
-def _tri(spark, pairs):
-    from kgist_spark.operators.graph import triangle_count
-
-    row = triangle_count(_edges_df(spark, pairs)).collect()[0]
-    return row["n_nodes"], row["n_edges"], row["n_triangles"]
-
-
-def test_triangle_count_k4(spark):
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    assert _tri(spark, k4) == (4, 6, 4)
-
-
-def test_triangle_count_path_and_bowtie(spark):
-    assert _tri(spark, [(1, 2), (2, 3), (3, 4)]) == (4, 3, 0)
-    bowtie = [(1, 2), (1, 3), (2, 3), (3, 4), (3, 5), (4, 5)]
-    assert _tri(spark, bowtie) == (5, 6, 2)
-
-
-def test_triangle_count_star_skew(spark):
-    # hub of degree 9: orientation sends every spoke INTO the hub, so the
-    # hub enumerates zero wedges from its own adjacency; the one closing
-    # edge makes exactly one triangle
-    star = [(100, i) for i in range(1, 10)] + [(1, 2)]
-    assert _tri(spark, star) == (10, 10, 1)
-
-
-def test_cooccur_edges_cap_and_triangles(spark):
-    from kgist_spark.operators.graph import cooccur_edges, triangle_count
-    from kgist_spark.operators.minhash import log_drop_stats
-
-    rows = (
-        [("g1", i) for i in (1, 2, 3)]          # triangle
-        + [("hot", i) for i in range(10, 16)]    # 6 items > cap -> dropped
-        + [("g2", 1), ("g2", 2)]                 # duplicate edge (1,2)
-        + [("g1", 1)]                            # duplicate membership
-    )
-    df = spark.createDataFrame(rows, "g string, it long")
-    edges = cooccur_edges(df, "g", "it", max_group=4)
-    got = sorted(map(tuple, edges.collect()))
-    assert got == [(1, 2), (1, 3), (2, 3)]
-    drops = log_drop_stats(edges, "test_cooccur")
-    assert drops == {"dropped_buckets": 1, "dropped_ids": 6}
-    row = triangle_count(edges).collect()[0]
-    assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (3, 3, 1)
-
-
-# ---------------------------------------------------------------------------
 # resource-allocation link prediction (linkpred_ra)
 
 
