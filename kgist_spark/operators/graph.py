@@ -28,123 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def linkpred_ra(edges: DataFrame, a: str = "a", b: str = "b",
-                max_junction_deg: int = 64, k: int = 50,
-                scale: int = 1_000_000) -> DataFrame:
-    """Resource-allocation link prediction (Zhou, Lü & Zhang 2009): for
-    every NON-adjacent node pair sharing ≥1 common neighbor, score
-    ``RA(a,b) = Σ_{z ∈ N(a)∩N(b)} 1/deg(z)`` — the top-``k`` rows
-    ``(a, b, n_common, ra_x1e6)`` ordered by score (ties to the smaller
-    pair).  The KG-completion companion to :func:`path2_stats`: path2
-    counts what IS connected per predicate; this ranks which missing
-    edges the neighborhood structure most strongly implies (candidate
-    triples for a human-QA queue).
-
-    Integer fixed-point: each junction contributes ``scale div deg(z)``
-    (truncating div, positive operands — both engines agree), so the
-    score SUM commutes and the row is hash-exact; RA is chosen over
-    Adamic-Adar precisely because its hub discount is ``1/deg`` (exact in
-    integers) rather than ``1/log deg`` (float, sum-order-sensitive).
-
-    Scale shape: pairs are enumerated per JUNCTION ``z`` (wedge
-    self-join on z's adjacency), so a degree-``d`` junction emits
-    ``d(d-1)/2`` rows — the celebrity-hub quadratic.  Junctions with
-    ``deg > max_junction_deg`` are excluded BY SEMANTICS (the filter is
-    part of the operator's definition and the oracle applies it
-    identically): a hub's per-pair contribution is ≤ ``scale/deg`` —
-    vanishing exactly when the pair volume explodes — so the cutoff
-    drops the quadratic cost where the signal is weakest.  Wedge volume
-    is then ≤ ``max_junction_deg × m``; everything downstream is grouped
-    map-side-partial sums, one anti-join against the (canonical) edge
-    set, and a TakeOrderedAndProject top-k."""
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    junctions = deg.where(
-        (F.col("deg") >= 2) & (F.col("deg") <= max_junction_deg)
-    )
-    # adjacency of junction nodes only: (z, nbr, deg_z)
-    adj = (
-        e.select(F.col("a").alias("z"), F.col("b").alias("nbr"))
-        .unionAll(e.select(F.col("b").alias("z"), F.col("a").alias("nbr")))
-        .join(junctions.withColumnRenamed("node", "z"), "z")
-    )
-    x, y = adj.alias("x"), adj.alias("y")
-    wedges = (
-        x.join(y, "z")
-        .where(F.col("x.nbr") < F.col("y.nbr"))
-        .select(
-            F.col("x.nbr").alias("a"), F.col("y.nbr").alias("b"),
-            F.expr(f"{scale} div x.deg").alias("c"),
-        )
-    )
-    scored = (
-        wedges.groupBy("a", "b")
-        .agg(F.count("*").alias("n_common"), F.sum("c").alias("ra_x1e6"))
-        .join(e, ["a", "b"], "left_anti")
-    )
-    return scored.orderBy(
-        F.desc("ra_x1e6"), F.asc("a"), F.asc("b")
-    ).limit(k)
-
-
-def pred_reciprocity(triples: DataFrame) -> DataFrame:
-    """Per-predicate reciprocity: ``(pred, n_pairs, n_reciprocal,
-    reciprocity_x1e6)`` where ``n_pairs`` counts distinct directed
-    (subj, obj) pairs and ``n_reciprocal`` those whose reverse pair also
-    exists under the SAME predicate.
-
-    The KG-QA companion to :func:`pred_degree_stats`: a predicate whose
-    reciprocity is ~1 is symmetric in practice (sibling_of, borders) —
-    candidate for canonicalizing to one direction before rule mining —
-    while unexpected reciprocity in a functional predicate (capital_of
-    both ways) is an extraction-bug signal worth a blame pass.
-
-    One scan + one self-join ON THE DEDUPED pair set: pairs are distinct
-    (pred, s, o) rows, the reverse probe is a flag-carrying left self-join
-    keyed (pred, o, s), and the rollup is map-side-partial counts.  Join keys
-    carry the predicate, so a hot predicate spreads over its pair space
-    rather than one key; the fraction is integer DIV (hash-exact)."""
-    pairs = (
-        triples.select("pred", F.col("subj").alias("s"), F.col("obj").alias("o"))
-        .where(F.col("s") != F.col("o"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rev = pairs.select(
-        "pred", F.col("o").alias("s"), F.col("s").alias("o"),
-        F.lit(1).alias("has_rev"),
-    )
-    return (
-        pairs.join(rev, ["pred", "s", "o"], "left")
-        .groupBy("pred")
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.coalesce(F.sum("has_rev"), F.lit(0)).alias("n_reciprocal"),
-        )
-        .select(
-            "pred",
-            "n_pairs",
-            "n_reciprocal",
-            F.expr("n_reciprocal * 1000000 DIV n_pairs")
-            .cast("long")
-            .alias("reciprocity_x1e6"),
-        )
-    )
-
-
 def neighbor_jaccard(edges: DataFrame, a: str = "a", b: str = "b",
                      max_junction_deg: int = 64, k: int = 50,
                      scale: int = 1_000_000) -> DataFrame:

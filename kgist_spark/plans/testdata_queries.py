@@ -751,45 +751,6 @@ def q_embedding_ann_q8(spark, sf_dir):
     return quantized_topk(emb, _query_vec(spark, sf_dir), k=10)
 
 
-def q_kg_reciprocity(spark, sf_dir):
-    """Per-predicate reciprocity over the derived KG — symmetric-predicate
-    detection for canonicalization + extraction-bug triage; deduped pair
-    set self-probed once, integer-DIV fraction.
-
-    The derived KG's predicates are typed (customer->nation etc.), so its
-    raw reciprocity is identically zero — a hash-green all-zero table
-    would pin nothing.  Like ``pii_scrub``'s synthetic-PII enrichment, the
-    query input unions in the REVERSE of an md5-gated ~third of the
-    triples (the same expression the oracle builds), so every predicate
-    gets a known partial reciprocity the DIV arithmetic must reproduce."""
-    from kgist_spark.operators.graph import pred_reciprocity
-
-    t = derived_triples(spark, sf_dir)
-    gate = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", "subj", "pred", "obj")), 1, 8
-            ),
-            16, 10,
-        ).cast("long")
-        % 3
-        == 0
-    )
-    # conditional explode, not a union: a union's two branches would each
-    # re-execute the derived-KG join pipeline (the symmetric-edge lesson —
-    # one scan, rows fanned in-row)
-    fwd = F.struct(F.col("subj"), F.col("pred"), F.col("obj"))
-    rev = F.struct(
-        F.col("obj").alias("subj"), F.col("pred"), F.col("subj").alias("obj")
-    )
-    enriched = t.select(
-        F.explode(
-            F.when(gate, F.array(fwd, rev)).otherwise(F.array(fwd))
-        ).alias("x")
-    ).select("x.subj", "x.pred", "x.obj")
-    return pred_reciprocity(enriched)
-
-
 def q_dup_ngrams(spark, sf_dir):
     """Per-document repeated-5-gram statistics (the Lee et al. 2022
     ExactSubstr dedup signal over word windows): windows built in-row,
@@ -919,27 +880,6 @@ def q_semdedup_keep_best(spark, sf_dir):
     return semdedup_keep_best(_t(spark, sf_dir, "embeddings"),
                               k=8, n_iter=3, threshold=0.4,
                               centroids=_kmeans_cents(spark, sf_dir))
-
-
-#: link-prediction knobs: junction degree cutoff (hub discount ~0 there
-#: anyway — the quadratic wedge cost is dropped exactly where the signal
-#: vanishes) and the returned top-k
-_LINKPRED_MAX_DEG = 64
-_LINKPRED_K = 50
-
-
-def q_kg_linkpred(spark, sf_dir):
-    """Resource-allocation link prediction over the undirected derived KG:
-    top-50 non-adjacent pairs by integer fixed-point RA score
-    (sum of 1e6 div deg(z) over common neighbors z, junction degree
-    capped by semantics) — candidate missing edges for a QA queue."""
-    from kgist_spark.operators.graph import linkpred_ra
-
-    t = derived_triples(spark, sf_dir)
-    return linkpred_ra(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        max_junction_deg=_LINKPRED_MAX_DEG, k=_LINKPRED_K,
-    )
 
 
 def q_events_hll(spark, sf_dir):
@@ -1544,9 +1484,7 @@ QUERIES = {
     "semdedup_keep_best": q_semdedup_keep_best,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
-    "kg_reciprocity": q_kg_reciprocity,
     "embedding_ann_q8": q_embedding_ann_q8,
-    "kg_linkpred": q_kg_linkpred,
     "tfidf_terms": q_tfidf_terms,
     "events_hll": q_events_hll,
     "cms_user_counts": q_cms_user_counts,
@@ -2071,44 +2009,6 @@ def _components_oracle() -> str:
 ORACLE_SQL["kg_components"] = _components_oracle()
 
 
-# resource-allocation link prediction: identical junction-degree cutoff,
-# truncating integer div contribution, anti-join of existing canonical
-# edges, and (score DESC, a, b) top-k in both engines
-ORACLE_SQL["kg_linkpred"] = f"""
-    WITH e AS (
-        SELECT DISTINCT least(subj, obj) AS a, greatest(subj, obj) AS b
-        FROM ({DERIVED_TRIPLES_SQL}) WHERE subj != obj
-    ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-            SELECT a AS node FROM e UNION ALL SELECT b FROM e
-        ) GROUP BY node
-    ),
-    adj AS (
-        SELECT x.z, x.nbr, d.deg FROM (
-            SELECT a AS z, b AS nbr FROM e
-            UNION ALL SELECT b, a FROM e
-        ) x JOIN deg d ON d.node = x.z
-        WHERE d.deg BETWEEN 2 AND {_LINKPRED_MAX_DEG}
-    ),
-    wedges AS (
-        SELECT x.nbr AS a, y.nbr AS b, CAST(1000000 // x.deg AS BIGINT) AS c
-        FROM adj x JOIN adj y ON x.z = y.z AND x.nbr < y.nbr
-    ),
-    scored AS (
-        SELECT w.a, w.b, CAST(COUNT(*) AS BIGINT) AS n_common,
-               CAST(SUM(w.c) AS BIGINT) AS ra_x1e6
-        FROM wedges w
-        LEFT JOIN e ON e.a = w.a AND e.b = w.b
-        WHERE e.a IS NULL
-        GROUP BY w.a, w.b
-    )
-    SELECT a, b, n_common, ra_x1e6 FROM scored
-    ORDER BY ra_x1e6 DESC, a ASC, b ASC
-    LIMIT {_LINKPRED_K}
-"""
-
-
 def _tfidf_oracle() -> str:
     from kgist_spark.operators.search import tfidf_oracle_sql
 
@@ -2322,34 +2222,6 @@ ORACLE_SQL["embedding_ann_q8"] = """
     FROM embeddings, q
     ORDER BY qdot DESC, vec_id ASC
     LIMIT 10
-"""
-
-# kg_reciprocity: the oracle builds the same md5-gated reverse-edge
-# enrichment (the derived KG is typed — raw reciprocity is identically 0),
-# probes the same deduped (pred, s, o) pair set for its (pred, o, s)
-# reverse, and replays the integer-DIV fraction
-ORACLE_SQL["kg_reciprocity"] = f"""
-    WITH base AS ({DERIVED_TRIPLES_SQL}),
-    enriched AS (
-        SELECT subj, pred, obj FROM base
-        UNION ALL
-        SELECT obj, pred, subj FROM base
-        WHERE CAST(('0x' || substr(md5(subj || '|' || pred || '|' || obj), 1, 8))
-                   AS BIGINT) % 3 = 0
-    ),
-    pairs AS (
-        SELECT DISTINCT pred, subj AS s, obj AS o
-        FROM enriched WHERE subj <> obj
-    )
-    SELECT p.pred,
-           COUNT(*) AS n_pairs,
-           CAST(SUM(CASE WHEN r.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_reciprocal,
-           CAST(SUM(CASE WHEN r.s IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-                // COUNT(*) AS BIGINT) AS reciprocity_x1e6
-    FROM pairs p
-    LEFT JOIN pairs r ON r.pred = p.pred AND r.s = p.o AND r.o = p.s
-    GROUP BY p.pred
 """
 
 # dsir_weights: the oracle replays the identical hashed-gram bucketing

@@ -16,72 +16,6 @@ pytestmark = pytest.mark.spark
 
 
 # ---------------------------------------------------------------------------
-# resource-allocation link prediction (linkpred_ra)
-
-
-def _py_linkpred(edges, max_junction_deg, k, scale=1_000_000):
-    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    nbrs = {}
-    for u, v in canon:
-        nbrs.setdefault(u, set()).add(v)
-        nbrs.setdefault(v, set()).add(u)
-    deg = {n: len(s) for n, s in nbrs.items()}
-    scores = {}
-    for z, s in nbrs.items():
-        if not (2 <= deg[z] <= max_junction_deg):
-            continue
-        ns = sorted(s)
-        for i, a in enumerate(ns):
-            for b in ns[i + 1:]:
-                if (a, b) in canon:
-                    continue
-                n, r = scores.get((a, b), (0, 0))
-                scores[(a, b)] = (n + 1, r + scale // deg[z])
-    rows = [(a, b, n, r) for (a, b), (n, r) in scores.items()]
-    rows.sort(key=lambda t: (-t[3], t[0], t[1]))
-    return rows[:k]
-
-
-def _linkpred_spark(spark, edges, **kw):
-    from kgist_spark.operators.graph import linkpred_ra
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    return [tuple(r) for r in linkpred_ra(df, **kw).collect()]
-
-
-def test_linkpred_star_hand_computed(spark):
-    # star z-{a,b,c}: z is the only junction (deg 3); every leaf pair is
-    # non-adjacent with one common neighbor scoring 1e6 div 3
-    edges = [("z", "a"), ("z", "b"), ("z", "c")]
-    assert _linkpred_spark(spark, edges, k=10) == [
-        ("a", "b", 1, 333333), ("a", "c", 1, 333333), ("b", "c", 1, 333333),
-    ]
-
-
-def test_linkpred_existing_edges_excluded(spark):
-    # triangle + pendant: the only non-adjacent pairs run through the
-    # triangle corners; adjacent pairs never appear
-    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
-    got = _linkpred_spark(spark, edges, k=10)
-    pairs = {(r[0], r[1]) for r in got}
-    assert ("a", "b") not in pairs and ("a", "c") not in pairs
-    assert ("a", "d") in pairs and ("b", "d") in pairs
-
-
-def test_linkpred_junction_cap_is_semantics(spark):
-    # with the cap below the hub degree the hub contributes nothing
-    edges = [("z", "a"), ("z", "b"), ("z", "c")]
-    assert _linkpred_spark(spark, edges, max_junction_deg=2, k=10) == []
-
-
-def test_linkpred_matches_python_replay(spark):
-    rng = random.Random(31)
-    edges = [(f"n{rng.randrange(35)}", f"n{rng.randrange(35)}") for _ in range(80)]
-    assert _linkpred_spark(spark, edges, max_junction_deg=8, k=25) == \
-        _py_linkpred(edges, max_junction_deg=8, k=25)
-
-
-# ---------------------------------------------------------------------------
 # neighborhood Jaccard (neighbor_jaccard)
 
 
