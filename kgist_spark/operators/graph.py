@@ -28,244 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def neighbor_jaccard(edges: DataFrame, a: str = "a", b: str = "b",
-                     max_junction_deg: int = 64, k: int = 50,
-                     scale: int = 1_000_000) -> DataFrame:
-    """Neighborhood-Jaccard candidate pairs: for every NON-adjacent node
-    pair sharing >= 1 common neighbor, ``jac = |N(a) & N(b)| / |N(a) | N(b)|``
-    in integer fixed point (``n_common * scale div (deg_a + deg_b -
-    n_common)`` — truncating div, positive operands), top-``k`` by
-    ``(jac desc, a, b)``.  The structural entity-resolution signal for a
-    constructed KG: two nodes whose neighborhoods almost coincide are
-    duplicate-entity candidates for the canonicalization queue —
-    complementary to :func:`linkpred_ra`, which ranks MISSING EDGES
-    rather than MERGEABLE NODES.
-
-    Common neighbors are counted through junctions with ``2 <= deg <=
-    max_junction_deg`` BY SEMANTICS (identical in the oracle): a
-    celebrity hub connecting everything to everything carries no
-    resolution signal but emits d(d-1)/2 wedge rows, so the cap drops
-    the quadratic cost exactly where the evidence is weakest.  The
-    DENOMINATOR degrees are the full uncapped degrees, so the score is
-    a conservative (lower-bound) Jaccard.
-
-    Scale shape: identical to :func:`linkpred_ra` — wedge volume
-    <= max_junction_deg x m, grouped map-side-partial counts, one
-    anti-join against the canonical edge set, two broadcast-friendly
-    degree joins, TakeOrderedAndProject top-k."""
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    junctions = deg.where(
-        (F.col("deg") >= 2) & (F.col("deg") <= max_junction_deg)
-    )
-    adj = (
-        e.select(F.col("a").alias("z"), F.col("b").alias("nbr"))
-        .unionAll(e.select(F.col("b").alias("z"), F.col("a").alias("nbr")))
-        .join(junctions.select("node").withColumnRenamed("node", "z"), "z")
-    )
-    x, y = adj.alias("x"), adj.alias("y")
-    common = (
-        x.join(y, "z")
-        .where(F.col("x.nbr") < F.col("y.nbr"))
-        .select(F.col("x.nbr").alias("a"), F.col("y.nbr").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_common"))
-        .join(e, ["a", "b"], "left_anti")
-    )
-    scored = (
-        common.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")),
-            "a",
-        )
-        .join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")),
-            "b",
-        )
-        .select(
-            "a", "b", "n_common", "deg_a", "deg_b",
-            F.expr(f"n_common * {scale} div (deg_a + deg_b - n_common)")
-            .alias("jac_x1e6"),
-        )
-    )
-    return scored.orderBy(
-        F.desc("jac_x1e6"), F.asc("a"), F.asc("b")
-    ).limit(k)
-
-
-def neighbor_jaccard_oracle_sql(edges_sql: str, max_junction_deg: int = 64,
-                                k: int = 50,
-                                scale: int = 1_000_000) -> str:
-    """DuckDB replay of :func:`neighbor_jaccard` — same canonical edge
-    set, junction cap, uncapped denominator degrees, truncating div and
-    ``(jac desc, a, b)`` cut."""
-    return f"""
-    WITH e AS (
-        SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        FROM ({edges_sql}) WHERE a != b
-    ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-            SELECT a AS node FROM e UNION ALL SELECT b FROM e
-        ) GROUP BY node
-    ),
-    adj AS (
-        SELECT x.z, x.nbr FROM (
-            SELECT a AS z, b AS nbr FROM e
-            UNION ALL SELECT b, a FROM e
-        ) x JOIN deg d ON d.node = x.z
-        WHERE d.deg BETWEEN 2 AND {max_junction_deg}
-    ),
-    common AS (
-        SELECT w.a, w.b, CAST(COUNT(*) AS BIGINT) AS n_common FROM (
-            SELECT x.nbr AS a, y.nbr AS b
-            FROM adj x JOIN adj y ON x.z = y.z AND x.nbr < y.nbr
-        ) w
-        LEFT JOIN e ON e.a = w.a AND e.b = w.b
-        WHERE e.a IS NULL
-        GROUP BY w.a, w.b
-    )
-    SELECT c.a, c.b, c.n_common,
-           da.deg AS deg_a, db.deg AS deg_b,
-           CAST(c.n_common * {scale}
-                // (da.deg + db.deg - c.n_common) AS BIGINT) AS jac_x1e6
-    FROM common c
-    JOIN deg da ON da.node = c.a
-    JOIN deg db ON db.node = c.b
-    ORDER BY jac_x1e6 DESC, c.a ASC, c.b ASC
-    LIMIT {k}
-    """
-
-
-def degree_assortativity(edges: DataFrame, a: str = "a", b: str = "b",
-                         scale: int = 1_000_000) -> DataFrame:
-    """Degree assortativity (Newman 2002) of the undirected simple graph:
-    the Pearson correlation of endpoint degrees over edges, the
-    one-number diagnostic that separates social-style graphs (hubs link
-    to hubs, r > 0) from web/biology-style graphs (hubs link to leaves,
-    r < 0) — on a constructed KG, a drift detector for the extraction
-    mix (a crawl that suddenly yields assortative spam farms moves r).
-
-    All per-edge work is INTEGER: canonical edge set, degree join on both
-    endpoints, then four BIGINT sums (``m``, ``sum(da*db)``,
-    ``sum(da+db)``, ``sum(da^2+db^2)``).  The correlation itself is ONE
-    fixed-order double expression over those four scalars —
-    ``r = (sjk/m - mu^2) / (ssq/2m - mu^2)`` with ``mu = ssum/2m`` —
-    rounded to ``r_x1e6`` (same single-float-op discipline as
-    event_drift: the sums commute exactly, the one float expression is
-    evaluated once per ENGINE, not once per row).  A zero denominator
-    (regular graph) yields a NULL score; callers filter like event_drift.
-    Output: one row ``(m_edges, sjk, ssum, ssq, r_x1e6)`` — the raw sums
-    ride along so the hash pins the integer substrate, not just the
-    rounded float.
-
-    Scale shape: two broadcast-friendly degree joins + one global
-    4-column aggregate with map-side partials; no row explosion
-    anywhere."""
-    e = (
-        edges.select(
-            F.least(F.col(a), F.col(b)).alias("a"),
-            F.greatest(F.col(a), F.col(b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    j = (
-        e.join(deg.select(F.col("node").alias("a"),
-                          F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"),
-                         F.col("deg").alias("db")), "b")
-    )
-    sums = j.agg(
-        F.count("*").alias("m_edges"),
-        F.sum(F.expr("da * db")).alias("sjk"),
-        F.sum(F.expr("da + db")).alias("ssum"),
-        F.sum(F.expr("da * da + db * db")).alias("ssq"),
-    )
-    r = (
-        "(CAST(sjk AS DOUBLE) / m_edges"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)))"
-        " / (CAST(ssq AS DOUBLE) / (2 * m_edges)"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)))"
-    )
-    den_pos = (
-        "CAST(ssq AS DOUBLE) / (2 * m_edges)"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)) > 0"
-    )
-    return sums.select(
-        "m_edges", "sjk", "ssum", "ssq",
-        F.expr(f"CASE WHEN {den_pos} THEN"
-               f" CAST(round(({r}) * {scale}) AS BIGINT) END")
-        .alias("r_x1e6"),
-    )
-
-
-def assortativity_oracle_sql(edges_sql: str,
-                             scale: int = 1_000_000) -> str:
-    """DuckDB replay of :func:`degree_assortativity` — identical integer
-    sums and the IDENTICAL fixed-order float expression (same literal
-    sequence, so both engines execute the same IEEE-754 op chain)."""
-    r = (
-        "(CAST(sjk AS DOUBLE) / m_edges"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)))"
-        " / (CAST(ssq AS DOUBLE) / (2 * m_edges)"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)))"
-    )
-    den_pos = (
-        "CAST(ssq AS DOUBLE) / (2 * m_edges)"
-        " - (CAST(ssum AS DOUBLE) / (2 * m_edges))"
-        " * (CAST(ssum AS DOUBLE) / (2 * m_edges)) > 0"
-    )
-    return f"""
-    WITH e AS (
-        SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        FROM ({edges_sql}) WHERE a != b
-    ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-            SELECT a AS node FROM e UNION ALL SELECT b FROM e
-        ) GROUP BY node
-    ),
-    sums AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS m_edges,
-               CAST(SUM(da.deg * db.deg) AS BIGINT) AS sjk,
-               CAST(SUM(da.deg + db.deg) AS BIGINT) AS ssum,
-               CAST(SUM(da.deg * da.deg + db.deg * db.deg) AS BIGINT) AS ssq
-        FROM e
-        JOIN deg da ON da.node = e.a
-        JOIN deg db ON db.node = e.b
-    )
-    SELECT m_edges, sjk, ssum, ssq,
-           CASE WHEN {den_pos}
-                THEN CAST(round(({r}) * {scale}) AS BIGINT) END AS r_x1e6
-    FROM sums
-    """
-
-
 def random_walks(edges: DataFrame, src: str = "src", dst: str = "dst",
                  walk_len: int = 3, max_degree: int = 16,
                  salt: str = "walk",

@@ -1022,39 +1022,6 @@ def q_bloom_decontaminate(spark, sf_dir):
     )
 
 
-#: neighbor-jaccard params — same junction-degree cap rationale as
-#: kg_linkpred (hubs carry no resolution signal but quadratic wedge cost)
-_NJ_MAX_DEG, _NJ_K = 64, 50
-
-
-def q_kg_neighbor_jaccard(spark, sf_dir):
-    """Top-50 non-adjacent node pairs of the undirected derived KG by
-    neighborhood Jaccard (integer fixed point, junction degree capped by
-    semantics, full-degree denominator) — duplicate-entity candidates
-    for the canonicalization queue."""
-    from kgist_spark.operators.graph import neighbor_jaccard
-
-    t = derived_triples(spark, sf_dir)
-    return neighbor_jaccard(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        max_junction_deg=_NJ_MAX_DEG, k=_NJ_K,
-    )
-
-
-def q_kg_assortativity(spark, sf_dir):
-    """Degree assortativity of the undirected derived KG: four BIGINT
-    edge-level sums + ONE fixed-order double correlation expression
-    rounded to r_x1e6 — the one-number extraction-mix drift detector.
-    NULL-scored rows (zero variance) are filtered like event_drift so
-    the BIGINT column survives the pandas round-trip."""
-    from kgist_spark.operators.graph import degree_assortativity
-
-    t = derived_triples(spark, sf_dir)
-    return degree_assortativity(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-    ).where(F.col("r_x1e6").isNotNull())
-
-
 def q_kg_schema(spark, sf_dir):
     """Per-predicate domain/range type profile of the derived KG —
     dominant type + share, type counts, and fixed-point Shannon entropy
@@ -1488,8 +1455,6 @@ QUERIES = {
     "tfidf_terms": q_tfidf_terms,
     "events_hll": q_events_hll,
     "cms_user_counts": q_cms_user_counts,
-    "kg_neighbor_jaccard": q_kg_neighbor_jaccard,
-    "kg_assortativity": q_kg_assortativity,
     "bloom_decontaminate": q_bloom_decontaminate,
     "dup_spans": q_dup_spans,
     "priority_sample": q_priority_sample,
@@ -2910,39 +2875,6 @@ def _bloom_decontaminate_oracle() -> str:
 # bloom_decontaminate: identical seeded bit positions, word packing and
 # all-k-bits test — the replay pins the sketch itself, false positives and all
 ORACLE_SQL["bloom_decontaminate"] = _bloom_decontaminate_oracle()
-
-
-_DERIVED_AB_SQL = (
-    f"SELECT subj AS a, obj AS b FROM ({DERIVED_TRIPLES_SQL})"
-)
-
-
-def _neighbor_jaccard_oracle() -> str:
-    from kgist_spark.operators.graph import neighbor_jaccard_oracle_sql
-
-    return neighbor_jaccard_oracle_sql(
-        _DERIVED_AB_SQL, max_junction_deg=_NJ_MAX_DEG, k=_NJ_K
-    )
-
-
-# kg_neighbor_jaccard: canonical edges, capped junction wedges, uncapped
-# denominator degrees, truncating div, (jac DESC, a, b) cut
-ORACLE_SQL["kg_neighbor_jaccard"] = _neighbor_jaccard_oracle()
-
-
-def _assortativity_oracle() -> str:
-    from kgist_spark.operators.graph import assortativity_oracle_sql
-
-    return (
-        "SELECT * FROM ("
-        + assortativity_oracle_sql(_DERIVED_AB_SQL)
-        + ") WHERE r_x1e6 IS NOT NULL"
-    )
-
-
-# kg_assortativity: identical BIGINT sums + the IDENTICAL fixed-order float
-# expression; NULL (zero-variance) rows filtered on both sides
-ORACLE_SQL["kg_assortativity"] = _assortativity_oracle()
 
 
 def _kg_schema_oracle() -> str:

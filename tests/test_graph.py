@@ -15,120 +15,6 @@ from pyspark.sql import functions as F
 pytestmark = pytest.mark.spark
 
 
-# ---------------------------------------------------------------------------
-# neighborhood Jaccard (neighbor_jaccard)
-
-
-def _py_neighbor_jaccard(edges, max_junction_deg, k, scale=1_000_000):
-    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    nbrs = {}
-    for u, v in canon:
-        nbrs.setdefault(u, set()).add(v)
-        nbrs.setdefault(v, set()).add(u)
-    deg = {n: len(s) for n, s in nbrs.items()}
-    common = {}
-    for z, s in nbrs.items():
-        if not (2 <= deg[z] <= max_junction_deg):
-            continue
-        ns = sorted(s)
-        for i, a in enumerate(ns):
-            for b in ns[i + 1:]:
-                if (a, b) in canon:
-                    continue
-                common[(a, b)] = common.get((a, b), 0) + 1
-    rows = [
-        (a, b, n, deg[a], deg[b], n * scale // (deg[a] + deg[b] - n))
-        for (a, b), n in common.items()
-    ]
-    rows.sort(key=lambda t: (-t[5], t[0], t[1]))
-    return rows[:k]
-
-
-def _nj_spark(spark, edges, **kw):
-    from kgist_spark.operators.graph import neighbor_jaccard
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    return [tuple(r) for r in neighbor_jaccard(df, **kw).collect()]
-
-
-def test_neighbor_jaccard_shared_pair_hand_computed(spark):
-    # a and b both link to x and y (4-cycle): N(a)=N(b)={x,y} so jac=1;
-    # x and y likewise mirror each other
-    edges = [("a", "x"), ("a", "y"), ("b", "x"), ("b", "y")]
-    got = _nj_spark(spark, edges, k=10)
-    assert got == [
-        ("a", "b", 2, 2, 2, 1_000_000),
-        ("x", "y", 2, 2, 2, 1_000_000),
-    ]
-
-
-def test_neighbor_jaccard_denominator_uses_full_degrees(spark):
-    # path a-z-b plus pendant b-c: pair (a,b) shares only z but b has an
-    # extra neighbor, so jac = 1e6 div (1 + 2 - 1) = 500000
-    edges = [("a", "z"), ("z", "b"), ("b", "c")]
-    got = {(r[0], r[1]): r for r in _nj_spark(spark, edges, k=10)}
-    assert got[("a", "b")] == ("a", "b", 1, 1, 2, 500_000)
-    assert got[("c", "z")] == ("c", "z", 1, 1, 2, 500_000)
-
-
-def test_neighbor_jaccard_junction_cap_is_semantics(spark):
-    edges = [("z", "a"), ("z", "b"), ("z", "c")]
-    assert _nj_spark(spark, edges, max_junction_deg=2, k=10) == []
-
-
-def test_neighbor_jaccard_matches_python_replay(spark):
-    rng = random.Random(47)
-    edges = [(f"n{rng.randrange(30)}", f"n{rng.randrange(30)}")
-             for _ in range(90)]
-    assert _nj_spark(spark, edges, max_junction_deg=8, k=25) == \
-        _py_neighbor_jaccard(edges, max_junction_deg=8, k=25)
-
-
-# ---------------------------------------------------------------------------
-# degree assortativity (degree_assortativity)
-
-
-def _assort_spark(spark, edges):
-    from kgist_spark.operators.graph import degree_assortativity
-
-    df = spark.createDataFrame(edges, "a string, b string")
-    rows = degree_assortativity(df).collect()
-    assert len(rows) == 1
-    return tuple(rows[0])
-
-
-def test_assortativity_star_is_minus_one(spark):
-    # star: every edge joins the deg-3 hub to a deg-1 leaf — perfectly
-    # disassortative.  m=3, sjk=9, ssum=12, ssq=30 -> r = -1 exactly
-    got = _assort_spark(spark, [("z", "a"), ("z", "b"), ("z", "c")])
-    assert got == (3, 9, 12, 30, -1_000_000)
-
-
-def test_assortativity_regular_graph_is_null(spark):
-    # a cycle is 2-regular: zero degree variance, r undefined -> NULL
-    got = _assort_spark(spark, [("a", "b"), ("b", "c"), ("c", "a")])
-    assert got == (3, 12, 12, 24, None)
-
-
-def test_assortativity_matches_python_replay(spark):
-    rng = random.Random(53)
-    edges = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}")
-             for _ in range(70)]
-    canon = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    deg = {}
-    for u, v in canon:
-        deg[u] = deg.get(u, 0) + 1
-        deg[v] = deg.get(v, 0) + 1
-    m = len(canon)
-    sjk = sum(deg[u] * deg[v] for u, v in canon)
-    ssum = sum(deg[u] + deg[v] for u, v in canon)
-    ssq = sum(deg[u] ** 2 + deg[v] ** 2 for u, v in canon)
-    mu = ssum / (2 * m)
-    num, den = sjk / m - mu * mu, ssq / (2 * m) - mu * mu
-    want = round(num / den * 1_000_000) if den > 0 else None
-    assert _assort_spark(spark, edges) == (m, sjk, ssum, ssq, want)
-
-
 # ----------------------------------------------------------- random walks
 
 
