@@ -28,115 +28,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def random_walks(edges: DataFrame, src: str = "src", dst: str = "dst",
-                 walk_len: int = 3, max_degree: int = 16,
-                 salt: str = "walk",
-                 broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """Deterministic random-walk corpus generation (DeepWalk, Perozzi et
-    al. KDD 2014) — the KG -> embedding-training-data bridge: one walk per
-    out-node, each step choosing the next hop by a seeded md5 draw, so the
-    emitted corpus is BIT-REPLAYABLE in any engine with md5 (no RNG state,
-    no order sensitivity — the draw depends only on ``(salt, start,
-    step)``).  Output: ``(start, step, node)`` rows for steps
-    ``0..walk_len`` (step 0 = the start itself); a walk reaching a node
-    with no out-neighbors simply stops (no padding rows).
-
-    Neighbor lists are capped at ``max_degree`` BY SEMANTICS in seeded md5
-    order (hub adjacency is where walk corpora blow up; the md5 order is an
-    unbiased fixed sample of each hub's neighbors, and the DuckDB oracle
-    applies the identical cap) — the same semantic-cap discipline as
-    `neighbor_jaccard`'s junction bound.
-
-    Scale shape: adjacency is built ONCE (one grouped shuffle; arrays
-    bounded at ``max_degree`` elements so a 10^8-degree hub stores 16
-    neighbors, not 10^8), pinned with a localCheckpoint, and size-gate
-    broadcast into every step join when the node count allows; each of the
-    ``walk_len`` steps is one join of the (<= |out-nodes|-row) frontier
-    against it — no corpus-scale window, no Python.  At 10^12 edges the
-    frontier join shuffles on ``cur`` when the gate declines the
-    broadcast; walk count scales by seeding MORE walks per node (vary
-    ``salt``), each run an independent replayable corpus.
-    """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")) \
-        .where(F.col("s") != F.col("d")).distinct()
-    h = F.md5(F.concat_ws("|", F.lit(salt), F.col("s"), F.col("d")))
-    adj = (
-        e.groupBy("s")
-        .agg(F.array_sort(
-            F.collect_list(F.struct(h.alias("h"), F.col("d").alias("d")))
-        ).alias("sorted"))
-        .select(
-            F.col("s").alias("asrc"),
-            F.transform(
-                F.slice("sorted", 1, max_degree), lambda x: x["d"]
-            ).alias("nbrs"),
-        )
-        .localCheckpoint()
-    )
-    adj_join = F.broadcast(adj) if adj.count() <= broadcast_max_nodes else adj
-    frontier = adj.select(F.col("asrc").alias("start"),
-                          F.col("asrc").alias("cur"))
-    out = frontier.select(
-        "start", F.lit(0).cast("long").alias("step"),
-        F.col("cur").alias("node"),
-    )
-    for t in range(1, walk_len + 1):
-        draw = F.conv(
-            F.substring(
-                F.md5(F.concat_ws("#", F.lit(salt), F.col("start"),
-                                  F.lit(str(t)))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long")
-        frontier = (
-            frontier.join(adj_join, frontier["cur"] == adj_join["asrc"])
-            .select(
-                "start",
-                F.element_at(
-                    "nbrs",
-                    ((draw % F.size("nbrs")) + 1).cast("int"),
-                ).alias("cur"),
-            )
-        )
-        out = out.unionAll(frontier.select(
-            "start", F.lit(t).cast("long").alias("step"),
-            F.col("cur").alias("node"),
-        ))
-    return out
-
-
-def random_walks_oracle_sql(edges_sql: str, walk_len: int = 3,
-                            max_degree: int = 16,
-                            salt: str = "walk") -> str:
-    """DuckDB replay of :func:`random_walks`: identical md5-ordered capped
-    adjacency lists, identical seeded per-step draw (first 8 md5 hex
-    digits mod degree), steps chained as materialized CTEs."""
-    parts = [f"""e AS MATERIALIZED (
-        SELECT DISTINCT src AS s, dst AS d FROM ({edges_sql}) WHERE src != dst
-    )""", f"""adj AS MATERIALIZED (
-        SELECT s AS asrc,
-               (list(d ORDER BY md5(concat('{salt}', '|', s, '|', d)), d))
-                   [1:{max_degree}] AS nbrs
-        FROM e GROUP BY s
-    )""", "w0 AS (SELECT asrc AS start, asrc AS cur FROM adj)"]
-    selects = ["SELECT start, CAST(0 AS BIGINT) AS step, cur AS node FROM w0"]
-    for t in range(1, walk_len + 1):
-        p = t - 1
-        parts.append(f"""w{t} AS MATERIALIZED (
-        SELECT w.start,
-               a.nbrs[1 + CAST(CAST('0x' ||
-                   substr(md5(concat('{salt}', '#', w.start, '#', '{t}')),
-                          1, 8) AS BIGINT) % len(a.nbrs) AS INT)] AS cur
-        FROM w{p} w JOIN adj a ON a.asrc = w.cur
-    )""")
-        selects.append(
-            f"SELECT start, CAST({t} AS BIGINT) AS step, cur AS node FROM w{t}"
-        )
-    return (f"    WITH {', '.join(parts)}\n    "
-            + "\n    UNION ALL ".join(selects))
-
-
 def snapshot_diff(old: DataFrame, new: DataFrame,
                   churn_scale: int = 1_000_000) -> DataFrame:
     """Per-predicate churn between two KG snapshots (crawl N vs crawl
@@ -209,74 +100,6 @@ def snapshot_diff_oracle_sql(old_sql: str, new_sql: str,
                           // (n_kept + n_removed)
                      ELSE -1 END AS BIGINT) AS churn_x1e6
     FROM agg
-    """
-
-
-def kg_sentences(triples: DataFrame, max_facts: int = 64) -> DataFrame:
-    """Per-subject textual serialization of the KG — the "KG -> LLM
-    training document" exporter (verbalized triples, the input format of
-    KG-enhanced LM pretraining): for each subject, its facts as
-    ``"subj pred obj"`` sentences joined in sorted order, capped at
-    ``max_facts`` BY SEMANTICS (a 10^8-fact hub yields a readable
-    document, not a gigabyte line; the cap keeps the lexicographically
-    first sentences, replayed identically by the oracle).  Output:
-    ``(subj, n_facts, n_facts_kept, text)`` — n_facts is the TRUE fact
-    count so downstream weighting can see what the cap dropped.
-
-    Scale shape: sentences are one projection; the cap is enforced with a
-    rank-filter BEFORE any list materializes (`row_number` over the
-    per-subject sort — sort-based and spillable, unlike `collect_list` on
-    an unbounded group, the classic hub OOM), so `collect_list` only ever
-    sees <= max_facts rows per subject; the true count rides the same
-    window pass as a `count(*)` over the full frame."""
-    from pyspark.sql.window import Window
-
-    sent = triples.select(
-        "subj",
-        F.concat_ws(" ", "subj", "pred", "obj").alias("s"),
-    ).distinct()
-    w = Window.partitionBy("subj").orderBy("s")
-    ranked = sent.select(
-        "subj", "s",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(
-            Window.partitionBy("subj")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("n_facts"),
-    )
-    return (
-        ranked.where(F.col("rn") <= max_facts)
-        .groupBy("subj", "n_facts")
-        .agg(
-            F.count("*").alias("n_facts_kept"),
-            F.concat_ws(". ", F.array_sort(F.collect_list("s")))
-            .alias("text"),
-        )
-        .select("subj",
-                F.col("n_facts").cast("long").alias("n_facts"),
-                "n_facts_kept", "text")
-    )
-
-
-def kg_sentences_oracle_sql(triples_sql: str, max_facts: int = 64) -> str:
-    """DuckDB replay of :func:`kg_sentences`: same distinct sentences,
-    same rank cap, same sorted '. '-joined serialization."""
-    return f"""
-    WITH sent AS (
-        SELECT DISTINCT subj, concat(subj, ' ', pred, ' ', obj) AS s
-        FROM ({triples_sql})
-    ),
-    ranked AS (
-        SELECT subj, s,
-               row_number() OVER (PARTITION BY subj ORDER BY s) AS rn,
-               COUNT(*) OVER (PARTITION BY subj) AS n_facts
-        FROM sent
-    )
-    SELECT subj, CAST(n_facts AS BIGINT) AS n_facts,
-           COUNT(*) AS n_facts_kept,
-           string_agg(s, '. ' ORDER BY s) AS text
-    FROM ranked WHERE rn <= {max_facts}
-    GROUP BY subj, n_facts
     """
 
 

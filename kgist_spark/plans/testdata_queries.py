@@ -951,23 +951,6 @@ def q_priority_sample(spark, sf_dir):
     )
 
 
-#: random-walk params shared by the Spark query and the SQL oracle
-_WALK_LEN, _WALK_DEG = 3, 16
-
-
-def q_kg_walks(spark, sf_dir):
-    """Deterministic DeepWalk-style random-walk corpus over the directed
-    derived KG: one walk per out-node, seeded md5 next-hop draws, md5-order
-    capped adjacency — the KG -> embedding-training-corpus bridge,
-    bit-replayable at any parallelism."""
-    from kgist_spark.operators.graph import random_walks
-
-    edges = derived_triples(spark, sf_dir).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return random_walks(edges, walk_len=_WALK_LEN, max_degree=_WALK_DEG)
-
-
 def q_kg_churn(spark, sf_dir):
     """Per-predicate churn between two KG snapshots (the clean derived KG
     vs its deterministic perturbation — the same pair the anomaly queries
@@ -978,21 +961,6 @@ def q_kg_churn(spark, sf_dir):
     return snapshot_diff(
         derived_triples(spark, sf_dir), perturbed_triples(spark, sf_dir)
     )
-
-
-#: per-subject fact cap in the textual serialization (semantic, replayed
-#: by the oracle)
-_SENT_CAP = 64
-
-
-def q_kg_sentences(spark, sf_dir):
-    """Per-subject verbalized-triple documents ("subj pred obj. ..." in
-    sorted order, capped at _SENT_CAP facts) — the KG -> LLM-training-text
-    exporter; n_facts carries the TRUE count so weighting sees the cap."""
-    from kgist_spark.operators.graph import kg_sentences
-
-    return kg_sentences(derived_triples(spark, sf_dir),
-                        max_facts=_SENT_CAP)
 
 
 def q_containment_pairs(spark, sf_dir):
@@ -1458,9 +1426,7 @@ QUERIES = {
     "bloom_decontaminate": q_bloom_decontaminate,
     "dup_spans": q_dup_spans,
     "priority_sample": q_priority_sample,
-    "kg_walks": q_kg_walks,
     "kg_churn": q_kg_churn,
-    "kg_sentences": q_kg_sentences,
     "containment_pairs": q_containment_pairs,
     "kg_schema": q_kg_schema,
     "winnow_fp": q_winnow_fp,
@@ -2730,20 +2696,6 @@ ORACLE_SQL["curate_summary"] = _curate_oracle(
 )
 
 
-def _kg_walks_oracle() -> str:
-    from kgist_spark.operators.graph import random_walks_oracle_sql
-
-    edges = f"SELECT subj AS src, obj AS dst FROM ({DERIVED_TRIPLES_SQL})"
-    return random_walks_oracle_sql(
-        edges, walk_len=_WALK_LEN, max_degree=_WALK_DEG
-    )
-
-
-# kg_walks: identical md5-ordered capped adjacency, identical seeded
-# per-step draws, steps chained as materialized CTEs
-ORACLE_SQL["kg_walks"] = _kg_walks_oracle()
-
-
 def _kg_churn_oracle() -> str:
     from kgist_spark.operators.graph import snapshot_diff_oracle_sql
 
@@ -2754,17 +2706,6 @@ def _kg_churn_oracle() -> str:
 # kg_churn: same distincts, same full outer join on the triple key, same
 # truncating-integer churn (NULL for predicates with no old base)
 ORACLE_SQL["kg_churn"] = _kg_churn_oracle()
-
-
-def _kg_sentences_oracle() -> str:
-    from kgist_spark.operators.graph import kg_sentences_oracle_sql
-
-    return kg_sentences_oracle_sql(DERIVED_TRIPLES_SQL, max_facts=_SENT_CAP)
-
-
-# kg_sentences: same distinct sentences, rank cap, and sorted '. '-joined
-# serialization — the string column hashes byte-for-byte
-ORACLE_SQL["kg_sentences"] = _kg_sentences_oracle()
 
 
 # containment_pairs: same shingle construction as ngram_jaccard_pairs,

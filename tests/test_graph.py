@@ -6,89 +6,12 @@ and, where it has a size-gated broadcast, by identical output on both
 join paths.
 """
 
-import random
-
 import pytest
-from pyspark.sql import functions as F
-
 
 pytestmark = pytest.mark.spark
 
 
-# ----------------------------------------------------------- random walks
-
-
-def _py_walks(edges, walk_len, max_degree, salt="walk"):
-    """Independent driver-side replay of the seeded walk scheme."""
-    import hashlib
-
-    adj = {}
-    for s, d in sorted(set((s, d) for s, d in edges if s != d)):
-        adj.setdefault(s, []).append(d)
-    for s, ds in adj.items():
-        key = lambda d: (hashlib.md5(f"{salt}|{s}|{d}".encode()).hexdigest(), d)
-        adj[s] = sorted(ds, key=key)[:max_degree]
-    rows = set()
-    for start in adj:
-        cur = start
-        rows.add((start, 0, start))
-        for t in range(1, walk_len + 1):
-            if cur not in adj:
-                break
-            nbrs = adj[cur]
-            draw = int(hashlib.md5(
-                f"{salt}#{start}#{t}".encode()).hexdigest()[:8], 16)
-            cur = nbrs[draw % len(nbrs)]
-            rows.add((start, t, cur))
-    return rows
-
-
-def _walks_spark(spark, edges, walk_len, max_degree, **kw):
-    from kgist_spark.operators.graph import random_walks
-
-    df = spark.createDataFrame(edges, "src string, dst string")
-    out = random_walks(df, walk_len=walk_len, max_degree=max_degree, **kw)
-    return {(r["start"], r["step"], r["node"]) for r in out.collect()}
-
-
-def test_walks_dead_end_stops(spark):
-    # b has no out-edges: the walk from a stops after step 1 (no padding)
-    got = _walks_spark(spark, [("a", "b")], walk_len=3, max_degree=4)
-    assert got == {("a", 0, "a"), ("a", 1, "b")}
-
-
-def test_walks_match_python_replay(spark):
-    rng = random.Random(31)
-    edges = [(f"n{rng.randrange(20)}", f"n{rng.randrange(20)}")
-             for _ in range(120)]
-    for wl, md in ((3, 16), (4, 2)):
-        assert _walks_spark(spark, edges, wl, md) == _py_walks(edges, wl, md)
-
-
-def test_walks_degree_cap_is_md5_sample(spark):
-    # hub with 6 neighbors capped at 2: the kept pair is the md5-order
-    # prefix, and every draw lands inside it
-    edges = [("h", f"x{i}") for i in range(6)]
-    import hashlib
-    keep = sorted(
-        (f"x{i}" for i in range(6)),
-        key=lambda d: (hashlib.md5(f"walk|h|{d}".encode()).hexdigest(), d),
-    )[:2]
-    got = _walks_spark(spark, edges, walk_len=1, max_degree=2)
-    step1 = {n for s, t, n in got if t == 1}
-    assert step1 <= set(keep) and ("h", 0, "h") in got
-
-
-def test_walks_broadcast_and_shuffle_paths_identical(spark):
-    rng = random.Random(37)
-    edges = [(f"n{rng.randrange(12)}", f"n{rng.randrange(12)}")
-             for _ in range(50)]
-    a = _walks_spark(spark, edges, 3, 8)
-    b = _walks_spark(spark, edges, 3, 8, broadcast_max_nodes=0)
-    assert a == b
-
-
-# --------------------------------------------- snapshot diff / serialization
+# ------------------------------------------------------------ snapshot diff
 
 
 def test_snapshot_diff_hand_computed(spark):
@@ -121,21 +44,6 @@ def test_snapshot_diff_identical_snapshots(spark):
     (row,) = snapshot_diff(kg, kg).collect()
     assert (row["n_added"], row["n_removed"], row["n_kept"],
             row["churn_x1e6"]) == (0, 0, 2, 0)
-
-
-def test_kg_sentences_serialization_and_cap(spark):
-    from kgist_spark.operators.graph import kg_sentences
-
-    schema = "subj string, pred string, obj string"
-    t = spark.createDataFrame(
-        [("a", "p", "x"), ("a", "q", "y"), ("a", "p", "x"),  # dup collapses
-         ("h", "p", "n1"), ("h", "p", "n2"), ("h", "p", "n3")],
-        schema)
-    got = {r["subj"]: (r["n_facts"], r["n_facts_kept"], r["text"])
-           for r in kg_sentences(t, max_facts=2).collect()}
-    assert got["a"] == (2, 2, "a p x. a q y")
-    # hub capped at 2: true count 3, kept 2, lexicographically first two
-    assert got["h"] == (3, 2, "h p n1. h p n2")
 
 
 # ---------------------------------------------------------------------------
