@@ -325,175 +325,6 @@ def schema_violations_oracle_sql(triples_sql: str, labels_sql: str,
     """
 
 
-def _dense_node_index(nodes: DataFrame, salt: str,
-                      bucket_hex: int = 2) -> DataFrame:
-    """``(node, idx)`` with idx a dense 0..n-1 numbering in ``(md5(salt |
-    node), node)`` order — the two-phase distributed prefix pattern of
-    `operators/pack.py::pack_layout` applied to nodes: the md5-prefix
-    buckets the total order into 16^k contiguous ranges, per-bucket
-    counts get offsets from a parameter-bounded window, intra-bucket
-    row_numbers run partitioned and spillable.  The oracle collapses to
-    the ONE global ROW_NUMBER this must reproduce."""
-    h = F.md5(F.concat(F.lit(salt), F.col("node")))
-    # lazy lineage pin: `base` feeds BOTH the bucket-count branch and the
-    # final intra-bucket numbering join — unpinned, the (corpus-scale)
-    # upstream node derivation would recompute once per reference (the
-    # kg_negatives plan showed 54 Exchanges before this pin)
-    base = nodes.select("node", h.alias("h"),
-                        F.substring(h, 1, bucket_hex).alias("bkt")
-                        ).localCheckpoint(eager=False)
-    per_bkt = base.groupBy("bkt").agg(F.count("*").alias("cnt"))
-    offs = per_bkt.select(
-        "bkt",
-        (F.sum("cnt").over(
-            Window.orderBy("bkt").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow)
-        ) - F.col("cnt")).alias("off"),
-    )
-    wi = Window.partitionBy("bkt").orderBy("h", "node")
-    return (
-        base.join(F.broadcast(offs), "bkt")
-        .select(
-            "node",
-            (F.col("off") + F.row_number().over(wi) - 1).cast("long").alias("idx"),
-        )
-    )
-
-
-def negative_samples(triples: DataFrame, n_neg: int = 2,
-                     salt: str = "neg", corrupt: str = "tail") -> DataFrame:
-    """Filtered corrupt-tail negative sampling — the training-pair
-    generator for KG-embedding losses (TransE/DistMult-style margin and
-    NCE objectives need k corrupted triples per true triple): for each
-    ``(subj, pred, obj)`` and ``k_idx in 1..n_neg``, replace the tail
-    with a node drawn UNIFORMLY and DETERMINISTICALLY from the node set
-    (md5 of ``(salt, triple, k_idx)`` mod n — no RNG state, replayable at
-    any parallelism; more/other draws = other salts, the kg_walks
-    convention), then FILTER drawn corruptions that are true edges (the
-    "filtered" protocol — unfiltered negatives teach the model to score
-    true facts low).  Dropped rows are visible as missing k_idx values,
-    so a loader can re-draw with another salt rather than silently train
-    on fewer negatives.
-
-    The node set is indexed densely by the two-phase md5-prefix prefix
-    sum (no single-partition global window — the pack_layout cliff
-    dodge); the draw reaches its node through an AQE-sized equi-join on
-    the index (corpus-scale both sides, never broadcast), and the
-    filter is one anti-join on the triple key.
-
-    ``corrupt`` picks the replaced slot — ``'tail'`` (the default;
-    output column ``neg_obj``) or ``'head'`` (``neg_subj``; the filter
-    then checks ``(neg_subj, pred, obj)``).  The standard protocol draws
-    both 50/50; the head path derives its draws from a distinct salt so
-    the two corruption streams are independent, and the tail path is
-    byte-identical to the single-sided operator.
-
-    Output: ``(subj, pred, obj, k_idx, neg_obj | neg_subj)``."""
-    if corrupt not in ("tail", "head"):
-        raise ValueError("corrupt must be 'tail' or 'head'")
-    eff_salt = salt if corrupt == "tail" else salt + ":h"
-    nodes = (
-        triples.select(F.col("subj").alias("node"))
-        .unionAll(triples.select(F.col("obj").alias("node")))
-        .distinct()
-    )
-    # `idx` is read twice (the n_nodes count and the draw join) — pin it
-    # so the index builds once per action
-    idx = _dense_node_index(nodes, eff_salt).localCheckpoint(eager=False)
-    n_nodes = idx.agg(F.count("*").alias("n_nodes"))
-    drawn = (
-        triples.crossJoin(F.broadcast(n_nodes))
-        .select(
-            "subj", "pred", "obj",
-            F.explode(
-                F.sequence(F.lit(1).cast("long"), F.lit(n_neg).cast("long"))
-            ).alias("k_idx"),
-            F.col("n_nodes"),
-        )
-        .withColumn(
-            "draw",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit(eff_salt), F.col("subj"),
-                                      F.col("pred"), F.col("obj"),
-                                      F.col("k_idx").cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") % F.col("n_nodes"),
-        )
-    )
-    neg_col = "neg_obj" if corrupt == "tail" else "neg_subj"
-    withneg = (
-        drawn.join(idx, drawn["draw"] == idx["idx"])
-        .select("subj", "pred", "obj", "k_idx",
-                F.col("node").alias(neg_col))
-    )
-    true_edges = triples.select(
-        F.col("subj").alias("ts"), F.col("pred").alias("tp"),
-        F.col("obj").alias("tn"),
-    ).distinct()
-    if corrupt == "tail":
-        cond = (
-            (F.col("subj") == F.col("ts")) & (F.col("pred") == F.col("tp"))
-            & (F.col("neg_obj") == F.col("tn"))
-        )
-    else:
-        cond = (
-            (F.col("neg_subj") == F.col("ts"))
-            & (F.col("pred") == F.col("tp"))
-            & (F.col("obj") == F.col("tn"))
-        )
-    return withneg.join(true_edges, cond, "left_anti")
-
-
-def negative_samples_oracle_sql(triples_sql: str, n_neg: int = 2,
-                                salt: str = "neg",
-                                corrupt: str = "tail") -> str:
-    """DuckDB replay of :func:`negative_samples`: the dense index
-    collapses to ONE global ROW_NUMBER over the identical ``(md5, node)``
-    order (the two-phase plan must reproduce it), draws and the filtered
-    anti-join replay verbatim."""
-    eff_salt = salt if corrupt == "tail" else salt + ":h"
-    neg_col = "neg_obj" if corrupt == "tail" else "neg_subj"
-    if corrupt == "tail":
-        notexists = ("t.subj = w.subj AND t.pred = w.pred"
-                     " AND t.obj = w.neg_obj")
-    else:
-        notexists = ("t.subj = w.neg_subj AND t.pred = w.pred"
-                     " AND t.obj = w.obj")
-    return f"""
-    WITH t AS ({triples_sql}),
-    nodes AS (
-        SELECT DISTINCT node FROM (
-            SELECT subj AS node FROM t UNION ALL SELECT obj FROM t
-        )
-    ),
-    idx AS (
-        SELECT node,
-               ROW_NUMBER() OVER (ORDER BY md5('{eff_salt}' || node), node) - 1
-                   AS idx
-        FROM nodes
-    ),
-    n AS (SELECT COUNT(*) AS n_nodes FROM idx),
-    drawn AS (
-        SELECT subj, pred, obj, k_idx,
-               CAST(('0x' || substr(md5('{eff_salt}' || '|' || subj || '|' ||
-                         pred || '|' || obj || '|' || CAST(k_idx AS STRING)),
-                     1, 15)) AS BIGINT) % (SELECT n_nodes FROM n) AS draw
-        FROM t CROSS JOIN
-             (SELECT unnest(range(1, {n_neg} + 1)) AS k_idx) ks
-    ),
-    withneg AS (
-        SELECT d.subj, d.pred, d.obj, d.k_idx, i.node AS {neg_col}
-        FROM drawn d JOIN idx i ON d.draw = i.idx
-    )
-    SELECT w.* FROM withneg w
-    WHERE NOT EXISTS (
-        SELECT 1 FROM t WHERE {notexists}
-    )
-    """
-
-
 def schema_drift(old_triples: DataFrame, new_triples: DataFrame,
                  labels: DataFrame) -> DataFrame:
     """Schema-profile drift between two KG snapshots — the alarm table

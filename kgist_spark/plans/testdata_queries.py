@@ -1058,16 +1058,6 @@ def q_lang_confusion(spark, sf_dir):
     return lang_confusion(_t(spark, sf_dir, "documents"))
 
 
-def q_kg_negatives(spark, sf_dir):
-    """Filtered corrupt-tail negative sampling over the derived KG: two
-    deterministic md5 tail draws per triple from a densely-indexed node
-    set (two-phase prefix-sum index, no global window), true-edge
-    corruptions filtered — the KG-embedding training-pair generator."""
-    from kgist_spark.operators.graph import negative_samples
-
-    return negative_samples(derived_triples(spark, sf_dir), n_neg=2)
-
-
 def q_kg_schema_drift(spark, sf_dir):
     """Schema-profile drift between the clean and perturbed KG snapshots:
     per-(pred, side) entropy delta + dominant-type-flip alarm — the
@@ -1208,16 +1198,6 @@ def q_mixture_plan(spark, sf_dir):
 
     return mixture_plan(_t(spark, sf_dir, "documents"), _MIX_WEIGHTS,
                         _MIX_BUDGET)
-
-
-def q_kg_negatives_head(spark, sf_dir):
-    """Head-corruption negatives (the other half of the standard 50/50
-    corruption protocol): subjects replaced from an independent draw
-    stream, (neg_subj, pred, obj) true edges filtered."""
-    from kgist_spark.operators.graph import negative_samples
-
-    return negative_samples(derived_triples(spark, sf_dir), n_neg=2,
-                            corrupt="head")
 
 
 def q_split_leakage(spark, sf_dir):
@@ -1434,7 +1414,6 @@ QUERIES = {
     "hash_split": q_hash_split,
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
-    "kg_negatives": q_kg_negatives,
     "kg_schema_drift": q_kg_schema_drift,
     "ann_recall": q_ann_recall,
     "source_overlap": q_source_overlap,
@@ -1445,7 +1424,6 @@ QUERIES = {
     "tfidf_pairs": q_tfidf_pairs,
     "editdist_pairs": q_editdist_pairs,
     "mixture_plan": q_mixture_plan,
-    "kg_negatives_head": q_kg_negatives_head,
     "split_leakage": q_split_leakage,
     "tfidf_clusters": q_tfidf_clusters,
     "containment_keep": q_containment_keep,
@@ -2879,18 +2857,6 @@ def _postings_oracle() -> str:
 ORACLE_SQL["postings"] = _postings_oracle()
 
 
-def _kg_negatives_oracle() -> str:
-    from kgist_spark.operators.graph import negative_samples_oracle_sql
-
-    return negative_samples_oracle_sql(DERIVED_TRIPLES_SQL, n_neg=2)
-
-
-# kg_negatives: the oracle's single global ROW_NUMBER index is what the
-# two-phase distributed index must reproduce; draws + filtered anti-join
-# replay verbatim
-ORACLE_SQL["kg_negatives"] = _kg_negatives_oracle()
-
-
 def _kg_metapath_oracle() -> str:
     from kgist_spark.operators.graph import metapath_oracle_sql
 
@@ -2928,18 +2894,6 @@ def _mixture_plan_oracle() -> str:
 # mixture_plan: identical token rollup + truncating rate/deficit
 # arithmetic; the weight spec literals are shared by construction
 ORACLE_SQL["mixture_plan"] = _mixture_plan_oracle()
-
-
-def _kg_negatives_head_oracle() -> str:
-    from kgist_spark.operators.graph import negative_samples_oracle_sql
-
-    return negative_samples_oracle_sql(DERIVED_TRIPLES_SQL, n_neg=2,
-                                       corrupt="head")
-
-
-# kg_negatives_head: the head-corruption twin — independent draw stream
-# (distinct internal salt), (neg_subj, pred, obj) anti-join
-ORACLE_SQL["kg_negatives_head"] = _kg_negatives_head_oracle()
 
 
 def _split_leakage_oracle() -> str:

@@ -167,52 +167,6 @@ def test_schema_violations_detects_noise(spark):
     assert ps["viol_rate_x1e6"] == 1_000_000 // 20
 
 
-def test_dense_node_index_matches_global_window(spark):
-    """The two-phase md5-prefix index reproduces the single global
-    ROW_NUMBER (pinned at several bucket granularities)."""
-    import hashlib
-
-    from kgist_spark.operators.graph import _dense_node_index
-
-    names = [f"node{i:03d}" for i in range(300)]
-    want = {
-        n: i
-        for i, n in enumerate(sorted(
-            names, key=lambda n: (hashlib.md5(("s" + n).encode()).hexdigest(), n)
-        ))
-    }
-    nodes = spark.createDataFrame([(n,) for n in names], "node string")
-    for bh in (1, 2, 3):
-        got = {r["node"]: r["idx"]
-               for r in _dense_node_index(nodes, "s", bucket_hex=bh).collect()}
-        assert got == want, bh
-
-
-def test_negative_samples_properties(spark):
-    """Draws are deterministic, tails come from the node set, true-edge
-    corruptions are filtered, drops are visible as missing k_idx."""
-    from kgist_spark.operators.graph import negative_samples
-
-    triples = spark.createDataFrame(
-        [("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")],
-        "subj string, pred string, obj string",
-    )
-    out1 = sorted(map(tuple, negative_samples(triples, n_neg=3).collect()))
-    out2 = sorted(map(tuple, negative_samples(triples, n_neg=3).collect()))
-    assert out1 == out2  # bit-deterministic
-    nodes = {"a", "b", "c", "d"}
-    true = {("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")}
-    assert out1, "some negatives must survive"
-    for s, p, o, k, neg in out1:
-        assert neg in nodes
-        assert (s, p, neg) not in true  # filtered protocol
-        assert 1 <= k <= 3
-    # a different salt yields a different (still valid) draw sequence
-    other = sorted(map(tuple,
-                       negative_samples(triples, n_neg=3, salt="x").collect()))
-    assert other != out1
-
-
 def test_schema_drift_hand_computed(spark):
     """Matched slots report the entropy delta and top flips; one-sided
     slots stay visible with NULL-free sentinels."""
@@ -277,22 +231,3 @@ def test_metapath_hand_computed_and_junction_cap(spark):
                                      max_junction_deg=1).collect()}
     assert capped == {("c1", "s1"): 1, ("c2", "s1"): 1}
 
-
-def test_negative_samples_head_corruption(spark):
-    from kgist_spark.operators.graph import negative_samples
-
-    triples = spark.createDataFrame(
-        [("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")],
-        "subj string, pred string, obj string",
-    )
-    head = negative_samples(triples, n_neg=3, corrupt="head").collect()
-    assert head and "neg_subj" in head[0].asDict()
-    true = {("a", "p", "b"), ("a", "p", "c"), ("b", "q", "c"), ("c", "p", "d")}
-    for r in head:
-        assert (r["neg_subj"], r["pred"], r["obj"]) not in true
-    # independent streams: the head draws differ from the tail draws
-    tail = {(r["subj"], r["pred"], r["obj"], r["k_idx"], r["neg_obj"])
-            for r in negative_samples(triples, n_neg=3).collect()}
-    headset = {(r["subj"], r["pred"], r["obj"], r["k_idx"], r["neg_subj"])
-               for r in head}
-    assert headset != tail

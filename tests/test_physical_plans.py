@@ -209,24 +209,6 @@ def test_winnow_selection_stays_in_row(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_negative_samples_no_corpus_broadcast(spark):
-    """The draw->node equi-join must stay AQE-sized: the dense index is
-    corpus-scale, so no forced broadcast node may sit over it (the 1-row
-    n_nodes broadcast is the only hint)."""
-    from kgist_spark.operators.graph import negative_samples
-
-    triples = spark.createDataFrame(
-        [(f"s{i}", "p", f"o{i % 7}") for i in range(50)],
-        "subj string, pred string, obj string",
-    )
-    df = negative_samples(triples, n_neg=2)
-    df.collect()
-    # the LOGICAL plan must not carry a user hint on the index side;
-    # physical broadcasts chosen by AQE size estimation are fine
-    logical = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical
-
-
 def test_postings_rank_filter_precedes_collect(spark):
     """The cap is a rank FILTER before collect_list: the aggregate that
     builds lists must sit above a filter on row_number, so no
