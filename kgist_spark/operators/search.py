@@ -248,7 +248,7 @@ def build_postings(docs: DataFrame, id_col: str = "doc_id",
     (same as every df computation in this package); the cap is a
     rank-filter BEFORE any list materializes (`row_number` is sort-based
     and spillable, so a stopword's corpus-sized partition streams through
-    the sort rather than buffering — the kg_sentences hub-OOM dodge) and
+    the sort rather than buffering) and
     ``collect_list`` only ever sees ≤ ``max_postings`` rows per term."""
     from pyspark.sql.window import Window
 

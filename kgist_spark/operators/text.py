@@ -449,7 +449,7 @@ def zipf_slope(docs: DataFrame, source_col: str = "source",
     slope of ln(frequency) on ln(rank) over the source's token
     vocabulary, ``(src, n_types, n_tokens, slope_x1e6)``.
 
-    Determinism (the assortativity/lm discipline, one step further):
+    Determinism:
     the per-row logs are fixed-pointed FIRST (``round(ln · 1e3)`` on
     exact-integer rank/frequency arguments — one log+round per
     VOCABULARY row), the four regression sums then run on int64 (order
@@ -458,7 +458,7 @@ def zipf_slope(docs: DataFrame, source_col: str = "source",
     Rank ties break (frequency DESC, token) — replayed by the oracle.
     Sources with < 2 distinct ranks or zero x-variance (all ranks equal
     — impossible past n_types 1, kept for completeness) emit NULL and
-    are filtered like event_drift, so the BIGINT column survives
+    are filtered, so the BIGINT column survives
     pandas.
 
     Scale shape: the frequency table collapses map-side; the rank
