@@ -1,9 +1,5 @@
-"""Graph analytics operators over KG and co-occurrence edge lists.
-
-Each operator is pinned by hand-computed values on tiny graphs, by
-equality with an independent pure-Python replay on seeded random graphs,
-and, where it has a size-gated broadcast, by identical output on both
-join paths.
+"""KG monitoring tables: snapshot churn, the predicate schema profile and
+its schema violations, each pinned by hand-computed values on tiny graphs.
 """
 
 import pytest
