@@ -47,7 +47,6 @@ rules, one decided at 6.5e-10 bits).
 
 from __future__ import annotations
 
-from math import log2
 from typing import Dict, List
 
 from pyspark.sql import DataFrame
@@ -59,6 +58,14 @@ from kgist_spark.operators import candidates as C
 from kgist_spark.operators.qualify import nodes_with_all_labels, shared_head_labels
 
 _SEP = "\x1f"
+
+#: shuffle width for the accept-loop jobs, set for the fit and restored
+#: afterwards.  Every reduce stage in the loop is tiny (the per-key overlap
+#: partials collapse to O(#candidates) rows and the delta side rides an AQE
+#: broadcast, so the big table never shuffles); the session-wide width only
+#: adds per-task scheduling overhead — measured 1.51 -> 1.05 s/accept going
+#: 64 -> 8 on a NELL slice.
+_LOOP_SHUFFLE_PARTITIONS = 8
 
 
 def _df_key_col():
@@ -454,24 +461,14 @@ class DeltaGreedy:
         )
 
     # -- the greedy loop ----------------------------------------------------
-    def fit(self, passes: int = 2, label_qualify: bool = True,
-            loop_shuffle_partitions: int | None = 8):
-        """:loop_shuffle_partitions: shuffle width for the accept-loop jobs,
-        restored afterwards.  Every reduce stage in the loop is tiny (the
-        per-key overlap partials collapse to O(#candidates) rows and the
-        delta side rides an AQE broadcast, so the big table never shuffles);
-        the session-wide width only adds per-task scheduling overhead —
-        measured 1.51 -> 1.05 s/accept going 64 -> 8 on a NELL slice.
-        ``None`` keeps the session setting."""
+    def fit(self, passes: int = 2, label_qualify: bool = True):
         conf = self.spark.conf
         old_parts = conf.get("spark.sql.shuffle.partitions")
-        if loop_shuffle_partitions:
-            conf.set("spark.sql.shuffle.partitions", str(loop_shuffle_partitions))
+        conf.set("spark.sql.shuffle.partitions", str(_LOOP_SHUFFLE_PARTITIONS))
         try:
             return self._fit(passes, label_qualify)
         finally:
-            if loop_shuffle_partitions:
-                conf.set("spark.sql.shuffle.partitions", old_parts)
+            conf.set("spark.sql.shuffle.partitions", old_parts)
 
     def _fit(self, passes: int, label_qualify: bool):
         if label_qualify:

@@ -3,7 +3,6 @@ broadcast joins; scans are pruned and filters pushed; the distributed MDL
 ranking reproduces the oracle's exact candidate order."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import FIXTURES, fixture_kg, plan_of
 
