@@ -11,7 +11,7 @@ Output never depends on partitioning: rates are scaled int64 with
 truncating integer ``div``, and the entropy is one fixed-order float
 expression per vocabulary row, fixed-pointed before it is summed, so
 results are bit-identical at any parallelism and hash-comparable with the
-SQL replay.  No join is forced to broadcast: both sides are corpus-scale.
+SQL replay.  No join is forced to broadcast; AQE sizes each one.
 """
 
 from __future__ import annotations
