@@ -4,9 +4,9 @@
 ``queries``/``oracle_sql`` expose the operator inventory over the testdata
 tables — the KG pipeline's stages (candidate generation, MDL model fit and
 refinement, anomaly ranking, near-dup blocking, connected components, the
-schema report) plus the graph, dedup, text, sampling, sketch and curation
-operators (see ``kgist_spark/plans/testdata_queries.py``), each checked
-against its DuckDB oracle SQL by the driver at sf0.01.
+schema report, snapshot churn) plus the dedup, text, sampling, sketch and
+curation operators (see ``kgist_spark/plans/testdata_queries.py``), each
+checked against its DuckDB oracle SQL by the driver at sf0.01.
 """
 
 from __future__ import annotations
