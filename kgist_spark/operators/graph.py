@@ -1,5 +1,6 @@
 """KG monitoring tables: per-predicate snapshot churn, the per-predicate
-domain/range schema profile, and the schema violations it induces.
+domain/range schema profile, the schema violations it induces and its
+drift between snapshots, and top-k meta-path instance counts.
 
 None of these exists in the reference (GemsLab/KGist builds rules only).
 ``run_pipeline.py --schema-report`` calls :func:`predicate_schema` and
@@ -11,7 +12,9 @@ Output never depends on partitioning: rates are scaled int64 with
 truncating integer ``div``, and the entropy is one fixed-order float
 expression per vocabulary row, fixed-pointed before it is summed, so
 results are bit-identical at any parallelism and hash-comparable with the
-SQL replay.  No join is forced to broadcast; AQE sizes each one.
+SQL replay.  :func:`metapath_topk` caps junction degree as part of its
+semantics (the replay applies the same cap).  No join is forced to
+broadcast; AQE sizes each one.
 """
 
 from __future__ import annotations
@@ -112,8 +115,8 @@ def predicate_schema(triples: DataFrame, labels: DataFrame) -> DataFrame:
 
     Determinism: entropy terms are fixed-point ints BEFORE summation
     (``round(1e6 * (c * log2(n/c)) / n)`` — ONE fixed-order float
-    expression per (pred, side, label) row: the float runs once per
-    vocabulary row, never per triple,
+    expression per (pred, side, label) row, the event_drift / lm_score
+    discipline: the float runs once per vocabulary row, never per triple,
     and the cross-engine surface is a single log2+mul+div+round chain on
     exact-integer operands), so the per-slot sum is an order-free integer
     at any parallelism.  Dominance ties break to the lexicographically
@@ -315,3 +318,178 @@ def schema_violations_oracle_sql(triples_sql: str, labels_sql: str,
     FROM ranked
     WHERE rn = 1 AND c_occ * 1000000 >= {min_share_x1e6} * n_checked
     """
+
+
+def schema_drift(old_triples: DataFrame, new_triples: DataFrame,
+                 labels: DataFrame) -> DataFrame:
+    """Schema-profile drift between two KG snapshots — the alarm table
+    :func:`predicate_schema`'s docstring promises ("a predicate whose
+    domain entropy jumps between snapshots is the classic extractor
+    -drift signal"), materialized: both snapshots profiled with the SAME
+    label table, full-outer-joined per (pred, side), emitting the
+    entropy delta and whether the dominant type CHANGED (the hard alarm:
+    the slot's induced constraint flipped).
+
+    ``status`` ∈ {'both', 'old_only', 'new_only'} keeps one-sided slots
+    visible (a vanished predicate is itself drift); their numeric fields
+    carry the sentinel ``-1`` / empty-string tops and ``d_entropy = 0``
+    so every column stays NULL-free integer/string (a NULL int goes
+    float through pandas — the funnel lesson, applied engine-wide).
+
+    Scale shape: two runs of the schema profile (each one explode + one
+    node join + vocabulary-sized rollups); the drift join itself runs on
+    two ≤ |preds|×2 tables."""
+    o = predicate_schema(old_triples, labels).select(
+        "pred", "side",
+        F.col("entropy_x1e6").alias("old_entropy_x1e6"),
+        F.col("top_label").alias("old_top"),
+    )
+    n = predicate_schema(new_triples, labels).select(
+        "pred", "side",
+        F.col("entropy_x1e6").alias("new_entropy_x1e6"),
+        F.col("top_label").alias("new_top"),
+    )
+    j = o.join(n, ["pred", "side"], "full_outer")
+    both = F.col("old_entropy_x1e6").isNotNull() & F.col(
+        "new_entropy_x1e6"
+    ).isNotNull()
+    return j.select(
+        "pred", "side",
+        F.when(both, F.lit("both"))
+        .when(F.col("old_entropy_x1e6").isNotNull(), F.lit("old_only"))
+        .otherwise(F.lit("new_only")).alias("status"),
+        F.coalesce("old_entropy_x1e6", F.lit(-1)).cast("long").alias(
+            "old_entropy_x1e6"),
+        F.coalesce("new_entropy_x1e6", F.lit(-1)).cast("long").alias(
+            "new_entropy_x1e6"),
+        F.when(both, F.col("new_entropy_x1e6") - F.col("old_entropy_x1e6"))
+        .otherwise(F.lit(0)).cast("long").alias("d_entropy_x1e6"),
+        F.coalesce("old_top", F.lit("")).alias("old_top"),
+        F.coalesce("new_top", F.lit("")).alias("new_top"),
+        (both & (F.col("old_top") != F.col("new_top"))).alias("top_changed"),
+    )
+
+
+def schema_drift_oracle_sql(old_sql: str, new_sql: str,
+                            labels_sql: str) -> str:
+    """DuckDB replay of :func:`schema_drift`: two
+    :func:`predicate_schema_oracle_sql` profiles full-outer-joined with
+    the identical sentinel/COALESCE discipline."""
+    o = predicate_schema_oracle_sql(old_sql, labels_sql)
+    n = predicate_schema_oracle_sql(new_sql, labels_sql)
+    return f"""
+    WITH o AS ({o}), n AS ({n}),
+    j AS (
+        SELECT COALESCE(o.pred, n.pred) AS pred,
+               COALESCE(o.side, n.side) AS side,
+               o.entropy_x1e6 AS oe, n.entropy_x1e6 AS ne,
+               o.top_label AS ot, n.top_label AS nt
+        FROM o FULL OUTER JOIN n
+          ON o.pred = n.pred AND o.side = n.side
+    )
+    SELECT pred, side,
+           CASE WHEN oe IS NOT NULL AND ne IS NOT NULL THEN 'both'
+                WHEN oe IS NOT NULL THEN 'old_only'
+                ELSE 'new_only' END AS status,
+           CAST(COALESCE(oe, -1) AS BIGINT) AS old_entropy_x1e6,
+           CAST(COALESCE(ne, -1) AS BIGINT) AS new_entropy_x1e6,
+           CAST(CASE WHEN oe IS NOT NULL AND ne IS NOT NULL
+                     THEN ne - oe ELSE 0 END AS BIGINT) AS d_entropy_x1e6,
+           COALESCE(ot, '') AS old_top,
+           COALESCE(nt, '') AS new_top,
+           (oe IS NOT NULL AND ne IS NOT NULL AND ot <> nt) AS top_changed
+    FROM j
+    """
+
+
+def metapath_topk(triples: DataFrame, path: list, k: int = 50,
+                  max_junction_deg: int = 1024) -> DataFrame:
+    """Meta-path instance counting (PathSim, Sun et al. VLDB 2011 — the
+    heterogeneous-network similarity primitive): count the instances of a
+    typed relation path between its endpoint pairs and return the top-k
+    — ``(start, end, n_paths)``.  ``path`` is an ordered list of
+    ``(pred, 'fwd' | 'rev')`` steps; e.g. ``[('placed_by', 'rev'),
+    ('contains_part', 'fwd'), ('supplied_by', 'fwd')]`` walks
+    customer ← order → part → supplier: "which suppliers does this
+    customer's order book depend on, how heavily" — the KG-analytics
+    question a 2-hop predicate-pair count can't answer because it
+    forgets endpoints.
+
+    Junction discipline: at
+    every join step, junction nodes whose step out-degree exceeds
+    ``max_junction_deg`` are EXCLUDED — a 10^6-degree hub contributes
+    quadratic path volume and no similarity signal; the oracle applies
+    the identical cap, so the cap is part of the operator's semantics,
+    not a silent truncation.  Top-k orders ``(n_paths DESC, start,
+    end)`` — deterministic, TakeOrderedAndProject (bounded heaps, no
+    global sort).
+
+    Scale shape: each step is one equi-join whose volume is bounded by
+    ``max_junction_deg × |previous frontier|``; the endpoint count
+    collapses map-side; per-step degree tables aggregate from the
+    step's OWN edges only."""
+    def step_edges(pred, direction):
+        e = triples.where(F.col("pred") == pred)
+        if direction == "fwd":
+            return e.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+        return e.select(F.col("obj").alias("u"), F.col("subj").alias("v"))
+
+    first = step_edges(*path[0])
+    cur = first.select(F.col("u").alias("start"), F.col("v").alias("cur"))
+    for pred, direction in path[1:]:
+        e = step_edges(pred, direction)
+        ok = (
+            e.groupBy("u").agg(F.count("*").alias("d"))
+            .where(F.col("d") <= max_junction_deg)
+            .select("u")
+        )
+        e = e.join(ok, "u", "leftsemi")
+        cur = (
+            cur.join(e, cur["cur"] == e["u"])
+            .select("start", F.col("v").alias("cur"))
+        )
+    return (
+        cur.groupBy(F.col("start"), F.col("cur").alias("end"))
+        .agg(F.count("*").alias("n_paths"))
+        .orderBy(F.desc("n_paths"), F.asc("start"), F.asc("end"))
+        .limit(k)
+    )
+
+
+def metapath_oracle_sql(triples_sql: str, path: list, k: int = 50,
+                        max_junction_deg: int = 1024) -> str:
+    """DuckDB replay of :func:`metapath_topk`: identical step edges,
+    identical junction cap, identical (n DESC, start, end) top-k."""
+    def step_sql(i, pred, direction):
+        cols = ("subj AS u, obj AS v" if direction == "fwd"
+                else "obj AS u, subj AS v")
+        return (f"e{i} AS (SELECT {cols} FROM t WHERE pred = '{pred}')")
+
+    ctes = [f"t AS MATERIALIZED ({triples_sql})"]
+    for i, (pred, direction) in enumerate(path):
+        ctes.append(step_sql(i, pred, direction))
+        if i > 0:
+            ctes.append(
+                f"""ok{i} AS (
+        SELECT u FROM e{i} GROUP BY u HAVING COUNT(*) <= {max_junction_deg}
+    )"""
+            )
+    ctes.append("p0 AS (SELECT u AS start, v AS cur FROM e0)")
+    for i in range(1, len(path)):
+        ctes.append(
+            f"""p{i} AS (
+        SELECT p.start, e.v AS cur
+        FROM p{i - 1} p
+        JOIN e{i} e ON p.cur = e.u
+        JOIN ok{i} o ON e.u = o.u
+    )"""
+        )
+    last = len(path) - 1
+    return (
+        "WITH " + ",\n    ".join(ctes)
+        + f"""
+    SELECT start, cur AS "end", CAST(COUNT(*) AS BIGINT) AS n_paths
+    FROM p{last} GROUP BY start, cur
+    ORDER BY n_paths DESC, start, "end" LIMIT {k}
+    """
+    )

@@ -1058,6 +1058,19 @@ def q_lang_confusion(spark, sf_dir):
     return lang_confusion(_t(spark, sf_dir, "documents"))
 
 
+def q_kg_schema_drift(spark, sf_dir):
+    """Schema-profile drift between the clean and perturbed KG snapshots:
+    per-(pred, side) entropy delta + dominant-type-flip alarm — the
+    extractor-drift monitoring table the schema profile feeds."""
+    from kgist_spark.operators.graph import schema_drift
+
+    return schema_drift(
+        derived_triples(spark, sf_dir),
+        perturbed_triples(spark, sf_dir),
+        derived_labels(spark, sf_dir),
+    )
+
+
 def q_ann_recall(spark, sf_dir):
     """ANN quality audit: recall@10 of the IVF index against the exact
     cosine top-10 for the shared query vector — the measurement that
@@ -1105,6 +1118,20 @@ def q_corpus_report(spark, sf_dir):
     from kgist_spark.operators.text import corpus_report
 
     return corpus_report(_t(spark, sf_dir, "documents"))
+
+
+#: the customer ← order → part → supplier dependence meta-path
+_METAPATH = [("placed_by", "rev"), ("contains_part", "fwd"),
+             ("supplied_by", "fwd")]
+
+
+def q_kg_metapath(spark, sf_dir):
+    """PathSim meta-path counting: top-50 (customer, supplier) pairs by
+    the number of order→part paths connecting them — the endpoint-aware
+    question a 2-hop predicate-pair count can't answer."""
+    from kgist_spark.operators.graph import metapath_topk
+
+    return metapath_topk(derived_triples(spark, sf_dir), _METAPATH, k=50)
 
 
 def q_hll_error(spark, sf_dir):
@@ -1387,10 +1414,12 @@ QUERIES = {
     "hash_split": q_hash_split,
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
+    "kg_schema_drift": q_kg_schema_drift,
     "ann_recall": q_ann_recall,
     "source_overlap": q_source_overlap,
     "zipf_slope": q_zipf_slope,
     "corpus_report": q_corpus_report,
+    "kg_metapath": q_kg_metapath,
     "hll_error": q_hll_error,
     "tfidf_pairs": q_tfidf_pairs,
     "editdist_pairs": q_editdist_pairs,
@@ -2828,6 +2857,12 @@ def _postings_oracle() -> str:
 ORACLE_SQL["postings"] = _postings_oracle()
 
 
+def _kg_metapath_oracle() -> str:
+    from kgist_spark.operators.graph import metapath_oracle_sql
+
+    return metapath_oracle_sql(DERIVED_TRIPLES_SQL, _METAPATH, k=50)
+
+
 def _tfidf_pairs_oracle() -> str:
     from kgist_spark.operators.dedup import tfidf_pairs_oracle_sql
 
@@ -2987,6 +3022,26 @@ ORACLE_SQL["quality_deciles"] = """
                 // COUNT(*) OVER (PARTITION BY source) AS BIGINT) AS decile
     FROM documents
 """
+
+
+# kg_metapath: identical step edges, identical junction cap (part of the
+# operator's SEMANTICS, not a silent truncation), identical
+# (n DESC, start, end) top-k
+ORACLE_SQL["kg_metapath"] = _kg_metapath_oracle()
+
+
+def _kg_schema_drift_oracle() -> str:
+    from kgist_spark.operators.graph import schema_drift_oracle_sql
+
+    return schema_drift_oracle_sql(
+        DERIVED_TRIPLES_SQL, PERTURBED_TRIPLES_SQL, DERIVED_LABELS_SQL
+    )
+
+
+# kg_schema_drift: two shared predicate_schema profiles full-outer-joined
+# with identical sentinel/COALESCE discipline (NULL-free columns — the
+# funnel pandas lesson)
+ORACLE_SQL["kg_schema_drift"] = _kg_schema_drift_oracle()
 
 
 # ann_recall: the two already-oracled retrieval pipelines (exact cosine
