@@ -1,101 +1,23 @@
-"""KG monitoring tables: per-predicate snapshot churn, the per-predicate
-domain/range schema profile, the schema violations it induces and its
-drift between snapshots, and top-k meta-path instance counts.
+"""KG schema report: the per-predicate domain/range schema profile and the
+schema violations it induces.
 
-None of these exists in the reference (GemsLab/KGist builds rules only).
+Neither exists in the reference (GemsLab/KGist builds rules only).
 ``run_pipeline.py --schema-report`` calls :func:`predicate_schema` and
 :func:`schema_violations`; the testdata query catalogue
-(``plans/testdata_queries.py``) checks each operator against the DuckDB
-replay built by the ``*_oracle_sql`` next to it.
+(``plans/testdata_queries.py``) checks each against the DuckDB replay
+built by the ``*_oracle_sql`` next to it.
 
 Output never depends on partitioning: rates are scaled int64 with
 truncating integer ``div``, and the entropy is one fixed-order float
 expression per vocabulary row, fixed-pointed before it is summed, so
 results are bit-identical at any parallelism and hash-comparable with the
-SQL replay.  :func:`metapath_topk` caps junction degree as part of its
-semantics (the replay applies the same cap).  No join is forced to
-broadcast; AQE sizes each one.
+SQL replay.  No join is forced to broadcast; AQE sizes each one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def snapshot_diff(old: DataFrame, new: DataFrame,
-                  churn_scale: int = 1_000_000) -> DataFrame:
-    """Per-predicate churn between two KG snapshots (crawl N vs crawl
-    N+1) — the monitoring table an incremental construction pipeline
-    (streaming/construct.py) gets judged by: for each predicate,
-    ``(pred, n_added, n_removed, n_kept, churn_x1e6)`` where churn is the
-    integer-truncated ``(added + removed) * scale DIV old_size``
-    (old_size = kept + removed; predicates NEW in this snapshot report
-    the sentinel -1 — no base to divide by, and a NULL here would turn
-    the int64 column float in pandas round-trips).
-
-    Both inputs are ``(subj, pred, obj)`` triple sets.  Scale shape: one
-    distinct per side (the snapshots may carry duplicates), ONE full outer
-    join on the whole triple key (shuffle-partitioned on identical keys,
-    so AQE coalesces; no broadcast assumption — both sides are
-    corpus-scale), then a map-side-combining grouped count per predicate.
-    Every output column is integer, hash-comparable."""
-    o = old.select("subj", "pred", "obj").distinct() \
-        .withColumn("_o", F.lit(1))
-    n = new.select("subj", "pred", "obj").distinct() \
-        .withColumn("_n", F.lit(1))
-    j = o.join(n, ["subj", "pred", "obj"], "full_outer")
-    agg = (
-        j.groupBy("pred")
-        .agg(
-            F.sum(F.when(F.col("_o").isNull(), 1).otherwise(0))
-            .alias("n_added"),
-            F.sum(F.when(F.col("_n").isNull(), 1).otherwise(0))
-            .alias("n_removed"),
-            F.sum(F.when(F.col("_o").isNotNull() & F.col("_n").isNotNull(),
-                         1).otherwise(0)).alias("n_kept"),
-        )
-    )
-    return agg.select(
-        "pred", "n_added", "n_removed", "n_kept",
-        F.when(
-            F.col("n_kept") + F.col("n_removed") > 0,
-            F.expr(f"(n_added + n_removed) * {churn_scale}"
-                   " DIV (n_kept + n_removed)"),
-        ).otherwise(F.lit(-1)).cast("long").alias("churn_x1e6"),
-    )
-
-
-def snapshot_diff_oracle_sql(old_sql: str, new_sql: str,
-                             churn_scale: int = 1_000_000) -> str:
-    """DuckDB replay of :func:`snapshot_diff`: same distincts, same full
-    outer join, same truncating-integer churn."""
-    return f"""
-    WITH o AS (SELECT DISTINCT subj, pred, obj FROM ({old_sql})),
-    n AS (SELECT DISTINCT subj, pred, obj FROM ({new_sql})),
-    j AS (
-        SELECT COALESCE(o.pred, n.pred) AS pred,
-               (o.subj IS NULL) AS added, (n.subj IS NULL) AS removed
-        FROM o FULL OUTER JOIN n
-          ON o.subj = n.subj AND o.pred = n.pred AND o.obj = n.obj
-    ),
-    agg AS (
-        SELECT pred,
-               CAST(SUM(CASE WHEN added THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_added,
-               CAST(SUM(CASE WHEN removed THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_removed,
-               CAST(SUM(CASE WHEN NOT added AND NOT removed THEN 1 ELSE 0
-                        END) AS BIGINT) AS n_kept
-        FROM j GROUP BY pred
-    )
-    SELECT pred, n_added, n_removed, n_kept,
-           CAST(CASE WHEN n_kept + n_removed > 0
-                     THEN (n_added + n_removed) * {churn_scale}
-                          // (n_kept + n_removed)
-                     ELSE -1 END AS BIGINT) AS churn_x1e6
-    FROM agg
-    """
 
 
 def predicate_schema(triples: DataFrame, labels: DataFrame) -> DataFrame:
@@ -318,178 +240,3 @@ def schema_violations_oracle_sql(triples_sql: str, labels_sql: str,
     FROM ranked
     WHERE rn = 1 AND c_occ * 1000000 >= {min_share_x1e6} * n_checked
     """
-
-
-def schema_drift(old_triples: DataFrame, new_triples: DataFrame,
-                 labels: DataFrame) -> DataFrame:
-    """Schema-profile drift between two KG snapshots — the alarm table
-    :func:`predicate_schema`'s docstring promises ("a predicate whose
-    domain entropy jumps between snapshots is the classic extractor
-    -drift signal"), materialized: both snapshots profiled with the SAME
-    label table, full-outer-joined per (pred, side), emitting the
-    entropy delta and whether the dominant type CHANGED (the hard alarm:
-    the slot's induced constraint flipped).
-
-    ``status`` ∈ {'both', 'old_only', 'new_only'} keeps one-sided slots
-    visible (a vanished predicate is itself drift); their numeric fields
-    carry the sentinel ``-1`` / empty-string tops and ``d_entropy = 0``
-    so every column stays NULL-free integer/string (a NULL int goes
-    float through pandas — the funnel lesson, applied engine-wide).
-
-    Scale shape: two runs of the schema profile (each one explode + one
-    node join + vocabulary-sized rollups); the drift join itself runs on
-    two ≤ |preds|×2 tables."""
-    o = predicate_schema(old_triples, labels).select(
-        "pred", "side",
-        F.col("entropy_x1e6").alias("old_entropy_x1e6"),
-        F.col("top_label").alias("old_top"),
-    )
-    n = predicate_schema(new_triples, labels).select(
-        "pred", "side",
-        F.col("entropy_x1e6").alias("new_entropy_x1e6"),
-        F.col("top_label").alias("new_top"),
-    )
-    j = o.join(n, ["pred", "side"], "full_outer")
-    both = F.col("old_entropy_x1e6").isNotNull() & F.col(
-        "new_entropy_x1e6"
-    ).isNotNull()
-    return j.select(
-        "pred", "side",
-        F.when(both, F.lit("both"))
-        .when(F.col("old_entropy_x1e6").isNotNull(), F.lit("old_only"))
-        .otherwise(F.lit("new_only")).alias("status"),
-        F.coalesce("old_entropy_x1e6", F.lit(-1)).cast("long").alias(
-            "old_entropy_x1e6"),
-        F.coalesce("new_entropy_x1e6", F.lit(-1)).cast("long").alias(
-            "new_entropy_x1e6"),
-        F.when(both, F.col("new_entropy_x1e6") - F.col("old_entropy_x1e6"))
-        .otherwise(F.lit(0)).cast("long").alias("d_entropy_x1e6"),
-        F.coalesce("old_top", F.lit("")).alias("old_top"),
-        F.coalesce("new_top", F.lit("")).alias("new_top"),
-        (both & (F.col("old_top") != F.col("new_top"))).alias("top_changed"),
-    )
-
-
-def schema_drift_oracle_sql(old_sql: str, new_sql: str,
-                            labels_sql: str) -> str:
-    """DuckDB replay of :func:`schema_drift`: two
-    :func:`predicate_schema_oracle_sql` profiles full-outer-joined with
-    the identical sentinel/COALESCE discipline."""
-    o = predicate_schema_oracle_sql(old_sql, labels_sql)
-    n = predicate_schema_oracle_sql(new_sql, labels_sql)
-    return f"""
-    WITH o AS ({o}), n AS ({n}),
-    j AS (
-        SELECT COALESCE(o.pred, n.pred) AS pred,
-               COALESCE(o.side, n.side) AS side,
-               o.entropy_x1e6 AS oe, n.entropy_x1e6 AS ne,
-               o.top_label AS ot, n.top_label AS nt
-        FROM o FULL OUTER JOIN n
-          ON o.pred = n.pred AND o.side = n.side
-    )
-    SELECT pred, side,
-           CASE WHEN oe IS NOT NULL AND ne IS NOT NULL THEN 'both'
-                WHEN oe IS NOT NULL THEN 'old_only'
-                ELSE 'new_only' END AS status,
-           CAST(COALESCE(oe, -1) AS BIGINT) AS old_entropy_x1e6,
-           CAST(COALESCE(ne, -1) AS BIGINT) AS new_entropy_x1e6,
-           CAST(CASE WHEN oe IS NOT NULL AND ne IS NOT NULL
-                     THEN ne - oe ELSE 0 END AS BIGINT) AS d_entropy_x1e6,
-           COALESCE(ot, '') AS old_top,
-           COALESCE(nt, '') AS new_top,
-           (oe IS NOT NULL AND ne IS NOT NULL AND ot <> nt) AS top_changed
-    FROM j
-    """
-
-
-def metapath_topk(triples: DataFrame, path: list, k: int = 50,
-                  max_junction_deg: int = 1024) -> DataFrame:
-    """Meta-path instance counting (PathSim, Sun et al. VLDB 2011 — the
-    heterogeneous-network similarity primitive): count the instances of a
-    typed relation path between its endpoint pairs and return the top-k
-    — ``(start, end, n_paths)``.  ``path`` is an ordered list of
-    ``(pred, 'fwd' | 'rev')`` steps; e.g. ``[('placed_by', 'rev'),
-    ('contains_part', 'fwd'), ('supplied_by', 'fwd')]`` walks
-    customer ← order → part → supplier: "which suppliers does this
-    customer's order book depend on, how heavily" — the KG-analytics
-    question a 2-hop predicate-pair count can't answer because it
-    forgets endpoints.
-
-    Junction discipline: at
-    every join step, junction nodes whose step out-degree exceeds
-    ``max_junction_deg`` are EXCLUDED — a 10^6-degree hub contributes
-    quadratic path volume and no similarity signal; the oracle applies
-    the identical cap, so the cap is part of the operator's semantics,
-    not a silent truncation.  Top-k orders ``(n_paths DESC, start,
-    end)`` — deterministic, TakeOrderedAndProject (bounded heaps, no
-    global sort).
-
-    Scale shape: each step is one equi-join whose volume is bounded by
-    ``max_junction_deg × |previous frontier|``; the endpoint count
-    collapses map-side; per-step degree tables aggregate from the
-    step's OWN edges only."""
-    def step_edges(pred, direction):
-        e = triples.where(F.col("pred") == pred)
-        if direction == "fwd":
-            return e.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
-        return e.select(F.col("obj").alias("u"), F.col("subj").alias("v"))
-
-    first = step_edges(*path[0])
-    cur = first.select(F.col("u").alias("start"), F.col("v").alias("cur"))
-    for pred, direction in path[1:]:
-        e = step_edges(pred, direction)
-        ok = (
-            e.groupBy("u").agg(F.count("*").alias("d"))
-            .where(F.col("d") <= max_junction_deg)
-            .select("u")
-        )
-        e = e.join(ok, "u", "leftsemi")
-        cur = (
-            cur.join(e, cur["cur"] == e["u"])
-            .select("start", F.col("v").alias("cur"))
-        )
-    return (
-        cur.groupBy(F.col("start"), F.col("cur").alias("end"))
-        .agg(F.count("*").alias("n_paths"))
-        .orderBy(F.desc("n_paths"), F.asc("start"), F.asc("end"))
-        .limit(k)
-    )
-
-
-def metapath_oracle_sql(triples_sql: str, path: list, k: int = 50,
-                        max_junction_deg: int = 1024) -> str:
-    """DuckDB replay of :func:`metapath_topk`: identical step edges,
-    identical junction cap, identical (n DESC, start, end) top-k."""
-    def step_sql(i, pred, direction):
-        cols = ("subj AS u, obj AS v" if direction == "fwd"
-                else "obj AS u, subj AS v")
-        return (f"e{i} AS (SELECT {cols} FROM t WHERE pred = '{pred}')")
-
-    ctes = [f"t AS MATERIALIZED ({triples_sql})"]
-    for i, (pred, direction) in enumerate(path):
-        ctes.append(step_sql(i, pred, direction))
-        if i > 0:
-            ctes.append(
-                f"""ok{i} AS (
-        SELECT u FROM e{i} GROUP BY u HAVING COUNT(*) <= {max_junction_deg}
-    )"""
-            )
-    ctes.append("p0 AS (SELECT u AS start, v AS cur FROM e0)")
-    for i in range(1, len(path)):
-        ctes.append(
-            f"""p{i} AS (
-        SELECT p.start, e.v AS cur
-        FROM p{i - 1} p
-        JOIN e{i} e ON p.cur = e.u
-        JOIN ok{i} o ON e.u = o.u
-    )"""
-        )
-    last = len(path) - 1
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + f"""
-    SELECT start, cur AS "end", CAST(COUNT(*) AS BIGINT) AS n_paths
-    FROM p{last} GROUP BY start, cur
-    ORDER BY n_paths DESC, start, "end" LIMIT {k}
-    """
-    )

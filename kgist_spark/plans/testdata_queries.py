@@ -951,18 +951,6 @@ def q_priority_sample(spark, sf_dir):
     )
 
 
-def q_kg_churn(spark, sf_dir):
-    """Per-predicate churn between two KG snapshots (the clean derived KG
-    vs its deterministic perturbation — the same pair the anomaly queries
-    use): added/removed/kept triple counts and an integer churn rate, the
-    monitoring table an incremental crawl's KG versioning is judged by."""
-    from kgist_spark.operators.graph import snapshot_diff
-
-    return snapshot_diff(
-        derived_triples(spark, sf_dir), perturbed_triples(spark, sf_dir)
-    )
-
-
 def q_containment_pairs(spark, sf_dir):
     """Shingle containment pairs (|A∩B| / min sizes) — the asymmetric
     quote/boilerplate signal Jaccard misses; exact verification over full
@@ -1058,19 +1046,6 @@ def q_lang_confusion(spark, sf_dir):
     return lang_confusion(_t(spark, sf_dir, "documents"))
 
 
-def q_kg_schema_drift(spark, sf_dir):
-    """Schema-profile drift between the clean and perturbed KG snapshots:
-    per-(pred, side) entropy delta + dominant-type-flip alarm — the
-    extractor-drift monitoring table the schema profile feeds."""
-    from kgist_spark.operators.graph import schema_drift
-
-    return schema_drift(
-        derived_triples(spark, sf_dir),
-        perturbed_triples(spark, sf_dir),
-        derived_labels(spark, sf_dir),
-    )
-
-
 def q_ann_recall(spark, sf_dir):
     """ANN quality audit: recall@10 of the IVF index against the exact
     cosine top-10 for the shared query vector — the measurement that
@@ -1118,20 +1093,6 @@ def q_corpus_report(spark, sf_dir):
     from kgist_spark.operators.text import corpus_report
 
     return corpus_report(_t(spark, sf_dir, "documents"))
-
-
-#: the customer ← order → part → supplier dependence meta-path
-_METAPATH = [("placed_by", "rev"), ("contains_part", "fwd"),
-             ("supplied_by", "fwd")]
-
-
-def q_kg_metapath(spark, sf_dir):
-    """PathSim meta-path counting: top-50 (customer, supplier) pairs by
-    the number of order→part paths connecting them — the endpoint-aware
-    question a 2-hop predicate-pair count can't answer."""
-    from kgist_spark.operators.graph import metapath_topk
-
-    return metapath_topk(derived_triples(spark, sf_dir), _METAPATH, k=50)
 
 
 def q_hll_error(spark, sf_dir):
@@ -1406,7 +1367,6 @@ QUERIES = {
     "bloom_decontaminate": q_bloom_decontaminate,
     "dup_spans": q_dup_spans,
     "priority_sample": q_priority_sample,
-    "kg_churn": q_kg_churn,
     "containment_pairs": q_containment_pairs,
     "kg_schema": q_kg_schema,
     "winnow_fp": q_winnow_fp,
@@ -1414,12 +1374,10 @@ QUERIES = {
     "hash_split": q_hash_split,
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
-    "kg_schema_drift": q_kg_schema_drift,
     "ann_recall": q_ann_recall,
     "source_overlap": q_source_overlap,
     "zipf_slope": q_zipf_slope,
     "corpus_report": q_corpus_report,
-    "kg_metapath": q_kg_metapath,
     "hll_error": q_hll_error,
     "tfidf_pairs": q_tfidf_pairs,
     "editdist_pairs": q_editdist_pairs,
@@ -2674,18 +2632,6 @@ ORACLE_SQL["curate_summary"] = _curate_oracle(
 )
 
 
-def _kg_churn_oracle() -> str:
-    from kgist_spark.operators.graph import snapshot_diff_oracle_sql
-
-    return snapshot_diff_oracle_sql(DERIVED_TRIPLES_SQL,
-                                    PERTURBED_TRIPLES_SQL)
-
-
-# kg_churn: same distincts, same full outer join on the triple key, same
-# truncating-integer churn (NULL for predicates with no old base)
-ORACLE_SQL["kg_churn"] = _kg_churn_oracle()
-
-
 # containment_pairs: same shingle construction as ngram_jaccard_pairs,
 # same uncapped exact self-join (the capped Spark path matches in full on
 # this corpus — any recall loss fails the row-count check), containment as
@@ -2857,12 +2803,6 @@ def _postings_oracle() -> str:
 ORACLE_SQL["postings"] = _postings_oracle()
 
 
-def _kg_metapath_oracle() -> str:
-    from kgist_spark.operators.graph import metapath_oracle_sql
-
-    return metapath_oracle_sql(DERIVED_TRIPLES_SQL, _METAPATH, k=50)
-
-
 def _tfidf_pairs_oracle() -> str:
     from kgist_spark.operators.dedup import tfidf_pairs_oracle_sql
 
@@ -3022,26 +2962,6 @@ ORACLE_SQL["quality_deciles"] = """
                 // COUNT(*) OVER (PARTITION BY source) AS BIGINT) AS decile
     FROM documents
 """
-
-
-# kg_metapath: identical step edges, identical junction cap (part of the
-# operator's SEMANTICS, not a silent truncation), identical
-# (n DESC, start, end) top-k
-ORACLE_SQL["kg_metapath"] = _kg_metapath_oracle()
-
-
-def _kg_schema_drift_oracle() -> str:
-    from kgist_spark.operators.graph import schema_drift_oracle_sql
-
-    return schema_drift_oracle_sql(
-        DERIVED_TRIPLES_SQL, PERTURBED_TRIPLES_SQL, DERIVED_LABELS_SQL
-    )
-
-
-# kg_schema_drift: two shared predicate_schema profiles full-outer-joined
-# with identical sentinel/COALESCE discipline (NULL-free columns — the
-# funnel pandas lesson)
-ORACLE_SQL["kg_schema_drift"] = _kg_schema_drift_oracle()
 
 
 # ann_recall: the two already-oracled retrieval pipelines (exact cosine

@@ -1,46 +1,10 @@
-"""KG monitoring tables: snapshot churn, the predicate schema profile, its
-schema violations and drift, and meta-path counts, each pinned by
-hand-computed values on tiny graphs.
+"""KG schema report: the predicate schema profile and its schema
+violations, each pinned by hand-computed values on tiny graphs.
 """
 
 import pytest
 
 pytestmark = pytest.mark.spark
-
-
-# ------------------------------------------------------------ snapshot diff
-
-
-def test_snapshot_diff_hand_computed(spark):
-    from kgist_spark.operators.graph import snapshot_diff
-
-    schema = "subj string, pred string, obj string"
-    old = spark.createDataFrame(
-        [("a", "p", "x"), ("a", "p", "y"), ("b", "p", "x"), ("b", "q", "x"),
-         ("b", "q", "x")],  # duplicate collapses
-        schema)
-    new = spark.createDataFrame(
-        [("a", "p", "x"), ("b", "p", "z"), ("c", "r", "x")], schema)
-    got = {r["pred"]: (r["n_added"], r["n_removed"], r["n_kept"],
-                       r["churn_x1e6"])
-           for r in snapshot_diff(old, new).collect()}
-    # p: old {apx,apy,bpx} new {apx,bpz}: +1 -2 =1; churn (1+2)*1e6 DIV 3
-    # q: removed entirely; r: brand-new -> sentinel -1
-    assert got == {
-        "p": (1, 2, 1, 1000000),
-        "q": (0, 1, 0, 1000000),
-        "r": (1, 0, 0, -1),
-    }
-
-
-def test_snapshot_diff_identical_snapshots(spark):
-    from kgist_spark.operators.graph import snapshot_diff
-
-    schema = "subj string, pred string, obj string"
-    kg = spark.createDataFrame([("a", "p", "x"), ("b", "p", "y")], schema)
-    (row,) = snapshot_diff(kg, kg).collect()
-    assert (row["n_added"], row["n_removed"], row["n_kept"],
-            row["churn_x1e6"]) == (0, 0, 2, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -163,67 +127,3 @@ def test_schema_violations_detects_noise(spark):
     assert (ps["n_checked"], ps["n_violations"]) == (20, 1)
     assert ps["viol_rate_x1e6"] == 1_000_000 // 20
 
-
-def test_schema_drift_hand_computed(spark):
-    """Matched slots report the entropy delta and top flips; one-sided
-    slots stay visible with NULL-free sentinels."""
-    from kgist_spark.operators.graph import predicate_schema, schema_drift
-
-    labels = spark.createDataFrame(
-        [("a", "T1"), ("b", "T1"), ("c", "T2"), ("x", "TX")],
-        "node string, label string",
-    )
-    old = spark.createDataFrame(
-        [("a", "p", "x"), ("b", "p", "x"),       # p/s all T1 (entropy 0)
-         ("a", "gone", "x")],                     # pred vanishes
-        "subj string, pred string, obj string",
-    )
-    new = spark.createDataFrame(
-        [("a", "p", "x"), ("c", "p", "x"),       # p/s now T1+T2 -> entropy>0
-         ("c", "fresh", "x")],                    # new pred appears
-        "subj string, pred string, obj string",
-    )
-    rows = {(r["pred"], r["side"]): r
-            for r in schema_drift(old, new, labels).collect()}
-    ps = rows[("p", "s")]
-    assert ps["status"] == "both"
-    assert ps["old_entropy_x1e6"] == 0 and ps["new_entropy_x1e6"] > 0
-    assert ps["d_entropy_x1e6"] == ps["new_entropy_x1e6"]
-    assert ps["top_changed"] is False  # T1 still dominant (tie -> T1)
-    g = rows[("gone", "s")]
-    assert g["status"] == "old_only" and g["new_entropy_x1e6"] == -1
-    assert g["new_top"] == "" and g["d_entropy_x1e6"] == 0
-    f = rows[("fresh", "s")]
-    assert f["status"] == "new_only" and f["old_entropy_x1e6"] == -1
-    # drift numbers agree with profiling each snapshot independently
-    new_prof = {(r["pred"], r["side"]): r["entropy_x1e6"]
-                for r in predicate_schema(new, labels).collect()}
-    assert ps["new_entropy_x1e6"] == new_prof[("p", "s")]
-
-
-def test_metapath_hand_computed_and_junction_cap(spark):
-    from kgist_spark.operators.graph import metapath_topk
-
-    triples = spark.createDataFrame(
-        # customer c1 <- orders o1,o2; c2 <- o3
-        [("o1", "placed_by", "c1"), ("o2", "placed_by", "c1"),
-         ("o3", "placed_by", "c2"),
-         # o1 -> p1, p2; o2 -> p1; o3 -> p1
-         ("o1", "contains_part", "p1"), ("o1", "contains_part", "p2"),
-         ("o2", "contains_part", "p1"), ("o3", "contains_part", "p1"),
-         # p1 -> s1; p2 -> s1, s2
-         ("p1", "supplied_by", "s1"), ("p2", "supplied_by", "s1"),
-         ("p2", "supplied_by", "s2")],
-        "subj string, pred string, obj string",
-    )
-    path = [("placed_by", "rev"), ("contains_part", "fwd"),
-            ("supplied_by", "fwd")]
-    rows = {(r["start"], r["end"]): r["n_paths"]
-            for r in metapath_topk(triples, path, k=10).collect()}
-    # c1->s1: o1p1, o1p2, o2p1 = 3; c1->s2: o1p2 = 1; c2->s1: o3p1 = 1
-    assert rows == {("c1", "s1"): 3, ("c1", "s2"): 1, ("c2", "s1"): 1}
-    # junction cap: capping order out-degree at 1 drops o1 (degree 2)
-    capped = {(r["start"], r["end"]): r["n_paths"]
-              for r in metapath_topk(triples, path, k=10,
-                                     max_junction_deg=1).collect()}
-    assert capped == {("c1", "s1"): 1, ("c2", "s1"): 1}
