@@ -4,9 +4,9 @@
 ``queries``/``oracle_sql`` expose the operator inventory over the testdata
 tables — the KG pipeline's stages (candidate generation, MDL model fit and
 refinement, anomaly ranking, near-dup blocking, connected components, the
-schema report and its drift, snapshot churn, meta-path counts) plus the dedup, text, sampling, sketch and
-curation operators (see ``kgist_spark/plans/testdata_queries.py``), each
-checked against its DuckDB oracle SQL by the driver at sf0.01.
+schema report) plus the dedup, text, DSIR, sketch and curation operators
+(see ``kgist_spark/plans/testdata_queries.py``), each checked against its
+DuckDB oracle SQL by the driver at sf0.01.
 """
 
 from __future__ import annotations

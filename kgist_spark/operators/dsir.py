@@ -14,7 +14,7 @@ top-weight tail (the paper Gumbel-resamples; the engine contract here is
 deterministic, so downstream selection ranks by the integer weight with
 doc_id ties — same effect, replayable).
 
-Engine discipline (shared with ``operators/lm.py`` / ``operators/sampling.py``):
+Engine discipline:
 
 * **Cross-engine bucket hash**: ``int(md5(gram)[:8], 16) % n_buckets`` —
   Spark's ``conv(substring(md5(g),1,8),16,10)`` and DuckDB's

@@ -574,51 +574,6 @@ def q_events_hourly(spark, sf_dir):
     )
 
 
-_MIX_RATES = {"en": 0.25, "zh": 1.0, "es": 0.5}
-_MIX_DEFAULT = 0.1
-_MIX_SALT = "mix-v1"
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic hash-gated stratified sample of documents (per-lang
-    mixing rates).  Retry-safe and engine-reproducible: the keep decision
-    is md5(salt||doc_id)'s 32-bit hex prefix against a per-stratum
-    threshold literal — one scan, no shuffle, no RNG state."""
-    from kgist_spark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return stratified_sample(
-        docs, "doc_id", "lang", _MIX_RATES,
-        default_rate=_MIX_DEFAULT, salt=_MIX_SALT,
-    ).select("doc_id", "lang", "source", "n_chars")
-
-
-def q_sample_mixture(spark, sf_dir):
-    """Post-sampling mixture audit: rows + chars per language stratum."""
-    from kgist_spark.operators.sampling import mixture_report, stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = stratified_sample(
-        docs, "doc_id", "lang", _MIX_RATES,
-        default_rate=_MIX_DEFAULT, salt=_MIX_SALT,
-    )
-    return mixture_report(kept, "lang", weight_col="n_chars")
-
-
-def _mix_gate_sql() -> str:
-    """The sampling gate as DuckDB SQL — thresholds come from the SAME
-    rate_threshold() the Spark operator uses, so the two can never drift."""
-    from kgist_spark.operators.sampling import rate_threshold
-
-    whens = " ".join(
-        f"WHEN '{s}' THEN '{rate_threshold(r)}'"
-        for s, r in sorted(_MIX_RATES.items())
-    )
-    case = f"CASE lang {whens} ELSE '{rate_threshold(_MIX_DEFAULT)}' END"
-    prefix = f"substr(md5('{_MIX_SALT}' || CAST(doc_id AS VARCHAR)), 1, 8)"
-    return f"{prefix} < {case}"
-
-
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: flag corpus documents (source != src0)
     sharing any distinct word 5-gram with the src0 'eval set'.  Benchmark
@@ -631,18 +586,6 @@ def q_decontaminate(spark, sf_dir):
         docs.where(F.col("source") != "src0"),
         docs.where(F.col("source") == "src0"),
         n=5,
-    )
-
-
-def q_domain_cap(spark, sf_dir):
-    """Per-source document cap (RefinedWeb-style anti-domination guard):
-    keep at most 5 docs per source, ranked by a deterministic md5 of the
-    doc key — partitioning/retry/engine-independent."""
-    from kgist_spark.operators.sampling import domain_cap
-
-    docs = _t(spark, sf_dir, "documents")
-    return domain_cap(docs, "doc_id", "source", cap=5, salt=_MIX_SALT).select(
-        "doc_id", "source", "rk"
     )
 
 
@@ -711,19 +654,6 @@ def _pii_enriched_docs(spark, sf_dir):
         "text",
         F.when(F.col("doc_id") % 3 == 0, injected).otherwise(F.col("text")),
     )
-
-
-def q_corpus_percentiles(spark, sf_dir):
-    """Per-language document-length distribution report: exact interpolated
-    percentiles computed scale-safely (value histogram + cumulative window
-    — never a per-group buffer of raw values, unlike Spark's built-in
-    exact percentile aggregate); the oracle is DuckDB's native
-    quantile_cont, whose interpolation the histogram walk reproduces."""
-    from kgist_spark.operators.sampling import distribution_report
-
-    return distribution_report(
-        _t(spark, sf_dir, "documents"), "lang", "n_chars"
-    ).withColumnRenamed("stratum", "lang")
 
 
 def q_dsir_weights(spark, sf_dir):
@@ -934,23 +864,6 @@ def q_dup_spans(spark, sf_dir):
     return dup_spans(_t(spark, sf_dir, "documents"), n=5, min_docs=2)
 
 
-#: priority-sample size (k largest priorities; the (k+1)-th is the
-#: Horvitz-Thompson threshold)
-_PSAMPLE_K = 200
-
-
-def q_priority_sample(spark, sf_dir):
-    """Deterministic priority sampling (Duffield-Lund-Thorup): k documents
-    weighted by n_chars with bit-replayable integer priorities and
-    unbiased subset-sum `est_weight` contributions."""
-    from kgist_spark.operators.sampling import priority_sample
-
-    return priority_sample(
-        _t(spark, sf_dir, "documents"), k=_PSAMPLE_K,
-        weight_col="n_chars", key_col="doc_id",
-    )
-
-
 def q_containment_pairs(spark, sf_dir):
     """Shingle containment pairs (|A∩B| / min sizes) — the asymmetric
     quote/boilerplate signal Jaccard misses; exact verification over full
@@ -1013,17 +926,6 @@ def q_kg_violations(spark, sf_dir):
     return schema_violations(
         perturbed_triples(spark, sf_dir), derived_labels(spark, sf_dir)
     )
-
-
-def q_hash_split(spark, sf_dir):
-    """Deterministic disjoint-and-complete train/val/test split: each doc
-    assigned by its md5-interval — stable under repartitioning and
-    incremental corpus growth, exactly disjoint (one hash space
-    partitioned, not independent per-split draws)."""
-    from kgist_spark.operators.sampling import hash_split
-
-    return hash_split(_t(spark, sf_dir, "documents"), "doc_id",
-                      salt=_MIX_SALT)
 
 
 def q_postings(spark, sf_dir):
@@ -1141,52 +1043,6 @@ def q_editdist_pairs(spark, sf_dir):
     from kgist_spark.operators.dedup import editdist_pairs
 
     return editdist_pairs(_t(spark, sf_dir, "documents"))
-
-
-#: mixture spec for the plan query: over-weight src0 so a deficit
-#: surfaces (rate caps at 1.0, shortfall reported), leave one source
-#: unweighted (rate 0, listed)
-_MIX_WEIGHTS = [("src0", 500_000), ("src1", 300_000), ("src2", 100_000)]
-_MIX_BUDGET = 200_000
-
-
-def q_mixture_plan(spark, sf_dir):
-    """Training-mixture planning table: per-source sampling rates from a
-    weight spec + token budget — truncating integer arithmetic, deficit
-    reported instead of silent upsampling (epoch policy is the
-    caller's)."""
-    from kgist_spark.operators.sampling import mixture_plan
-
-    return mixture_plan(_t(spark, sf_dir, "documents"), _MIX_WEIGHTS,
-                        _MIX_BUDGET)
-
-
-def q_split_leakage(spark, sf_dir):
-    """Cross-split near-dup leakage audit — THE classic contamination
-    check a random split misses: near-duplicate pairs whose members land
-    in different train/val/test splits leak evaluation data into
-    training; this table counts pairs per (ordered) split pair, so the
-    off-diagonal rows are the leak."""
-    from kgist_spark.operators.dedup import minhash_neardup_pairs
-    from kgist_spark.operators.sampling import hash_split
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_neardup_pairs(docs, threshold=0.4).select("a", "b")
-    splits = hash_split(docs, "doc_id", salt=_MIX_SALT)
-    j = (
-        pairs.join(splits.select(F.col("doc_id").alias("a"),
-                                 F.col("split").alias("sa")), "a")
-        .join(splits.select(F.col("doc_id").alias("b"),
-                            F.col("split").alias("sb")), "b")
-    )
-    return (
-        j.select(
-            F.least("sa", "sb").alias("split_a"),
-            F.greatest("sa", "sb").alias("split_b"),
-        )
-        .groupBy("split_a", "split_b")
-        .agg(F.count("*").alias("n_pairs"))
-    )
 
 
 def q_tfidf_clusters(spark, sf_dir):
@@ -1341,17 +1197,13 @@ QUERIES = {
     "lang_id": q_lang_id,
     "doc_fingerprint": q_doc_fingerprint,
     "dedup_embedding": q_dedup_embedding,
-    "stratified_sample": q_stratified_sample,
-    "sample_mixture": q_sample_mixture,
     "decontaminate": q_decontaminate,
     "repetition": q_repetition,
-    "domain_cap": q_domain_cap,
     "kg_components": q_kg_components,
     "bm25_topk": q_bm25_topk,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
     "dsir_weights": q_dsir_weights,
-    "corpus_percentiles": q_corpus_percentiles,
     "curate": q_curate,
     "curate_summary": q_curate_summary,
     "embedding_kmeans": q_embedding_kmeans,
@@ -1366,12 +1218,10 @@ QUERIES = {
     "cms_user_counts": q_cms_user_counts,
     "bloom_decontaminate": q_bloom_decontaminate,
     "dup_spans": q_dup_spans,
-    "priority_sample": q_priority_sample,
     "containment_pairs": q_containment_pairs,
     "kg_schema": q_kg_schema,
     "winnow_fp": q_winnow_fp,
     "kg_violations": q_kg_violations,
-    "hash_split": q_hash_split,
     "postings": q_postings,
     "lang_confusion": q_lang_confusion,
     "ann_recall": q_ann_recall,
@@ -1381,8 +1231,6 @@ QUERIES = {
     "hll_error": q_hll_error,
     "tfidf_pairs": q_tfidf_pairs,
     "editdist_pairs": q_editdist_pairs,
-    "mixture_plan": q_mixture_plan,
-    "split_leakage": q_split_leakage,
     "tfidf_clusters": q_tfidf_clusters,
     "containment_keep": q_containment_keep,
     "excise_spans": q_excise_spans,
@@ -1824,15 +1672,6 @@ ORACLE_SQL["decontaminate"] = r"""
     LEFT JOIN stats s USING (doc_id)
 """
 
-ORACLE_SQL["stratified_sample"] = f"""
-    SELECT doc_id, lang, source, n_chars FROM documents WHERE {_mix_gate_sql()}
-"""
-
-ORACLE_SQL["sample_mixture"] = f"""
-    SELECT lang, COUNT(*) AS n_rows, CAST(SUM(n_chars) AS BIGINT) AS total_weight
-    FROM documents WHERE {_mix_gate_sql()} GROUP BY lang
-"""
-
 # hyperplane-LSH ANN: the seeded planes are literal constants shared with the
 # Spark implementation (same RandomState stream), so the oracle replays the
 # signature computation, the Hamming-ball gate, and the exact rescore
@@ -2004,17 +1843,6 @@ def _bm25_oracle() -> str:
 
 ORACLE_SQL["bm25_topk"] = _bm25_oracle()
 
-ORACLE_SQL["domain_cap"] = f"""
-    SELECT doc_id, source, rk FROM (
-        SELECT doc_id, source,
-               ROW_NUMBER() OVER (
-                   PARTITION BY source
-                   ORDER BY md5('{_MIX_SALT}' || CAST(doc_id AS VARCHAR)), doc_id
-               ) AS rk
-        FROM documents
-    ) WHERE rk <= 5
-"""
-
 def _pii_oracle() -> str:
     """Replays q_pii_scrub: the SAME injection expression, then the SAME
     ordered count-and-replace chain, pattern literals imported from the
@@ -2051,20 +1879,6 @@ def _pii_oracle() -> str:
 
 ORACLE_SQL["pii_scrub"] = _pii_oracle()
 
-
-ORACLE_SQL["corpus_percentiles"] = """
-    -- WHERE mirrors the operator's NULL semantics exactly: NULL values are
-    -- excluded from n_rows AND an all-NULL stratum disappears (quantile_cont
-    -- alone ignores NULLs but COUNT(*)/GROUP BY would not — a half-applied
-    -- filter de-syncs on nullable columns)
-    SELECT lang,
-           COUNT(*) AS n_rows,
-           round(quantile_cont(n_chars, 0.25), 5) AS p25,
-           round(quantile_cont(n_chars, 0.50), 5) AS p50,
-           round(quantile_cont(n_chars, 0.75), 5) AS p75,
-           round(quantile_cont(n_chars, 0.95), 5) AS p95
-    FROM documents WHERE n_chars IS NOT NULL GROUP BY lang
-"""
 
 # embedding_ann_q8: the oracle quantizes the query AND every corpus vector
 # with the identical clamp-round expression and sums the SAME integer
@@ -2706,31 +2520,6 @@ ORACLE_SQL["dup_spans"] = r"""
     FROM isl GROUP BY doc_id, island
 """
 
-# priority_sample: same 40-bit md5 randomizer, truncating integer
-# priority, total (priority DESC, doc_id) order, (k+1)-th threshold and
-# greatest(weight, tau) estimate — the whole scheme replays bit-for-bit
-ORACLE_SQL["priority_sample"] = f"""
-    WITH pri AS (
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
-               CAST(n_chars AS BIGINT) * {1 << 40}
-                 // (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 10)
-                          AS BIGINT) + 1) AS priority
-        FROM documents
-    ),
-    ranked AS (
-        SELECT doc_id, weight, priority,
-               row_number() OVER (ORDER BY priority DESC, doc_id) AS rn
-        FROM pri
-    ),
-    tau AS (
-        SELECT MAX(priority) AS tau FROM ranked WHERE rn = {_PSAMPLE_K + 1}
-    )
-    SELECT doc_id, weight, priority,
-           CAST(greatest(weight, COALESCE(tau, 0)) AS BIGINT) AS est_weight
-    FROM ranked CROSS JOIN tau WHERE rn <= {_PSAMPLE_K}
-"""
-
-
 def _bloom_decontaminate_oracle() -> str:
     from kgist_spark.operators.sketch import bloom_decontaminate_oracle_sql
 
@@ -2781,17 +2570,6 @@ def _kg_violations_oracle() -> str:
 ORACLE_SQL["kg_violations"] = _kg_violations_oracle()
 
 
-def _hash_split_oracle() -> str:
-    from kgist_spark.operators.sampling import hash_split_oracle_sql
-
-    return hash_split_oracle_sql("documents", "doc_id", salt=_MIX_SALT)
-
-
-# hash_split: identical md5 prefix + cumulative string thresholds
-# (thresholds generated by the SAME rate_threshold the operator uses)
-ORACLE_SQL["hash_split"] = _hash_split_oracle()
-
-
 def _postings_oracle() -> str:
     from kgist_spark.operators.search import postings_oracle_sql
 
@@ -2823,40 +2601,6 @@ def _editdist_pairs_oracle() -> str:
 # editdist_pairs: identical shared-shingle candidates + length cap +
 # integer Levenshtein (a builtin in both engines) + truncating ratio
 ORACLE_SQL["editdist_pairs"] = _editdist_pairs_oracle()
-
-
-def _mixture_plan_oracle() -> str:
-    from kgist_spark.operators.sampling import mixture_plan_oracle_sql
-
-    return mixture_plan_oracle_sql(_MIX_WEIGHTS, _MIX_BUDGET)
-
-
-# mixture_plan: identical token rollup + truncating rate/deficit
-# arithmetic; the weight spec literals are shared by construction
-ORACLE_SQL["mixture_plan"] = _mixture_plan_oracle()
-
-
-def _split_leakage_oracle() -> str:
-    from kgist_spark.operators.sampling import hash_split_oracle_sql
-
-    split_sql = hash_split_oracle_sql("documents", "doc_id", salt=_MIX_SALT)
-    pairs_sql = ORACLE_SQL["minhash_neardup"]
-    return f"""
-    WITH pairs AS ({pairs_sql}),
-    splits AS ({split_sql})
-    SELECT least(sa.split, sb.split) AS split_a,
-           greatest(sa.split, sb.split) AS split_b,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM pairs p
-    JOIN splits sa ON p.a = sa.doc_id
-    JOIN splits sb ON p.b = sb.doc_id
-    GROUP BY least(sa.split, sb.split), greatest(sa.split, sb.split)
-    """
-
-
-# split_leakage: the two oracled components (exact near-dup pairs, md5
-# -interval splits) composed; off-diagonal rows are the contamination
-ORACLE_SQL["split_leakage"] = _split_leakage_oracle()
 
 
 def _tfidf_clusters_oracle() -> str:

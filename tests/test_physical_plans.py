@@ -172,26 +172,6 @@ def test_ann_candidate_joins_are_not_force_broadcast(spark):
         assert df.count() > 0
 
 
-def test_priority_sample_single_corpus_pass(spark):
-    """priority_sample's k+1 survivors feed TWO consumers (the sample rows
-    and the tau threshold); without the pin each branch re-ran the whole
-    corpus top-k scan.  The returned plan must read the checkpointed
-    survivor set — no source scan, no corpus-wide Exchange — and the only
-    window runs over <= k+1 pinned rows."""
-    from kgist_spark.operators.sampling import priority_sample
-
-    docs = spark.createDataFrame(
-        [(i, (i * 17) % 300 + 1) for i in range(500)],
-        "doc_id long, n_chars long",
-    )
-    out = priority_sample(docs, k=20, weight_col="n_chars",
-                          key_col="doc_id")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan or "LogicalRDD" in plan
-    assert "Scan parquet" not in plan and "LocalTableScan" not in plan
-    assert out.count() == 20
-
-
 def test_winnow_selection_stays_in_row(spark):
     """The winnowing density cut happens BEFORE the explode: no generator
     over unselected grams, no Python, and the fingerprint explode is the
