@@ -27,11 +27,6 @@ from kgist_spark.oracle.anomaly import AnomalyScorer
 from kgist_spark.oracle.engine import SummaryModel
 
 
-def _destring(index, value):
-    """Map an idified node/pred back to its source string (identity if raw)."""
-    return value
-
-
 def model_blame_tables(spark: SparkSession, model: SummaryModel):
     """Build the broadcastable model-side tables, in the source (string)
     vocabulary regardless of idify.  Returns (roots, preds, heads, stats)."""

@@ -115,8 +115,7 @@ def star_components(edges: DataFrame, src: str = "a", dst: str = "b",
 
 
 def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
-                         max_iter: int = 50, checkpoint_every: int = 1,
-                         driver_threshold: int = 200_000,
+                         max_iter: int = 50, driver_threshold: int = 200_000,
                          switch_after: int = 8) -> DataFrame:
     """``(node, component)`` where component = min node id in the component
     (a total order over the node id type is assumed: string or numeric).
@@ -194,9 +193,7 @@ def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
                 comp.unionByName(neighbor_comp)
                 .groupBy("node")
                 .agg(F.min("component").alias("component"))
-            )
-            if (i + 1) % checkpoint_every == 0:
-                new_comp = new_comp.localCheckpoint()
+            ).localCheckpoint()
             changed = (
                 new_comp.alias("n")
                 .join(comp.alias("o"), "node")
