@@ -35,10 +35,19 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{_DRIVER_MEM_CAP_MB}m"
 
 
+def local_cpus() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on (what ``nproc`` reports), so a default session
+    starts no more task threads than the host gives it."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)
     builder = (

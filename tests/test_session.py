@@ -1,6 +1,9 @@
-"""The session's default driver heap fits the host it runs on (no JVM)."""
+"""The session's default driver heap and core count fit the host it runs
+on (no JVM)."""
 
-from kgist_spark.session import driver_memory
+import os
+
+from kgist_spark.session import driver_memory, local_cpus
 
 
 def _mb(value: str) -> int:
@@ -31,3 +34,13 @@ def test_default_is_half_ram_capped_at_16g(monkeypatch, tmp_path):
 def test_env_override_wins(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     assert driver_memory(_meminfo(tmp_path, 4 * 1024 * 1024)) == "3g"
+
+
+def test_default_cpus_fit_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert 0 < local_cpus() <= os.cpu_count()
+
+
+def test_cpus_env_override_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
