@@ -37,13 +37,12 @@ def predicate_schema(triples: DataFrame, labels: DataFrame) -> DataFrame:
 
     Determinism: entropy terms are fixed-point ints BEFORE summation
     (``round(1e6 * (c * log2(n/c)) / n)`` — ONE fixed-order float
-    expression per (pred, side, label) row, the event_drift / lm_score
-    discipline: the float runs once per vocabulary row, never per triple,
-    and the cross-engine surface is a single log2+mul+div+round chain on
-    exact-integer operands), so the per-slot sum is an order-free integer
-    at any parallelism.  Dominance ties break to the lexicographically
-    smallest label via an explicit (c DESC, label) row_number — replayed
-    identically by the oracle.
+    expression per (pred, side, label) row: the float runs once per
+    vocabulary row, never per triple, and the cross-engine surface is a
+    single log2+mul+div+round chain on exact-integer operands), so the
+    per-slot sum is an order-free integer at any parallelism.  Dominance
+    ties break to the lexicographically smallest label via an explicit
+    (c DESC, label) row_number — replayed identically by the oracle.
 
     100 TB shape: the ONLY corpus-scale work is the explode (×2 rows) and
     the node-key join against ``labels`` (shuffle join, AQE-sized — labels

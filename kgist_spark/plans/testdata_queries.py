@@ -2539,8 +2539,7 @@ def _kg_schema_oracle() -> str:
 
 # kg_schema: identical (pred, side, label) pair construction, identical
 # per-row fixed-point entropy term (ONE log2+mul+div+round chain on exact
-# integer operands — the lm_score float discipline), identical
-# (c DESC, label) dominance tie-break
+# integer operands), identical (c DESC, label) dominance tie-break
 ORACLE_SQL["kg_schema"] = _kg_schema_oracle()
 
 
