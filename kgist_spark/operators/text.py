@@ -294,10 +294,10 @@ def pmi_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     with N = total token occurrences, P = total in-window pairs.  The float
     enters exactly one per-row expression with a FIXED evaluation order
     (same literal structure in the SQL oracle) and is immediately rounded
-    to an int (× ``pmi_scale``) — the ``dsir`` discipline, so rows hash
-    identically across engines.  Output: ``(a, b, n_pair, pmi_x1e6)``,
-    ordered by (pmi desc, a, b), limited to ``k`` (deterministic: the
-    tiebreak is total on distinct pairs).
+    to an int (× ``pmi_scale``), so rows hash identically across engines.
+    Output: ``(a, b, n_pair, pmi_x1e6)``, ordered by (pmi desc, a, b),
+    limited to ``k`` (deterministic: the tiebreak is total on distinct
+    pairs).
 
     100 TB shape: pair generation is IN-ROW (nested ``transform`` over the
     token array — O(tokens × window) values, no self-join, no Python);
