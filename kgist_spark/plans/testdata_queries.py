@@ -734,69 +734,6 @@ def q_curate_summary(spark, sf_dir):
     )
 
 
-#: one k-means fit per (sf_dir, k, n_iter) shared by the four semantic-dedup
-#: queries — the production shape (a pipeline fits once and feeds every
-#: downstream consumer), same memo pattern as ``_fit_model_over``.  The
-#: cached value is the plain offset-space centroid list: engine- and
-#: session-independent integers, so reuse is safe across SparkSessions.
-_KMEANS_CENTS_CACHE: dict = {}
-
-
-def _kmeans_cents(spark, sf_dir, k=8, n_iter=3):
-    from kgist_spark.operators.kmeans import kmeans_fit
-
-    key = (os.path.abspath(sf_dir), k, n_iter)
-    if key not in _KMEANS_CENTS_CACHE:
-        _, cents = kmeans_fit(_t(spark, sf_dir, "embeddings"), k=k, n_iter=n_iter)
-        _KMEANS_CENTS_CACHE[key] = cents
-    return _KMEANS_CENTS_CACHE[key]
-
-
-def q_embedding_kmeans(spark, sf_dir):
-    """Fixed-point Lloyd k-means cell assignment over the embeddings table
-    (all-integer arithmetic — bit-identical at any parallelism and
-    replayed by iteration-unrolled DuckDB CTEs)."""
-    from kgist_spark.operators.kmeans import kmeans_fit
-
-    assigned, _ = kmeans_fit(_t(spark, sf_dir, "embeddings"), k=8, n_iter=3,
-                             centroids=_kmeans_cents(spark, sf_dir))
-    return assigned
-
-
-def q_semdedup_pairs(spark, sf_dir):
-    """SemDeDup: exact-cosine near-dup pairs restricted to k-means cells
-    (the blocking structure that keeps per-cell work O((n/k)²))."""
-    from kgist_spark.operators.kmeans import semdedup_pairs
-
-    return semdedup_pairs(_t(spark, sf_dir, "embeddings"),
-                          k=8, n_iter=3, threshold=0.4,
-                          centroids=_kmeans_cents(spark, sf_dir))
-
-
-def q_semdedup_clusters(spark, sf_dir):
-    """Semantic-dedup DECISION table: semdedup pairs closed into clusters
-    by distributed connected components; every vector maps to its
-    cluster's min-id representative (keep_id) with an is_dup flag — the
-    SemDeDup analogue of ``neardup_clusters``."""
-    from kgist_spark.operators.kmeans import semdedup_keep_table
-
-    return semdedup_keep_table(_t(spark, sf_dir, "embeddings"),
-                               k=8, n_iter=3, threshold=0.4,
-                               centroids=_kmeans_cents(spark, sf_dir))
-
-
-def q_semdedup_keep_best(spark, sf_dir):
-    """Keep-BEST semantic dedup: each duplicate cluster keeps the member
-    farthest from its cell centroid (SemDeDup's lowest-centroid-similarity
-    keeper rule), computed in the same integer offset-space metric the
-    assignment uses."""
-    from kgist_spark.operators.kmeans import semdedup_keep_best
-
-    return semdedup_keep_best(_t(spark, sf_dir, "embeddings"),
-                              k=8, n_iter=3, threshold=0.4,
-                              centroids=_kmeans_cents(spark, sf_dir))
-
-
 def q_events_hll(spark, sf_dir):
     """HyperLogLog distinct users per event type — the md5-register sketch
     whose registers AND estimate replay bit-for-bit in DuckDB (Spark's own
@@ -1190,10 +1127,6 @@ QUERIES = {
     "line_dedup": q_line_dedup,
     "curate": q_curate,
     "curate_summary": q_curate_summary,
-    "embedding_kmeans": q_embedding_kmeans,
-    "semdedup_pairs": q_semdedup_pairs,
-    "semdedup_clusters": q_semdedup_clusters,
-    "semdedup_keep_best": q_semdedup_keep_best,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
     "embedding_ann_q8": q_embedding_ann_q8,
@@ -2127,144 +2060,6 @@ def model_rules_oracle_sql(kind: str, sf_dir: str | None = None) -> str:
     FROM (VALUES {values}) AS t(rule, n_cas, n_edges)
     WHERE (SELECT ok FROM sf_guard) = 1
 """
-
-
-def _kmeans_cte_chain(k: int = 8, n_iter: int = 3, dim: int = 64) -> str:
-    """The fixed-point k-means iterations as chained CTEs ending in ``af``
-    (the final assignment) — every constant imported from
-    :mod:`kgist_spark.operators.kmeans` so the engines cannot drift.
-    Positive offset space makes DuckDB ``//`` equal Spark ``div``."""
-    from kgist_spark.operators.kmeans import KM_OFFSET, KM_SCALE
-
-    def assign(name, cents):
-        return f"""{name} AS (
-        SELECT vec_id, cid AS cluster FROM (
-            SELECT x.vec_id, c.cid,
-                   row_number() OVER (PARTITION BY x.vec_id ORDER BY
-                       list_sum([(x.e[j] - c.c[j]) * (x.e[j] - c.c[j])
-                                 FOR j IN generate_series(1, {dim})]),
-                       c.cid) AS rn
-            FROM e x CROSS JOIN {cents} c
-        ) WHERE rn = 1)"""
-
-    ctes = [
-        f"""e AS (
-        SELECT vec_id,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(round(x * {KM_SCALE}.0) AS BIGINT) + {KM_OFFSET}) AS e
-        FROM embeddings)""",
-        f"""c0 AS (
-        -- hash-spread seeding in lockstep with kmeans_fit: k smallest
-        -- md5(id), ties by id (NOT first-k ids — see the operator
-        -- docstring on degenerate front-of-table corpora)
-        SELECT CAST(rn - 1 AS INT) AS cid, e AS c FROM (
-            SELECT row_number() OVER (
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn, e
-            FROM e
-        ) WHERE rn <= {k})""",
-    ]
-    for i in range(1, n_iter + 1):
-        ctes.append(assign(f"a{i}", f"c{i - 1}"))
-        ctes.append(f"""c{i} AS (
-        SELECT p.cid, COALESCE(m.c, p.c) AS c
-        FROM c{i - 1} p LEFT JOIN (
-            SELECT cluster AS cid, list(m ORDER BY d) AS c FROM (
-                SELECT cluster, d, CAST(SUM(v) // COUNT(*) AS BIGINT) AS m
-                FROM (
-                    SELECT a.cluster, unnest(e.e) AS v,
-                           generate_subscripts(e.e, 1) AS d
-                    FROM a{i} a JOIN e USING (vec_id)
-                ) GROUP BY cluster, d
-            ) GROUP BY cluster
-        ) m ON p.cid = m.cid)""")
-    ctes.append(assign("af", f"c{n_iter}"))
-    return "WITH " + ",\n".join(ctes)
-
-
-ORACLE_SQL["embedding_kmeans"] = (
-    _kmeans_cte_chain() + "\nSELECT vec_id, cluster FROM af"
-)
-
-#: the in-cell exact-cosine pair CTE shared by the semdedup oracles — the
-#: same select the ``semdedup_pairs`` query returns directly
-_SEMDEDUP_PAIRS_SELECT = """
-    SELECT a, b, cluster, cosine FROM (
-        SELECT al.vec_id AS a, ar.vec_id AS b, al.cluster,
-               round(list_dot_product(l.embedding::DOUBLE[], r.embedding::DOUBLE[])
-                     / (sqrt(list_dot_product(l.embedding::DOUBLE[], l.embedding::DOUBLE[]))
-                        * sqrt(list_dot_product(r.embedding::DOUBLE[], r.embedding::DOUBLE[]))),
-                     5) AS cosine
-        FROM af al
-        JOIN af ar ON al.cluster = ar.cluster AND al.vec_id < ar.vec_id
-        JOIN embeddings l ON l.vec_id = al.vec_id
-        JOIN embeddings r ON r.vec_id = ar.vec_id
-    ) WHERE cosine >= 0.4
-"""
-
-ORACLE_SQL["semdedup_pairs"] = _kmeans_cte_chain() + _SEMDEDUP_PAIRS_SELECT
-
-# semdedup decision table: the pair CTE closed by the SAME recursive
-# reachability closure the neardup_clusters oracle uses (min reachable id
-# is the cluster representative)
-ORACLE_SQL["semdedup_clusters"] = (
-    _kmeans_cte_chain().replace("WITH ", "WITH RECURSIVE ", 1)
-    + f""",
-    pr AS ({_SEMDEDUP_PAIRS_SELECT}),
-    und AS (SELECT a AS u, b AS v FROM pr UNION SELECT b AS u, a AS v FROM pr),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v != r.u
-    ),
-    comp AS (SELECT u AS vec_id, least(u, min(v)) AS keep_id FROM reach GROUP BY u)
-    SELECT e.vec_id,
-           COALESCE(c.keep_id, e.vec_id) AS keep_id,
-           COALESCE(c.keep_id, e.vec_id) != e.vec_id AS is_dup
-    FROM embeddings e LEFT JOIN comp c USING (vec_id)
-"""
-)
-
-# keep-BEST semantic dedup: same pair closure, then each component keeps
-# its member FARTHEST from the final (c3) cell centroid — the identical
-# integer offset-space distance the assignment CTE computes, ties to the
-# smaller id (SemDeDup's lowest-centroid-similarity keeper)
-ORACLE_SQL["semdedup_keep_best"] = (
-    _kmeans_cte_chain().replace("WITH ", "WITH RECURSIVE ", 1)
-    + f""",
-    pr AS ({_SEMDEDUP_PAIRS_SELECT}),
-    und AS (SELECT a AS u, b AS v FROM pr UNION SELECT b AS u, a AS v FROM pr),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v != r.u
-    ),
-    comp AS (SELECT u AS vec_id, least(u, min(v)) AS comp FROM reach GROUP BY u),
-    members AS (
-        SELECT m.vec_id, m.comp,
-               list_sum([(x.e[j] - c.c[j]) * (x.e[j] - c.c[j])
-                         FOR j IN generate_series(1, 64)]) AS cdist
-        FROM comp m
-        JOIN af a ON a.vec_id = m.vec_id
-        JOIN e x ON x.vec_id = m.vec_id
-        JOIN c3 c ON a.cluster = c.cid
-    ),
-    keeper AS (
-        SELECT comp, vec_id AS best_id FROM (
-            SELECT comp, vec_id,
-                   row_number() OVER (
-                       PARTITION BY comp ORDER BY cdist DESC, vec_id ASC
-                   ) AS rn
-            FROM members
-        ) WHERE rn = 1
-    )
-    SELECT emb.vec_id,
-           COALESCE(k.best_id, emb.vec_id) AS keep_id,
-           COALESCE(k.best_id, emb.vec_id) != emb.vec_id AS is_dup
-    FROM embeddings emb
-    LEFT JOIN comp c ON c.vec_id = emb.vec_id
-    LEFT JOIN keeper k ON k.comp = c.comp
-"""
-)
 
 
 def _curate_oracle(final_select: str) -> str:
