@@ -734,39 +734,6 @@ def q_curate_summary(spark, sf_dir):
     )
 
 
-def q_events_hll(spark, sf_dir):
-    """HyperLogLog distinct users per event type — the md5-register sketch
-    whose registers AND estimate replay bit-for-bit in DuckDB (Spark's own
-    approx_count_distinct hash is engine-private); linear-counting
-    correction from a Python-precomputed table shared by both engines."""
-    from kgist_spark.operators.sketch import hll_distinct
-
-    return hll_distinct(
-        _t(spark, sf_dir, "events"), ["event_type"], "user_id"
-    )
-
-
-def q_cms_user_counts(spark, sf_dir):
-    """Count-min-sketch frequency estimates for the exact top-16 users:
-    the d=4 × w=64 sketch is deliberately narrow so the min-over-rows
-    estimate visibly absorbs collisions (overcount ≥ 0 by construction);
-    both the seeded md5 cell hashes and the integer counters replay
-    bit-for-bit in DuckDB."""
-    from kgist_spark.operators.sketch import cms_build, cms_probe
-
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    exact = ev.groupBy("user_id").agg(F.count("*").alias("n_exact"))
-    probes = exact.orderBy(F.desc("n_exact"), "user_id").limit(16)
-    est = cms_probe(
-        cms_build(ev, "user_id", d=4, w=64),
-        probes.select("user_id"), "user_id", d=4, w=64,
-    )
-    return probes.join(est, "user_id").select(
-        "user_id", "n_exact", "n_cms",
-        (F.col("n_cms") - F.col("n_exact")).alias("overcount"),
-    )
-
-
 def q_tfidf_terms(spark, sf_dir):
     """Per-document keyword extraction: top-3 terms per document by
     integer fixed-point tf-idf (linear rarity weight — log-free so the
@@ -794,23 +761,6 @@ def q_containment_pairs(spark, sf_dir):
 
     return containment_pairs(_t(spark, sf_dir, "documents"),
                              threshold_x1e6=600_000)
-
-
-def q_bloom_decontaminate(spark, sf_dir):
-    """Benchmark decontamination through a Bloom membership sketch: same
-    distinct-5-gram semantics as `decontaminate`, but the executor-resident
-    structure is the FIXED 8,192-word bitmap instead of the benchmark's
-    unbounded gram set — the shape that survives a web-scale benchmark
-    side.  Deterministic false positives replay in the oracle bit-for-bit
-    (`n_maybe_hits` >= the exact path's `n_hits`, never under)."""
-    from kgist_spark.operators.sketch import bloom_ngram_decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    return bloom_ngram_decontaminate(
-        docs.where(F.col("source") != "src0"),
-        docs.where(F.col("source") == "src0"),
-        n=5,
-    )
 
 
 def q_kg_schema(spark, sf_dir):
@@ -917,35 +867,6 @@ def q_corpus_report(spark, sf_dir):
     from kgist_spark.operators.text import corpus_report
 
     return corpus_report(_t(spark, sf_dir, "documents"))
-
-
-def q_hll_error(spark, sf_dir):
-    """Sketch error audit: HLL distinct-user estimates vs the exact
-    counts per event type, with signed absolute and relative error —
-    the honesty check that turns an approximate operator's accuracy
-    claim into a measured, bit-replayable number (the ann_recall
-    pattern applied to cardinality)."""
-    from kgist_spark.operators.sketch import hll_distinct
-
-    ev = _t(spark, sf_dir, "events")
-    hll = hll_distinct(ev, ["event_type"], "user_id").select(
-        "event_type", "n_distinct_hll"
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_exact")
-    )
-    return exact.join(hll, "event_type").select(
-        "event_type",
-        "n_exact",
-        "n_distinct_hll",
-        (F.col("n_distinct_hll") - F.col("n_exact")).cast("long").alias(
-            "err"
-        ),
-        F.expr(
-            "CAST((n_distinct_hll - n_exact) * 1000000 div n_exact"
-            " AS BIGINT)"
-        ).alias("rel_err_x1e6"),
-    )
 
 
 def q_tfidf_pairs(spark, sf_dir):
@@ -1131,9 +1052,6 @@ QUERIES = {
     "token_pmi": q_token_pmi,
     "embedding_ann_q8": q_embedding_ann_q8,
     "tfidf_terms": q_tfidf_terms,
-    "events_hll": q_events_hll,
-    "cms_user_counts": q_cms_user_counts,
-    "bloom_decontaminate": q_bloom_decontaminate,
     "dup_spans": q_dup_spans,
     "containment_pairs": q_containment_pairs,
     "kg_schema": q_kg_schema,
@@ -1145,7 +1063,6 @@ QUERIES = {
     "source_overlap": q_source_overlap,
     "zipf_slope": q_zipf_slope,
     "corpus_report": q_corpus_report,
-    "hll_error": q_hll_error,
     "tfidf_pairs": q_tfidf_pairs,
     "editdist_pairs": q_editdist_pairs,
     "tfidf_clusters": q_tfidf_clusters,
@@ -1641,53 +1558,6 @@ def _tfidf_oracle() -> str:
 # integer fixed-point tf-idf (linear rarity weight — log-free, truncating
 # div), same tokenization and (score DESC, term ASC) per-doc pick
 ORACLE_SQL["tfidf_terms"] = _tfidf_oracle()
-
-
-def _hll_oracle() -> str:
-    from kgist_spark.operators.sketch import hll_oracle_sql
-
-    return hll_oracle_sql(
-        "SELECT event_type, user_id FROM events", ["event_type"], "user_id"
-    )
-
-
-# HyperLogLog sketch: identical md5-derived registers, integer harmonic
-# sum, single shared-literal float division, and the Python-precomputed
-# linear-counting VALUES table — the whole sketch replays bit-for-bit
-ORACLE_SQL["events_hll"] = _hll_oracle()
-
-
-# hll_error: the bit-replayable HLL estimate joined against the exact
-# distinct count; signed + truncating-div relative error.  NOTE Spark's
-# `div` truncates toward zero while DuckDB's // floors — they differ on
-# NEGATIVE operands, so the relative error uses explicit
-# trunc-toward-zero arithmetic on both sides via sign decomposition
-ORACLE_SQL["hll_error"] = f"""
-    WITH hll AS ({_hll_oracle()}),
-    exact AS (
-        SELECT event_type, COUNT(DISTINCT user_id) AS n_exact FROM events
-        GROUP BY event_type
-    )
-    SELECT e.event_type, CAST(e.n_exact AS BIGINT) AS n_exact,
-           h.n_distinct_hll,
-           CAST(h.n_distinct_hll - e.n_exact AS BIGINT) AS err,
-           CAST(CASE WHEN h.n_distinct_hll >= e.n_exact
-                THEN (h.n_distinct_hll - e.n_exact) * 1000000 // e.n_exact
-                ELSE -(((e.n_exact - h.n_distinct_hll) * 1000000)
-                       // e.n_exact) END AS BIGINT) AS rel_err_x1e6
-    FROM exact e JOIN hll h USING (event_type)
-"""
-
-
-def _cms_oracle() -> str:
-    from kgist_spark.operators.sketch import cms_oracle_sql
-
-    return cms_oracle_sql("SELECT user_id FROM events", "user_id", d=4, w=64)
-
-
-# Count-min sketch: identical seeded md5 cell hashes, integer counters,
-# min-over-rows point estimates for the exact top-16 probe set
-ORACLE_SQL["cms_user_counts"] = _cms_oracle()
 
 
 # dup_ngrams: the oracle replays the identical in-row 5-gram windows (md5
@@ -2238,16 +2108,6 @@ ORACLE_SQL["dup_spans"] = r"""
            COUNT(*) AS n_windows
     FROM isl GROUP BY doc_id, island
 """
-
-def _bloom_decontaminate_oracle() -> str:
-    from kgist_spark.operators.sketch import bloom_decontaminate_oracle_sql
-
-    return bloom_decontaminate_oracle_sql(n=5)
-
-
-# bloom_decontaminate: identical seeded bit positions, word packing and
-# all-k-bits test — the replay pins the sketch itself, false positives and all
-ORACLE_SQL["bloom_decontaminate"] = _bloom_decontaminate_oracle()
 
 
 def _kg_schema_oracle() -> str:
