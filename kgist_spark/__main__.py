@@ -78,20 +78,13 @@ def main(argv=None) -> int:
     say = print if args.verbosity > 0 else (lambda *a, **k: None)
 
     if args.spark or args.save_candidates or args.load_candidates:
-        from pyspark.sql import SparkSession
-
         from kgist_spark.plans.summarizer import SparkSummarizer
+        from kgist_spark.session import entry_session
         from kgist_spark.sources.candidates_io import (
             load_candidates, save_candidates)
         from kgist_spark.sources.edgelist import load_labels, load_triples
 
-        spark = (
-            SparkSession.builder.master(
-                os.environ.get("KGIST_SPARK_MASTER", "local[*]")
-            )
-            .config("spark.sql.shuffle.partitions", "32")
-            .getOrCreate()
-        )
+        spark = entry_session("kgist_spark")
         triples = load_triples(spark, edge_path)
         labels = load_labels(spark, labels_path)
         cand = None

@@ -84,3 +84,17 @@ def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def entry_session(app_name: str) -> SparkSession:
+    """The session a standalone entry point (``run_pipeline.py``,
+    ``python -m kgist_spark --spark``) runs on.  Under spark-submit (the
+    launcher exports ``PYSPARK_GATEWAY_PORT``) that is the launcher's
+    session, whose conf (master, memory, executors) applies as given.
+    Otherwise it is :func:`get_spark`, called before anything starts a JVM:
+    ``spark.driver.memory`` and the driver's GC flags only take effect when
+    the JVM is launched, so a session built first and then replaced keeps
+    Spark's 1 GiB default heap."""
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return SparkSession.builder.appName(app_name).getOrCreate()
+    return get_spark(app_name=app_name)

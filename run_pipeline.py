@@ -10,9 +10,9 @@ Cluster:
 Local smoke (no cluster):
     python run_pipeline.py --generate 10000 --out /tmp/kg_out --summarize
 
-The session comes from ``SparkSession.builder.getOrCreate()`` so spark-submit
-conf (master, executors, memory) applies untouched; local runs fall back to
-the engine defaults.
+Under spark-submit the launcher's session is used, so its conf (master,
+executors, memory) applies untouched; a plain ``python run_pipeline.py``
+starts the engine's default session (``kgist_spark.session.get_spark``).
 """
 
 from __future__ import annotations
@@ -73,16 +73,11 @@ def main(argv=None, spark=None):
         ap.error("--checkpoint is the stream checkpoint of --incremental: "
                  "without it the flag would be silently ignored")
 
-    from pyspark.sql import SparkSession
-
     owns_session = spark is None
     if owns_session:
-        spark = SparkSession.builder.appName("kgist-pipeline").getOrCreate()
-        if spark.sparkContext.master.startswith("local"):
-            spark.stop()
-            from kgist_spark.session import get_spark
+        from kgist_spark.session import entry_session
 
-            spark = get_spark(app_name="kgist-pipeline")
+        spark = entry_session("kgist-pipeline")
         spark.sparkContext.setLogLevel("WARN")
 
     if args.compact:

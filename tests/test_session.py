@@ -1,9 +1,16 @@
 """The session's default driver heap and core count fit the host it runs
-on (no JVM)."""
+on (no JVM), and a standalone entry point's driver JVM is launched with
+them."""
 
+import json
 import os
+import subprocess
+import sys
+
+import pytest
 
 from kgist_spark.session import driver_memory, local_cpus
+from tests.conftest import REPO_ROOT
 
 
 def _mb(value: str) -> int:
@@ -44,3 +51,28 @@ def test_default_cpus_fit_the_host(monkeypatch):
 def test_cpus_env_override_wins(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert local_cpus() == 3
+
+
+_PROBE = """
+import json
+from kgist_spark.session import entry_session
+spark = entry_session("kgist-session-probe")
+bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print(json.dumps(list(bean.getInputArguments())))
+spark.stop()
+"""
+
+
+@pytest.mark.spark
+def test_entry_session_jvm_gets_the_sized_heap_and_gc():
+    """``entry_session`` outside spark-submit builds the engine's session
+    before any JVM exists, so the driver heap and collector it sets reach
+    the JVM's command line (a session built first and replaced afterwards
+    keeps Spark's 1 GiB default and G1)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    res = subprocess.run([sys.executable, "-c", _PROBE], cwd=REPO_ROOT, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-4000:]
+    jvm_args = json.loads(res.stdout.strip().splitlines()[-1])
+    assert f"-Xmx{driver_memory()}" in jvm_args
+    assert "-XX:+UseParallelGC" in jvm_args
