@@ -102,6 +102,17 @@ class World:
 
     def __init__(self, seed: int = 42, n_persons: int = 200, n_orgs: int = 80,
                  alias_rate: float = 0.0):
+        # names are drawn until distinct, so a size past the name space
+        # would never finish drawing
+        person_room = len(FIRST_NAMES) * len(LAST_NAMES)
+        org_room = len(ORG_CORES) * len(spec.ORG_SUFFIXES)
+        if alias_rate > 0:
+            org_room *= len(ORG_CORES)
+        if n_persons > person_room or n_orgs > org_room:
+            raise ValueError(
+                f"World holds at most {person_room} persons and {org_room} "
+                f"orgs (alias_rate={alias_rate}); asked for {n_persons} and "
+                f"{n_orgs}")
         rng = np.random.RandomState(seed)
         self.persons: List[tuple] = []
         seen = set()

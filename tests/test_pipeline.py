@@ -57,6 +57,19 @@ def test_spec_decoys_yield_nothing():
 # generator determinism
 # ---------------------------------------------------------------------------
 
+def test_world_rejects_sizes_past_its_name_space():
+    """Names are drawn until distinct, so a world larger than its name
+    space would never finish building; it is refused before any draw."""
+    persons = len(W.FIRST_NAMES) * len(W.LAST_NAMES)
+    orgs = len(W.ORG_CORES) * len(spec.ORG_SUFFIXES)
+    assert len(W.World(SEED, n_persons=persons).persons) == persons
+    assert len(W.World(SEED, n_orgs=orgs + 1, alias_rate=0.5).orgs) == orgs + 1
+    for kw in (dict(n_persons=persons + 1), dict(n_orgs=orgs + 1),
+               dict(n_orgs=orgs * len(W.ORG_CORES) + 1, alias_rate=0.5)):
+        with pytest.raises(ValueError):
+            W.World(SEED, **kw)
+
+
 def test_generator_partitioning_independent(spark, world):
     a = W.generate_pages(spark, 50, seed=SEED, world=world, num_partitions=1).collect()
     b = W.generate_pages(spark, 50, seed=SEED, world=world, num_partitions=7).collect()
