@@ -4,7 +4,7 @@
 ``queries``/``oracle_sql`` expose the operator inventory over the testdata
 tables — the KG pipeline's stages (candidate generation, MDL model fit and
 refinement, anomaly ranking, near-dup blocking, connected components, the
-schema report) plus the dedup, text, search and curation operators
+schema report) plus the dedup, text, DSIR, search and curation operators
 (see ``kgist_spark/plans/testdata_queries.py``), each checked against its
 DuckDB oracle SQL by the driver at sf0.01.
 """
