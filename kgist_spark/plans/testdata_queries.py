@@ -656,21 +656,6 @@ def _pii_enriched_docs(spark, sf_dir):
     )
 
 
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023): hashed unigram+bigram
-    bag log-likelihood ratio of every corpus document under
-    target(src0)-vs-raw add-one bucket distributions; md5-prefix bucket
-    hash and fixed-point log-ratios make the whole computation
-    integer-hash-replayable by the DuckDB oracle."""
-    from kgist_spark.operators.dsir import dsir_weights
-
-    docs = _t(spark, sf_dir, "documents")
-    return dsir_weights(
-        docs.where(F.col("source") != "src0"),
-        docs.where(F.col("source") == "src0"),
-    )
-
-
 def q_embedding_ann_q8(spark, sf_dir):
     """Top-10 by int8-quantized dot product — the memory-bound ANN rung:
     quantization and scoring are EXACT integers, so the oracle replays the
@@ -1061,7 +1046,6 @@ QUERIES = {
     "bm25_topk": q_bm25_topk,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
-    "dsir_weights": q_dsir_weights,
     "curate": q_curate,
     "curate_summary": q_curate_summary,
     "dup_ngrams": q_dup_ngrams,
@@ -1706,66 +1690,6 @@ ORACLE_SQL["embedding_ann_q8"] = """
     FROM embeddings, q
     ORDER BY qdot DESC, vec_id ASC
     LIMIT 10
-"""
-
-# dsir_weights: the oracle replays the identical hashed-gram bucketing
-# (md5-prefix hex -> int, the engine's only cross-engine hash) and the
-# identical fixed-point log-ratio table; per-document sums are integer, so
-# hash equality pins bucketing, smoothing, and weight arithmetic at once.
-# N_BUCKETS is imported from the operator so the two sides cannot diverge.
-from kgist_spark.operators.dsir import N_BUCKETS as _DSIR_B
-
-ORACLE_SQL["dsir_weights"] = rf"""
-    WITH tgt AS (
-        SELECT regexp_split_to_array(trim(text), '\s+') AS t
-        FROM documents WHERE source = 'src0'
-    ),
-    cor AS (
-        SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        FROM documents WHERE source <> 'src0'
-    ),
-    tg AS (
-        SELECT CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT)
-               % {_DSIR_B} AS bucket
-        FROM (
-            SELECT unnest(t) AS gram FROM tgt
-            UNION ALL
-            SELECT unnest(list_transform(range(1, len(t)),
-                                         i -> t[i] || ' ' || t[i + 1]))
-            FROM tgt
-        )
-    ),
-    cg AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT)
-               % {_DSIR_B} AS bucket
-        FROM (
-            SELECT doc_id, unnest(t) AS gram FROM cor
-            UNION ALL
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(t)),
-                                         i -> t[i] || ' ' || t[i + 1]))
-            FROM cor
-        )
-    ),
-    q AS (SELECT bucket, COUNT(*) AS q_cnt FROM cg GROUP BY bucket),
-    p AS (SELECT bucket, COUNT(*) AS p_cnt FROM tg GROUP BY bucket),
-    qt AS (SELECT COALESCE(SUM(q_cnt), 0) AS q_tot FROM q),
-    pt AS (SELECT COALESCE(SUM(p_cnt), 0) AS p_tot FROM p),
-    ratio AS (
-        SELECT q.bucket,
-               CAST(round((log2(COALESCE(p.p_cnt, 0) + 1.0)
-                           - log2(pt.p_tot + {_DSIR_B}.0)
-                           - log2(q.q_cnt + 1.0)
-                           + log2(qt.q_tot + {_DSIR_B}.0)) * 1000000)
-                    AS BIGINT) AS logr
-        FROM q LEFT JOIN p USING (bucket), qt, pt
-    )
-    SELECT cg.doc_id,
-           COUNT(*) AS n_grams,
-           CAST(SUM(r.logr) AS BIGINT) AS importance_x1e6
-    FROM cg JOIN ratio r USING (bucket)
-    GROUP BY cg.doc_id
 """
 
 ORACLE_SQL["line_dedup"] = """
