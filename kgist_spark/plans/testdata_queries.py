@@ -596,10 +596,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
-#: BM25 query terms — shared by the Spark query and the oracle
-_BM25_TERMS = ["spark", "join", "hash"]
-
-
 #: synchronous min-label rounds for kg_components — the derived KG is one
 #: giant component (nations hub everything) with min-label convergence
 #: measured at round 7 on BOTH sf0.001 and sf0.01; 8 leaves a margin and
@@ -622,15 +618,6 @@ def q_kg_components(spark, sf_dir):
         t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
         rounds=_CC_ROUNDS,
     )
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 keyword search over documents: top-10 for a 3-term query —
-    one corpus pass, fixed-order float expression (no sum-order drift),
-    TakeOrderedAndProject top-k."""
-    from kgist_spark.operators.search import bm25_topk
-
-    return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=10)
 
 
 def _pii_enriched_docs(spark, sf_dir):
@@ -734,15 +721,6 @@ def q_curate_summary(spark, sf_dir):
     )
 
 
-def q_tfidf_terms(spark, sf_dir):
-    """Per-document keyword extraction: top-3 terms per document by
-    integer fixed-point tf-idf (linear rarity weight — log-free so the
-    truncating div is bit-identical across engines)."""
-    from kgist_spark.operators.search import tfidf_top_terms
-
-    return tfidf_top_terms(_t(spark, sf_dir, "documents"), per_doc_k=3)
-
-
 def q_dup_spans(spark, sf_dir):
     """Maximal duplicated-substring spans — the Lee et al. 2022 ExactSubstr
     CUT LIST `dup_ngrams` stops short of: WHERE the cross-document
@@ -798,16 +776,6 @@ def q_kg_violations(spark, sf_dir):
     return schema_violations(
         perturbed_triples(spark, sf_dir), derived_labels(spark, sf_dir)
     )
-
-
-def q_postings(spark, sf_dir):
-    """Inverted-index postings materialization: per-term df/cf + a
-    64-entry smallest-id posting list with n_kept truncation visibility
-    — the artifact a served search index stores (bm25_topk scores
-    against stats on the fly; this is the build step)."""
-    from kgist_spark.operators.search import build_postings
-
-    return build_postings(_t(spark, sf_dir, "documents"))
 
 
 def q_lang_confusion(spark, sf_dir):
@@ -1043,7 +1011,6 @@ QUERIES = {
     "decontaminate": q_decontaminate,
     "repetition": q_repetition,
     "kg_components": q_kg_components,
-    "bm25_topk": q_bm25_topk,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
     "curate": q_curate,
@@ -1051,13 +1018,11 @@ QUERIES = {
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
     "embedding_ann_q8": q_embedding_ann_q8,
-    "tfidf_terms": q_tfidf_terms,
     "dup_spans": q_dup_spans,
     "containment_pairs": q_containment_pairs,
     "kg_schema": q_kg_schema,
     "winnow_fp": q_winnow_fp,
     "kg_violations": q_kg_violations,
-    "postings": q_postings,
     "lang_confusion": q_lang_confusion,
     "ann_recall": q_ann_recall,
     "source_overlap": q_source_overlap,
@@ -1549,17 +1514,6 @@ def _components_oracle() -> str:
 ORACLE_SQL["kg_components"] = _components_oracle()
 
 
-def _tfidf_oracle() -> str:
-    from kgist_spark.operators.search import tfidf_oracle_sql
-
-    return tfidf_oracle_sql(per_doc_k=3)
-
-
-# integer fixed-point tf-idf (linear rarity weight — log-free, truncating
-# div), same tokenization and (score DESC, term ASC) per-doc pick
-ORACLE_SQL["tfidf_terms"] = _tfidf_oracle()
-
-
 # dup_ngrams: the oracle replays the identical in-row 5-gram windows (md5
 # over the space-joined token slice), the distinct-(gram, doc) collapse,
 # and the integer-DIV fraction — every output column is integer-exact
@@ -1621,14 +1575,6 @@ ORACLE_SQL["token_pmi"] = rf"""
     LIMIT {_PMI_K}
 """
 
-
-def _bm25_oracle() -> str:
-    from kgist_spark.operators.search import bm25_topk_oracle_sql
-
-    return bm25_topk_oracle_sql(_BM25_TERMS, k=10)
-
-
-ORACLE_SQL["bm25_topk"] = _bm25_oracle()
 
 def _pii_oracle() -> str:
     """Replays q_pii_scrub: the SAME injection expression, then the SAME
@@ -2146,17 +2092,6 @@ def _kg_violations_oracle() -> str:
 # (share gate imported from the operator), probed with the identical
 # labeled-occurrence / expected-membership aggregation
 ORACLE_SQL["kg_violations"] = _kg_violations_oracle()
-
-
-def _postings_oracle() -> str:
-    from kgist_spark.operators.search import postings_oracle_sql
-
-    return postings_oracle_sql()
-
-
-# postings: identical tokens, identical smallest-ids cap, identical '|'
-# string serialization (string_agg ORDER BY == sorted-struct array_join)
-ORACLE_SQL["postings"] = _postings_oracle()
 
 
 def _tfidf_pairs_oracle() -> str:

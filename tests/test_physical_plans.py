@@ -186,22 +186,3 @@ def test_winnow_selection_stays_in_row(spark):
     df.collect()
     plan = plan_of(df)
     assert "BatchEvalPython" not in plan
-
-
-def test_postings_rank_filter_precedes_collect(spark):
-    """The cap is a rank FILTER before collect_list: the aggregate that
-    builds lists must sit above a filter on row_number, so no
-    corpus-sized list ever materializes for a stopword term."""
-    from kgist_spark.operators.search import build_postings
-
-    docs = spark.createDataFrame(
-        [(i, "common words here") for i in range(20)],
-        "doc_id long, text string",
-    )
-    df = build_postings(docs, max_postings=3, min_df=2)
-    df.collect()
-    plan = plan_of(df)
-    assert "BatchEvalPython" not in plan
-    # the physical plan orders: window (rn) -> filter (rn <= cap) ->
-    # objhashaggregate (collect_list); assert the filter on rn exists
-    assert "rn" in plan and "Window" in plan
