@@ -701,26 +701,6 @@ def q_line_dedup(spark, sf_dir):
     return line_dedup(docs, min_docs=4)
 
 
-def q_curate(spark, sf_dir):
-    """Composite corpus-curation decision table: lang admission, length,
-    diversity, repetition, exact-dup and near-dup gates folded into ONE
-    keep/drop row per document with the first failing gate as
-    ``drop_reason`` (see :mod:`kgist_spark.operators.curate`)."""
-    from kgist_spark.operators.curate import curate_table
-
-    return curate_table(_t(spark, sf_dir, "documents"), threshold=0.4)
-
-
-def q_curate_summary(spark, sf_dir):
-    """Per-reason rollup of the curation decision table — the one-page
-    audit report (kept docs counted under reason 'kept')."""
-    from kgist_spark.operators.curate import curate_summary, curate_table
-
-    return curate_summary(
-        curate_table(_t(spark, sf_dir, "documents"), threshold=0.4)
-    )
-
-
 def q_dup_spans(spark, sf_dir):
     """Maximal duplicated-substring spans — the Lee et al. 2022 ExactSubstr
     CUT LIST `dup_ngrams` stops short of: WHERE the cross-document
@@ -1013,8 +993,6 @@ QUERIES = {
     "kg_components": q_kg_components,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
-    "curate": q_curate,
-    "curate_summary": q_curate_summary,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
     "embedding_ann_q8": q_embedding_ann_q8,
@@ -1876,109 +1854,6 @@ def model_rules_oracle_sql(kind: str, sf_dir: str | None = None) -> str:
     FROM (VALUES {values}) AS t(rule, n_cas, n_edges)
     WHERE (SELECT ok FROM sf_guard) = 1
 """
-
-
-def _curate_oracle(final_select: str) -> str:
-    """The curation decision chain as one flat WITH RECURSIVE pipeline:
-    the near-dup closure CTEs are shared verbatim with the
-    ``neardup_clusters`` oracle (exact shingle-jaccard pairs — any LSH
-    recall loss on the Spark side surfaces as a hash mismatch), the
-    feature expressions with the ``quality``/``repetition`` oracles, and
-    the thresholds + CASE chain are imported from
-    :mod:`kgist_spark.operators.curate` so the engines cannot drift.
-    ``final_select`` picks the detail table or the per-reason rollup."""
-    from kgist_spark.operators.curate import (
-        KEEP_LANG, MAX_DUP_BIGRAM_FRAC, MIN_TOKENS, MIN_UNIQUE_RATIO,
-    )
-
-    return rf"""
-    WITH RECURSIVE ltoks AS (
-        SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id AS id, shingle FROM (
-            SELECT doc_id,
-                   unnest(list_transform(
-                       generate_series(1, greatest(len(t) - 4, 1)),
-                       i -> array_to_string(t[i:i+4], ' '))) AS shingle
-            FROM ltoks
-        ) WHERE length(shingle) > 0
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    nd_pairs AS (
-        SELECT a, b FROM (
-            SELECT x.id AS a, y.id AS b, COUNT(*) AS n_inter
-            FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.id < y.id
-            GROUP BY x.id, y.id
-        ) inter
-        JOIN sizes na ON inter.a = na.id
-        JOIN sizes nb ON inter.b = nb.id
-        WHERE n_inter * 1.0 / (na.n + nb.n - n_inter) >= 0.4
-    ),
-    und AS (
-        SELECT a AS u, b AS v FROM nd_pairs
-        UNION SELECT b AS u, a AS v FROM nd_pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM und
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN und e ON r.v = e.u WHERE e.v != r.u
-    ),
-    nd AS (
-        SELECT u AS doc_id FROM reach GROUP BY u
-        HAVING least(u, min(v)) != u
-    ),
-    f AS (
-        SELECT doc_id, lang,
-               len({_TOKENS}) AS n_tokens,
-               round(CAST(len(list_distinct({_TOKENS})) AS DOUBLE)
-                     / len({_TOKENS}), 5) AS unique_ratio,
-               CASE WHEN len({_TOKENS}) >= 2 THEN
-                   round(1 - CAST(len(list_distinct(
-                       [array_to_string(({_TOKENS})[i : i + 1], ' ')
-                        FOR i IN generate_series(1, len({_TOKENS}) - 1)]))
-                       AS DOUBLE) / (len({_TOKENS}) - 1), 5)
-               END AS dup_bigram_frac,
-               md5(text) AS text_md5
-        FROM documents
-    ),
-    e AS (
-        SELECT text_md5, MIN(doc_id) AS grp_keep_id
-        FROM f GROUP BY text_md5 HAVING COUNT(*) > 1
-    ),
-    dec AS (
-        SELECT f.doc_id, f.lang, f.n_tokens, f.unique_ratio, f.dup_bigram_frac,
-               COALESCE(f.doc_id != e.grp_keep_id, FALSE) AS is_exact_dup,
-               (nd.doc_id IS NOT NULL) AS is_near_dup
-        FROM f LEFT JOIN e USING (text_md5) LEFT JOIN nd USING (doc_id)
-    ),
-    final AS (
-        SELECT *, CASE
-            WHEN lang != '{KEEP_LANG}' THEN 'lang'
-            WHEN n_tokens < {MIN_TOKENS} THEN 'too_short'
-            WHEN unique_ratio < {MIN_UNIQUE_RATIO!r} THEN 'low_diversity'
-            WHEN dup_bigram_frac > {MAX_DUP_BIGRAM_FRAC!r} THEN 'repetitive'
-            WHEN is_exact_dup THEN 'exact_dup'
-            WHEN is_near_dup THEN 'near_dup'
-        END AS drop_reason
-        FROM dec
-    )
-    {final_select}
-    """
-
-
-ORACLE_SQL["curate"] = _curate_oracle(
-    """SELECT doc_id, lang, n_tokens, unique_ratio, dup_bigram_frac,
-              is_exact_dup, is_near_dup,
-              drop_reason IS NULL AS keep, drop_reason
-       FROM final"""
-)
-
-ORACLE_SQL["curate_summary"] = _curate_oracle(
-    """SELECT COALESCE(drop_reason, 'kept') AS drop_reason,
-              COUNT(*) AS n_docs
-       FROM final GROUP BY 1"""
-)
 
 
 # containment_pairs: same shingle construction as ngram_jaccard_pairs,
