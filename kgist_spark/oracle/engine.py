@@ -160,7 +160,8 @@ class SummaryModel:
 
     # -- reporting ---------------------------------------------------------
     def percent_edges_explained(self) -> float:
-        return len(self.covered_edges) / self.index.stats.m * 100
+        m = self.index.stats.m
+        return len(self.covered_edges) / m * 100 if m else 0.0
 
 
 class GreedySearcher:

@@ -64,6 +64,8 @@ def main(argv=None, spark=None):
                  "--out only (it would silently ignore the other flags)")
     if not args.compact and args.input is None and args.generate is None:
         ap.error("one of --input / --generate is required (unless --compact)")
+    if args.generate is not None and args.generate < 0:
+        ap.error("--generate N_DOCS must be >= 0")
     if args.incremental and not args.input:
         ap.error("--incremental requires --input (a directory new page files land in)")
     if args.incremental and args.no_canonicalize:
@@ -169,7 +171,7 @@ def main(argv=None, spark=None):
         if owns_session:
             spark.stop()
         return
-    if args.generate:
+    if args.generate is not None:
         from kgist_spark.sources.webpages import generate_pages
 
         pages = generate_pages(spark, args.generate, seed=args.seed)

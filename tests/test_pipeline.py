@@ -601,3 +601,45 @@ def test_run_pipeline_score_anomalies(spark, tmp_path, capsys):
               spark.read.parquet(f"{out}/anomaly_scores").select("score").collect()]
     assert len(scores) == rep["n_triples"]
     assert all(math.isfinite(x) and x >= 0 for x in scores)
+
+
+def test_run_pipeline_empty_corpus(spark, tmp_path, capsys):
+    """`--generate 0` runs end to end: an empty KG, an empty model with a
+    defined report, and an empty `anomaly_scores` table."""
+    import json as _json
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    import run_pipeline
+
+    out = str(tmp_path / "kg")
+    run_pipeline.main(
+        ["--generate", "0", "--out", out, "--summarize", "--score-anomalies"],
+        spark=spark,
+    )
+    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["n_docs"] == 0
+    assert rep["n_triples"] == 0
+    assert rep["n_rules"] == 0
+    assert rep["pct_edges_explained"] == 0.0
+    assert spark.read.parquet(f"{out}/anomaly_scores").count() == 0
+
+
+def test_run_pipeline_rejects_negative_generate(monkeypatch):
+    """A negative `--generate` is an argparse error raised before any
+    session is built."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    import run_pipeline
+    from kgist_spark import session
+
+    def no_session(*a, **k):
+        raise AssertionError("a session was built")
+
+    monkeypatch.setattr(session, "entry_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        run_pipeline.main(["--generate", "-1", "--out", "/tmp/nowhere"])
+    assert exc.value.code == 2
