@@ -34,10 +34,6 @@ def fan_out_scan(docs: DataFrame) -> DataFrame:
     return docs.repartition(target)
 
 
-#: backwards-compat alias (pre-round-4 name)
-_fan_out_scan = fan_out_scan
-
-
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         k: int = 5, threshold: float = 0.4,
                         df_cap: int | None = 1000, drop_stats=None) -> DataFrame:
