@@ -17,8 +17,7 @@ Capabilities (see SURVEY.md for the full inventory):
   violations) over the constructed KG, and incremental construction as
   page batches arrive (``streaming/construct.py``).
 * Corpus operators over document tables: dedup (exact/MinHash/SimHash/
-  n-gram/embedding), similarity search, text quality, DSIR importance
-  weights and curation.
+  n-gram/embedding), similarity search, text quality and scrubbing.
 """
 
 __version__ = "0.1.0"
