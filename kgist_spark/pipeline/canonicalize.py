@@ -52,13 +52,12 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
     (one row per distinct entity) and the verified pair list — so every
     downstream action reads materialized partitions; the shingle set is
     persisted only across the single checkpoint job that reads it 3x.
+    The chain runs at the session's shuffle width; AQE coalesces each of
+    its shuffles, the persisted shingles' included, to the vocabulary's
+    size (see :mod:`kgist_spark.session`).
     """
     entities = entities.localCheckpoint()
-    # size-aware shuffle width for the LSH chain: its ~10 shuffle stages
-    # over a small vocabulary are pure task-scheduling overhead at the
-    # session width (measured 6-8 s for 320 entities at width 32, ~1.5 s at
-    # width 1); a large vocabulary keeps the session width.  The count is
-    # free — entities is checkpointed one line up.
+    # the count is free: entities is checkpointed one line up
     n_entities = entities.count()
     spark = entities.sparkSession
     if local_threshold and n_entities <= local_threshold:
@@ -79,9 +78,6 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
             entities.join(F.broadcast(mdf), "node", "left")
             .select("node", F.coalesce("canonical", "node").alias("canonical"))
         )
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    scoped_width = max(1, min(int(old_width), n_entities // 50_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(scoped_width))
     shingles = MH.char_shingles(entities, "node", "node", k=k).persist()
     try:
         sigs = MH.minhash_signatures(shingles, num_perm=num_perm)
@@ -102,7 +98,6 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
         MH.log_drop_stats(pairs, "canonical_map")
     finally:
         shingles.unpersist()
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
     comp = connected_components(verified)
     canon = comp.select("node", F.col("component").alias("canonical"))
     return (

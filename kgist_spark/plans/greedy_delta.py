@@ -12,8 +12,10 @@ the cluster and the driver holds only O(#candidates) counters:
 The key identity making this exact: when rule r is accepted, the newly
 covered set Δ = edges(r) − covered is disjoint from the old covered set, so
 for every candidate g the overlap increment is |edges(g) ∩ Δ| — additive.
-Trials are pure driver float math; one broadcast-join + group-by action per
-accepted BATCH (not per accept, not per trial) maintains every counter.
+Trials are pure driver float math; one covered-state checkpoint plus one
+broadcast-join + group-by collect per accepted BATCH (not per accept, not per
+trial) maintains every counter — under AQE that is ~6-7 Spark jobs a batch
+(see ``_apply_batch``).
 Accepts are batched as long as each subsequent trial's rule has a predicate
 and child label provably disjoint from every pending accept (different
 predicate ⇒ disjoint edge sets; different child label ⇒ disjoint label
@@ -58,14 +60,6 @@ from kgist_spark.operators import candidates as C
 from kgist_spark.operators.qualify import nodes_with_all_labels, shared_head_labels
 
 _SEP = "\x1f"
-
-#: shuffle width for the accept-loop jobs, set for the fit and restored
-#: afterwards.  Every reduce stage in the loop is tiny (the per-key overlap
-#: partials collapse to O(#candidates) rows and the delta side rides an AQE
-#: broadcast, so the big table never shuffles); the session-wide width only
-#: adds per-task scheduling overhead — measured 1.51 -> 1.05 s/accept going
-#: 64 -> 8 on a NELL slice.
-_LOOP_SHUFFLE_PARTITIONS = 8
 
 
 def _df_key_col():
@@ -117,9 +111,9 @@ class DeltaGreedy:
 
         if cand is None:
             cand = C.candidate_edges(triples, labels_flat)
-        self.cand_edges = (
-            cand.select(_df_key_col(), "eid", "root_node").distinct().persist()
-        )
+        # (key, eid) is unique by construction (candidate_edges dedupes
+        # labels; candidate_stats' count(*) relies on the same), so no distinct
+        self.cand_edges = cand.select(_df_key_col(), "eid", "root_node").persist()
         self.cand_labels = (
             cand.select(_df_key_col(), "child_label", "child_node").distinct().persist()
         )
@@ -340,7 +334,7 @@ class DeltaGreedy:
 
         return sorted(self.meta.values(), key=key, reverse=True)
 
-    # -- accept bookkeeping (ONE Spark action per accepted BATCH) ----------
+    # -- accept bookkeeping (one checkpoint + one collect per BATCH) --------
     def _apply_batch(self, metas: List[CandidateMeta]):
         """Run the delta/overlap/covered maintenance for a batch of accepted
         rules whose coverage footprints are pairwise disjoint (guaranteed by
@@ -352,27 +346,30 @@ class DeltaGreedy:
         updated here — the caller already advanced them at accept time from
         the counter identity |Δᵢ| = n_edges(rᵢ) − overlap_e(rᵢ).
 
-        Physical shape — ONE Spark action per batch (AQE splits it into ~4
-        jobs plus the checkpoint's): the new covered state
-        ``covered ∪ Δ`` (delta rows tagged with this batch's serial) is a
-        LAZY local checkpoint, and the single overlap-counter action joins
-        the candidate tables against the just-tagged slice of it, so that
-        collect both maintains every counter AND materializes the flat
-        checkpointed coverage as a side effect.  This replaced a 3-job
-        schedule (delta checkpoint, counter collect, covered-union
-        checkpoint); lineage depth stays pinned at 1 and rows never leave
-        the cluster.  (An even earlier design collected each delta and
-        re-broadcast it as a local relation; that caps coverage at driver
-        memory, and the growing union-of-local-relations lineage made accept
-        latency climb 2.8 -> 15 s between periodic checkpoints.)"""
+        Physical shape — one checkpoint and one collect per batch: the new
+        covered state ``covered ∪ Δ`` (delta rows tagged with this batch's
+        serial) is a LAZY local checkpoint, and the single overlap-counter
+        collect joins the candidate tables against the just-tagged slice of
+        it, so that collect both maintains every counter AND materializes
+        the flat checkpointed coverage.  "Lazy" covers only the final write:
+        under AQE, ``localCheckpoint(eager=False)`` already runs the delta's
+        shuffle and broadcast stages when it is called — measured 2-3 jobs
+        at the checkpoint line and 4 at the collect per batch on the seed-1
+        ``summarize_delta`` benchmark KG (5 + 8 over its 2 batches).  This
+        replaced a 3-job schedule (delta checkpoint, counter collect,
+        covered-union checkpoint); lineage depth stays pinned at 1 and rows
+        never leave the cluster.  (An even earlier design collected each
+        delta and re-broadcast it as a local relation; that caps coverage at
+        driver memory, and the growing union-of-local-relations lineage made
+        accept latency climb 2.8 -> 15 s between periodic checkpoints.)"""
         keys = [m.df_key for m in metas]
         in_batch = F.col("key").isin(keys) if len(keys) > 1 else F.col("key") == keys[0]
-        r_edges = self.cand_edges.where(in_batch).select("eid").distinct()
-        r_labels = (
-            self.cand_labels.where(in_batch)
-            .select("child_label", "child_node")
-            .distinct()
-        )
+        # no distinct: the batch's rules have pairwise distinct predicates
+        # and child labels, so no eid and no (child_label, child_node) row
+        # repeats across them, and within one rule both tables are distinct
+        # on the key
+        r_edges = self.cand_edges.where(in_batch).select("eid")
+        r_labels = self.cand_labels.where(in_batch).select("child_label", "child_node")
         if self.covered is not None:
             cov_e = self.covered.where(F.col("kind") == "e").select("eid")
             cov_l = self.covered.where(F.col("kind") == "l").select(
@@ -462,15 +459,6 @@ class DeltaGreedy:
 
     # -- the greedy loop ----------------------------------------------------
     def fit(self, passes: int = 2, label_qualify: bool = True):
-        conf = self.spark.conf
-        old_parts = conf.get("spark.sql.shuffle.partitions")
-        conf.set("spark.sql.shuffle.partitions", str(_LOOP_SHUFFLE_PARTITIONS))
-        try:
-            return self._fit(passes, label_qualify)
-        finally:
-            conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    def _fit(self, passes: int, label_qualify: bool):
         if label_qualify:
             self.label_qualify()
         ranked = self.rank()

@@ -3,7 +3,9 @@
 Tuned for the target workload (wide aggregations over skewed KG/webtext
 tables): AQE with skew-join splitting, Arrow everywhere, and a shuffle
 partition count sized to the local core budget (overridden on a real cluster
-via spark-submit conf).
+via spark-submit conf).  That count is the *initial* width: AQE coalesces
+each shuffle to what its data needs, persisted plans included, so no caller
+narrows the session width around a small job.
 """
 
 from __future__ import annotations
@@ -57,6 +59,9 @@ def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce a persisted plan's last shuffle too; otherwise
+        # every persisted frame stays at the session width
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

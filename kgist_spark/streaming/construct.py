@@ -511,11 +511,11 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
     unknown = entities.join(
         d.select(F.col("surface").alias("node")), "node", "left_anti"
     ).localCheckpoint()
-    # the linking LSH chain gets the same size-aware shuffle width as
-    # canonical_map: per-batch linking over a small dictionary is stage-
-    # scheduling latency at the session width (the counts are cheap —
-    # unknown is checkpointed, and the dictionary size comes from the size
-    # side table when available instead of a per-batch count job)
+    # size-aware shuffle width for the linking LSH chain: per-batch linking
+    # over a small dictionary is stage-scheduling latency at the session
+    # width (the counts are cheap — unknown is checkpointed, and the
+    # dictionary size comes from the size side table when available instead
+    # of a per-batch count job)
     spark = entities.sparkSession
     if dict_size is None:
         dict_size = dictionary.count()

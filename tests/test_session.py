@@ -1,6 +1,6 @@
 """The session's default driver heap and core count fit the host it runs
-on (no JVM), and a standalone entry point's driver JVM is launched with
-them."""
+on (no JVM), a standalone entry point's driver JVM is launched with them,
+and AQE narrows persisted plans below the session's shuffle width."""
 
 import json
 import os
@@ -8,6 +8,7 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 from kgist_spark.session import driver_memory, local_cpus
 from tests.conftest import REPO_ROOT
@@ -76,3 +77,18 @@ def test_entry_session_jvm_gets_the_sized_heap_and_gc():
     jvm_args = json.loads(res.stdout.strip().splitlines()[-1])
     assert f"-Xmx{driver_memory()}" in jvm_args
     assert "-XX:+UseParallelGC" in jvm_args
+
+
+@pytest.mark.spark
+def test_persisted_small_aggregate_is_coalesced(spark):
+    """A persisted 7-row aggregate is not left at the session's shuffle
+    width: AQE may coalesce a cached plan's last shuffle, so every stage that
+    reads the persisted frame runs a few tasks, not one per session
+    partition."""
+    df = spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    try:
+        assert df.count() == 7
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert df.rdd.getNumPartitions() < width
+    finally:
+        df.unpersist()
