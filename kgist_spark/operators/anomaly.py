@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from kgist_spark.functions.ir import RuleTree
 from kgist_spark.oracle.anomaly import AnomalyScorer
 from kgist_spark.oracle.engine import SummaryModel
+from kgist_spark.sources.local import local_frame
 
 
 def model_blame_tables(spark: SparkSession, model: SummaryModel):
@@ -49,10 +50,10 @@ def model_blame_tables(spark: SparkSession, model: SummaryModel):
         for h in scorer._rule_heads(rule):
             heads.append((rid, to_node(h)))
     return (
-        spark.createDataFrame(roots, "rid int, label string, root_idx int"),
-        spark.createDataFrame(preds, "rid int, pred string"),
-        spark.createDataFrame(stats, "rid int, root_size int, bits_per_exception double"),
-        spark.createDataFrame(heads, "rid int, node string"),
+        local_frame(spark, roots, "rid int, label string, root_idx int"),
+        local_frame(spark, preds, "rid int, pred string"),
+        local_frame(spark, stats, "rid int, root_size int, bits_per_exception double"),
+        local_frame(spark, heads, "rid int, node string"),
     )
 
 
@@ -68,7 +69,7 @@ def node_labels_df(spark: SparkSession, model: SummaryModel) -> DataFrame:
         for n, labels in index.node_to_labels.items()
         for pos, l in enumerate(labels)
     ]
-    return spark.createDataFrame(rows, "node string, label string, pos int")
+    return local_frame(spark, rows, "node string, label string, pos int")
 
 
 def blame_from_parts(roots: DataFrame, preds: DataFrame, stats: DataFrame,
@@ -174,10 +175,10 @@ def covered_triples_for_model(spark: SparkSession, model: SummaryModel,
     if not meta_rows:
         return t.where(F.lit(False))
 
-    meta = spark.createDataFrame(
-        meta_rows, "rid int, pred string, dir string, child_label string, root_size int"
+    meta = local_frame(
+        spark, meta_rows, "rid int, pred string, dir string, child_label string, root_size int"
     )
-    roots = spark.createDataFrame(root_rows, "rid int, label string")
+    roots = local_frame(spark, root_rows, "rid int, label string")
 
     node_labels = labels_flat.select("node", "label").distinct()
     root_ok = (
@@ -232,8 +233,8 @@ def _covered_from_driver_model(spark: SparkSession, model: SummaryModel) -> Data
         for eid in model.covered_edges
         for (s, p, o) in [index.id_to_edge[eid]]
     ]
-    return spark.createDataFrame(
-        covered_rows or [("", "", "")], "subj string, pred string, obj string"
+    return local_frame(
+        spark, covered_rows or [("", "", "")], "subj string, pred string, obj string"
     ).distinct()
 
 
@@ -324,12 +325,12 @@ def delta_blame_parts(delta, selected_rules):
         root_rows.extend((rid, label, idx) for idx, label in enumerate(root))
         pred_rows.append((rid, rule[1][0][0]))
         key_rows.append((meta.df_key, rid))
-    roots = spark.createDataFrame(root_rows, "rid int, label string, root_idx int")
-    preds = spark.createDataFrame(pred_rows, "rid int, pred string")
-    stats = spark.createDataFrame(
-        stat_rows, "rid int, root_size int, bits_per_exception double"
+    roots = local_frame(spark, root_rows, "rid int, label string, root_idx int")
+    preds = local_frame(spark, pred_rows, "rid int, pred string")
+    stats = local_frame(
+        spark, stat_rows, "rid int, root_size int, bits_per_exception double"
     )
-    key_map = spark.createDataFrame(key_rows, "key string, rid int")
+    key_map = local_frame(spark, key_rows, "key string, rid int")
     heads = (
         delta.cand_edges.join(F.broadcast(key_map), "key")
         .select("rid", F.col("root_node").alias("node"))
@@ -362,6 +363,6 @@ def score_edges_delta(delta, fit_result: dict, triples: DataFrame,
             roots, preds, stats, heads, labels_flat.select("node", "label", "pos")
         )
     else:
-        blame = spark.createDataFrame([], "node string, pred string, blame double")
+        blame = local_frame(spark, [], "node string, pred string, blame double")
     return _assemble_scores(triples.select("subj", "pred", "obj"), covered,
                             blame, unexplained)

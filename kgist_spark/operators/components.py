@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgist_spark.sources.local import local_frame
+
 
 def star_components(edges: DataFrame, src: str = "a", dst: str = "b",
                     max_iter: int = 50, stats: dict | None = None) -> DataFrame:
@@ -144,12 +146,12 @@ def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
         .distinct()
     )
     if driver_threshold:
-        # cheap bounded probe BEFORE deciding whether to persist — a plain
+        # one bounded collect decides AND feeds the driver path — a plain
         # count() would pay a full job, and persisting up front leaks the
         # cache for the session when the distributed path is taken
-        probe = sym.limit(driver_threshold + 1).count()
-        if probe <= driver_threshold:
-            pairs = [(r["u"], r["v"]) for r in sym.collect()]
+        head = sym.limit(driver_threshold + 1).collect()
+        if len(head) <= driver_threshold:
+            pairs = [(r["u"], r["v"]) for r in head]
             id_type = sym.schema["u"].dataType
             return _driver_components(edges.sparkSession, pairs, id_type)
     # the fixpoint loop re-reads sym every round — persist for its duration
@@ -210,7 +212,8 @@ def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
 
 def _driver_components(spark, pairs, id_type):
     """Path-compressed union-find over a collected pair list; component id =
-    min member (same contract as the distributed loop)."""
+    min member (same contract as the distributed loop), returned as an
+    Arrow local relation."""
     from pyspark.sql import types as T
     parent: dict = {}
 
@@ -234,7 +237,7 @@ def _driver_components(spark, pairs, id_type):
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def minlabel_rounds(edges: DataFrame, src: str = "a", dst: str = "b",

@@ -34,6 +34,13 @@ def fan_out_scan(docs: DataFrame) -> DataFrame:
     return docs.repartition(target)
 
 
+def _shingle_rows(sketch: DataFrame) -> DataFrame:
+    """``(id, shingle)``: one row per gram of a
+    :func:`kgist_spark.operators.minhash.word_shingles` sketch, for the
+    paths that join on individual shingles."""
+    return sketch.select("id", F.explode("grams").alias("shingle"))
+
+
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         k: int = 5, threshold: float = 0.4,
                         df_cap: int | None = 1000, drop_stats=None) -> DataFrame:
@@ -57,7 +64,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     shingle table just to log a count (at 100 TB that job re-reads the whole
     corpus).  Surface the loss with
     :func:`kgist_spark.operators.minhash.log_drop_stats` after an action."""
-    sh = MH.word_shingles(fan_out_scan(docs.select(id_col, text_col)), id_col, text_col, k=k)
+    sk = MH.word_shingles(fan_out_scan(docs.select(id_col, text_col)), id_col, text_col, k=k)
+    sh = _shingle_rows(sk)
     if df_cap is not None:
         buckets = sh.select(
             "id", F.lit(0).alias("band"), F.col("shingle").alias("bucket")
@@ -71,7 +79,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
             .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
             .distinct()
         )
-    out = MH.jaccard_verified_pairs(pairs, sh, threshold)
+    out = MH.jaccard_verified_pairs(pairs, sk, threshold)
     # drops are never silent: the capped path's observation travels with the
     # result (see candidate_pairs) for log_drop_stats after any action
     out._drop_stats = getattr(pairs, "_drop_stats", None)
@@ -86,11 +94,11 @@ def minhash_neardup_pairs(docs: DataFrame, id_col: str = "doc_id",
     candidate pairs come from band buckets, not a full shingle self-join).
     ``drop_stats``: optional ``Observation`` counting hot-bucket drops (no
     silent caps — see :func:`kgist_spark.operators.minhash.candidate_pairs`)."""
-    sh = MH.word_shingles(fan_out_scan(docs.select(id_col, text_col)), id_col, text_col, k=k)
-    sigs = MH.minhash_signatures(sh, num_perm=num_perm)
+    sk = MH.word_shingles(fan_out_scan(docs.select(id_col, text_col)), id_col, text_col, k=k)
+    sigs = MH.minhash_signatures(sk, num_perm=num_perm)
     buckets = MH.lsh_buckets(sigs, bands=bands, rows_per_band=num_perm // bands)
     pairs = MH.candidate_pairs(buckets, drop_stats=drop_stats)
-    out = MH.jaccard_verified_pairs(pairs, sh, threshold)
+    out = MH.jaccard_verified_pairs(pairs, sk, threshold)
     out._drop_stats = getattr(pairs, "_drop_stats", None)
     return out
 
@@ -614,9 +622,9 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     sized and dropped spill-safely BEFORE any collection, drops riding the
     optional ``drop_stats`` Observation), verification over the FULL
     shingle sets so reported containment is exact regardless of the cap."""
-    sh = MH.word_shingles(
+    sh = _shingle_rows(MH.word_shingles(
         fan_out_scan(docs.select(id_col, text_col)), id_col, text_col, k=k
-    )
+    ))
     if df_cap is not None:
         buckets = sh.select(
             "id", F.lit(0).alias("band"), F.col("shingle").alias("bucket")
@@ -1001,8 +1009,9 @@ def editdist_pairs(docs: DataFrame, id_col: str = "doc_id",
     100 TB shape: candidate volume is df-capped; the quadratic kernel
     runs only on len-capped candidate rows, each one JVM builtin call."""
     capped = docs.where(F.length(text_col) <= max_chars)
-    sh = MH.word_shingles(fan_out_scan(capped.select(id_col, text_col)),
-                          id_col, text_col, k=k)
+    sh = _shingle_rows(MH.word_shingles(
+        fan_out_scan(capped.select(id_col, text_col)), id_col, text_col, k=k
+    ))
     if df_cap is not None:
         buckets = sh.select(
             "id", F.lit(0).alias("band"), F.col("shingle").alias("bucket")

@@ -3,66 +3,83 @@
 Used by stage-2 entity canonicalization (character shingles over surface
 forms) and by document-level near-dedup (word shingles over document text).
 
-Everything is JVM-side column expressions: shingling via
-``transform(sequence(...), substring)``, the minhash signature as ``num_perm``
-independent ``min(hash(shingle, seed))`` aggregates (Murmur3 via ``F.hash``
-with a per-permutation salt column), banding via ``hash`` over signature
-slices.  No Python in the hot path, deterministic across runs/partitionings.
+Everything is JVM-side column expressions over one sketch row per id: the
+shingle set as ``array_distinct(transform(sequence(...), substring))``, the
+minhash signature as ``num_perm`` ``array_min`` folds of
+``hash(shingle, seed)`` over that set (Murmur3 via ``hash`` with a
+per-permutation int salt), banding via ``hash`` over signature slices.  No
+Python in the hot path, deterministic across runs/partitionings.
 
-Scale shape: one shuffle to aggregate signatures per key, one shuffle to
-group band buckets; candidate pairs explode only within buckets (quadratic
-only in bucket size, bounded by ``max_bucket`` to cap blowup from degenerate
-buckets — the documented coverage loss is logged by callers).
+Scale shape: the sketch is one ``distinct`` over (id, grams) rows, one per
+id, and the signature is a projection of it.  One shuffle groups band
+buckets; candidate pairs explode only within buckets (quadratic only in
+bucket size, bounded by ``max_bucket`` to cap blowup from degenerate
+buckets — the documented coverage loss is logged by callers).  Given a
+``threshold``, :func:`candidate_pairs` verifies each pair's exact Jaccard
+inside its bucket from the carried gram sets, so only verified pairs reach
+the final ``distinct``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _sketch(df: DataFrame, id_col: str, grams: Column) -> DataFrame:
+    """``(id, grams array<string>)``: one row per distinct id holding its
+    distinct non-empty k-grams; ids without a gram are dropped.  The text
+    is a function of the id in every caller, so ``distinct`` over the
+    (id, grams) rows leaves one row per id."""
+    return (
+        df.select(
+            F.col(id_col).alias("id"),
+            F.array_distinct(F.filter(grams, lambda g: F.length(g) > 0))
+            .alias("grams"),
+        )
+        .where(F.size("grams") > 0)
+        .distinct()
+    )
+
+
 def char_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Distinct character k-grams per id (JVM-side)."""
+    """``(id, grams)``: the distinct character k-grams per id (JVM-side)."""
     grams = F.expr(
         f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
         f" i -> substring({text_col}, i, {k}))"
     )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(grams).alias("shingle"))
-        .where(F.length("shingle") > 0)
-        .distinct()
-    )
+    return _sketch(df, id_col, grams)
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Distinct lowercase word k-gram shingles per id."""
+    """``(id, grams)``: the distinct lowercase word k-gram shingles per id."""
     grams = F.expr(
         f"transform(sequence(1, greatest(size(split(lower({text_col}), '\\\\s+')) - {k - 1}, 1)),"
         f" i -> concat_ws(' ', slice(split(lower({text_col}), '\\\\s+'), i, {k})))"
     )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(grams).alias("shingle"))
-        .where(F.length("shingle") > 0)
-        .distinct()
+    return _sketch(df, id_col, grams)
+
+
+def minhash_signatures(sketch: DataFrame, num_perm: int = 32) -> DataFrame:
+    """``(id, grams, sig array<int>)`` — a projection of the sketch:
+    ``sig[p] = min(hash(g, p))`` over its grams, the same Murmur3 call with
+    the same int salt per permutation."""
+    sig = F.expr(
+        f"transform(sequence(0, {num_perm - 1}),"
+        " p -> array_min(transform(grams, g -> hash(g, p))))"
     )
-
-
-def minhash_signatures(shingles: DataFrame, num_perm: int = 32) -> DataFrame:
-    """``(id, sig array<int>)`` — num_perm min-hash aggregates in one pass."""
-    aggs = [
-        F.min(F.hash(F.col("shingle"), F.lit(p))).alias(f"h{p}") for p in range(num_perm)
-    ]
-    wide = shingles.groupBy("id").agg(*aggs)
-    return wide.select("id", F.array(*[f"h{p}" for p in range(num_perm)]).alias("sig"))
+    return sketch.select("id", "grams", sig.alias("sig"))
 
 
 def lsh_buckets(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """``(id, band, bucket)`` — one row per band; bucket = hash of the band's
-    signature slice.
+    """``(id, band, bucket, ...)`` — one row per band; bucket = hash of the
+    band's signature slice.  Every other column of ``signatures`` (the
+    sketch's ``grams``) rides along; callers that do not read it get it
+    pruned.
 
     All band hashes are computed in ONE projection and exploded — a union of
     per-band projections would make Catalyst re-execute the upstream
-    signature aggregation once per band (union children are independent
+    sketch once per band (union children are independent
     subtrees; same pitfall as the pre-explode candidate generation)."""
     assert bands * rows_per_band <= 256
     entries = []
@@ -75,16 +92,27 @@ def lsh_buckets(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFr
                 F.hash(band_slice.cast("array<int>")).alias("bucket"),
             )
         )
+    rest = [c for c in signatures.columns if c not in ("id", "sig")]
     return (
-        signatures.select("id", F.explode(F.array(*entries)).alias("bb"))
-        .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        signatures.select("id", *rest, F.explode(F.array(*entries)).alias("bb"))
+        .select("id", F.col("bb.band").alias("band"),
+                F.col("bb.bucket").alias("bucket"), *rest)
     )
 
 
 def candidate_pairs(buckets: DataFrame, max_bucket: int = 64,
-                    drop_stats=None) -> DataFrame:
-    """Distinct unordered id pairs sharing any band bucket.  Buckets larger
-    than ``max_bucket`` are dropped (degenerate hot buckets).
+                    drop_stats=None, threshold: float | None = None) -> DataFrame:
+    """Distinct unordered id pairs ``(a, b)`` sharing any band bucket.
+    Buckets larger than ``max_bucket`` are dropped (degenerate hot buckets).
+
+    With a ``threshold``, ``buckets`` must carry each id's ``grams`` (as
+    :func:`lsh_buckets` over :func:`minhash_signatures` does) and the result
+    is the VERIFIED pairs ``(a, b, jaccard)`` with exact Jaccard >=
+    ``threshold``: each pair is scored inside the bucket that proposes it,
+    from the two gram sets the bucket already holds, so no candidate pair
+    is shuffled to meet its shingles and the final ``distinct`` runs over
+    verified pairs only.  The values equal :func:`jaccard_verified_pairs`'
+    bit for bit (one shared :func:`_jaccard_where` expression).
 
     Hot buckets are sized and dropped BEFORE any per-bucket collection: a
     spill-safe window count over (band, bucket) tags every row with its
@@ -112,7 +140,7 @@ def candidate_pairs(buckets: DataFrame, max_bucket: int = 64,
         drop_stats = Observation()
     wp = Window.partitionBy("band", "bucket").orderBy("id")
     sized = buckets.select(
-        "id", "band", "bucket",
+        "id", "band", "bucket", *(["grams"] if threshold is not None else []),
         F.count("*").over(
             wp.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         ).alias("n"),
@@ -129,17 +157,24 @@ def candidate_pairs(buckets: DataFrame, max_bucket: int = 64,
     ok = (
         sized.where((F.col("n") >= 2) & (F.col("n") <= max_bucket))
         .groupBy("band", "bucket")
-        .agg(F.collect_set("id").alias("ids"))
     )
-    pairs = ok.select(
+    if threshold is None:
+        members = ok.agg(F.collect_set("id").alias("ms"))
+        pair = "struct(least(x, y) as a, greatest(x, y) as b)"
+    else:
+        members = ok.agg(F.collect_set(F.struct("id", "grams")).alias("ms"))
+        pair = ("struct(least(x.id, y.id) as a, greatest(x.id, y.id) as b,"
+                " x.grams as ga, y.grams as gb)")
+    pairs = members.select(
         F.explode(
             F.expr(
-                "flatten(transform(ids, (x, i) ->"
-                " transform(slice(ids, i + 2, size(ids)), y ->"
-                " struct(least(x, y) as a, greatest(x, y) as b))))"
+                "flatten(transform(ms, (x, i) ->"
+                f" transform(slice(ms, i + 2, size(ms)), y -> {pair})))"
             )
         ).alias("p")
-    ).select("p.a", "p.b")
+    ).select("p.*")
+    if threshold is not None:
+        pairs = _jaccard_where(pairs, threshold)
     pairs = pairs.distinct()
     pairs._drop_stats = drop_stats
     return pairs
@@ -192,23 +227,30 @@ def log_drop_stats(observation, context: str) -> dict:
     return got
 
 
-def jaccard_verified_pairs(pairs: DataFrame, shingles: DataFrame,
-                           threshold: float) -> DataFrame:
-    """Exact-Jaccard filter over candidate pairs: |∩|/|∪| >= threshold.
-    Shuffles only candidate-pair shingles (semi-joined), not the full corpus."""
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        pairs.join(shingles.select(F.col("id").alias("a"), "shingle"), "a")
-        .join(shingles.select(F.col("id").alias("b"), "shingle"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col("id").alias("a"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("id").alias("b"), F.col("n_sh").alias("nb"))
+def _jaccard_where(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``(a, b, jaccard)`` for the rows of ``pairs`` (columns ``a, b`` and
+    the gram sets ``ga, gb``) that share a gram and reach ``threshold``.
+    The counts are longs and the quotient a double division, as in a
+    shingle-row ``count(*)`` join, so every value keeps its bits."""
+    n_inter = F.size(F.array_intersect("ga", "gb")).cast("long")
+    n_union = F.size("ga").cast("long") + F.size("gb").cast("long") - n_inter
     return (
-        inter.join(na, "a")
-        .join(nb, "b")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")))
-        .where(F.col("jaccard") >= threshold)
+        pairs.select("a", "b", n_inter.alias("n_inter"),
+                     (n_inter / n_union).alias("jaccard"))
+        .where((F.col("n_inter") > 0) & (F.col("jaccard") >= threshold))
         .select("a", "b", "jaccard")
+    )
+
+
+def jaccard_verified_pairs(pairs: DataFrame, sketch: DataFrame,
+                           threshold: float) -> DataFrame:
+    """Exact-Jaccard filter over candidate pairs: |∩|/|∪| >= threshold,
+    ``(a, b, jaccard)``.  Each pair meets its two gram sets by an id join
+    against the ``(id, grams)`` sketch — one row per id, not per shingle."""
+    grams = sketch.select("id", "grams")
+    return _jaccard_where(
+        pairs.select("a", "b")
+        .join(grams.select(F.col("id").alias("a"), F.col("grams").alias("ga")), "a")
+        .join(grams.select(F.col("id").alias("b"), F.col("grams").alias("gb")), "b"),
+        threshold,
     )

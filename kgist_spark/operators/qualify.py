@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgist_spark.operators.candidates import KEY
+from kgist_spark.sources.local import local_frame
 
 
 def shared_head_labels(cand_edges: DataFrame, labels_flat: DataFrame) -> DataFrame:
@@ -58,7 +59,7 @@ def nodes_with_all_labels(labels_flat: DataFrame,
     # label dtype follows the input (string vocabulary or idified ints)
     label_type = dict(labels_flat.dtypes)["label"]
     sets_df = F.broadcast(
-        spark.createDataFrame(rows, f"set_id int, label {label_type}, set_size int")
+        local_frame(spark, rows, f"set_id int, label {label_type}, set_size int")
     )
     counts = (
         labels_flat.select("node", "label").distinct()

@@ -2,14 +2,17 @@
 
 * **Blocking** (X3): MinHash-LSH over character trigrams of entity surface
   ids, restricted to same-etype pairs (the etype prefix is part of the id).
-* **Verification**: exact trigram Jaccard >= ``threshold``.
+  Each entity is one sketch row, its id and its trigram set.
+* **Verification**: exact trigram Jaccard >= ``threshold``, computed inside
+  the LSH bucket that proposes the pair from the two trigram sets it holds.
 * **Union-find** (X4): connected components over verified pairs; canonical
   id = lexicographically smallest member (deterministic).
 * **Linking** (X5): triples/labels re-keyed to canonical ids via a broadcast
   map join; out-of-dictionary mentions are linked against LSH candidates by
-  the same JVM-side exact-trigram-jaccard join the dedup path uses.
+  the JVM-side exact-trigram-jaccard join over the same sketches.
 
-All steps are DataFrame-native with zero Python in the hot path.
+All steps are DataFrame-native with zero Python in the hot path; the
+driver-local path's map enters Spark as an Arrow local relation.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ from pyspark.sql import functions as F
 
 from kgist_spark.operators import minhash as MH
 from kgist_spark.operators.components import connected_components
+from kgist_spark.sources.local import local_frame
 
 
 def entity_vocabulary(raw_triples: DataFrame) -> DataFrame:
@@ -43,18 +47,20 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
     strategy choice Catalyst makes for broadcast joins; web-scale
     vocabularies keep the distributed chain below.
 
-    Materialization points: ``connected_components`` issues several actions
-    (convergence probes / the driver-path collect), and the final identity
-    join re-reads ``entities`` — without a cut, EACH action would re-run the
-    whole vocabulary-distinct → shingle → minhash → LSH → verify chain (and
-    ``jaccard_verified_pairs`` scans the shingle lineage twice per job on its
-    own).  ``localCheckpoint`` the two small frontier sets — the vocabulary
-    (one row per distinct entity) and the verified pair list — so every
-    downstream action reads materialized partitions; the shingle set is
-    persisted only across the single checkpoint job that reads it 3x.
-    The chain runs at the session's shuffle width; AQE coalesces each of
-    its shuffles, the persisted shingles' included, to the vocabulary's
-    size (see :mod:`kgist_spark.session`).
+    Distributed chain: one sketch row per entity ``(id, grams)``, its
+    signature a projection of it, band buckets that carry the gram sets, and
+    exact-Jaccard verification inside each surviving bucket
+    (:func:`operators.minhash.candidate_pairs` with ``threshold``), so a
+    candidate pair never shuffles to meet its grams and only verified pairs
+    reach the ``distinct``.  Materialization points: ``connected_components``
+    issues actions of its own (the bounded collect / convergence probes),
+    and the final identity join re-reads ``entities`` — without a cut, EACH
+    action would re-run the whole sketch → LSH → verify chain.
+    ``localCheckpoint`` the two small frontier sets — the vocabulary (one
+    row per distinct entity) and the verified pair list — so every
+    downstream action reads materialized partitions.  The chain runs at
+    the session's shuffle width; AQE coalesces each of its shuffles to the
+    vocabulary's size (see :mod:`kgist_spark.session`).
     """
     entities = entities.localCheckpoint()
     # the count is free: entities is checkpointed one line up
@@ -68,8 +74,8 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
             k=k, num_perm=num_perm, bands=bands,
             rows_per_band=rows_per_band, threshold=threshold,
         )
-        mdf = spark.createDataFrame(
-            sorted(mapping.items()), "node string, canonical string"
+        mdf = local_frame(
+            spark, sorted(mapping.items()), "node string, canonical string"
         )
         # join back instead of returning the map directly: the distributed
         # path emits one output row PER INPUT ROW, so a (pathological)
@@ -78,26 +84,22 @@ def canonical_map(entities: DataFrame, k: int = 3, num_perm: int = 32,
             entities.join(F.broadcast(mdf), "node", "left")
             .select("node", F.coalesce("canonical", "node").alias("canonical"))
         )
-    shingles = MH.char_shingles(entities, "node", "node", k=k).persist()
-    try:
-        sigs = MH.minhash_signatures(shingles, num_perm=num_perm)
-        buckets = MH.lsh_buckets(sigs, bands=bands, rows_per_band=rows_per_band)
-        pairs = MH.candidate_pairs(buckets)
-        # same etype only: ids are "{etype}:{surface}"
-        same_type = pairs.where(
+    sketch = MH.char_shingles(entities, "node", "node", k=k)
+    sigs = MH.minhash_signatures(sketch, num_perm=num_perm)
+    buckets = MH.lsh_buckets(sigs, bands=bands, rows_per_band=rows_per_band)
+    pairs = MH.candidate_pairs(buckets, threshold=threshold)
+    # same etype only: ids are "{etype}:{surface}"
+    verified = (
+        pairs.where(
             F.substring_index(F.col("a"), ":", 1)
             == F.substring_index(F.col("b"), ":", 1)
         )
-        verified = (
-            MH.jaccard_verified_pairs(same_type, shingles, threshold)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-        # checkpoint was an action: surface any hot-bucket drop loss now
-        # (candidate_pairs always observes; this adds no job)
-        MH.log_drop_stats(pairs, "canonical_map")
-    finally:
-        shingles.unpersist()
+        .select("a", "b")
+        .localCheckpoint()
+    )
+    # checkpoint was an action: surface any hot-bucket drop loss now
+    # (candidate_pairs always observes; this adds no job)
+    MH.log_drop_stats(pairs, "canonical_map")
     comp = connected_components(verified)
     canon = comp.select("node", F.col("component").alias("canonical"))
     return (
@@ -185,12 +187,12 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame,
     tagged = misses.select(F.concat(F.lit("m|"), "mention").alias("node")).unionByName(
         dictionary.select(F.concat(F.lit("d|"), "entity").alias("node"))
     )
-    shingles = MH.char_shingles(
+    sketch = MH.char_shingles(
         tagged.withColumn("text", F.substring_index(F.col("node"), "|", -1)),
         "node",
         "text",
     )
-    sigs = MH.minhash_signatures(shingles, num_perm=num_perm)
+    sigs = MH.minhash_signatures(sketch, num_perm=num_perm)
     buckets = MH.lsh_buckets(sigs, bands=bands, rows_per_band=rows_per_band)
     pairs = MH.candidate_pairs(buckets)
     cand = (
@@ -208,10 +210,9 @@ def link_mentions(mentions: DataFrame, dictionary: DataFrame,
         )
 
     # score with the SAME JVM-side exact-jaccard join the dedup path uses —
-    # the trigram sets are already materialized in `shingles`, so a pandas
-    # UDF here would re-derive them per row (and an executor-lifetime gram
-    # cache with it); this keeps the whole scorer in whole-stage codegen
-    scored = MH.jaccard_verified_pairs(cand, shingles, threshold)
+    # the trigram sets are already in `sketch`, so a pandas UDF here would
+    # re-derive them per row (and an executor-lifetime gram cache with it)
+    scored = MH.jaccard_verified_pairs(cand, sketch, threshold)
     best = (
         scored.select(
             F.expr("substring(a, 3)").alias("mention"),

@@ -1,7 +1,7 @@
 """Driver-local twin of ``canonical_map``'s LSH chain for SMALL vocabularies.
 
-The distributed chain (shingle → minhash → band bucket → candidate pairs →
-exact-jaccard verify → connected components) is ~10 shuffle stages; on a
+The distributed chain (sketch → minhash → band bucket → in-bucket
+exact-jaccard verify → connected components) is several shuffle stages; on a
 vocabulary of a few thousand surfaces that is pure stage-scheduling latency
 (measured 1.5-3 s for a 320-entity vocabulary at ANY shuffle width — the
 work itself is microseconds).  This module makes the same size-based
@@ -62,9 +62,10 @@ def hash_int_vec(ints_u32, seeds_u32) -> np.ndarray:
 
 
 def _shingle_set(s: str, k: int) -> set:
-    """Replica of ``operators.minhash.char_shingles``: distinct substrings
-    substring(s, i, k) for i in 1..greatest(len-k+1, 1), empty excluded
-    (near-end grams of short strings come out shorter than k, as in SQL)."""
+    """Replica of the ``grams`` set ``operators.minhash.char_shingles``
+    sketches per id: distinct substrings substring(s, i, k) for i in
+    1..greatest(len-k+1, 1), empty excluded (near-end grams of short
+    strings come out shorter than k, as in SQL)."""
     n = max(len(s) - k + 1, 1)
     return {s[i:i + k] for i in range(n)} - {""}
 

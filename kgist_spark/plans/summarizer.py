@@ -199,9 +199,10 @@ class SparkSummarizer:
         ``graph.py:166-168``)."""
         from kgist_spark.sources.edgelist import explode_labels
 
-        # persist: index construction reads each table several times, and
-        # driver-created inputs (createDataFrame local relations) otherwise
-        # re-ship their rows inside every job's plan
+        # persist: index construction reads each table several times, and a
+        # driver-created input otherwise re-ships its rows to every job that
+        # reads it (inside the plan for an Arrow local relation, through
+        # the Python workers for a list-fed createDataFrame)
         self.triples = triples.persist()
         self.labels = labels.persist()
         self.labels_flat = explode_labels(self.labels)

@@ -103,12 +103,12 @@ _DICT_ROWS_PER_FILE = 2_000_000
 
 
 def _surface_lsh(surfaces: DataFrame):
-    """``(shingles, buckets)`` for a one-column ``surface`` DataFrame, with
-    the shared LSH family: shingles ``(id, shingle)``, buckets
-    ``(id, band, bucket)``."""
-    sh = MH.char_shingles(surfaces, "surface", "surface", k=3)
-    sigs = MH.minhash_signatures(sh, num_perm=_NUM_PERM)
-    return sh, MH.lsh_buckets(sigs, bands=_BANDS, rows_per_band=_ROWS_PER_BAND)
+    """``(sketch, buckets)`` for a one-column ``surface`` DataFrame, with
+    the shared LSH family: the sketch ``(id, grams)`` holds each surface's
+    trigram set, buckets ``(id, band, bucket, grams)``."""
+    sk = MH.char_shingles(surfaces, "surface", "surface", k=3)
+    sigs = MH.minhash_signatures(sk, num_perm=_NUM_PERM)
+    return sk, MH.lsh_buckets(sigs, bands=_BANDS, rows_per_band=_ROWS_PER_BAND)
 
 
 def read_index(spark: SparkSession, out_dir: str,
@@ -385,7 +385,7 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
     schedule a periodic batch rebuild."""
     import logging
 
-    m_sh, m_buckets = _surface_lsh(unknown.select(F.col("node").alias("surface")))
+    m_sk, m_buckets = _surface_lsh(unknown.select(F.col("node").alias("surface")))
     # hot detection is confined to the buckets THIS batch touches (semi-
     # join on the tiny batch side): with the sizes side table the work is
     # one narrow columnar scan + an aggregate over touched buckets only;
@@ -421,13 +421,13 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
         .select("mention", "dsurf")
         .distinct()
     )
-    d_sh = MH.char_shingles(
+    d_sk = MH.char_shingles(
         cand.select(F.col("dsurf").alias("surface")).distinct(),
         "surface", "surface", k=3,
     )
     scored = MH.jaccard_verified_pairs(
         cand.select(F.col("mention").alias("a"), F.col("dsurf").alias("b")),
-        m_sh.unionByName(d_sh),
+        m_sk.unionByName(d_sk),
         threshold,
     )
     if dictionary is not None and stats is not None:

@@ -42,6 +42,24 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def python_rdds(df) -> list:
+    """Lineages of the Python-fed ``LogicalRDD`` leaves of ``df``'s optimized
+    plan.  A list-fed ``createDataFrame`` is one (its lineage holds a
+    ``PythonRDD``); a ``localCheckpoint`` also prints as ``LogicalRDD``, but
+    its lineage is a JVM-side checkpoint, and an Arrow table is a
+    ``LocalRelation``."""
+    found, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "LogicalRDD":
+            lineage = node.rdd().toDebugString()
+            if "PythonRDD[" in lineage:
+                found.append(lineage)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
 @pytest.fixture(scope="session")
 def spark():
     from kgist_spark.session import get_spark

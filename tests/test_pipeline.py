@@ -195,19 +195,19 @@ def test_local_murmur_matches_spark_hash(spark):
         assert int(h.view(np.int32)) == g, a
 
 
-def test_canonical_map_local_equals_distributed(spark):
-    """The size-gated driver path and the distributed LSH chain produce the
-    IDENTICAL (node, canonical) map — same buckets, pairs, components."""
+@pytest.fixture(scope="module")
+def adversarial_vocab(spark):
+    """Corpus vocabulary + adversarial synthetic surfaces: dups, near-dups,
+    short ids that shingle below k, multi-etype collisions, and a hot block
+    of 80 ids that share almost every trigram (one 40-character stem, 2-letter
+    suffixes), so at least one band bucket outgrows ``max_bucket=64``."""
     import random
 
-    from kgist_spark.pipeline.canonicalize import canonical_map
-    from kgist_spark.sources.webpages import World, generate_pages
-    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
     from kgist_spark.pipeline.canonicalize import entity_vocabulary
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
+    from kgist_spark.sources.webpages import World, generate_pages
     from pyspark.sql import functions as F
 
-    # corpus vocabulary + adversarial synthetic surfaces (dups, near-dups,
-    # short ids that shingle below k, multi-etype collisions)
     pages = generate_pages(spark, 2000, seed=7, world=World(7))
     raw = (extract_facts_jvm(pages).where(F.col("kind") == "t")
            .groupBy("subj", "pred", "obj").agg(F.min("url").alias("url")))
@@ -221,16 +221,90 @@ def test_canonical_map_local_equals_distributed(spark):
             extra.append(base + rng.choice("sxy"))
         if rng.random() < 0.2:
             extra.append("person:" + base.split(":", 1)[1])
-    ents = spark.createDataFrame(
-        [(e,) for e in set(vocab) | set(extra)], ["node"]
-    )
+    stem = "org:northwestern_consolidated_widget_holding"
+    extra += [stem + a + b for a in "abcdefghij" for b in "abcdefgh"]
+    return list(set(vocab) | set(extra))
+
+
+def test_canonical_map_local_equals_distributed(spark, adversarial_vocab,
+                                                monkeypatch):
+    """The size-gated driver path and the distributed LSH chain produce the
+    IDENTICAL (node, canonical) map — same buckets, pairs, components —
+    including the hot-bucket drops, which the distributed path makes where
+    it verifies (inside the surviving buckets)."""
+    import kgist_spark.operators.minhash as MH
+    from kgist_spark.pipeline.canonicalize import canonical_map
+
+    calls = []
+    candidate_pairs = MH.candidate_pairs
+
+    def spy(*a, **k):
+        calls.append(candidate_pairs(*a, **k))
+        return calls[-1]
+
+    monkeypatch.setattr(MH, "candidate_pairs", spy)
+    ents = spark.createDataFrame([(e,) for e in adversarial_vocab], ["node"])
     local = {r["node"]: r["canonical"]
              for r in canonical_map(ents, threshold=0.6).collect()}
+    assert not calls  # below local_threshold: no Spark LSH chain
     dist = {r["node"]: r["canonical"]
             for r in canonical_map(ents, threshold=0.6,
                                    local_threshold=0).collect()}
     assert local == dist
     assert len(local) == ents.count()
+    assert len(calls) == 1
+    assert MH.log_drop_stats(calls[0], "hot block")["dropped_buckets"] >= 1
+
+
+def test_canonical_map_distributed_job_count(spark, adversarial_vocab):
+    """Guard on the Spark jobs one distributed ``canonical_map`` runs,
+    the caller's collect included, on the adversarial vocabulary.  With a
+    shingle-row table, a signature group-by and a shingle self-join to
+    verify the candidate pairs it ran 29 jobs in a fresh session; with
+    per-entity sketches, verification inside the LSH buckets and one
+    bounded collect in ``connected_components``, 11.  The bound is
+    the fresh-session count.  Do not raise it to get a pass: a higher
+    count is a regression."""
+    from kgist_spark.pipeline.canonicalize import canonical_map
+
+    ents = spark.createDataFrame([(e,) for e in adversarial_vocab], ["node"])
+    sc = spark.sparkContext
+    sc.setJobGroup("canonical_map_distributed", "distributed canonical_map")
+    try:
+        n = len(canonical_map(ents, threshold=0.6, local_threshold=0).collect())
+    finally:
+        sc.setJobGroup("canonical_map_done", "done")
+    assert n == len(adversarial_vocab)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup("canonical_map_distributed"))
+    assert len(jobs) <= 11, f"canonical_map ran {len(jobs)} jobs"
+
+
+def test_canonical_map_tables_are_local_relations(spark, adversarial_vocab):
+    """The driver-built tables ``canonical_map`` joins in — the local path's
+    map and the driver union-find's components — are Arrow
+    ``LocalRelation``s, not Python-fed ``LogicalRDD``s whose every scan
+    starts the Python workers."""
+    from kgist_spark.pipeline.canonicalize import canonical_map
+    from tests.conftest import python_rdds
+
+    ents = spark.createDataFrame([(e,) for e in adversarial_vocab], ["node"])
+    for local_threshold in (8192, 0):
+        out = canonical_map(ents, threshold=0.6, local_threshold=local_threshold)
+        assert python_rdds(out) == [], local_threshold
+
+
+def test_driver_components_is_a_local_relation(spark):
+    from pyspark.sql.types import StringType
+
+    from kgist_spark.operators.components import _driver_components
+    from tests.conftest import python_rdds
+
+    comp = _driver_components(spark, [("b", "a"), ("c", "b"), ("x", "y")],
+                              StringType())
+    assert python_rdds(comp) == []
+    assert sorted(map(tuple, comp.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
 
 
 def test_connected_components_basic(spark):

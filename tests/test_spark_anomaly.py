@@ -190,6 +190,21 @@ def test_delta_mode_scoring_matches_oracle(spark, name):
         assert abs(score - want) < 1e-9, (s, p, o, score, want)
 
 
+def test_delta_blame_parts_are_local_relations(spark):
+    """The model-side tables a delta fit's scoring builds on the driver are
+    Arrow ``LocalRelation``s, not Python-fed ``LogicalRDD``s whose every
+    scan starts the Python workers."""
+    from kgist_spark.operators.anomaly import delta_blame_parts
+    from tests.conftest import python_rdds
+    from tests.test_greedy_delta import build_delta
+
+    delta = build_delta(spark, "test")
+    result = delta.fit(passes=2, label_qualify=True)
+    assert result["rules"]
+    for table in delta_blame_parts(delta, result["rules"]):
+        assert python_rdds(table) == []
+
+
 def test_duck_fit_replays_spark_perturbed_fit(spark):
     """The JVM-free replay that generates the anomaly_topk oracle literals
     must reproduce the Spark perturbed-KG fit decision for decision."""
