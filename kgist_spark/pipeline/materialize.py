@@ -4,22 +4,26 @@ Writes the constructed KG as partitioned tables (parquet locally; the same
 layout maps 1:1 onto Iceberg ``writeTo(...).partitionedBy(bucket(N, subj))``
 on a cluster):
 
-* ``kg_triples``  — (subj, pred, obj, eid, src_url, bucket)
+* ``kg_triples``  — (subj, pred, obj, url, eid, bucket)
 * ``kg_labels``   — (node, label, pos, bucket)
 * ``kg_adjacency``— (node, dir, pred, neighbor, bucket) adjacency-list view
-* ``_manifest``   — (table, bucket, n_rows, status, wrote_at) lineage rows
+* ``_manifest.json`` — (table, bucket, n_rows, status, wrote_at) lineage rows
 
-Resumability: each bucket is written independently and recorded in the
-manifest only after its files are durable.  A restart calls the same
-``materialize_kg`` and skips buckets whose manifest rows are ``done`` — an
-anti-join of the partition list against the manifest — so a killed run
-resumes idempotently without rewriting finished partitions.
+Each table is written by one write action covering all of its missing
+buckets, and the three writes are submitted concurrently
+(:func:`kgist_spark.session.run_concurrently`); the per-bucket row counts
+ride the writes as ``Observation`` metrics.
 
-Edge ids: deterministic ``row_number`` over (subj, pred, obj, src_url) —
-NOT ``monotonically_increasing_id`` (partition-dependent).  At 10^12-row
-scale a global row_number is one total sort; swap in a per-bucket offset
-scheme (bucket_id * bucket_capacity + local row_number) when a total sort is
-too expensive — both are deterministic.
+Resumability: a bucket is recorded in the manifest only after its table's
+write is durable.  A restart calls the same ``materialize_kg`` and skips
+buckets whose manifest rows are ``done``, so a killed or failed run resumes
+idempotently without rewriting finished partitions.
+
+Edge ids: dense and deterministic over (subj, pred, obj, url) — NOT
+``monotonically_increasing_id`` (partition-dependent).
+:func:`deterministic_dense_ids` numbers rows within hash buckets of that key
+and adds each bucket's offset (one small collect of bucket sizes), so no
+total sort runs.
 """
 
 from __future__ import annotations
@@ -28,11 +32,12 @@ import datetime as _dt
 import json
 import os
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from typing import List
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from kgist_spark.session import run_concurrently
 
 MANIFEST = "_manifest.json"
 
@@ -151,18 +156,9 @@ def materialize_kg(spark: SparkSession, triples: DataFrame, labels: DataFrame,
     done = {
         (e["table"], e["bucket"]) for e in read_manifest(out_dir) if e["status"] == "done"
     }
-
-    tables = {
-        "kg_triples": bucketed(with_eids(triples), "subj", n_buckets).persist(),
-        "kg_labels": bucketed(labels, "node", n_buckets).persist(),
-    }
-    tables["kg_adjacency"] = bucketed(
-        adjacency(tables["kg_triples"].drop("bucket")), "node", n_buckets
-    ).persist()
-
     manifest_lock = threading.Lock()
 
-    def _write_table(name: str, df: DataFrame) -> int:
+    def _write_table(name: str, build) -> int:
         missing = [b for b in range(n_buckets) if (name, b) not in done]
         if not missing:
             return 0
@@ -175,7 +171,7 @@ def materialize_kg(spark: SparkSession, triples: DataFrame, labels: DataFrame,
         # pmod(hash(<row key>), files_per_bucket) — the write layout is
         # unchanged, only the file count per bucket directory grows.
         part = (
-            df.where(F.col("bucket").isin(missing))
+            build().where(F.col("bucket").isin(missing))
             .repartition(len(missing), F.col("bucket"))
         )
         # ONE write job for all missing buckets (dynamic partition overwrite
@@ -205,24 +201,21 @@ def materialize_kg(spark: SparkSession, triples: DataFrame, labels: DataFrame,
                 )
         return len(missing)
 
-    # kg_triples and kg_labels are independent — submit them as concurrent
-    # Spark jobs (the scheduler interleaves their stages; tiny stages no
-    # longer serialize on driver latency, and on a cluster the executors
-    # stay busy).  kg_adjacency reads the persisted kg_triples (eids), so
-    # it runs after kg_triples' write has materialized that persist.
-    written = 0
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = {
-            name: pool.submit(_write_table, name, tables[name])
-            for name in ("kg_triples", "kg_labels")
-        }
-        written += futs["kg_triples"].result()
-        adj_fut = pool.submit(_write_table, "kg_adjacency", tables["kg_adjacency"])
-        written += futs["kg_labels"].result() + adj_fut.result()
-    skipped = 3 * n_buckets - written
-    for df in tables.values():
-        df.unpersist()
-    return {"written": written, "skipped": skipped, "n_buckets": n_buckets}
+    # the three tables share no intermediate (the adjacency view does not
+    # read eids), so their writes run as concurrent jobs.  Each frame is
+    # built inside its thunk, only when the table has buckets to write, so
+    # with_eids' offset collect overlaps the other writes and a resume past
+    # a finished kg_triples skips it
+    written = sum(run_concurrently(
+        lambda: _write_table(
+            "kg_triples", lambda: bucketed(with_eids(triples), "subj", n_buckets)),
+        lambda: _write_table(
+            "kg_labels", lambda: bucketed(labels, "node", n_buckets)),
+        lambda: _write_table(
+            "kg_adjacency", lambda: bucketed(adjacency(triples), "node", n_buckets)),
+    ))
+    return {"written": written, "skipped": 3 * n_buckets - written,
+            "n_buckets": n_buckets}
 
 
 def read_kg(spark: SparkSession, out_dir: str):

@@ -91,19 +91,51 @@ class CandidateMeta:
         self.num_assertions = None  # nodes_with_type(root); filled lazily
 
 
+def candidate_meta(cand: DataFrame) -> Dict[tuple, CandidateMeta]:
+    """Per-rule driver metadata of a candidate contribution table, in scan
+    order: per-rule stats (``s``) and ca-size histogram (``h``) rows,
+    tagged, in ONE collect."""
+    meta_rows = (
+        C.candidate_stats(cand).withColumn("kind", F.lit("s"))
+        .unionByName(C.ca_size_histogram(cand).withColumn("kind", F.lit("h")),
+                     allowMissingColumns=True)
+        .collect()
+    )
+    stats_rows = []
+    hist: Dict[str, Dict[int, int]] = {}
+    for r in meta_rows:
+        if r["kind"] == "s":
+            stats_rows.append(r)
+        else:
+            hist.setdefault(_key(r), {})[r["ca_size"]] = r["n_heads"]
+    order = []
+    for r in stats_rows:
+        k = _key(r)
+        rule = ((r["root_label"],), ((r["pred"], r["dir"], ((r["child_label"],), ())),))
+        order.append(CandidateMeta(
+            rule, k, r["n_edges"], r["n_labels_cov"], r["n_cas"], hist.get(k, {}),
+            r["first_seen"],  # packed scan-order long
+        ))
+    order.sort(key=lambda m: m.first_seen)
+    return {m.rule: m for m in order}
+
+
 class DeltaGreedy:
     """Distributed-coverage greedy selection over candidate tables."""
 
     def __init__(self, triples: DataFrame, labels_flat: DataFrame,
                  stats: mdl.GraphStats, label_node_counts: Dict[str, int],
-                 cand: DataFrame | None = None):
+                 cand: DataFrame | None = None,
+                 meta: Dict[tuple, CandidateMeta] | None = None):
         """:triples: (subj, pred, obj, eid); :labels_flat: (node, label, pos);
         :label_node_counts: label -> #distinct nodes carrying it (the
         ``nodes_with_type`` map for single-label roots);
         :cand: optional pre-computed/reloaded candidate contribution table
         (S3 — :mod:`kgist_spark.sources.candidates_io`), making repeat
         delta-greedy runs restartable without re-running candidate
-        generation."""
+        generation;
+        :meta: ``candidate_meta(cand)`` when the caller already collected
+        it (``fit_summary`` runs that collect beside the graph aggregates)."""
         self.spark = triples.sparkSession
         self.stats = stats
         self.label_node_counts = label_node_counts
@@ -118,35 +150,9 @@ class DeltaGreedy:
             cand.select(_df_key_col(), "child_label", "child_node").distinct().persist()
         )
         self._cand_raw = cand
-
-        # one-time driver metadata: per-rule stats ('s') and ca-size
-        # histogram ('h') rows, tagged, in ONE collect
-        meta_rows = (
-            C.candidate_stats(cand).withColumn("kind", F.lit("s"))
-            .unionByName(C.ca_size_histogram(cand).withColumn("kind", F.lit("h")),
-                         allowMissingColumns=True)
-            .collect()
+        self.meta: Dict[tuple, CandidateMeta] = (
+            candidate_meta(cand) if meta is None else meta
         )
-        stats_rows = []
-        hist: Dict[str, Dict[int, int]] = {}
-        for r in meta_rows:
-            if r["kind"] == "s":
-                stats_rows.append(r)
-            else:
-                hist.setdefault(_key(r), {})[r["ca_size"]] = r["n_heads"]
-        self.meta: Dict[tuple, CandidateMeta] = {}
-        order = []
-        for r in stats_rows:
-            k = _key(r)
-            rule = ((r["root_label"],), ((r["pred"], r["dir"], ((r["child_label"],), ())),))
-            m = CandidateMeta(
-                rule, k, r["n_edges"], r["n_labels_cov"], r["n_cas"], hist.get(k, {}),
-                r["first_seen"],  # packed scan-order long
-            )
-            order.append(m)
-        order.sort(key=lambda m: m.first_seen)
-        for m in order:
-            self.meta[m.rule] = m
 
         # coverage state: ONE tagged DataFrame (kind 'e'|'l') so each accept
         # needs a single delta checkpoint and a single covered checkpoint

@@ -29,6 +29,7 @@ from kgist_spark.functions.mdl import GraphStats
 from kgist_spark.operators import candidates as C
 from kgist_spark.oracle.engine import GreedySearcher, ModelEvaluator, SummaryModel
 from kgist_spark.oracle.kg import CandRecord, LocalKG
+from kgist_spark.session import run_concurrently
 
 
 def _graph_aggregates(triples: DataFrame, labels_flat: DataFrame):
@@ -266,7 +267,7 @@ def fit_summary(triples: DataFrame, labels: DataFrame, passes: int = 2,
     :cand_edges: optional precomputed/reloaded contribution table (S3) —
     skips candidate generation in EITHER regime.
     """
-    from kgist_spark.plans.greedy_delta import DeltaGreedy
+    from kgist_spark.plans.greedy_delta import DeltaGreedy, candidate_meta
     from kgist_spark.sources.edgelist import explode_labels
 
     if mode not in ("auto", "exact", "delta"):
@@ -296,8 +297,14 @@ def fit_summary(triples: DataFrame, labels: DataFrame, passes: int = 2,
                 "summarizer": summ,
             }
 
-        stats, lnc = _graph_aggregates(triples, labels_flat)
-        dg = DeltaGreedy(triples, labels_flat, stats, lnc, cand=cand_edges)
+        # the graph aggregates read only triples and labels, the metadata
+        # only the candidate table: two independent collects, run together
+        (stats, lnc), meta = run_concurrently(
+            lambda: _graph_aggregates(triples, labels_flat),
+            lambda: candidate_meta(cand_edges),
+        )
+        dg = DeltaGreedy(triples, labels_flat, stats, lnc, cand=cand_edges,
+                         meta=meta)
         result = dg.fit(passes=passes, label_qualify=label_qualify)
         result["mode"] = "delta"
         result["delta"] = dg

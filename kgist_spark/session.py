@@ -6,11 +6,17 @@ partition count sized to the local core budget (overridden on a real cluster
 via spark-submit conf).  That count is the *initial* width: AQE coalesces
 each shuffle to what its data needs, persisted plans included, so no caller
 narrows the session width around a small job.
+
+:func:`run_concurrently` is the one place that submits Spark actions from
+more than one thread.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -103,3 +109,32 @@ def entry_session(app_name: str) -> SparkSession:
     if os.environ.get("PYSPARK_GATEWAY_PORT"):
         return SparkSession.builder.appName(app_name).getOrCreate()
     return get_spark(app_name=app_name)
+
+
+def run_concurrently(*thunks: Callable) -> list:
+    """Call independent Spark actions at once; return their results in order.
+
+    At this pipeline's scale a chain of small actions is bound by per-job
+    scheduling latency, not data, so actions that share no input finish
+    sooner side by side: the scheduler interleaves their stages.  Each thunk
+    is wrapped on its own in ``inheritable_thread_target``, which gives it a
+    private copy of the caller's local properties (job group, scheduler
+    pool): Spark SQL sets and restores per-thread keys such as the execution
+    id on that object during every query, so one copy shared by concurrent
+    thunks would let them overwrite each other's.  Without pinned threads
+    the wrapper returns the thunk unchanged.  Every thunk runs to completion
+    before the first failure (in argument order) is re-raised, so no write
+    is still running when the caller's error handling starts.  Thunks must
+    not change session conf: it is shared by all of them."""
+    from pyspark.util import inheritable_thread_target
+
+    with warnings.catch_warnings():
+        # the callable form warns that session tags are not carried over;
+        # nothing here tags its session
+        warnings.filterwarnings("ignore", "Spark session is not provided",
+                                UserWarning)
+        targets = [inheritable_thread_target(thunk) for thunk in thunks]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(target) for target in targets]
+    # leaving the pool waited for every thunk
+    return [f.result() for f in futures]

@@ -87,6 +87,7 @@ from kgist_spark.pipeline.materialize import (
     read_manifest,
 )
 from kgist_spark.operators import minhash as MH
+from kgist_spark.session import run_concurrently
 
 #: schema of the page files the stream picks up (the web-page table shape)
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -633,77 +634,82 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
             labels = labels.join(
                 existing_labels.select("node", "label"), ["node", "label"], "left_anti"
             )
-            max_eid = existing_triples.agg(F.max("eid").alias("m")).collect()[0]["m"]
-            eid_offset = (max_eid if max_eid is not None else -1) + 1
-        else:
-            eid_offset = 0
-        triples = _persist(
-            deterministic_dense_ids(triples, ["subj", "pred", "obj", "url"], "eid")
-            .withColumn("eid", F.col("eid") + F.lit(eid_offset))
-        )
-        labels = _persist(labels)
+        # read by the eid numbering, the triples write and the adjacency write
+        triples = _persist(triples)
 
-        counts = {}
-        outputs = {
-            "kg_triples": bucketed(triples, "subj", n_buckets),
-            "kg_labels": bucketed(labels, "node", n_buckets),
-            "kg_adjacency": bucketed(adjacency(triples), "node", n_buckets),
-        }
-        for name, df in outputs.items():
+        def _eid_triples() -> DataFrame:
+            # edge ids continue the existing sequence
+            eid_offset = 0
+            if existing_triples is not None:
+                max_eid = existing_triples.agg(F.max("eid").alias("m")).collect()[0]["m"]
+                eid_offset = (max_eid if max_eid is not None else -1) + 1
+            return (
+                deterministic_dense_ids(triples, ["subj", "pred", "obj", "url"], "eid")
+                .withColumn("eid", F.col("eid") + F.lit(eid_offset))
+            )
+
+        def _write_kg(name: str, df: DataFrame) -> dict:
             part = df.withColumn("batch", F.lit(batch_id)).repartition(
                 n_buckets, F.col("bucket")
             )
             # per-bucket lineage counts ride the write itself as Observation
             # metrics — no follow-up count job / second scan per table
-            counts[name] = observed_bucket_counts(
+            return observed_bucket_counts(
                 part, range(n_buckets),
                 lambda obs_part: obs_part.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch", "bucket")
                 .parquet(os.path.join(out_dir, name)),
             )
+
+        def _append(df: DataFrame, table_dir: str, width: int) -> None:
+            df.withColumn("batch", F.lit(batch_id)) \
+                .repartition(width) \
+                .write.mode("overwrite") \
+                .option("partitionOverwriteMode", "dynamic") \
+                .partitionBy("batch") \
+                .parquet(os.path.join(out_dir, table_dir))
+
         # dictionary/index append width scales with the batch's NEW-surface
         # count: one file is right for today's incremental trickle, wrong for
         # a 10^8-entity backfill batch (a single write task + one giant
-        # file).  canon is persisted, so the sizing count scans cache only.
+        # file).  The count materializes the persisted canon before the
+        # concurrent writes below all read it.
         n_new_surfaces = canon.where("is_new").count()
         # uncapped by n_buckets: the KG bucket count is unrelated to append-
         # file sizing, and a 10^8-surface backfill batch NEEDS >8 files
         dict_width = max(1, n_new_surfaces // _DICT_ROWS_PER_FILE + 1)
+        index_width = max(1, n_new_surfaces * _BANDS // _DICT_ROWS_PER_FILE + 1)
         new_dict = canon.where("is_new").select(
             F.col("node").alias("surface"), "canonical"
-        ).withColumn("batch", F.lit(batch_id)).repartition(dict_width)
-        new_dict.write.mode("overwrite") \
-            .option("partitionOverwriteMode", "dynamic") \
-            .partitionBy("batch") \
-            .parquet(os.path.join(out_dir, DICT_DIR))
+        )
         # extend the LSH index with the batch's new surfaces (same family),
         # so the NEXT batch's linking joins against it instead of re-hashing
         # the whole dictionary; the per-bucket size partials ride along so
         # later batches can size hot buckets (and the dictionary) without
         # scanning the index
-        _, new_buckets = _surface_lsh(
-            canon.where("is_new").select(F.col("node").alias("surface"))
-        )
+        _, new_buckets = _surface_lsh(new_dict.select("surface"))
         new_buckets = _persist(
             new_buckets.select(F.col("id").alias("surface"), "band", "bucket")
         )
-        index_width = max(1, n_new_surfaces * _BANDS // _DICT_ROWS_PER_FILE + 1)
-        new_buckets.withColumn("batch", F.lit(batch_id)) \
-            .repartition(index_width) \
-            .write.mode("overwrite") \
-            .option("partitionOverwriteMode", "dynamic") \
-            .partitionBy("batch") \
-            .parquet(os.path.join(out_dir, INDEX_DIR))
-        new_buckets.groupBy("band", "bucket").agg(F.count("*").alias("n")) \
-            .withColumn("batch", F.lit(batch_id)) \
-            .repartition(index_width) \
-            .write.mode("overwrite") \
-            .option("partitionOverwriteMode", "dynamic") \
-            .partitionBy("batch") \
-            .parquet(os.path.join(out_dir, SIZES_DIR))
+        new_sizes = new_buckets.groupBy("band", "bucket").agg(F.count("*").alias("n"))
 
-        for name in outputs:
+        # the six writes share only persisted inputs, so they run as
+        # concurrent jobs; the manifest rows below are appended only once
+        # every write has finished, so a replay after any failure redoes
+        # the whole batch
+        kg_counts = run_concurrently(
+            lambda: _write_kg("kg_triples", bucketed(_eid_triples(), "subj", n_buckets)),
+            lambda: _write_kg("kg_labels", bucketed(labels, "node", n_buckets)),
+            lambda: _write_kg("kg_adjacency",
+                              bucketed(adjacency(triples), "node", n_buckets)),
+            lambda: _append(new_dict, DICT_DIR, dict_width),
+            lambda: _append(new_buckets, INDEX_DIR, index_width),
+            lambda: _append(new_sizes, SIZES_DIR, index_width),
+        )[:3]
+        counts = dict(zip(("kg_triples", "kg_labels", "kg_adjacency"), kg_counts))
+
+        for name in counts:
             for b in range(n_buckets):
                 _append_manifest(out_dir, {
                     "table": name, "bucket": b, "batch": batch_id,

@@ -397,11 +397,51 @@ def test_materialize_and_resume(spark, pages, tmp_path):
     assert eids == list(range(len(eids)))
 
 
+def test_materialize_failed_write_then_resume(spark, tmp_path):
+    """A table write that fails inside the concurrent writes: the error
+    surfaces only after the other two writes finished and recorded their
+    buckets, the failed table gets no ``done`` row, a rerun writes just
+    that table, and no persisted RDD is left behind either time."""
+    from kgist_spark.pipeline.materialize import materialize_kg, read_kg, read_manifest
+
+    triples = spark.createDataFrame(
+        [(f"s{i % 7}", "p", f"o{i}", f"u{i}") for i in range(50)],
+        "subj string, pred string, obj string, url string",
+    )
+    labels = spark.createDataFrame(
+        [(f"s{i}", "thing", 0) for i in range(23)], "node string, label string, pos int"
+    )
+    out = tmp_path / "kg"
+    out.mkdir()
+    blocker = out / "kg_labels"
+    blocker.write_text("not a directory")
+    sc = spark.sparkContext
+    cached_before = set(sc._jsc.getPersistentRDDs().keySet())
+
+    with pytest.raises(Exception, match="Parent path is not a directory"):
+        materialize_kg(spark, triples, labels, str(out), n_buckets=4)
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    done = {(e["table"], e["bucket"]) for e in read_manifest(str(out))
+            if e["status"] == "done"}
+    assert done == {(t, b) for t in ("kg_triples", "kg_adjacency") for b in range(4)}
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
+
+    blocker.unlink()
+    res = materialize_kg(spark, triples, labels, str(out), n_buckets=4)
+    assert res["written"] == 4 and res["skipped"] == 8
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
+    t2, l2 = read_kg(spark, str(out))
+    assert t2.count() == 50 and l2.count() == 23
+
+
 def test_materialize_manifest_counts_ride_the_writes(spark, tmp_path):
     """Lineage row counts come from Observation metrics on the write jobs —
     no follow-up groupBy(bucket).count() job per table.  Pins (a) the counts
-    are exact and (b) the whole materialize fires no more jobs than the
-    writes + the one documented eid-offset collect."""
+    are exact and (b) the whole materialize, including the jobs its
+    concurrent writes submit from pool threads (they inherit the caller's
+    job group), fires no more jobs than the three writes, the eid-offset
+    collect and their AQE stage jobs: 9 here.  When the pool threads did
+    not inherit the group, only 2 of the 12 jobs it then ran were counted."""
     from kgist_spark.pipeline.materialize import materialize_kg, read_manifest
 
     triples = spark.createDataFrame(
@@ -416,12 +456,11 @@ def test_materialize_manifest_counts_ride_the_writes(spark, tmp_path):
     sc.setJobGroup("mat_jobs", "materialize")
     try:
         materialize_kg(spark, triples, labels, out, n_buckets=4)
-        jobs = list(sc.statusTracker().getJobIdsForGroup("mat_jobs"))
     finally:
         sc.setJobGroup("mat_done", "done")
-    # 3 table writes + 1 deterministic-eid offset collect (+ slack for AQE
-    # sub-jobs); the old shape paid 3 additional count jobs on top
-    assert len(jobs) <= 6, f"materialize fired {len(jobs)} jobs"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup("mat_jobs"))
+    assert len(jobs) <= 9, f"materialize fired {len(jobs)} jobs"
 
     from pyspark.sql import functions as F
 

@@ -1,16 +1,18 @@
 """The session's default driver heap and core count fit the host it runs
 on (no JVM), a standalone entry point's driver JVM is launched with them,
-and AQE narrows persisted plans below the session's shuffle width."""
+AQE narrows persisted plans below the session's shuffle width, and
+concurrent actions run in the caller's job group."""
 
 import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from kgist_spark.session import driver_memory, local_cpus
+from kgist_spark.session import driver_memory, local_cpus, run_concurrently
 from tests.conftest import REPO_ROOT
 
 
@@ -92,3 +94,61 @@ def test_persisted_small_aggregate_is_coalesced(spark):
         assert df.rdd.getNumPartitions() < width
     finally:
         df.unpersist()
+
+
+@pytest.mark.spark
+def test_run_concurrently_keeps_the_job_group_and_waits_for_all(spark):
+    """Results come back in argument order; every job a thunk runs is in the
+    caller's job group; a failure is re-raised only after the slower thunks
+    have finished."""
+    sc = spark.sparkContext
+    finished = []
+
+    def slow():
+        time.sleep(0.5)
+        finished.append(spark.range(5).count())
+
+    def fail():
+        raise ValueError("thunk failed")
+
+    sc.setJobGroup("concurrent_probe", "run_concurrently")
+    try:
+        got = run_concurrently(lambda: spark.range(3).count(),
+                               lambda: spark.range(4).count())
+        with pytest.raises(ValueError, match="thunk failed"):
+            run_concurrently(fail, slow)
+        assert finished == [5]
+    finally:
+        sc.setJobGroup("concurrent_done", "done")
+    assert got == [3, 4]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("concurrent_probe")) >= 3
+
+
+@pytest.mark.spark
+def test_run_concurrently_gives_each_thunk_its_own_local_properties(spark):
+    """Concurrent thunks that each run a query work on separate copies of the
+    caller's local properties, so none is left holding another's SQL
+    execution id."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+
+    def probe():
+        spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().collect()
+        props = sc._jsc.sc().getLocalProperties()
+        return (jvm.System.identityHashCode(props),
+                props.getProperty("spark.sql.execution.id"))
+
+    got = run_concurrently(probe, probe)
+    caller = jvm.System.identityHashCode(sc._jsc.sc().getLocalProperties())
+    assert [execution_id for _, execution_id in got] == [None, None]
+    assert len({got[0][0], got[1][0], caller}) == 3
+
+
+def test_run_concurrently_without_pinned_threads(monkeypatch):
+    """With pinned-thread mode off, ``inheritable_thread_target`` returns the
+    thunk unchanged, and the thunks still run."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    assert run_concurrently(lambda: 1, lambda: 2) == [1, 2]
