@@ -238,145 +238,3 @@ def _driver_components(spark, pairs, id_type):
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
     return local_frame(spark, rows, schema)
-
-
-def minlabel_rounds(edges: DataFrame, src: str = "a", dst: str = "b",
-                    rounds: int = 8, rows_per_partition: int = 200_000,
-                    broadcast_max_nodes: int = 2_000_000) -> DataFrame:
-    """``(node, component)`` after EXACTLY ``rounds`` synchronous min-label
-    rounds — component(v) = min node id within v's ``rounds``-hop ball.
-
-    The oracle-replayable face of :func:`connected_components`: a fixed
-    round count (no convergence probe, no driver path, no star handoff)
-    makes the computation a pure dataflow an ANSI-SQL oracle replays as
-    ``rounds`` chained CTEs.
-    When ``rounds`` ≥ the distance from each component's minimum-id node
-    to its farthest member, the output IS connected components (tests pin
-    round-R == round-R+1 on the target graph); either way the result is
-    deterministic at any parallelism (min over ids commutes).
-
-    Loop shape:
-
-    * when the MEASURED node count fits ``broadcast_max_nodes`` the label
-      table (the graph's node set — orders of magnitude narrower than the
-      edge list) is BROADCAST into the per-round join, leaving the grouped
-      min as the round's only shuffle, and that shuffle moves map-side
-      partials (≤ one row per node per partition), never the exploded
-      neighbor stream; the hint is size-GATED, never forced;
-    * above the gate the loop falls back to a shuffle join with the
-      symmetric edge list pre-partitioned (and persisted) on the join key
-      ``v``, so only the narrow label table re-shuffles each round;
-    * the loop's shuffle width is sized from the measured edge count and
-      scoped to the loop (a fixed global width pays per-task scheduling
-      overhead ~width×rounds times on small graphs);
-    * ``localCheckpoint(eager=False)`` per round pins lineage at depth 1
-      without forcing a job per round; the LAST round's checkpoint is
-      eager and sweeps the whole chain in one job while the scoped width
-      and the edge cache are still in effect."""
-    spark = edges.sparkSession
-    # canonical (least, greatest) distinct FIRST, symmetric explode AFTER:
-    # the dedup shuffle moves half the rows of the explode-then-distinct
-    # order (at web scale the distinct is the prep's dominant shuffle)
-    sym = (
-        edges.where(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-            & (F.col(src) != F.col(dst))
-        )
-        .select(
-            F.least(src, dst).alias("cu"), F.greatest(src, dst).alias("cv")
-        )
-        .distinct()
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("cu").alias("u"), F.col("cv").alias("v")),
-                    F.struct(F.col("cv").alias("u"), F.col("cu").alias("v")),
-                )
-            ).alias("p")
-        )
-        .select("p.u", "p.v")
-        .persist()
-    )
-    conf = spark.conf
-    old_width = conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_edges = sym.count()  # materializes the pin; sizes the loop width
-        width = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            -(-n_edges // rows_per_partition),
-        ))
-        conf.set("spark.sql.shuffle.partitions", str(width))
-        comp = (
-            sym.select(F.col("u").alias("node"))
-            .distinct()
-            .withColumn("component", F.col("node"))
-            .localCheckpoint()
-        )
-        n_nodes = comp.count()  # cheap: reads the checkpoint
-        bcast = n_nodes <= broadcast_max_nodes
-        if not bcast:
-            # huge-graph regime only: repartition the fat side ONCE so every
-            # round's shuffle join reuses the layout edge-side-shuffle-free
-            resym = sym.repartition("v").persist()
-            resym.count()
-            sym.unpersist()
-            sym = resym
-        for i in range(rounds):
-            lab = comp.withColumnRenamed("node", "v")
-            if bcast:
-                lab = F.broadcast(lab)
-            neighbor = (
-                sym.join(lab, "v")
-                .select(F.col("u").alias("node"), "component")
-            )
-            comp = (
-                comp.unionByName(neighbor)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-                # lineage pinned at depth 1; only the LAST round pays an
-                # eager job, sweeping the lazy chain while caches hold
-                .localCheckpoint(eager=i == rounds - 1)
-            )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_width)
-        sym.unpersist()
-    return comp
-
-
-def minlabel_oracle_sql(edges_sql: str, rounds: int = 8,
-                        src: str = "a", dst: str = "b") -> str:
-    """ANSI-SQL replay of :func:`minlabel_rounds`: the same ``rounds``
-    synchronous min-label rounds unrolled as chained CTEs over
-    ``edges_sql`` (a query producing columns
-    ``src, dst``).  Hash equality of the final (node, component) table
-    proves the distributed loop round-for-round.
-
-    Each round CTE references its predecessor exactly ONCE: the symmetric
-    edge list carries a self-loop per node, so ``min(component) over
-    neighbors-including-self`` is one join + one group-by (the first cut
-    kept "self" as a second reference to ``r{{i-1}}`` — engines that
-    inline CTEs re-evaluated the whole chain per reference, turning 8
-    rounds into 2^8 evaluations; 360 s → 0.1 s at sf0.001)."""
-    ctes = [
-        f"""e_in AS ({edges_sql}),
-    und AS (
-        SELECT {src} AS u, {dst} AS v FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {src} FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {src}, {src} FROM e_in WHERE {src} != {dst}
-        UNION
-        SELECT {dst}, {dst} FROM e_in WHERE {src} != {dst}
-    ),
-    r0 AS (SELECT DISTINCT u AS node, u AS component FROM und)"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""r{i} AS (
-        SELECT e.u AS node, min(c.component) AS component
-        FROM und e
-        JOIN r{i - 1} c ON c.node = e.v
-        GROUP BY e.u
-    )"""
-        )
-    return "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, component FROM r{rounds}"

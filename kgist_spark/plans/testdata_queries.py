@@ -596,30 +596,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
-#: synchronous min-label rounds for kg_components — the derived KG is one
-#: giant component (nations hub everything) with min-label convergence
-#: measured at round 7 on BOTH sf0.001 and sf0.01; 8 leaves a margin and
-#: the fixed count keeps Spark and the oracle round-for-round identical
-#: whether or not the graph has converged.
-_CC_ROUNDS = 8
-
-
-def q_kg_components(spark, sf_dir):
-    """Connected components of the derived KG (undirected) via EXACTLY
-    ``_CC_ROUNDS`` synchronous min-label rounds — the oracle-replayable
-    variant of the X4 components family (the adaptive
-    ``connected_components`` driver/star paths are pinned by pytest;
-    this row pins the distributed min-label loop itself against chained
-    unrolled CTEs)."""
-    from kgist_spark.operators.components import minlabel_rounds
-
-    t = derived_triples(spark, sf_dir)
-    return minlabel_rounds(
-        t.select(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        rounds=_CC_ROUNDS,
-    )
-
-
 def _pii_enriched_docs(spark, sf_dir):
     """The documents table with deterministic synthetic PII appended to
     every third document (the testdata corpus has none) — the SAME
@@ -990,7 +966,6 @@ QUERIES = {
     "dedup_embedding": q_dedup_embedding,
     "decontaminate": q_decontaminate,
     "repetition": q_repetition,
-    "kg_components": q_kg_components,
     "pii_scrub": q_pii_scrub,
     "line_dedup": q_line_dedup,
     "dup_ngrams": q_dup_ngrams,
@@ -1477,19 +1452,6 @@ ORACLE_SQL["embedding_ann_lsh"] = rf"""
     ORDER BY cosine DESC, vec_id ASC
     LIMIT 10
 """
-
-
-def _components_oracle() -> str:
-    from kgist_spark.operators.components import minlabel_oracle_sql
-
-    edges = f"SELECT subj AS a, obj AS b FROM ({DERIVED_TRIPLES_SQL})"
-    return minlabel_oracle_sql(edges, rounds=_CC_ROUNDS)
-
-
-# fixed-round synchronous min-label: both engines run exactly _CC_ROUNDS
-# rounds, so the tables agree round-for-round (convergence at round 7 on the
-# test SFs makes the result true connected components — pinned by pytest)
-ORACLE_SQL["kg_components"] = _components_oracle()
 
 
 # dup_ngrams: the oracle replays the identical in-row 5-gram windows (md5

@@ -56,11 +56,12 @@ linking work is the index scan plus O(batch + matches) shuffles; the
 exact-hit and anti-joins against the dictionary/KG are equi-joins whose
 shuffle AQE plans from runtime sizes.  Hot-bucket detection aggregates the
 narrow size side table ONLY over the buckets the batch touches (semi-join
-on the batch side), and the dictionary-size probe reads the lineage
-manifest on the driver — no per-batch re-hash or full-index aggregate;
-the residual per-batch term is the columnar scan of the sizes table
+on the batch side) — no per-batch re-hash or full-index aggregate; the
+residual per-batch term is the columnar scan of the sizes table
 (O(distinct index buckets) narrow rows — compact it with a periodic
-snapshot if it ever dominates).
+snapshot if it ever dominates).  The dictionary, its index and the sizes
+table are written together for every batch, so they always hold the same
+batches; a KG where they do not is refused, never linked around.
 """
 
 from __future__ import annotations
@@ -75,7 +76,6 @@ from kgist_spark.pipeline.canonicalize import (
     apply_canonical_triples,
     canonical_map,
     entity_vocabulary,
-    link_mentions,
 )
 from kgist_spark.pipeline.run import extract_facts_dedup
 from kgist_spark.pipeline.materialize import (
@@ -94,9 +94,8 @@ PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang strin
 DICT_DIR = "canon_dict"
 INDEX_DIR = "canon_index"
 SIZES_DIR = "canon_index_sizes"
-#: LSH family shared with canonical_map / link_mentions defaults — the
-#: index MUST use the same hashes so indexed and unindexed linking see the
-#: same candidate pairs
+#: LSH family shared with canonical_map's defaults — a persisted index is
+#: only valid for the hashes it was written with
 _NUM_PERM, _BANDS, _ROWS_PER_BAND = 32, 8, 4
 #: target rows per dictionary/index append file — sizes the write width so a
 #: huge backfill batch fans out while the usual trickle stays a single file
@@ -110,30 +109,6 @@ def _surface_lsh(surfaces: DataFrame):
     sk = MH.char_shingles(surfaces, "surface", "surface", k=3)
     sigs = MH.minhash_signatures(sk, num_perm=_NUM_PERM)
     return sk, MH.lsh_buckets(sigs, bands=_BANDS, rows_per_band=_ROWS_PER_BAND)
-
-
-def read_index(spark: SparkSession, out_dir: str,
-               exclude_batch: int | None = None) -> DataFrame | None:
-    """The persisted dictionary LSH index ``(surface, band, bucket)``, or
-    None if absent OR not covering every dictionary batch (a KG whose
-    early batches predate the index would otherwise link against an index
-    that is blind to the early surfaces — near-matches to them would
-    silently become NEW canonical groups, diverging from unindexed
-    linking).  Pre-/partial-index KGs fall back to unindexed linking."""
-    path = os.path.join(out_dir, INDEX_DIR)
-    dict_batches = _batch_ids(os.path.join(out_dir, DICT_DIR))
-    index_batches = _batch_ids(path)
-    if exclude_batch is not None:
-        dict_batches.discard(exclude_batch)
-        index_batches.discard(exclude_batch)
-    if not index_batches or not dict_batches <= index_batches:
-        return None
-    df = spark.read.option("basePath", path).parquet(
-        os.path.join(path, "batch=*")
-    )
-    if exclude_batch is not None:
-        df = df.where(F.col("batch") != exclude_batch)
-    return df.select("surface", "band", "bucket")
 
 
 def _has_batches(path: str) -> bool:
@@ -153,49 +128,68 @@ def _batch_ids(path: str) -> set:
     }
 
 
-def read_index_sizes(spark: SparkSession, out_dir: str,
-                     exclude_batch: int | None = None) -> DataFrame | None:
-    """RAW per-batch bucket-size partials ``(band, bucket, n)`` from the
-    ``canon_index_sizes`` side table, or None when the side table does not
-    COVER the index — a KG whose early batches predate the table would
-    otherwise yield silently-partial sums (hot buckets under-counted, the
-    cap disabled on exactly the degenerate buckets it exists for).
-    Consumers confine their aggregation to the buckets a batch actually
-    touches (semi-join), so per-batch work is bounded by the narrow sizes
-    scan, not a full-index re-hash."""
-    path = os.path.join(out_dir, SIZES_DIR)
-    index_batches = _batch_ids(os.path.join(out_dir, INDEX_DIR))
-    sizes_batches = _batch_ids(path)
-    if exclude_batch is not None:
-        index_batches.discard(exclude_batch)
-        sizes_batches.discard(exclude_batch)
-    if not sizes_batches or not index_batches <= sizes_batches:
-        return None  # absent or partial coverage: caller sizes the index
+def _state_batches(out_dir: str, exclude_batch: int | None = None) -> set:
+    """Batch ids of the dictionary state — ``canon_dict``, ``canon_index``
+    and ``canon_index_sizes`` — after dropping ``exclude_batch``; empty
+    before the first batch.  Raises ``ValueError`` unless all three tables
+    hold the same batches: an index blind to some dictionary batch would
+    turn near-matches to its surfaces into NEW canonical groups, and a
+    sizes table missing a batch under-counts hot buckets (the cap
+    disabled on exactly the degenerate buckets it exists for)."""
+    found = {sub: _batch_ids(os.path.join(out_dir, sub)) - {exclude_batch}
+             for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR)}
+    batches = set().union(*found.values())
+    missing = {sub: sorted(batches - have)
+               for sub, have in found.items() if batches - have}
+    if missing:
+        raise ValueError(
+            f"dictionary state under {out_dir} is not covered: missing "
+            f"batches {missing}"
+        )
+    return batches
+
+
+def _read_state(spark: SparkSession, out_dir: str, sub: str, cols: tuple,
+                exclude_batch: int | None) -> DataFrame | None:
+    """``cols`` of one dictionary-state table over all batches but
+    ``exclude_batch`` (coverage-checked), or None before the first batch."""
+    if not _state_batches(out_dir, exclude_batch):
+        return None
+    path = os.path.join(out_dir, sub)
     df = spark.read.option("basePath", path).parquet(
         os.path.join(path, "batch=*")
     )
     if exclude_batch is not None:
         df = df.where(F.col("batch") != exclude_batch)
-    return df.select("band", "bucket", "n")
+    return df.select(*cols)
 
 
-def dict_size_from_manifest(out_dir: str,
-                            exclude_batch: int | None = None) -> int | None:
-    """Dictionary row count accumulated from the per-batch ``canon_dict``
-    manifest rows — O(#batches) driver-side, no Spark job.  None when the
-    manifest does not cover every dictionary batch on disk (pre-manifest
-    KGs); replayed batches overwrite, so the LAST row per batch wins."""
-    dict_batches = _batch_ids(os.path.join(out_dir, DICT_DIR))
-    if exclude_batch is not None:
-        dict_batches.discard(exclude_batch)
-    by_batch: dict = {}
-    for e in read_manifest(out_dir):
-        if (e["table"] == "canon_dict" and e["status"] == "done"
-                and e.get("batch") != exclude_batch):
-            by_batch[e["batch"]] = e["n_rows"]
-    if not dict_batches <= set(by_batch):
-        return None
-    return sum(by_batch[b] for b in dict_batches)
+def read_dictionary(spark: SparkSession, out_dir: str,
+                    exclude_batch: int | None = None) -> DataFrame | None:
+    """``(surface, canonical)`` over all batches, or None before batch 0.
+    ``exclude_batch`` drops one batch's rows — the replay path must see the
+    dictionary exactly as the original run did, not its own output."""
+    return _read_state(spark, out_dir, DICT_DIR, ("surface", "canonical"),
+                       exclude_batch)
+
+
+def read_index(spark: SparkSession, out_dir: str,
+               exclude_batch: int | None = None) -> DataFrame | None:
+    """The persisted dictionary LSH index ``(surface, band, bucket)``, or
+    None before batch 0; raises when it does not cover the dictionary."""
+    return _read_state(spark, out_dir, INDEX_DIR, ("surface", "band", "bucket"),
+                       exclude_batch)
+
+
+def read_index_sizes(spark: SparkSession, out_dir: str,
+                     exclude_batch: int | None = None) -> DataFrame | None:
+    """RAW per-batch bucket-size partials ``(band, bucket, n)`` from the
+    ``canon_index_sizes`` side table, or None before batch 0; raises when it
+    does not cover the index.  Consumers confine their aggregation to the
+    buckets a batch actually touches (semi-join), so per-batch work is
+    bounded by the narrow sizes scan, not a full-index re-hash."""
+    return _read_state(spark, out_dir, SIZES_DIR, ("band", "bucket", "n"),
+                       exclude_batch)
 
 
 def compact_dictionary_state(spark: SparkSession, out_dir: str,
@@ -212,13 +206,12 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
 
     Contracts preserved: readers see IDENTICAL content (sizes are summed,
     dictionary/index rows unioned); every table is compacted over the SAME
-    batch set — a side table that does not COVER those batches (pre-sizes /
-    pre-index KGs) has its old partials DROPPED instead of merged, so it
-    stays visibly non-covering and the read guards keep falling back
-    correctly (never a fabricated partial merge that would pass coverage).
-    Replay-exclusion survives because only the newest ``keep_last >= 1``
-    batches are ever replayable (the stream checkpoint has long committed
-    the compacted ones) and those keep their own partitions.
+    batch set.  A KG whose three tables do not hold the same batches is
+    refused with ``ValueError`` before anything is staged (a merge would
+    fabricate coverage the readers then trust).  Replay-exclusion survives
+    because only the newest ``keep_last >= 1`` batches are ever replayable
+    (the stream checkpoint has long committed the compacted ones) and
+    those keep their own partitions.
 
     Crash safety (run OFFLINE, not concurrently with the stream): all
     merged data is written to non-destructive ``_compact_ready`` staging
@@ -244,28 +237,22 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
         for sub, entry in plan["tables"].items():
             path = os.path.join(out_dir, sub)
             ready = path + "._compact_ready"
-            if entry["mode"] == "merge" and not os.path.isdir(ready):
-                # this table's swap already completed on a previous attempt
-                # (os.replace consumed the staging dir): batch=<target> now
-                # HOLDS the merged data — remove only the other old
-                # partitions, never the target
-                for b in entry["old"]:
-                    if b != plan["target"]:
-                        shutil.rmtree(os.path.join(path, f"batch={b}"),
-                                      ignore_errors=True)
-                continue
+            # once this table's swap has completed (os.replace consumed the
+            # staging dir, possibly on a previous attempt), batch=<target>
+            # HOLDS the merged data — remove only the other old partitions
+            swapped = not os.path.isdir(ready)
             for b in entry["old"]:
-                shutil.rmtree(os.path.join(path, f"batch={b}"),
-                              ignore_errors=True)
-            if entry["mode"] == "merge":
+                if not (swapped and b == plan["target"]):
+                    shutil.rmtree(os.path.join(path, f"batch={b}"),
+                                  ignore_errors=True)
+            if not swapped:
                 os.replace(ready, os.path.join(path, f"batch={plan['target']}"))
-        if plan.get("dict_rows") is not None:
-            # last row per batch wins, so a duplicate append on recovery is
-            # harmless; coverage checks disk dirs, which are gone
-            _append_manifest(out_dir, {
-                "table": "canon_dict", "batch": plan["target"],
-                "n_rows": plan["dict_rows"], "status": "done",
-            })
+        # lineage: the last canon_dict row of a batch is its current size,
+        # so a duplicate append on recovery is harmless
+        _append_manifest(out_dir, {
+            "table": "canon_dict", "batch": plan["target"],
+            "n_rows": plan["dict_rows"], "status": "done",
+        })
         os.remove(plan_path)
         return {"compacted": plan["n_old"], "into": plan["target"],
                 "recovered": plan.get("recovered", False)}
@@ -276,26 +263,16 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
         plan["recovered"] = True
         return _finish(plan)
 
-    batches = sorted(_batch_ids(os.path.join(out_dir, DICT_DIR)))
+    batches = sorted(_state_batches(out_dir))
     old = batches[:max(0, len(batches) - keep_last)]
     if len(old) <= 1:
         return {"compacted": 0, "into": None}
     target = old[-1]
 
-    # phase 1 — non-destructive: stage every merge, decide merge-vs-drop
-    plan = {"target": target, "n_old": len(old), "tables": {},
-            "dict_rows": None}
+    # phase 1 — non-destructive: stage every merge
+    plan = {"target": target, "n_old": len(old), "tables": {}}
     for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
         path = os.path.join(out_dir, sub)
-        present = _batch_ids(path)
-        if not present & set(old):
-            continue
-        if not set(old) <= present:
-            # partial coverage (pre-sizes / pre-index KG): dropping the
-            # partials keeps the table visibly non-covering for the guards
-            plan["tables"][sub] = {"old": sorted(present & set(old)),
-                                   "mode": "drop"}
-            continue
         df = (
             spark.read.option("basePath", path)
             .parquet(os.path.join(path, "batch=*"))
@@ -315,7 +292,7 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
                 pq.ParquetFile(os.path.join(ready, f)).metadata.num_rows
                 for f in os.listdir(ready) if f.endswith(".parquet")
             )
-        plan["tables"][sub] = {"old": list(old), "mode": "merge"}
+        plan["tables"][sub] = {"old": old}
 
     # phase 2 — write-ahead plan (atomic: a crash mid-write must never
     # leave a truncated plan that bricks the next run), then the swap
@@ -342,27 +319,9 @@ def read_incremental_kg(spark: SparkSession, out_dir: str):
     return triples, labels
 
 
-def read_dictionary(spark: SparkSession, out_dir: str,
-                    exclude_batch: int | None = None) -> DataFrame | None:
-    """``(surface, canonical)`` over all batches, or None before batch 0.
-    ``exclude_batch`` drops one batch's rows — the replay path must see the
-    dictionary exactly as the original run did, not its own output."""
-    path = os.path.join(out_dir, DICT_DIR)
-    if not _has_batches(path):
-        return None
-    df = spark.read.option("basePath", path).parquet(
-        os.path.join(path, "batch=*")
-    )
-    if exclude_batch is not None:
-        df = df.where(F.col("batch") != exclude_batch)
-    return df.select("surface", "canonical")
-
-
-def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
-                  threshold: float,
-                  dictionary: DataFrame | None = None,
-                  stats: dict | None = None,
-                  index_sizes: DataFrame | None = None) -> DataFrame:
+def _indexed_link(unknown: DataFrame, dictionary: DataFrame,
+                  dict_index: DataFrame, index_sizes: DataFrame,
+                  threshold: float, stats: dict | None = None) -> DataFrame:
     """``(mention, linked)`` best dictionary match per unknown surface via
     the persisted index: the (band, bucket) equi-join never shuffles or
     re-hashes the index (AQE broadcasts the tiny batch side), and
@@ -372,33 +331,24 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
     surface never adopts a different-etype group's canonical.
 
     Dict-side hot buckets (> 64 ids) are dropped with a logged count, sized
-    from the ``index_sizes`` side table when given — O(touched buckets),
-    not O(dictionary); the full-index group-by is only the fallback for
-    pre-sizes KGs.  (The unindexed path caps on combined mention+dictionary
-    bucket size instead; identical on non-degenerate data.)
+    from the ``index_sizes`` side table — O(touched buckets), not
+    O(dictionary).
 
-    With ``dictionary`` and a ``stats`` dict, records
-    ``stats["n_bridges"]``: the number of batch surfaces whose verified
-    matches span MORE THAN ONE existing canonical group — exactly the
-    cases where the grow-only contract diverges from a batch rebuild
-    (the bridge links to its best-scoring group; the groups are not
-    merged).  A climbing bridge count is the operational signal to
-    schedule a periodic batch rebuild."""
+    With a ``stats`` dict, records ``stats["n_bridges"]``: the number of
+    batch surfaces whose verified matches span MORE THAN ONE existing
+    canonical group — exactly the cases where the grow-only contract
+    diverges from a batch rebuild (the bridge links to its best-scoring
+    group; the groups are not merged).  A climbing bridge count is the
+    operational signal to schedule a periodic batch rebuild."""
     import logging
 
     m_sk, m_buckets = _surface_lsh(unknown.select(F.col("node").alias("surface")))
     # hot detection is confined to the buckets THIS batch touches (semi-
-    # join on the tiny batch side): with the sizes side table the work is
-    # one narrow columnar scan + an aggregate over touched buckets only;
-    # the full-index group-by is just the fallback for pre-sizes KGs
+    # join on the tiny batch side): one narrow columnar scan of the sizes
+    # side table + an aggregate over touched buckets only
     touched = m_buckets.select("band", "bucket").distinct()
-    partials = (
-        index_sizes
-        if index_sizes is not None
-        else dict_index.select("band", "bucket", F.lit(1).alias("n"))
-    )
     hot = (
-        partials.join(touched, ["band", "bucket"], "leftsemi")
+        index_sizes.join(touched, ["band", "bucket"], "leftsemi")
         .groupBy("band", "bucket")
         .agg(F.sum("n").alias("n"))
         .where(F.col("n") > 64)
@@ -431,7 +381,7 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
         m_sk.unionByName(d_sk),
         threshold,
     )
-    if dictionary is not None and stats is not None:
+    if stats is not None:
         # no broadcast hint: 'scored' is bounded by the BATCH, but a
         # backfill-scale batch is exactly when a forced broadcast breaks —
         # AQE broadcasts it while it actually fits
@@ -470,8 +420,7 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
                                 threshold: float = 0.70,
                                 dict_index: DataFrame | None = None,
                                 stats: dict | None = None,
-                                index_sizes: DataFrame | None = None,
-                                dict_size: int | None = None) -> DataFrame:
+                                index_sizes: DataFrame | None = None) -> DataFrame:
     """``(node, canonical, is_new)`` for every batch entity.
 
     Exact dictionary hits keep their canonical; near-matches (trigram
@@ -481,76 +430,49 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
     ``is_new`` marks rows that must be appended to the dictionary (every
     previously-unseen surface, whatever it linked to).
 
-    The dictionary side carries NO broadcast hint anywhere — it grows
-    without bound, so forcing a broadcast would cap the module at the
-    broadcast size limit.  The known-small sides (the per-batch ``best``
-    link table) are hinted; the exact-hit join and the anti-join are left
-    to AQE, which broadcasts the dictionary only while it actually fits
-    and shuffle-joins once it doesn't.
+    No join here carries a broadcast hint: the dictionary grows without
+    bound and a batch can be a backfill, so forcing a broadcast would cap
+    the module at the broadcast size limit.  AQE broadcasts a side only
+    while it actually fits and shuffle-joins once it doesn't.
 
-    With ``dict_index`` (the persisted ``(surface, band, bucket)`` LSH
-    index), candidate pairs come from joining the BATCH's band hashes
-    against the index — per-batch shuffle work is O(batch + matches), and
-    dictionary shingles are recomputed only for the matched candidate
-    surfaces (semi-join-bounded).  The index uses the same hash family as
-    the unindexed path, so both produce identical links.  Hot index
-    buckets past ``max_bucket=64`` ids are dropped with a logged count,
-    sized from ``index_sizes`` when given (no O(dictionary) aggregate),
-    mirroring :func:`operators.minhash.candidate_pairs`.  ``dict_size``
-    (from the manifest / size side table) skips the per-batch
-    ``dictionary.count()`` job.
+    With a dictionary, ``dict_index`` (the persisted ``(surface, band,
+    bucket)`` LSH index) and ``index_sizes`` (its per-bucket size
+    partials) are required: candidate pairs come from joining the BATCH's
+    band hashes against the index — per-batch shuffle work is O(batch +
+    matches), and dictionary shingles are recomputed only for the matched
+    candidate surfaces (semi-join-bounded).  Hot index buckets past 64 ids
+    are dropped with a logged count, sized from ``index_sizes`` (no
+    O(dictionary) aggregate), mirroring
+    :func:`operators.minhash.candidate_pairs`.
     """
     if dictionary is None:
         return canonical_map(entities, threshold=threshold).withColumn(
             "is_new", F.lit(True)
         )
+    if dict_index is None or index_sizes is None:
+        raise ValueError("linking against a dictionary needs its index and "
+                         "index sizes (read_index / read_index_sizes)")
     d = dictionary
     exact = (
         entities.join(d.withColumnRenamed("surface", "node"), "node")
         .select("node", "canonical", F.lit(False).alias("is_new"))
     )
+    # checkpointed because each is read twice: unknown by the linking chain
+    # and the leftover anti-join, linked by that anti-join and the union
     unknown = entities.join(
         d.select(F.col("surface").alias("node")), "node", "left_anti"
     ).localCheckpoint()
-    # size-aware shuffle width for the linking LSH chain: per-batch linking
-    # over a small dictionary is stage-scheduling latency at the session
-    # width (the counts are cheap — unknown is checkpointed, and the
-    # dictionary size comes from the size side table when available instead
-    # of a per-batch count job)
-    spark = entities.sparkSession
-    if dict_size is None:
-        dict_size = dictionary.count()
-    n_small = unknown.count() + dict_size
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(1, min(int(old_width), n_small // 50_000))),
-    )
-    try:
-        if dict_index is not None:
-            best = _indexed_link(unknown, dict_index, threshold,
-                                 dictionary=dictionary, stats=stats,
-                                 index_sizes=index_sizes)
-        else:
-            best = link_mentions(
-                unknown.select(F.col("node").alias("mention")),
-                dictionary.select(F.col("surface").alias("entity")),
-                threshold=threshold,
-                same_prefix=True,
-            )
-        linked = (
-            # batch-side table, but batches can be backfill-scale: no forced
-            # broadcast (AQE picks broadcast while it fits)
-            best
-            .join(d.withColumnRenamed("surface", "linked"), "linked")
-            .select(
-                F.col("mention").alias("node"), "canonical",
-                F.lit(True).alias("is_new")
-            )
-            .localCheckpoint()
+    best = _indexed_link(unknown, d, dict_index, index_sizes, threshold,
+                         stats=stats)
+    linked = (
+        best
+        .join(d.withColumnRenamed("surface", "linked"), "linked")
+        .select(
+            F.col("mention").alias("node"), "canonical",
+            F.lit(True).alias("is_new")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
+        .localCheckpoint()
+    )
     leftover = unknown.join(linked.select("node"), "node", "left_anti")
     intra = canonical_map(leftover, threshold=threshold).withColumn(
         "is_new", F.lit(True)
@@ -601,19 +523,12 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
         dictionary = read_dictionary(spark, out_dir, exclude_batch=batch_id)
         dict_index = read_index(spark, out_dir, exclude_batch=batch_id)
         index_sizes = read_index_sizes(spark, out_dir, exclude_batch=batch_id)
-        # dictionary size from the manifest's canon_dict rows — O(#batches)
-        # on the driver, NO Spark job; falls back to a one-off sum over the
-        # sizes partials for KGs whose manifests predate the rows
-        dict_size = dict_size_from_manifest(out_dir, exclude_batch=batch_id)
-        if dict_size is None and index_sizes is not None:
-            total = index_sizes.agg(F.sum("n").alias("t")).collect()[0]["t"]
-            dict_size = int(total or 0) // _BANDS
         link_stats: dict = {}
         canon = _persist(
             link_entities_to_dictionary(
                 entity_vocabulary(raw_triples), dictionary, threshold=threshold,
                 dict_index=dict_index, stats=link_stats,
-                index_sizes=index_sizes, dict_size=dict_size,
+                index_sizes=index_sizes,
             )
         )
 
@@ -686,8 +601,7 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
         # extend the LSH index with the batch's new surfaces (same family),
         # so the NEXT batch's linking joins against it instead of re-hashing
         # the whole dictionary; the per-bucket size partials ride along so
-        # later batches can size hot buckets (and the dictionary) without
-        # scanning the index
+        # later batches can size hot buckets without scanning the index
         _, new_buckets = _surface_lsh(new_dict.select("surface"))
         new_buckets = _persist(
             new_buckets.select(F.col("id").alias("surface"), "band", "bucket")
@@ -715,8 +629,7 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
                     "table": name, "bucket": b, "batch": batch_id,
                     "n_rows": counts[name].get(b, 0), "status": "done",
                 })
-        # dictionary lineage: lets later batches derive the dictionary size
-        # from the manifest alone (dict_size_from_manifest) — no Spark job
+        # dictionary lineage: the batch's new-surface count
         _append_manifest(out_dir, {
             "table": "canon_dict", "batch": batch_id,
             "n_rows": n_new_surfaces, "status": "done",

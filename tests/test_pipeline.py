@@ -625,45 +625,6 @@ def test_alias_corpus_canonicalization_ground_truth(spark):
     pages.unpersist(), raw_triples.unpersist()
 
 
-def test_minlabel_rounds_converged_on_derived_kg(spark):
-    """kg_components runs EXACTLY _CC_ROUNDS synchronous rounds; this pins
-    that the derived KG has actually converged by then (round R == round
-    R+1), so the fixed-round table IS connected components — and that it
-    agrees with the adaptive connected_components path."""
-    from kgist_spark.operators.components import (
-        connected_components, minlabel_rounds,
-    )
-    from kgist_spark.plans.testdata_queries import _CC_ROUNDS, derived_triples
-    from pyspark.sql import functions as F
-
-    edges = derived_triples(spark, "/root/testdata/sf0.001").select(
-        F.col("subj").alias("a"), F.col("obj").alias("b")
-    )
-    at_r = sorted(map(tuple, minlabel_rounds(edges, rounds=_CC_ROUNDS).collect()))
-    at_r1 = sorted(map(tuple, minlabel_rounds(edges, rounds=_CC_ROUNDS + 1).collect()))
-    assert at_r == at_r1  # converged: the fixed-round output is components
-    adaptive = sorted(map(tuple, connected_components(edges).collect()))
-    assert at_r == adaptive
-
-
-def test_minlabel_rounds_mid_flight_matches_oracle_semantics(spark):
-    """On a path graph 0-1-2-...-9, after r rounds each node's label is the
-    min id within its r-hop ball — pinning the SYNCHRONOUS round semantics
-    the SQL oracle unrolls (an asynchronous/convergent implementation would
-    disagree mid-flight even though both converge to the same fixpoint)."""
-    from kgist_spark.operators.components import minlabel_rounds
-
-    n = 10
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
-    )
-    for r in (2, 4):
-        got = {row["node"]: row["component"]
-               for row in minlabel_rounds(edges, rounds=r).collect()}
-        want = {v: max(0, v - r) for v in range(n)}
-        assert got == want
-
-
 def test_run_pipeline_schema_report(spark, tmp_path, capsys):
     """`--schema-report` writes the schema profile + violation audit next
     to the KG and surfaces constraint counts in the report JSON."""

@@ -1,7 +1,8 @@
 """The session's default driver heap and core count fit the host it runs
 on (no JVM), a standalone entry point's driver JVM is launched with them,
-AQE narrows persisted plans below the session's shuffle width, and
-concurrent actions run in the caller's job group."""
+AQE narrows persisted plans below the session's shuffle width,
+concurrent actions run in the caller's job group, and no program code
+writes session conf."""
 
 import json
 import os
@@ -152,3 +153,22 @@ def test_run_concurrently_without_pinned_threads(monkeypatch):
 
     monkeypatch.setattr(SparkContext, "_gateway", None)
     assert run_concurrently(lambda: 1, lambda: 2) == [1, 2]
+
+
+def test_program_never_writes_session_conf():
+    """No ``kgist_spark`` module calls ``conf.set(``: ``run_concurrently``
+    runs Spark jobs side by side, and session conf is shared by every
+    thread, so a session-wide write (a shuffle width set and restored
+    around one stage, say) changes the plans of the jobs running beside
+    it.  Per-query choices go in the plan itself (hints, ``repartition``),
+    session defaults in ``get_spark``'s builder."""
+    import re
+
+    pattern = re.compile(r"\bconf\.set\(")
+    hits = [
+        f"{path.relative_to(REPO_ROOT)}:{n}"
+        for path in sorted((REPO_ROOT / "kgist_spark").rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == []

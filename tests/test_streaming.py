@@ -244,53 +244,73 @@ def test_incremental_matches_batch_on_alias_corpus(spark, tmp_path):
 
 
 def test_indexed_linking_matches_unindexed(spark, tmp_path):
-    """The persisted LSH index path and the unindexed link_mentions path
-    produce the same links (same hash family -> same candidates), the
-    index covers every dictionary surface, and the alias flow works
-    through the index across 3 batches."""
+    """The persisted LSH index covers every dictionary surface, and a fresh
+    batch links its unknown surfaces through the index exactly as the
+    unindexed reference join (``canonicalize.link_mentions``, same hash
+    family -> same candidates) does, with the alias flow across 3
+    batches."""
+    from kgist_spark.pipeline.canonicalize import entity_vocabulary, link_mentions
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
     from kgist_spark.sources.webpages import World, generate_pages
     from kgist_spark.streaming.construct import (
         construct_batch_incremental,
         link_entities_to_dictionary,
         read_dictionary,
         read_index,
+        read_index_sizes,
     )
 
     out = str(tmp_path / "kg")
     world = World(42, alias_rate=0.5)
     pages = generate_pages(spark, 1200, seed=42, world=world).cache()
     docnum = F.regexp_extract("url", r"page/(\d+)$", 1).cast("int")
-    for i, (lo, hi) in enumerate([(0, 400), (400, 800), (800, 1200)]):
-        construct_batch_incremental(
-            spark, pages.where((docnum >= lo) & (docnum < hi)), out,
-            batch_id=i, n_buckets=2,
-        )
+    spans = [(0, 400), (400, 800), (800, 1200)]
 
+    def batch(i):
+        lo, hi = spans[i]
+        return pages.where((docnum >= lo) & (docnum < hi))
+
+    construct_batch_incremental(spark, batch(0), out, batch_id=0, n_buckets=2)
+
+    # a fresh batch gives the same near-match links with and without the
+    # index (its unknown surfaces that adopt an existing canonical)
+    d, idx, sizes = (read(spark, out)
+                     for read in (read_dictionary, read_index, read_index_sizes))
+    raw = (
+        extract_facts_jvm(batch(1)).where("kind = 't'")
+        .groupBy("subj", "pred", "obj").agg(F.min("url").alias("url"))
+    )
+    ents = entity_vocabulary(raw)
+    known = {r["canonical"] for r in d.select("canonical").distinct().collect()}
+    with_idx = {
+        (r["node"], r["canonical"])
+        for r in link_entities_to_dictionary(
+            ents, d, dict_index=idx, index_sizes=sizes
+        ).where("is_new").collect()
+        if r["canonical"] in known
+    }
+    unknown = ents.join(d.select(F.col("surface").alias("node")), "node", "left_anti")
+    best = link_mentions(
+        unknown.select(F.col("node").alias("mention")),
+        d.select(F.col("surface").alias("entity")),
+        threshold=0.70, same_prefix=True,
+    )
+    without = {
+        (r["mention"], r["canonical"])
+        for r in best.join(d.withColumnRenamed("surface", "linked"), "linked").collect()
+    }
+    assert with_idx == without and with_idx
+    # there is no unindexed fallback: a dictionary without its index is refused
+    with pytest.raises(ValueError, match="index"):
+        link_entities_to_dictionary(ents, d)
+
+    for i in (1, 2):
+        construct_batch_incremental(spark, batch(i), out, batch_id=i, n_buckets=2)
     d = read_dictionary(spark, out)
     idx = read_index(spark, out)
     # index covers exactly the dictionary's surfaces
     assert {r["surface"] for r in idx.select("surface").distinct().collect()} \
         == {r["surface"] for r in d.select("surface").collect()}
-
-    # a fresh batch linked with and without the index gives identical maps
-    last = pages.where(docnum >= 800)
-    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
-    from kgist_spark.pipeline.canonicalize import entity_vocabulary
-
-    raw = (
-        extract_facts_jvm(last).where("kind = 't'")
-        .groupBy("subj", "pred", "obj").agg(F.min("url").alias("url"))
-    )
-    ents = entity_vocabulary(raw)
-    with_idx = {
-        (r["node"], r["canonical"])
-        for r in link_entities_to_dictionary(ents, d, dict_index=idx).collect()
-    }
-    without = {
-        (r["node"], r["canonical"])
-        for r in link_entities_to_dictionary(ents, d, dict_index=None).collect()
-    }
-    assert with_idx == without and with_idx
     pages.unpersist()
 
 
@@ -430,18 +450,17 @@ def test_bridge_detection_and_grow_only_linking(spark, tmp_path):
 
 
 def test_sizes_and_manifest_coverage_guards(spark, tmp_path):
-    """Partial side tables must be REFUSED, not silently summed: a KG whose
-    early batches predate canon_index_sizes / the canon_dict manifest rows
-    falls back to full-index sizing rather than under-counting hot buckets
-    or under-estimating the dictionary."""
-    import json
+    """Partial side tables must be REFUSED, not silently summed or linked
+    around: a KG whose batch 0 lacks its canon_index_sizes partition (hot
+    buckets would be under-counted) raises ValueError from the read and
+    from the next fold, which writes nothing."""
+    import os
     import shutil
 
+    from kgist_spark.pipeline.materialize import read_manifest
     from kgist_spark.streaming.construct import (
         SIZES_DIR,
         construct_batch_incremental,
-        dict_size_from_manifest,
-        read_dictionary,
         read_index_sizes,
     )
 
@@ -452,35 +471,30 @@ def test_sizes_and_manifest_coverage_guards(spark, tmp_path):
     construct_batch_incremental(
         spark, generate_pages(spark, 90, seed=2, world=world), out, 1, n_buckets=2)
 
-    sizes = read_index_sizes(spark, out)
-    assert sizes is not None
-    # manifest-driven dictionary size equals the real dictionary row count
-    assert dict_size_from_manifest(out) == read_dictionary(spark, out).count()
-    # excluding a replayed batch stays covered and consistent
-    assert dict_size_from_manifest(out, exclude_batch=1) == \
-        read_dictionary(spark, out, exclude_batch=1).count()
+    assert read_index_sizes(spark, out) is not None
+    # excluding a replayed batch stays covered
+    assert read_index_sizes(spark, out, exclude_batch=1) is not None
 
     # simulate a pre-sizes KG: batch 0's sizes partition is missing
     shutil.rmtree(f"{out}/{SIZES_DIR}/batch=0")
-    assert read_index_sizes(spark, out) is None          # partial -> refuse
+    with pytest.raises(ValueError, match=r"canon_index_sizes.*\[0\]"):
+        read_index_sizes(spark, out)                      # partial -> refuse
     # ...but excluding batch 0 restores full coverage of what remains
     assert read_index_sizes(spark, out, exclude_batch=0) is not None
 
-    # pre-manifest KG: strip the canon_dict rows -> size probe refuses
-    mpath = f"{out}/_manifest.json"
-    entries = [json.loads(l) for l in open(mpath) if l.strip()]
-    with open(mpath, "w") as f:
-        for e in entries:
-            if e["table"] != "canon_dict":
-                f.write(json.dumps(e) + "\n")
-    assert dict_size_from_manifest(out) is None
+    with pytest.raises(ValueError, match=r"canon_index_sizes.*\[0\]"):
+        construct_batch_incremental(
+            spark, generate_pages(spark, 80, seed=3, world=world), out, 2,
+            n_buckets=2)
+    assert not any(e.get("batch") == 2 for e in read_manifest(out))
+    assert not any(os.path.isdir(os.path.join(out, sub, "batch=2"))
+                   for sub in os.listdir(out))
 
 
 def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path):
     """Compaction merges old dict/index/sizes partitions into one partition
-    each with IDENTICAL reader-visible content, the manifest size probe
-    stays exact, and the next batch links identically to an uncompacted
-    twin KG."""
+    each with IDENTICAL reader-visible content, and the next batch links
+    identically to an uncompacted twin KG."""
     from kgist_spark.streaming.construct import (
         DICT_DIR,
         INDEX_DIR,
@@ -488,7 +502,6 @@ def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path)
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
-        dict_size_from_manifest,
         read_dictionary,
         read_index,
         read_index_sizes,
@@ -521,7 +534,6 @@ def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path)
     for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
         assert _batch_ids(f"{out_a}/{sub}") == {1, 2}, sub
     assert snapshot(out_a) == before
-    assert dict_size_from_manifest(out_a) == len(before[0])
 
     # the next batch behaves identically on compacted vs control state
     ra = construct_batch_incremental(spark, batches[3], out_a, 3, n_buckets=2)
@@ -535,9 +547,9 @@ def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path)
 def test_compaction_crash_recovery_and_partial_coverage(spark, tmp_path):
     """(a) keep_last=0 is rejected (the newest batch is still replayable);
     (b) a crash AFTER the write-ahead plan is finished idempotently by the
-    next call with identical final state; (c) a side table that does not
-    cover the compacted batches has its partials DROPPED, keeping the read
-    guards correctly falling back (never a fabricated partial merge)."""
+    next call with identical final state; (c) a KG whose side tables do not
+    cover the compacted batches is refused before anything is staged (no
+    plan, no staging dir, KG unchanged — never a fabricated merge)."""
     import json
     import os
     import shutil
@@ -549,7 +561,6 @@ def test_compaction_crash_recovery_and_partial_coverage(spark, tmp_path):
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
-        dict_size_from_manifest,
         read_dictionary,
         read_index,
         read_index_sizes,
@@ -565,27 +576,36 @@ def test_compaction_crash_recovery_and_partial_coverage(spark, tmp_path):
     with pytest.raises(ValueError, match="keep_last"):
         compact_dictionary_state(spark, out, keep_last=0)
 
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), out),
+             os.path.getsize(os.path.join(d, f)))
+            for d, _, files in os.walk(out) for f in files
+        )
+
     # simulate a pre-sizes KG: batch 0's sizes partition never existed
-    shutil.rmtree(f"{out}/{SIZES_DIR}/batch=0")
-    assert read_index_sizes(spark, out) is None
+    aside = str(tmp_path / "sizes_batch0")
+    shutil.move(f"{out}/{SIZES_DIR}/batch=0", aside)
+    tree_before = tree()
+    with pytest.raises(ValueError, match=r"canon_index_sizes.*\[0\]"):
+        compact_dictionary_state(spark, out, keep_last=1)
+    assert tree() == tree_before
+    assert not os.path.exists(f"{out}/_compact_plan.json")
+    assert not any(e.endswith("._compact_ready") for e in os.listdir(out))
+    shutil.move(aside, f"{out}/{SIZES_DIR}/batch=0")
+
     dict_before = sorted(
         (r["surface"], r["canonical"]) for r in read_dictionary(spark, out).collect()
     )
-
-    # simulate a crash right after the write-ahead plan: run once to get a
-    # real plan file, then restore the pre-destructive state and re-finish
     res = compact_dictionary_state(spark, out, keep_last=1)
     assert res["compacted"] == 2 and res["into"] == 1
-    # sizes partials were DROPPED (partial coverage), not merged: the table
-    # keeps failing the coverage guard instead of faking it
-    assert read_index_sizes(spark, out) is None
-    assert _batch_ids(f"{out}/{SIZES_DIR}") == {2}
-    # dictionary/index merged over the SAME batch set and stay covered
-    assert _batch_ids(os.path.join(out, DICT_DIR)) == {1, 2}
+    # all three tables merged over the SAME batch set and stay covered
+    for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
+        assert _batch_ids(os.path.join(out, sub)) == {1, 2}, sub
     assert read_index(spark, out) is not None
+    assert read_index_sizes(spark, out) is not None
     assert sorted((r["surface"], r["canonical"])
                   for r in read_dictionary(spark, out).collect()) == dict_before
-    assert dict_size_from_manifest(out) == len(dict_before)
 
     # crash-recovery: write a plan file by hand mimicking an interrupted
     # run whose destructive phase never happened (ready dir still staged)
@@ -616,7 +636,6 @@ def test_compaction_mid_swap_crash_is_idempotent(spark, tmp_path, monkeypatch):
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
-        dict_size_from_manifest,
         read_dictionary,
         read_index,
         read_index_sizes,
@@ -673,7 +692,6 @@ def test_compaction_mid_swap_crash_is_idempotent(spark, tmp_path, monkeypatch):
                   for r in read_dictionary(spark, out).collect()) == dict_before
     assert read_index(spark, out) is not None
     assert summed_sizes() == sizes_before
-    assert dict_size_from_manifest(out) == len(dict_before)
 
 
 def test_compact_cli_rejects_other_flags_even_falsy():
