@@ -3,8 +3,8 @@
 ``entry`` runs the flagship candidate-generation aggregation on sf0.001;
 ``queries``/``oracle_sql`` expose the operator inventory over the testdata
 tables — the KG pipeline's stages (candidate generation, MDL model fit and
-refinement, anomaly ranking, near-dup blocking, connected components, the
-schema report) plus the dedup, text, similarity and scrub operators
+refinement, anomaly ranking, near-dup blocking, the schema report) plus
+the dedup, text and similarity operators
 (see ``kgist_spark/plans/testdata_queries.py``), each checked against its
 DuckDB oracle SQL by the driver at sf0.01.
 """

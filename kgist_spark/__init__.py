@@ -4,7 +4,7 @@ summarization engine.
 Capabilities (see SURVEY.md for the full inventory):
 
 * KG construction pipeline over web-page tables: triple extraction
-  (all-Catalyst expressions, row-identical to an Arrow-UDF spec twin),
+  (all-Catalyst expressions, row-identical to the frozen Python spec),
   entity canonicalization (MinHash-LSH blocking + connected components),
   mention linking, partitioned materialization with per-partition lineage
   and checkpointed resumability.
@@ -17,7 +17,7 @@ Capabilities (see SURVEY.md for the full inventory):
   violations) over the constructed KG, and incremental construction as
   page batches arrive (``streaming/construct.py``).
 * Corpus operators over document tables: dedup (exact/MinHash/SimHash/
-  n-gram/embedding), similarity search, text quality and scrubbing.
+  n-gram/embedding), similarity search and text quality.
 """
 
 __version__ = "0.1.0"

@@ -1,145 +1,11 @@
-"""Stage 1 — distributed triple extraction over web-page tables.
+"""Stage 1 — the languages the triple extractor reads.
 
-Input: ``(url, warc_ts, html, text, lang)`` (Iceberg/parquet).  Output:
-mentions, raw triples and label assignments, all keyed by source url for
-lineage.  All heavy work runs inside Arrow-batched ``mapInPandas`` stages
-(no row-at-a-time Python UDFs); the extraction logic itself is the frozen
-spec of :mod:`kgist_spark.pipeline.spec` — one source of truth for the
-distributed path and the single-node oracle, verified independently against
-the corpus generator's ground truth (P/R) in the test suite.
-
-Scale notes: extraction is embarrassingly parallel (one page at a time, no
-shuffle); filters on ``lang`` are plain column predicates pushed into the
-scan, and the ``html`` column is never read (column pruning keeps the scan
-at text width).
+The extraction rules are the frozen spec of :mod:`kgist_spark.pipeline.spec`;
+the distributed extractor that applies them is the all-Catalyst
+:mod:`kgist_spark.pipeline.extract_jvm`.  Both read only pages whose
+``lang`` is listed here; the filter is a plain column predicate, pushed into
+the scan.
 """
-
-from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from kgist_spark.pipeline import spec
 
 #: languages the stage-1 extractor understands
 EXTRACT_LANGS = ("en",)
-
-MENTIONS_SCHEMA = "url string, start int, end int, surface string, etype string"
-TRIPLES_SCHEMA = (
-    "url string, subj string, pred string, obj string, span_start int, span_end int"
-)
-LABELS_SCHEMA = "url string, node string, label string, pos int"
-NORM_SCHEMA = "url string, text string"
-
-
-def _lang_filtered(pages: DataFrame) -> DataFrame:
-    return pages.where(F.col("lang").isin(*EXTRACT_LANGS)).select("url", "text")
-
-
-def extracted_text(pages: DataFrame) -> DataFrame:
-    """The normalized (extraction-ready) text per url — the byte-identity
-    invariant is asserted on exactly this output."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"url": pdf["url"], "text": pdf["text"].map(spec.normalize_text)}
-            )
-
-    return _lang_filtered(pages).mapInPandas(run, schema=NORM_SCHEMA)
-
-
-def extract_mentions(pages: DataFrame) -> DataFrame:
-    """X1 — typed mention spans per page."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                norm = spec.normalize_text(text)
-                for m in spec.find_mentions(norm):
-                    rows.append((url, m.start, m.end, m.surface, m.etype))
-            yield pd.DataFrame(rows, columns=["url", "start", "end", "surface", "etype"])
-
-    return _lang_filtered(pages).mapInPandas(run, schema=MENTIONS_SCHEMA)
-
-
-def extract_triples(pages: DataFrame) -> DataFrame:
-    """X2 — pattern-based relation extraction → raw (subj, pred, obj) with
-    source span, canonical surface-form entity ids."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                norm = spec.normalize_text(text)
-                for s, st, pred, o, ot, a, b in spec.find_relations(norm):
-                    rows.append(
-                        (url, spec.entity_id(s, st), pred, spec.entity_id(o, ot), a, b)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "subj", "pred", "obj", "span_start", "span_end"]
-            )
-
-    return _lang_filtered(pages).mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def extract_labels(pages: DataFrame) -> DataFrame:
-    """Entity label assignments (rdf:type-style) from mention classification;
-    distinct per (node, label)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                norm = spec.normalize_text(text)
-                for m in spec.find_mentions(norm):
-                    node = spec.entity_id(m.surface, m.etype)
-                    for pos, label in enumerate(spec.entity_labels(m.surface, m.etype)):
-                        rows.append((url, node, label, pos))
-            yield pd.DataFrame(rows, columns=["url", "node", "label", "pos"])
-
-    return _lang_filtered(pages).mapInPandas(run, schema=LABELS_SCHEMA)
-
-
-FACTS_SCHEMA = (
-    "kind string, url string, subj string, pred string, obj string, "
-    "node string, label string, pos int"
-)
-
-
-def extract_facts(pages: DataFrame) -> DataFrame:
-    """X1+X2 fused: ONE pass over the corpus emitting tagged rows —
-    ``kind='t'`` relation triples and ``kind='l'`` label assignments.
-
-    Normalization and mention detection are the dominant per-document cost;
-    running :func:`extract_triples` and :func:`extract_labels` separately
-    does that work twice.  The pipeline consumes this via two filters over
-    one persisted output (see ``pipeline/run.py``).  Row-level results are
-    identical to the two single-purpose extractors (asserted in tests).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                norm = spec.normalize_text(text)
-                mentions = spec.find_mentions(norm)
-                for m in mentions:
-                    node = spec.entity_id(m.surface, m.etype)
-                    for pos, label in enumerate(spec.entity_labels(m.surface, m.etype)):
-                        rows.append(("l", url, None, None, None, node, label, pos))
-                for s, st, pred, o, ot, a, b in spec.find_relations(norm, mentions):
-                    rows.append(
-                        ("t", url, spec.entity_id(s, st), pred,
-                         spec.entity_id(o, ot), None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["kind", "url", "subj", "pred", "obj", "node", "label", "pos"],
-            )
-
-    return _lang_filtered(pages).mapInPandas(run, schema=FACTS_SCHEMA)

@@ -2,12 +2,11 @@
 path) — the same output rows as the Python spec in
 :mod:`kgist_spark.pipeline.spec`, with NO Python workers in the hot path.
 
-Why this exists: the Arrow-batched ``mapInPandas`` extractors in
-:mod:`kgist_spark.pipeline.extract` are correct and vectorized, but at
-10^12-document scale they still pay the Python-worker fleet (process pools,
-Arrow hops, per-doc ``re`` calls, worker/JVM memory split).  The whole
-extraction spec — normalization, maximal-capitalized-sequence mentions,
-exact-phrase relations — is regular, so it compiles to one
+Why this shape: a Python extractor, however vectorized, pays the
+Python-worker fleet at 10^12-document scale (process pools, Arrow hops,
+per-doc ``re`` calls, worker/JVM memory split).  The whole extraction
+spec — normalization, maximal-capitalized-sequence mentions, exact-phrase
+relations — is regular, so it compiles to one
 ``regexp_replace`` chain plus ONE ``regexp_extract_all`` scan running
 inside whole-stage codegen.  The plan is Scan → Project(regex chain + one
 corpus scan) → Generate → Project → Generate → Filter: one pass over the
@@ -90,7 +89,8 @@ def normalize_text_col(text: Column) -> Column:
 
 
 def extracted_text_jvm(pages: DataFrame) -> DataFrame:
-    """JVM twin of ``extract.extracted_text`` (the byte-identity surface)."""
+    """``(url, text)``: ``spec.normalize_text`` of every page in
+    ``EXTRACT_LANGS`` (the byte-identity surface)."""
     return (
         pages.where(F.col("lang").isin(*EXTRACT_LANGS))
         .select("url", normalize_text_col(F.col("text")).alias("text"))
@@ -144,9 +144,12 @@ def _fact_struct(kind, subj, pred, obj, node, label, pos) -> Column:
 
 
 def extract_facts_jvm(pages: DataFrame) -> DataFrame:
-    """X1+X2 fused, all-JVM: one corpus pass emitting the same tagged rows
-    (``kind='l'`` labels / ``kind='t'`` triples, FACTS_SCHEMA) as
-    ``extract.extract_facts`` — row-multiset equality asserted in tests."""
+    """X1+X2 fused, all-JVM: one corpus pass emitting tagged rows
+    ``(kind, url, subj, pred, obj, node, label, pos)`` — ``kind='l'``
+    rows carry ``spec.entity_labels`` of every classified mention,
+    ``kind='t'`` rows the ``spec.find_relations`` triples; the other
+    kind's columns are null.  Row-multiset equality with the spec applied
+    per page is asserted in tests."""
     base = extracted_text_jvm(pages).select(
         "url",
         F.regexp_extract_all("text", F.lit(J_FUSED), F.lit(0)).alias("a"),

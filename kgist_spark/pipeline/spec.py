@@ -5,10 +5,11 @@ The reference engine (GemsLab/KGist) consumes an already-built KG and ships
 no extractor; the pipeline spec below is this project's own deterministic
 design (driver contract ``BASELINE.json``: batched mention detection +
 pattern-based relation extraction; byte-identical extracted text per url;
-vectorized UDFs only).  The oracle here is the correctness reference for the
-distributed implementation in :mod:`kgist_spark.pipeline.extract`; both are
-pure functions of the page text, so output is reproducible bit-for-bit at
-any parallelism.
+no per-row Python).  This module is the one Python statement of the rules,
+and its oracle is the correctness reference for the distributed extractor,
+the all-Catalyst :mod:`kgist_spark.pipeline.extract_jvm`; both are pure
+functions of the page text, so output is reproducible bit-for-bit at any
+parallelism.
 
 Spec summary
 ============

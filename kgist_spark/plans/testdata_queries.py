@@ -596,29 +596,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
-def _pii_enriched_docs(spark, sf_dir):
-    """The documents table with deterministic synthetic PII appended to
-    every third document (the testdata corpus has none) — the SAME
-    expression the oracle builds in SQL, so the scrub has real work and
-    the hash check is meaningful."""
-    docs = _t(spark, sf_dir, "documents")
-    injected = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com via 10."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".0.1 tel 555-"),
-        F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    return docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 3 == 0, injected).otherwise(F.col("text")),
-    )
-
-
 def q_embedding_ann_q8(spark, sf_dir):
     """Top-10 by int8-quantized dot product — the memory-bound ANN rung:
     quantization and scoring are EXACT integers, so the oracle replays the
@@ -653,28 +630,6 @@ def q_token_pmi(spark, sf_dir):
         _t(spark, sf_dir, "documents"),
         window=_PMI_WINDOW, min_count=_PMI_MIN_COUNT, k=_PMI_K,
     )
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction audit: emails / IPv4s / phone numbers counted and
-    replaced in one zero-shuffle codegen pass; ``clean_fp`` fingerprints
-    the scrubbed text."""
-    from kgist_spark.operators.scrub import pii_scrub
-
-    return pii_scrub(_pii_enriched_docs(spark, sf_dir))
-
-
-def q_line_dedup(spark, sf_dir):
-    """Cross-document line dedup (CCNet-style boilerplate removal) over a
-    line structure derived deterministically from the corpus (every
-    ' table ' becomes a newline — the tiny vocabulary makes short lines
-    repeat across documents exactly like site boilerplate does)."""
-    from kgist_spark.operators.scrub import line_dedup
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.expr("replace(text, ' table ', '\n')").alias("text")
-    )
-    return line_dedup(docs, min_docs=4)
 
 
 def q_dup_spans(spark, sf_dir):
@@ -966,8 +921,6 @@ QUERIES = {
     "dedup_embedding": q_dedup_embedding,
     "decontaminate": q_decontaminate,
     "repetition": q_repetition,
-    "pii_scrub": q_pii_scrub,
-    "line_dedup": q_line_dedup,
     "dup_ngrams": q_dup_ngrams,
     "token_pmi": q_token_pmi,
     "embedding_ann_q8": q_embedding_ann_q8,
@@ -1516,43 +1469,6 @@ ORACLE_SQL["token_pmi"] = rf"""
 """
 
 
-def _pii_oracle() -> str:
-    """Replays q_pii_scrub: the SAME injection expression, then the SAME
-    ordered count-and-replace chain, pattern literals imported from the
-    operator so the two can never drift (patterns are restricted to
-    Java-regex/RE2-common syntax — see ``operators/scrub.py``)."""
-    from kgist_spark.operators.scrub import PII_PATTERNS
-
-    inject = (
-        "text || ' contact user' || CAST(doc_id AS VARCHAR)"
-        " || '@example.com via 10.' || CAST(doc_id % 256 AS VARCHAR)"
-        " || '.0.1 tel 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')"
-        " || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')"
-    )
-    sql = (
-        "WITH s0 AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0"
-        f" THEN {inject} ELSE text END AS t0 FROM documents)"
-    )
-    cols = []
-    for i, (name, pat, rep) in enumerate(PII_PATTERNS):
-        cols.append(f"n_{name}")
-        sql += (
-            f", s{i + 1} AS (SELECT doc_id{''.join(', ' + c for c in cols[:-1])},"
-            f" CAST(len(regexp_extract_all(t{i}, '{pat}')) AS BIGINT) AS n_{name},"
-            f" regexp_replace(t{i}, '{pat}', '{rep}', 'g') AS t{i + 1}"
-            f" FROM s{i})"
-        )
-    last = len(PII_PATTERNS)
-    return (
-        sql
-        + f" SELECT doc_id, {', '.join(cols)}, md5(t{last}) AS clean_fp"
-        + f" FROM s{last}"
-    )
-
-
-ORACLE_SQL["pii_scrub"] = _pii_oracle()
-
-
 # embedding_ann_q8: the oracle quantizes the query AND every corpus vector
 # with the identical clamp-round expression and sums the SAME integer
 # products — exact replay of quantization and scoring, no float rounding
@@ -1576,34 +1492,6 @@ ORACLE_SQL["embedding_ann_q8"] = """
     FROM embeddings, q
     ORDER BY qdot DESC, vec_id ASC
     LIMIT 10
-"""
-
-ORACLE_SQL["line_dedup"] = """
-    WITH d AS (
-        SELECT doc_id, replace(text, ' table ', chr(10)) AS text
-        FROM documents
-    ),
-    ex AS (
-        SELECT doc_id,
-               unnest(string_split(text, chr(10))) AS line,
-               generate_subscripts(string_split(text, chr(10)), 1) AS pos
-        FROM d
-    ),
-    freq AS (
-        SELECT line FROM ex WHERE length(line) >= 1
-        GROUP BY line HAVING COUNT(DISTINCT doc_id) >= 4
-    ),
-    tagged AS (
-        SELECT e.doc_id, e.pos, e.line, f.line IS NOT NULL AS dropped
-        FROM ex e LEFT JOIN freq f USING (line)
-    )
-    SELECT doc_id,
-           COUNT(*) AS n_lines,
-           COUNT(*) FILTER (WHERE NOT dropped) AS n_kept,
-           md5(COALESCE(
-               string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE NOT dropped),
-               '')) AS clean_fp
-    FROM tagged GROUP BY doc_id
 """
 
 

@@ -53,15 +53,13 @@ def local_cpus() -> int:
 
 
 def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
-              shuffle_partitions: int | None = None, extra_conf: dict | None = None) -> SparkSession:
+              extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
         cpus = local_cpus()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cpus, 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

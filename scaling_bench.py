@@ -9,16 +9,17 @@ timed); the timed job is scan -> extract -> count, with column pruning
 keeping the html bytes out of the scan.  Each parallelism level runs in a
 fresh subprocess (own JVM) with 3 timed repetitions, best-of reported.
 
-Defaults N=4, so 4N=16: the historical numbers were taken on a 32-core
-box, where a hardware calibration with pure C compute (single-threaded BLAS
-matmuls under multiprocessing) sustained only ~3.0x throughput from 8->32
-processes (~0.74 efficiency ceiling from frequency/memory-bandwidth
-effects), while 4->16 stayed below the saturation knee.  On a host with
-fewer than 4N cores the 4N run oversubscribes and the efficiency measures
-that, not Spark.  The corpus is generated on a session of the host's own
-cores (``get_spark``'s default).  Override with SPARK_GRAFT_SCALING_N /
-SPARK_GRAFT_SCALING_DOCS; SPARK_GRAFT_SCALING_ENGINE=jvm times the
-all-Catalyst extractor (no Python workers) instead of the Arrow/pandas one.
+Engines (``SPARK_GRAFT_SCALING_ENGINE``): ``jvm`` (default) times the
+all-Catalyst extractor, ``extract_facts_jvm``'s triples, with no Python
+workers; ``pipeline`` times the whole 3-stage ``construct_kg``, bucketed
+table writes included.
+
+N defaults to a quarter of the host's cores (``local_cpus() // 4``, at
+least 1), so the 4N run fits the host: on a host with fewer than 4N cores
+the 4N run oversubscribes and the efficiency measures that, not Spark.
+The corpus is generated on a session of the host's own cores
+(``get_spark``'s default).  Override with SPARK_GRAFT_SCALING_N /
+SPARK_GRAFT_SCALING_DOCS / SPARK_GRAFT_SCALING_CORPUS.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ import os
 import subprocess
 import sys
 import tempfile
+
+from kgist_spark.session import local_cpus
 
 GEN = """
 import sys
@@ -44,7 +47,7 @@ spark.stop()
 WORKER = """
 import json, os, shutil, sys, tempfile, time
 cpus = int(sys.argv[1]); corpus = sys.argv[2]
-engine = os.environ.get("SPARK_GRAFT_SCALING_ENGINE", "python")
+engine = os.environ.get("SPARK_GRAFT_SCALING_ENGINE", "jvm")
 from kgist_spark.session import get_spark
 if engine == "jvm":
     from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
@@ -53,9 +56,8 @@ if engine == "jvm":
 elif engine == "pipeline":
     from kgist_spark.pipeline.run import construct_kg
 else:
-    from kgist_spark.pipeline.extract import extract_triples as extract
-spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus,
-                  shuffle_partitions=max(2 * cpus, 16))
+    sys.exit(f"SPARK_GRAFT_SCALING_ENGINE must be jvm or pipeline, not {engine!r}")
+spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 pages = spark.read.parquet(corpus)
 n_docs = pages.count()
@@ -99,7 +101,7 @@ def _sub(code: str, *args: str) -> str:
 
 def main():
     n_docs = int(os.environ.get("SPARK_GRAFT_SCALING_DOCS", "1000000"))
-    n_low = int(os.environ.get("SPARK_GRAFT_SCALING_N", "4"))
+    n_low = int(os.environ.get("SPARK_GRAFT_SCALING_N") or max(1, local_cpus() // 4))
     corpus = os.environ.get(
         "SPARK_GRAFT_SCALING_CORPUS",
         os.path.join(tempfile.gettempdir(), f"kgist_scaling_corpus_{n_docs}"),

@@ -1,13 +1,15 @@
 """The all-Catalyst stage-1 extractor (pipeline/extract_jvm.py) must be
-byte-identical to the frozen Python spec: normalization output per url,
-and the full fused facts row-multiset — on the generated corpus AND on
-adversarial inputs (unicode word chars, NUL bytes, chained relations,
-capitalized phrase words, mid-word mention starts)."""
+byte-identical to the frozen Python spec applied page by page on the
+driver: normalization output per url, and the full fused facts
+row-multiset — on the generated corpus AND on adversarial inputs (unicode
+word chars, NUL bytes, chained relations, capitalized phrase words,
+mid-word mention starts)."""
 
 import pandas as pd
 import pytest
 
 from kgist_spark.pipeline import spec
+from kgist_spark.pipeline.extract import EXTRACT_LANGS
 from tests.conftest import plan_of
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -57,6 +59,30 @@ def _adv_pages(spark):
     return spark.createDataFrame(rows, PAGES_SCHEMA)
 
 
+FACTS_SCHEMA = (
+    "kind string, url string, subj string, pred string, obj string, "
+    "node string, label string, pos int"
+)
+
+
+def _spec_facts(spark, pages):
+    """The tagged fact rows ``extract_facts_jvm`` must emit, from the spec
+    applied to each collected page: a ``kind='l'`` row per label of every
+    mention, then a ``kind='t'`` row per relation."""
+    rows = []
+    for page in pages.where(pages.lang.isin(*EXTRACT_LANGS)).select("url", "text").collect():
+        url, norm = page["url"], spec.normalize_text(page["text"])
+        mentions = spec.find_mentions(norm)
+        for m in mentions:
+            node = spec.entity_id(m.surface, m.etype)
+            for pos, label in enumerate(spec.entity_labels(m.surface, m.etype)):
+                rows.append(("l", url, None, None, None, node, label, pos))
+        for s, st, pred, o, ot, _, _ in spec.find_relations(norm, mentions):
+            rows.append(("t", url, spec.entity_id(s, st), pred,
+                         spec.entity_id(o, ot), None, None, None))
+    return spark.createDataFrame(rows, FACTS_SCHEMA)
+
+
 def _sorted(df):
     pdf = df.toPandas()
     cols = list(pdf.columns)
@@ -75,22 +101,20 @@ def test_normalize_byte_identity(spark):
 
 @pytest.mark.spark
 def test_facts_equal_python_path_adversarial(spark):
-    from kgist_spark.pipeline.extract import extract_facts
     from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
 
     pages = _adv_pages(spark)
-    a, b = _sorted(extract_facts(pages)), _sorted(extract_facts_jvm(pages))
+    a, b = _sorted(_spec_facts(spark, pages)), _sorted(extract_facts_jvm(pages))
     pd.testing.assert_frame_equal(a, b)
 
 
 @pytest.mark.spark
 def test_facts_equal_python_path_corpus(spark):
-    from kgist_spark.pipeline.extract import extract_facts
     from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
     from kgist_spark.sources.webpages import World, generate_pages
 
     pages = generate_pages(spark, 3000, seed=11, world=World(11)).cache()
-    a, b = _sorted(extract_facts(pages)), _sorted(extract_facts_jvm(pages))
+    a, b = _sorted(_spec_facts(spark, pages)), _sorted(extract_facts_jvm(pages))
     assert len(a) > 10_000
     pd.testing.assert_frame_equal(a, b)
     pages.unpersist()

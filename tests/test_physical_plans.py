@@ -39,9 +39,9 @@ def test_parquet_scan_pruned_and_filtered(spark, tmp_path):
     generate_pages(spark, 200, seed=42, world=World(42)).write.parquet(path)
     pages = spark.read.parquet(path)
 
-    from kgist_spark.pipeline.extract import extract_triples
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
 
-    plan = plan_of(extract_triples(pages))
+    plan = plan_of(extract_facts_jvm(pages))
     # column pruning: the wide html binary column never leaves the scan
     assert "html" not in plan.split("ReadSchema")[-1]
     # the lang predicate is pushed into the parquet scan

@@ -84,20 +84,20 @@ def test_generator_partitioning_independent(spark, world):
 # ---------------------------------------------------------------------------
 
 def test_byte_identical_extracted_text(spark, pages, world):
-    from kgist_spark.pipeline.extract import extracted_text
+    from kgist_spark.pipeline.extract_jvm import extracted_text_jvm
 
-    got = {r["url"]: r["text"] for r in extracted_text(pages).collect()}
+    got = {r["url"]: r["text"] for r in extracted_text_jvm(pages).collect()}
     for r in pages.where("lang = 'en'").collect():
         assert got[r["url"]] == spec.normalize_text(r["text"]), r["url"]
     assert len(got) == pages.where("lang = 'en'").count()
 
 
 def test_extraction_precision_recall(spark, pages, world):
-    from kgist_spark.pipeline.extract import extract_triples
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
 
     got = {
         (r["url"], r["subj"], r["pred"], r["obj"])
-        for r in extract_triples(pages).collect()
+        for r in extract_facts_jvm(pages).where("kind = 't'").collect()
     }
     truth = {
         (r["url"], r["subj"], r["pred"], r["obj"])
@@ -110,40 +110,16 @@ def test_extraction_precision_recall(spark, pages, world):
     assert recall >= 0.95, (recall, len(got), len(truth))
 
 
-def test_fused_extraction_matches_single_purpose(spark, pages):
-    """extract_facts (one tagged pass) row-matches extract_triples +
-    extract_labels run separately."""
-    from kgist_spark.pipeline.extract import (
-        extract_facts,
-        extract_labels,
-        extract_triples,
-    )
-
-    facts = extract_facts(pages).collect()
-    fused_t = {(r["url"], r["subj"], r["pred"], r["obj"])
-               for r in facts if r["kind"] == "t"}
-    fused_l = {(r["url"], r["node"], r["label"], r["pos"])
-               for r in facts if r["kind"] == "l"}
-    sep_t = {(r["url"], r["subj"], r["pred"], r["obj"])
-             for r in extract_triples(pages).collect()}
-    sep_l = {(r["url"], r["node"], r["label"], r["pos"])
-             for r in extract_labels(pages).collect()}
-    assert fused_t == sep_t and len(fused_t) > 0
-    assert fused_l == sep_l and len(fused_l) > 0
-
-
 def test_spark_extraction_matches_oracle(spark, pages):
-    from kgist_spark.pipeline.extract import extract_triples
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
 
     got = sorted(
-        (r["url"], r["subj"], r["pred"], r["obj"], r["span_start"], r["span_end"])
-        for r in extract_triples(pages).collect()
+        (r["url"], r["subj"], r["pred"], r["obj"])
+        for r in extract_facts_jvm(pages).where("kind = 't'").collect()
     )
     want = []
     for r in pages.where("lang = 'en'").collect():
-        page = spec.extract_page(r["text"])
-        for s, st, pred, o, ot, a, b in page["relations"]:
-            want.append((r["url"], spec.entity_id(s, st), pred, spec.entity_id(o, ot), a, b))
+        want.extend((r["url"], *t) for t in spec.extract_page(r["text"])["triples"])
     assert got == sorted(want)
 
 

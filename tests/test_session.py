@@ -1,8 +1,8 @@
 """The session's default driver heap and core count fit the host it runs
 on (no JVM), a standalone entry point's driver JVM is launched with them,
 AQE narrows persisted plans below the session's shuffle width,
-concurrent actions run in the caller's job group, and no program code
-writes session conf."""
+concurrent actions run in the caller's job group, no program code
+writes session conf, and construction starts no Python workers."""
 
 import json
 import os
@@ -168,6 +168,26 @@ def test_program_never_writes_session_conf():
     hits = [
         f"{path.relative_to(REPO_ROOT)}:{n}"
         for path in sorted((REPO_ROOT / "kgist_spark").rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == []
+
+
+def test_pipeline_runs_no_python_workers():
+    """No module of stages 1-3 (``pipeline/``, ``streaming/``) names a
+    Python-worker operator.  Construction runs on Catalyst expressions
+    alone, and ``pipeline/spec.py`` is the one Python statement of the
+    extraction rules: it is applied on the driver as the tests' oracle,
+    never shipped to executors as a second extractor.  The corpus
+    generator (``sources/webpages.py``) is a source, outside this scope."""
+    import re
+
+    pattern = re.compile(r"mapInPandas|applyInPandas|mapInArrow|pandas_udf")
+    hits = [
+        f"{path.relative_to(REPO_ROOT)}:{n}"
+        for pkg in ("pipeline", "streaming")
+        for path in sorted((REPO_ROOT / "kgist_spark" / pkg).rglob("*.py"))
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if pattern.search(line)
     ]
